@@ -13,17 +13,29 @@ and the JSON-RPC error codes (handler.go:90-96).  The HTTP transport
 (handler.go:568-597) lives in :mod:`qurio_spark.api_http` — a stdlib
 ``http.server`` layer over this dispatch, exercised by a live-socket
 e2e test; online serving remains a test/demo surface per BASELINE.json.
+
+The engine serves a prepared snapshot of the chunk frame it was given:
+the first search persists ``chunks`` with each chunk's id and BM25
+term statistics (:func:`prepare_chunks`), and every search runs
+against that snapshot.  Assigning a new frame to ``Engine.chunks``
+releases the snapshot at the next search, which prepares the new
+frame.  A search runs three Spark actions, none of which shuffles the
+corpus; their jobs are labelled ``qurio_search:stats``,
+``qurio_search:bm25_range`` and ``qurio_search:topk``.
 """
 
 from __future__ import annotations
 
 import json
+import threading
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
 from qurio_spark.functions.embedder import Embedder, HashingEmbedder
+from qurio_spark.functions.jobs import job_description
+from qurio_spark.operators import bm25 as bm25_op
 from qurio_spark.operators.catalog import QueryLogger, list_sources
 from qurio_spark.operators.hybrid import hybrid_search
 from qurio_spark.operators.pages import read_page
@@ -50,6 +62,24 @@ TOOLS = [
 ]
 
 
+def prepare_chunks(chunks: DataFrame) -> DataFrame:
+    """The frame searches run against: every chunk column (results and
+    filterable metadata) plus ``chunk_id`` (``url#chunk_index``) and the
+    BM25 ``tf``/``dl`` columns, coalesced to the default parallelism,
+    persisted and materialized before it is returned."""
+    spark = chunks.sparkSession
+    prepared = (
+        bm25_op.with_term_freqs(
+            chunks.withColumn("chunk_id", F.concat_ws("#", "url", "chunk_index")), "content"
+        )
+        .coalesce(spark.sparkContext.defaultParallelism)
+        .persist()
+    )
+    with job_description(spark, "qurio_search:prepare"):
+        prepared.count()
+    return prepared
+
+
 @dataclass
 class Engine:
     """Bundles the engine state the tools need."""
@@ -61,6 +91,34 @@ class Engine:
     embedder: Embedder = field(default_factory=HashingEmbedder)
     reranker: Reranker = field(default_factory=IdentityReranker)
     logger: QueryLogger | None = None
+    # (source frame, its prepared snapshot), built on the first search
+    _prepared: tuple[DataFrame, DataFrame] | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
+    _prepare_lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
+
+    def _search_frame(self) -> DataFrame:
+        """The prepared snapshot of ``self.chunks``.  Built once under a
+        lock, so concurrent first searches share one build; rebuilt, and
+        the old snapshot unpersisted, once ``chunks`` is reassigned."""
+        with self._prepare_lock:
+            if self._prepared is not None and self._prepared[0] is not self.chunks:
+                self._release()
+            if self._prepared is None:
+                self._prepared = (self.chunks, prepare_chunks(self.chunks))
+            return self._prepared[1]
+
+    def _release(self) -> None:
+        if self._prepared is not None:
+            self._prepared[1].unpersist()
+            self._prepared = None
+
+    def close(self) -> None:
+        """Unpersist the prepared snapshot; a later search prepares anew."""
+        with self._prepare_lock:
+            self._release()
 
     # -- tool implementations ------------------------------------------
 
@@ -73,17 +131,16 @@ class Engine:
         filters: dict | None = None,
     ) -> list[dict]:
         """qurio_search: Q1 embed -> F1/F2 filter -> Q2 hybrid -> Q4
-        rerank -> Q6 title backfill (mcp/handler.go:252-339)."""
+        rerank -> Q6 title backfill (mcp/handler.go:252-339), over the
+        prepared snapshot of ``chunks``."""
         t0 = time.time()
         filters = dict(filters or {})
         if source_id:  # F2 sugar (handler.go:270-275)
             filters["source_id"] = source_id
         qvec = self.embedder.embed_query(query)
-        indexed = self.chunks.withColumn(
-            "chunk_id", F.concat_ws("#", "url", "chunk_index")
-        )
+        frame = self._search_frame()
         res = hybrid_search(
-            indexed,
+            frame,
             query,
             qvec,
             alpha=alpha,
@@ -95,8 +152,10 @@ class Engine:
             vec_col="embedding",
             extra_cols=["content", "source_id", "source_name", "url", "title",
                         "chunk_index", "type", "language"],
+            job_label="qurio_search",
         )
-        rows = [r.asDict() for r in res.collect()]
+        with job_description(frame.sparkSession, "qurio_search:topk"):
+            rows = [r.asDict() for r in res.collect()]
         for r in rows:
             r["score"] = float(r["score"])
         rows = apply_rerank(rows, query, self.reranker)

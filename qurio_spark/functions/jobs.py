@@ -23,11 +23,15 @@ optimization.
 Scheduling stays FIFO (the default): the earlier job gets resources
 first and later jobs back-fill what is left, which is the §2.6
 behaviour; 2-4 jobs in flight is plenty.
+
+``job_description`` labels the jobs of one phase (``query:phase``) so
+a slow request or query can be read off the status store by phase.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Sequence, TypeVar
+from contextlib import contextmanager
+from typing import Callable, Iterator, Sequence, TypeVar
 
 T = TypeVar("T")
 
@@ -65,3 +69,21 @@ def run_concurrent(
         if first_err is not None:
             raise first_err
         return results
+
+
+@contextmanager
+def job_description(spark, text: str | None) -> Iterator[None]:
+    """Run the block's Spark jobs under the description ``text``
+    (``spark.job.description``, a thread-local property), then restore
+    the caller's description.  ``None`` leaves the description alone.
+    The job group is never touched: callers attribute jobs by group."""
+    if text is None:
+        yield
+        return
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)

@@ -48,18 +48,24 @@ def literal_vector(vec: list[float]) -> Column:
     hygiene): the per-element ``F.lit`` form costs a py4j round trip
     per dimension (a 64-dim vector ≈ 65 driver calls) at every call
     site.  ``repr(float)`` round-trips IEEE doubles exactly and Spark
-    parses them with Java ``Double.parseDouble``, so the literal
-    values are bit-identical to the composed form (the score oracles'
-    hash identity is preserved).  Non-finite values fall back to the
-    composed form (no SQL literal spells nan/inf)."""
+    parses the decimal literal to the nearest double, so every finite
+    value keeps its bits — except that a bare ``-0.0`` parses as unary
+    minus applied to decimal zero, i.e. +0.0; a signed zero is
+    therefore spelled ``CAST('-0.0' AS DOUBLE)`` (Java
+    ``Double.parseDouble`` keeps the sign).  Non-finite values fall
+    back to the composed form (no SQL literal spells nan/inf)."""
     vals = [float(v) for v in vec]
     import math
 
     if not vals or not all(math.isfinite(v) for v in vals):
         return F.array(*[F.lit(v) for v in vals])
-    return F.expr(
-        "array(" + ",".join(f"CAST({v!r} AS DOUBLE)" for v in vals) + ")"
-    )
+
+    def sql(v: float) -> str:
+        if v == 0.0 and math.copysign(1.0, v) < 0:
+            return "CAST('-0.0' AS DOUBLE)"
+        return f"CAST({v!r} AS DOUBLE)"
+
+    return F.expr("array(" + ",".join(sql(v) for v in vals) + ")")
 
 
 def l2_normalize(a: Column) -> Column:

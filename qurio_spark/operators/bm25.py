@@ -176,6 +176,45 @@ def _with_doc_block(
     return postings.withColumn("doc_block", doc_block(F.col(id_col), n_blocks))
 
 
+def with_term_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """``docs`` plus the per-document BM25 inputs as columns: ``tf``
+    (map term -> count over the tokenized ``text_col``) and ``dl``
+    (token count) — one projection, no shuffle.  Reuses the columns on
+    frames that already carry both (the serving engine's prepared
+    chunk frame, ``api.Engine``) and derives them on the fly
+    otherwise, the same rule as :func:`_with_doc_block`."""
+    if {"tf", "dl"} <= set(docs.columns):
+        return docs
+    toks = F.col("_toks")
+    terms = F.array_distinct(toks)
+    counts = F.transform(terms, lambda t: F.size(F.filter(toks, lambda x: x == t)))
+    return (
+        docs.withColumn("_toks", tokenize(F.col(text_col)))
+        .withColumns({"tf": F.map_from_arrays(terms, counts), "dl": F.size(toks)})
+        .drop("_toks")
+    )
+
+
+def score_expr(
+    term_df: dict[str, int], n_docs: float, avgdl: float, k1: float = K1, b: float = B
+) -> Column:
+    """Each row's BM25 as a column expression over its ``tf``/``dl``
+    columns (:func:`with_term_freqs`), with the collection statistics
+    — df of each query term, N, avgdl — computed beforehand and passed
+    in as driver-side literals.  Terms are summed in the mapping's
+    order; a term absent from a row contributes 0.  Callers drop terms
+    with df = 0 (they match no row, and avgdl may then be 0)."""
+    dl = F.col("dl").cast("double")
+    total = F.lit(0.0)
+    for term, df in term_df.items():
+        tf = F.try_element_at(F.col("tf"), F.lit(term)).cast("double")
+        per_term = idf_expr(F.lit(float(df)), n_docs) * (tf * (k1 + 1.0)) / (
+            tf + k1 * (1.0 - b + b * dl / avgdl)
+        )
+        total = total + F.coalesce(per_term, F.lit(0.0))
+    return total
+
+
 def term_block_max_impacts(
     index: BM25Index,
     k1: float = K1,

@@ -16,17 +16,24 @@ Weaviate's relative-score fusion, store.go:107-110 / SURVEY §4):
   5. top-k by fused score desc, id asc (deterministic tiebreak).
 
 Scale: the filter runs before any scoring (partition pruning on
-source_id-partitioned chunks); both scorers are single-shuffle aggs;
-the min/max normalization constants are a 1-row agg broadcast via
-crossJoin; top-k is TakeOrderedAndProject.  Nothing here grows with
-corpus size except the pruned candidate scan.
+source_id-partitioned chunks).  ``hybrid_search`` then runs three
+actions over the candidate set, none of which shuffles rows: a one-row
+aggregate for the collection statistics (N, avgdl, df of each query
+term) and the cosine range, a one-row aggregate for the BM25 range,
+and the top-k as one TakeOrdered.  BM25 is a column expression over
+per-document term-frequency maps (``bm25.with_term_freqs``), and every
+statistic and normalization constant reaches it as a driver-side
+literal.  The serving engine (``api.Engine``) prepares those maps once
+per chunk frame, so a request pays only for its own query.  Nothing
+here grows with corpus size except the pruned candidate scans.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from qurio_spark.functions.checkpointing import checkpoint_df
+from qurio_spark.functions.jobs import job_description
 from qurio_spark.functions.numeric import stable_round
 from qurio_spark.functions.vector import cosine, literal_vector
 from qurio_spark.operators import bm25 as bm25_op
@@ -40,35 +47,6 @@ def apply_metadata_filters(df: DataFrame, filters: dict[str, str] | None) -> Dat
         if isinstance(v, str):
             df = df.filter(F.col(k) == v)
     return df
-
-
-def minmax_norm_cols(df: DataFrame, cols: dict[str, str]) -> DataFrame:
-    """Min-max normalize several columns over the whole frame with ONE
-    stats aggregation.  The 1-row agg joins back via broadcast
-    crossJoin — no window over the full data, so no single-partition
-    sort at scale.
-
-    One combined agg matters structurally, not just for speed: each
-    normalization that re-references the input frame duplicates its
-    whole upstream DAG in the plan (crossJoin(P, agg(P)) has two copies
-    of P), so N sequential single-column passes grow the plan ~2^N —
-    for hybrid search that meant 46 exchanges and 8 sort-merge joins
-    from one BM25 sub-DAG."""
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"_mn_{c}"), F.max(c).alias(f"_mx_{c}")]
-    out = df.crossJoin(F.broadcast(df.agg(*aggs)))
-    for c, o in cols.items():
-        mn, mx = F.col(f"_mn_{c}"), F.col(f"_mx_{c}")
-        out = out.withColumn(
-            o, F.when(mx > mn, (F.col(c) - mn) / (mx - mn)).otherwise(F.lit(0.0))
-        )
-    return out.drop(*[f"_mn_{c}" for c in cols], *[f"_mx_{c}" for c in cols])
-
-
-def minmax_norm(df: DataFrame, col: str, out: str) -> DataFrame:
-    """Single-column min-max normalization (see minmax_norm_cols)."""
-    return minmax_norm_cols(df, {col: out})
 
 
 def resolve_params(
@@ -89,6 +67,14 @@ def resolve_params(
     return a, k
 
 
+def _minmax(x: Column, lo: float | None, hi: float | None) -> Column:
+    """(x - lo) / (hi - lo) with driver-side constants; a constant
+    column (or an empty candidate set) normalizes to 0."""
+    if lo is None or hi is None or not hi > lo:
+        return F.lit(0.0)
+    return (x - lo) / (hi - lo)
+
+
 def hybrid_search(
     docs: DataFrame,
     query_text: str,
@@ -102,52 +88,72 @@ def hybrid_search(
     vec_col: str = "embedding",
     extra_cols: list[str] | None = None,
     bm25_index=None,
+    job_label: str | None = None,
 ) -> DataFrame:
     """-> top-k (id, bm25_norm, vec_norm, score [, extra_cols]) rows.
 
     ``docs`` must carry text + embedding columns (join chunks with their
-    vectors upstream if stored separately).
+    vectors upstream if stored separately).  It is read once per action,
+    so it must be deterministic.  Frames that already carry the ``tf``/
+    ``dl`` columns of ``bm25.with_term_freqs`` skip the tokenization.
+
+    The BM25 statistics and both min-max ranges are computed over the
+    filtered candidates by up to two one-row aggregates, which run
+    here, eagerly; the returned frame is the top-k alone: a scan plus
+    TakeOrdered, with every constant a literal and no shuffle.  A query
+    with no term in any candidate skips the second aggregate (its BM25
+    is 0 everywhere).  ``job_label`` names the aggregates' Spark jobs
+    ``<label>:stats`` and ``<label>:bm25_range``.
 
     ``bm25_index``: a prebuilt (persisted) corpus index — valid ONLY
     when no metadata filters apply, because BM25 stats (df/N/avgdl) are
     defined over the candidate set and a filtered candidate set has its
-    own stats; with filters the index is built in-DAG over the
-    filtered candidates, as before.
+    own stats.  Its sparse per-query scores are broadcast onto the
+    candidates, and one aggregate gives both ranges.
     """
     a, k = resolve_params(alpha, limit, settings)
     cand = apply_metadata_filters(docs, filters)
+    cos = cosine(F.col(vec_col), literal_vector(query_vec))
 
-    # Sparse keyword scores LEFT-joined onto the candidate set (docs
-    # matching no query term keep bm25 = 0.0): one copy of the
-    # candidate scan, not the dense join-back shape.
+    def phase(name: str):
+        return job_description(docs.sparkSession, job_label and f"{job_label}:{name}")
+
     if bm25_index is not None and not filters:
         kw = bm25_op.score_query_prebuilt(bm25_index, query_text)
+        cand = cand.join(F.broadcast(kw), id_col, "left")
+        bm25 = F.coalesce(F.col("bm25"), F.lit(0.0))
+        with phase("stats"):
+            cmn, cmx, bmn, bmx = cand.agg(
+                F.min(cos), F.max(cos), F.min(bm25), F.max(bm25)
+            ).collect()[0]
     else:
-        idx = bm25_op.build_index(cand, id_col, text_col)
-        kw = bm25_op.score_query(idx, query_text)
-    scored = (
-        cand.join(kw, id_col, "left")
-        .withColumn("bm25", F.coalesce(F.col("bm25"), F.lit(0.0)))
-        .withColumn("cos", cosine(F.col(vec_col), literal_vector(query_vec)))
-    )
-    # Truncate lineage before fusion: normalization references the
-    # scored frame twice (stats agg + value branch); without the
-    # checkpoint both branches re-execute the whole scoring sub-DAG
-    # (tokenize/postings/joins) instead of re-reading a few thousand
-    # scored rows.  Lazy: materializes on the first action, on
-    # executors.  On a cluster-scale corpus swap for checkpoint() to
-    # durable storage.
-    scored = checkpoint_df(scored)
-    scored = minmax_norm_cols(scored, {"bm25": "bm25_norm", "cos": "vec_norm"})
-    fused = scored.withColumn(
-        "score", F.lit(a) * F.col("vec_norm") + F.lit(1.0 - a) * F.col("bm25_norm")
-    )
+        cand = bm25_op.with_term_freqs(cand, text_col)
+        terms = sorted(set(bm25_op.tokenize_query(query_text)))
+        dfs = [F.count(F.try_element_at(F.col("tf"), F.lit(t))) for t in terms]
+        with phase("stats"):
+            n, avgdl, cmn, cmx, *df_vals = cand.agg(
+                F.count("*"), F.avg("dl"), F.min(cos), F.max(cos), *dfs
+            ).collect()[0]
+        matched = {t: d for t, d in zip(terms, df_vals) if d}
+        if matched:
+            bm25 = bm25_op.score_expr(matched, float(n), avgdl)
+            with phase("bm25_range"):
+                bmn, bmx = cand.agg(F.min(bm25), F.max(bm25)).collect()[0]
+        else:
+            bm25, bmn, bmx = F.lit(0.0), 0.0, 0.0
+
+    bm25_norm, vec_norm = _minmax(bm25, bmn, bmx), _minmax(cos, cmn, cmx)
     cols = [id_col, "bm25_norm", "vec_norm", "score"] + (extra_cols or [])
-    # rank on the 6-digit stable-rounded score: BM25 partial-sum order is
-    # nondeterministic at 1e-16, so ranking raw doubles would make the
-    # top-k set run-dependent at score ties
+    # rank on the 6-digit stable-rounded score: BM25 sums taken in
+    # another order (the prebuilt index's partial aggregates, the
+    # oracles) differ at 1e-16, so ranking raw doubles would make the
+    # top-k set path-dependent at score ties
     return (
-        fused.select(*cols)
+        cand.withColumns({"bm25_norm": bm25_norm, "vec_norm": vec_norm})
+        .withColumn(
+            "score", F.lit(a) * F.col("vec_norm") + F.lit(1.0 - a) * F.col("bm25_norm")
+        )
+        .select(*cols)
         .orderBy(F.desc(stable_round(F.col("score"), 6)), F.asc(id_col))
         .limit(k)
     )

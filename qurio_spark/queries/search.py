@@ -385,7 +385,7 @@ def q_hybrid_topk(spark, sf_dir):
     """Q2 alpha=0.5: full hybrid search, min-max fused.  Uses the
     persisted BM25 index when bench prepared one (identical scores —
     unfiltered search scores the whole corpus, which is exactly the
-    index's stats domain); builds in-DAG otherwise.
+    index's stats domain); scores per-row term maps otherwise.
 
     r15: routed through the SQL table-function surface
     (qurio_spark/sqlfront.py) so the driver-window oracle pins the

@@ -50,6 +50,22 @@ class TestRunConcurrent:
         assert (a, b) == (1000, 500)
 
 
+class TestJobTraceTimeline:
+    def test_unsubmitted_job_has_no_offset(self):
+        """A job the status store lists before its submission time is
+        known gets nan offset/duration/gap, and does not move the base
+        the other jobs are offset from."""
+        from tools.job_trace import timeline
+
+        jobs = [(7, None, None, "pending"), (5, 1000, 1500, "a"), (6, 2000, 2250, "b")]
+        lines, busy = timeline(jobs)
+        assert len(lines) == 3
+        assert "t+    nan" in lines[0] and "pending" in lines[0]
+        assert "t+  0.000s  dur  0.500s" in lines[1]
+        assert "t+  1.000s  dur  0.250s  gap  0.500s" in lines[2]
+        assert busy == pytest.approx(0.75)
+
+
 class TestAggviewStatesHook:
     def _events(self, spark):
         rows = [(i, "a" if i % 3 else "b", float(i % 7)) for i in range(60)]

@@ -7,7 +7,10 @@ run qurio_search with alpha/limit/filters, assert ranked results
 and read_page reconstruction (Q5).
 """
 
+import itertools
 import json
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -146,6 +149,106 @@ class TestSearchE2E:
         assert len(logged) == 1
         assert logged[0]["query"] == "healthcheck"
         assert logged[0]["num_results"] >= 1
+
+
+class TestServingSnapshot:
+    """Engine.search runs against a snapshot of ``chunks`` it prepares
+    once, in a handful of labelled Spark jobs."""
+
+    _groups = itertools.count()
+
+    def _in_group(self, spark, fn):
+        """Run ``fn`` with this thread's jobs in a fresh job group ->
+        (fn's result, the descriptions of the group's jobs)."""
+        sc = spark.sparkContext
+        group = f"test-serving-{next(self._groups)}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        store = sc._jsc.sc().statusStore()
+        descs = []
+        for jid in sc.statusTracker().getJobIdsForGroup(group):
+            d = store.job(jid).description()
+            descs.append(d.get() if d.isDefined() else None)
+        return out, descs
+
+    def test_search_runs_at_most_five_jobs(self, spark, chunks):
+        eng = Engine(chunks=chunks)
+        try:
+            eng.search("configure healthcheck", limit=3)  # prepares the snapshot
+            rows, descs = self._in_group(
+                spark, lambda: eng.search("healthcheck interval timeout", limit=3)
+            )
+        finally:
+            eng.close()
+        assert rows
+        assert 1 <= len(descs) <= 5
+
+    def test_search_jobs_carry_phase_descriptions(self, spark, chunks):
+        sc = spark.sparkContext
+        eng = Engine(chunks=chunks)
+        try:
+            eng.search("configure healthcheck", limit=3)
+            sc.setJobDescription("caller")
+            try:
+                _, descs = self._in_group(spark, lambda: eng.search("healthcheck", limit=3))
+                assert sc.getLocalProperty("spark.job.description") == "caller"
+            finally:
+                sc.setLocalProperty("spark.job.description", None)
+        finally:
+            eng.close()
+        assert set(descs) == {
+            "qurio_search:stats", "qurio_search:bm25_range", "qurio_search:topk"
+        }
+
+    def test_concurrent_first_searches_prepare_once(self, chunks, monkeypatch):
+        import qurio_spark.api as api
+
+        builds = []
+        prepare = api.prepare_chunks
+
+        def slow_prepare(df):
+            builds.append(df)
+            time.sleep(0.5)  # both threads are inside search meanwhile
+            return prepare(df)
+
+        monkeypatch.setattr(api, "prepare_chunks", slow_prepare)
+        eng = Engine(chunks=chunks)
+        results, errors = [], []
+
+        def search():
+            try:
+                results.append(eng.search("healthcheck probe", limit=2))
+            except Exception as e:  # reported below, never hidden
+                errors.append(e)
+
+        threads = [threading.Thread(target=search) for _ in range(2)]
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+        finally:
+            eng.close()
+        assert not any(t.is_alive() for t in threads)
+        assert not errors
+        assert len(results) == 2 and results[0] == results[1] and results[0]
+        assert len(builds) == 1
+
+    def test_reassigned_chunks_are_served(self, chunks):
+        eng = Engine(chunks=chunks)
+        try:
+            assert eng.search("healthcheck", limit=5)[0]["source_id"] == "s1"
+            old = eng._prepared[1]
+            eng.chunks = chunks.filter(F.col("source_id") == "s2")
+            rows = eng.search("healthcheck", limit=5)
+        finally:
+            eng.close()
+        assert rows and all(r["source_id"] == "s2" for r in rows)
+        assert not old.is_cached
 
 
 class TestMCPContract:

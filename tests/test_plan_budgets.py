@@ -64,8 +64,15 @@ BUDGETS = {
     "lsh_prebuilt": {"shuffles": ("<=", 0), "partition_filters": (">=", 1)},
     # IVF single probe: map-only pruned scan
     "ann_ivf": {"shuffles": ("<=", 0)},
-    # hybrid fusion: one scoring shuffle (diamond is checkpointed)
+    # hybrid fusion over the prebuilt index: the keyword scoring agg is
+    # the one shuffle (its sparse scores broadcast onto the candidates);
+    # the statistics and ranges ran as driver-side actions, so the plan
+    # carries them as literals
     "hybrid_topk": {"shuffles": ("<=", 1)},
+    # filtered hybrid: BM25 over per-row term maps with literal
+    # statistics — the returned plan is a scan plus TakeOrdered
+    "hybrid_filtered": {"shuffles": ("<=", 0), "smj": ("<=", 0),
+                        "bnlj": ("<=", 0), "python_stages": ("<=", 0)},
     # dense batch hybrid: keyword agg + the per-query top-k window
     # exchange, whose WindowGroupLimit(Partial) pre-filters each map
     # task to its local top-k (operators/topn) — a hot query's
@@ -313,6 +320,12 @@ def test_plan_budget(name, spark, sf_dir, prepared):
         assert ok, (
             f"{name}: {metric}={got} violates budget {op}{bound}\n{a['plan']}"
         )
+
+
+def test_filtered_hybrid_plan_is_scan_plus_take_ordered(spark, sf_dir, prepared):
+    a = audit(prepared.queries()["hybrid_filtered"](spark, sf_dir))
+    assert "TakeOrderedAndProject" in a["plan"], a["plan"]
+    assert "Aggregate" not in a["plan"], a["plan"]
 
 
 def test_pruned_batch_hybrid_budget(spark, sf_dir, prepared):

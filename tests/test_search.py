@@ -6,14 +6,16 @@ alpha=1 -> cosine order), deterministic tiebreaks.
 """
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from qurio_spark.api import Engine
 from qurio_spark.functions.embedder import HashingEmbedder, embed_text_py
 from qurio_spark.functions.vector import cosine, literal_vector
 from qurio_spark.operators import bm25 as bm25_op
-from qurio_spark.operators.hybrid import hybrid_search, minmax_norm, resolve_params
+from qurio_spark.operators.hybrid import hybrid_search, resolve_params
 from qurio_spark.operators.similarity import brute_force_topk
 
 CORPUS = [
@@ -33,9 +35,17 @@ def docs(spark):
     return df.withColumn("embedding", emb.udf()(F.col("text"))).cache()
 
 
+def _tokens(text):
+    return [t for t in re.split(r"[^a-z0-9]+", (text or "").lower()) if t]
+
+
 def _bm25_py(corpus, query, k1=1.2, b=0.75):
-    """Independent reference implementation for cross-checking."""
-    toks = [t[1].lower().split() for t in corpus]
+    """Independent reference implementation for cross-checking.
+
+    ``corpus``: (id, text, ...) rows — the CANDIDATE set: df, N and
+    avgdl are computed over exactly these rows, so a filtered search is
+    checked by passing the filtered subset."""
+    toks = [_tokens(t[1]) for t in corpus]
     n = len(toks)
     avgdl = sum(len(t) for t in toks) / n
     df = {}
@@ -45,7 +55,7 @@ def _bm25_py(corpus, query, k1=1.2, b=0.75):
     scores = {}
     for i, t in enumerate(toks):
         s = 0.0
-        for term in query.split():
+        for term in sorted(set(_tokens(query))):
             tf = t.count(term)
             if tf == 0:
                 continue
@@ -100,6 +110,15 @@ class TestVectorSearch:
             want = float(np.dot(vec, q) / (np.linalg.norm(vec) * np.linalg.norm(q)))
             assert r["c"] == pytest.approx(want, abs=1e-6)
 
+    def test_literal_vector_keeps_bit_patterns(self, spark):
+        """The SQL-text literal keeps every double's exact bits, the sign
+        of a zero included (a bare ``-0.0`` in SQL parses as +0.0)."""
+        import struct
+
+        vals = [-0.0, 0.0, 0.1, -1.5e-300, 5e-324, 1.7976931348623157e308, -2.0 / 3.0]
+        got = spark.range(1).select(literal_vector(vals).alias("v")).first()["v"]
+        assert [struct.pack(">d", x) for x in got] == [struct.pack(">d", x) for x in vals]
+
 
 class TestHybrid:
     def test_alpha0_is_bm25_order(self, spark, docs):
@@ -147,10 +166,95 @@ class TestHybrid:
         with pytest.raises(ValueError):
             resolve_params(0.5, 51)
 
-    def test_minmax_norm_constant_column(self, spark):
-        df = spark.createDataFrame([(1, 5.0), (2, 5.0)], ["id", "x"])
-        out = minmax_norm(df, "x", "y").collect()
-        assert all(r["y"] == 0.0 for r in out)
+    def test_constant_score_column_normalizes_to_zero(self, spark):
+        """Every candidate has the same embedding (constant cosine) and
+        no candidate holds the query term (constant BM25 of 0): both
+        normalized columns, and so the fused score, are 0."""
+        df = spark.createDataFrame(
+            [(1, "alpha beta", [1.0, 2.0]), (2, "gamma", [1.0, 2.0])],
+            "doc_id long, text string, embedding array<float>",
+        )
+        res = hybrid_search(df, "delta", [0.5, 0.5], alpha=0.5, limit=5).collect()
+        assert [r["doc_id"] for r in res] == [1, 2]
+        for r in res:
+            assert (r["bm25_norm"], r["vec_norm"], r["score"]) == (0.0, 0.0, 0.0)
+
+
+CHUNK_SCHEMA = (
+    "source_id string, source_name string, url string, chunk_index int, "
+    "content string, type string, language string, title string, "
+    "embedding array<float>"
+)
+
+
+@pytest.fixture(scope="module")
+def engine_chunks(spark):
+    """CORPUS as a chunk table: one chunk per doc, its language as its
+    source, 16-dim hashing embeddings stored as float32."""
+    rows = [
+        (lang, lang.upper(), f"https://x.test/{i}", 0, text, "prose", None,
+         None, embed_text_py(text, 16))
+        for i, text, lang in CORPUS
+    ]
+    return spark.createDataFrame(rows, CHUNK_SCHEMA)
+
+
+def _hybrid_py(rows, query, alpha, limit):
+    """Pure-Python BM25 + cosine min-max fusion over ``rows`` (the
+    candidates): the top ``limit`` (url, score), ranked like the engine
+    (6-decimal score desc, then ``url#chunk_index``)."""
+    import numpy as np
+
+    bm = _bm25_py([(r["url"], r["content"]) for r in rows], query)
+    q = np.array(embed_text_py(query, 16))
+    cos = {}
+    for r in rows:
+        v = np.array(r["embedding"], dtype=np.float32).astype(np.float64)
+        n = np.linalg.norm(v) * np.linalg.norm(q)
+        cos[r["url"]] = float(v @ q / n) if n > 0 else 0.0
+
+    def norm(d):
+        lo, hi = min(d.values()), max(d.values())
+        return {u: (x - lo) / (hi - lo) if hi > lo else 0.0 for u, x in d.items()}
+
+    bn, vn = norm(bm), norm(cos)
+    score = {u: alpha * vn[u] + (1 - alpha) * bn[u] for u in bm}
+    order = sorted(score, key=lambda u: (-math.floor(score[u] * 1e6 + 0.5), f"{u}#0"))
+    return [(u, score[u]) for u in order[:limit]]
+
+
+class TestEngineSearch:
+    def _engine(self, chunks):
+        return Engine(chunks=chunks, embedder=HashingEmbedder(dim=16))
+
+    def test_filtered_search_equals_python_fusion(self, engine_chunks):
+        """BM25's df, N and avgdl are taken over the filtered candidates,
+        not the corpus: the engine equals the Python reference run on
+        the subset, which itself differs from corpus-wide statistics."""
+        q = "spark join shuffle"
+        rows = engine_chunks.collect()
+        subset = [r for r in rows if r["source_id"] == "en"]
+        corpus_bm = _bm25_py([(r["url"], r["content"]) for r in rows], q)
+        subset_bm = _bm25_py([(r["url"], r["content"]) for r in subset], q)
+        assert any(corpus_bm[u] != pytest.approx(subset_bm[u]) for u in subset_bm)
+
+        got = self._engine(engine_chunks).search(q, alpha=0.3, limit=4, source_id="en")
+        want = _hybrid_py(subset, q, 0.3, 4)
+        assert [r["url"] for r in got] == [u for u, _ in want]
+        for r, (_, score) in zip(got, want):
+            assert r["score"] == pytest.approx(score, abs=1e-9)
+
+    def test_punctuation_only_query(self, engine_chunks):
+        """No query tokens: BM25 and the (zero) query vector are constant,
+        so every score is 0 and the id tiebreak orders the results."""
+        got = self._engine(engine_chunks).search("?!... --", limit=3)
+        assert [r["url"] for r in got] == [f"https://x.test/{i}" for i in range(3)]
+        assert all(r["score"] == 0.0 for r in got)
+
+    def test_filter_matching_nothing_is_empty(self, engine_chunks):
+        eng = self._engine(engine_chunks)
+        assert eng.search("spark join", source_id="no-such-source") == []
+        assert eng.search("spark", filters={"language": "klingon"}) == []
 
 
 class TestBatchHybrid:

@@ -45,6 +45,31 @@ def jobs_snapshot(spark):
     return out
 
 
+def timeline(jobs) -> tuple[list[str], float]:
+    """One line per job of ``jobs_snapshot`` rows (in submission
+    order): offset from the first submission, duration, and the gap
+    since the previous job ended.  A job listed before it was
+    submitted has no submission time, so no offset, duration or gap.
+    -> (lines, sum of job durations in seconds)."""
+    base = next((sub for _, sub, _, _ in jobs if sub), 0)
+    prev_end = base
+    busy = 0.0
+    lines = []
+    for jid, sub, comp, desc in jobs:
+        dur = (comp - sub) / 1000.0 if (sub and comp) else float("nan")
+        gap = (sub - prev_end) / 1000.0 if sub else float("nan")
+        off = (sub - base) / 1000.0 if sub else float("nan")
+        busy += dur if dur == dur else 0
+        # first 100 chars of the description/callsite
+        d = (desc or "")[:100].replace("\n", " ")
+        lines.append(
+            f"  job {jid:4d}  t+{off:7.3f}s  dur {dur:6.3f}s  gap {gap:6.3f}s  {d}"
+        )
+        if comp:
+            prev_end = max(prev_end, comp)
+    return lines, busy
+
+
 def main() -> None:
     names = sys.argv[1:]
     if not names:
@@ -74,21 +99,9 @@ def main() -> None:
         jobs.sort(key=lambda j: (j[1] or 0, j[0]))
         print(f"\n=== {name}: wall {wall:.3f}s (build {t_build:.3f}s), "
               f"{len(jobs)} jobs ===")
-        base = jobs[0][1] if jobs else 0
-        prev_end = base
-        busy = 0
-        for jid, sub, comp, desc in jobs:
-            dur = (comp - sub) / 1000.0 if (sub and comp) else float("nan")
-            gap = (sub - prev_end) / 1000.0 if sub else float("nan")
-            busy += dur if dur == dur else 0
-            # first 100 chars of the description/callsite
-            d = (desc or "")[:100].replace("\n", " ")
-            print(
-                f"  job {jid:4d}  t+{(sub - base) / 1000.0:7.3f}s  "
-                f"dur {dur:6.3f}s  gap {gap:6.3f}s  {d}"
-            )
-            if comp:
-                prev_end = max(prev_end, comp)
+        lines, busy = timeline(jobs)
+        for line in lines:
+            print(line)
         print(f"  --- sum(job dur) {busy:.3f}s; wall-jobs gap "
               f"{wall - busy:.3f}s (driver-side / planning / IO)")
 
