@@ -81,7 +81,8 @@ def train_bpe(
     pair (tracked by an inverted pair -> word-ids index) and patches
     the global counts by the per-word delta, instead of recounting the
     whole dictionary — O(affected words) per merge, so a real 32k-merge
-    vocabulary is driver-feasible (timed in tools/bpe_scale_check.py).
+    vocabulary is driver-feasible (timed in SCALE.md "Round 14:
+    incremental BPE training").
     The merge sequence is exactly the recount-from-scratch one: the
     bookkeeping is an exact delta, and the (count desc, pair asc)
     selection never depends on dict iteration order."""

@@ -121,6 +121,10 @@ def bloom_might_contain(
     (same xxhash64 double-hashing, same `/64` truncation), so build
     and probe stay hash-identical; a Column argument keeps the
     composed form."""
+    if k_hashes < 1:
+        # zero hash terms would test nothing: an empty SQL conjunction,
+        # or a Column form that matches every row
+        raise ValueError(f"k_hashes must be >= 1, got {k_hashes}")
     if len(bitmap) > BLOOM_LITERAL_MAX_WORDS:
         raise ValueError(
             f"bitmap of {len(bitmap)} words exceeds the literal ceiling "

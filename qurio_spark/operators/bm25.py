@@ -22,6 +22,13 @@ Scale design (100 TB):
   - Corpus stats (N, avgdl) are two scalars; df(t) lives on the
     postings rows (denormalized at build time) precisely so scoring
     needs NO extra join against a stats table.
+
+Every scorer — monolithic, segmented, MaxScore/Block-Max, the per-row
+term-map ``score_expr`` and the batch hybrid's keyword side — builds
+its per-posting expression with the one kernel :func:`impact`, and
+filters postings and sidecars to the query terms with
+:func:`prune_postings`, which also prunes term-bucket directories
+whenever the frame is a persisted layout.
 """
 
 from __future__ import annotations
@@ -58,22 +65,16 @@ class BM25Index:
     schedules no job — the scalars enter query plans via a broadcast
     cross join (scalar-subquery shape), not driver literals.
 
-    ``termmax``: (term, max_impact) — each term's maximum possible
-    per-document BM25 contribution under the index's frozen stats, the
-    metadata MaxScore/WAND pruning needs (:func:`score_query_maxscore`).
-    Computed lazily at build; persisted indexes read it as a tiny
-    sidecar so query time never scans postings for bounds.
-
-    ``blockmax``: (term, doc_block, block_max) — the same bound per
-    (term, doc-block), the Block-Max refinement that prunes INSIDE a
+    ``blockmax``: (term, doc_block, block_max) — each term's maximum
+    per-document BM25 contribution within each doc-block under the
+    index's frozen stats, the Block-Max refinement that prunes INSIDE a
     long postings list (:func:`score_query_maxscore`); <= |vocab| x
-    ``N_DOC_BLOCKS`` rows, also a build-time sidecar."""
+    ``N_DOC_BLOCKS`` rows, a sidecar written by :func:`write_index`."""
 
     postings: DataFrame
     doclen: DataFrame
     stats: DataFrame
     id_col: str
-    termmax: DataFrame | None = None
     blockmax: DataFrame | None = None
 
     @property
@@ -114,43 +115,57 @@ def build_index(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     stats = doclen.agg(
         F.count("*").cast("double").alias("n"), F.avg("dl").alias("avgdl")
     )
-    idx = BM25Index(postings, doclen, stats, id_col)
-    idx.termmax = term_max_impacts(idx)
     # blockmax deliberately stays None here: on an in-memory index a
     # lazy blockmax would re-run the whole tokenize/join pipeline for
     # one extra aggregation per query — costing more than the block
     # pruning saves (measured ~2x on bm25_maxscore at sf0.1).  The
     # sidecar is materialized once at write_index time; persisted
     # indexes get Block-Max, throwaway in-memory ones get MaxScore.
-    return idx
+    return BM25Index(postings, doclen, stats, id_col)
 
 
-def idf_expr(df_col: Column, n_docs: Column | float) -> Column:
-    n = n_docs if isinstance(n_docs, Column) else F.lit(float(n_docs))
-    return F.log(F.lit(1.0) + (n - df_col + 0.5) / (df_col + 0.5))
+def impact(
+    tf: Column | float,
+    dl: Column | float,
+    df: Column | float,
+    n: Column | float,
+    avgdl: Column | float,
+    k1: float = K1,
+    b: float = B,
+) -> Column:
+    """The BM25 kernel: one posting's contribution ``idf(df, n) *
+    tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))`` with the Lucene idf of
+    the module doc.  Every argument is a Column or a driver-side float
+    (a literal); every scorer builds its per-posting expression here."""
+
+    def dbl(x: Column | float) -> Column:
+        return x.cast("double") if isinstance(x, Column) else F.lit(float(x))
+
+    tf, dl, df = dbl(tf), dbl(dl), dbl(df)
+    n = n if isinstance(n, Column) else F.lit(float(n))
+    idf = F.log(F.lit(1.0) + (n - df + 0.5) / (df + 0.5))
+    return idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
 def _impact_expr(k1: float = K1, b: float = B) -> Column:
-    """One posting's exact BM25 contribution — over columns (tf, dl,
-    df, n, avgdl)."""
-    tf, dl = F.col("tf").cast("double"), F.col("dl").cast("double")
-    return idf_expr(F.col("df").cast("double"), F.col("n")) * (
-        tf * (k1 + 1.0)
-    ) / (tf + k1 * (1.0 - b + b * dl / F.col("avgdl")))
+    """:func:`impact` over the columns (tf, dl, df, n, avgdl)."""
+    return impact(*(F.col(c) for c in ("tf", "dl", "df", "n", "avgdl")), k1, b)
 
 
-def term_max_impacts(
-    index: BM25Index, k1: float = K1, b: float = B
+def sum_impacts(
+    matched: DataFrame, index: BM25Index, keys: list[str], k1: float = K1, b: float = B
 ) -> DataFrame:
-    """(term, max_impact): each term's maximum per-document BM25
-    contribution under the index's frozen df/N/avgdl — one lazy
-    partial-agg over postings, |vocab| output rows.  This is the
-    per-term upper bound MaxScore/WAND pruning keys on."""
+    """-> (keys..., bm25): the summed impacts of ``matched`` postings
+    rows per key group, with N/avgdl from the index's one-row stats
+    (broadcast cross join).  dl rides on the postings rows of indexes
+    built by build_index; other postings fall back to the doclen join."""
+    if "dl" not in matched.columns:
+        matched = matched.join(index.doclen, index.id_col)
     return (
-        index.postings.crossJoin(F.broadcast(index.stats))
-        .select(F.col("term"), _impact_expr(k1, b).alias("imp"))
-        .groupBy("term")
-        .agg(F.max("imp").alias("max_impact"))
+        matched.crossJoin(F.broadcast(index.stats))
+        .withColumn("s", _impact_expr(k1, b))
+        .groupBy(*keys)
+        .agg(F.sum("s").alias("bm25"))
     )
 
 
@@ -174,6 +189,16 @@ def _with_doc_block(
     if "doc_block" in postings.columns:
         return postings
     return postings.withColumn("doc_block", doc_block(F.col(id_col), n_blocks))
+
+
+def _in_blocks(
+    postings: DataFrame, id_col: str, alive: list[int] | None
+) -> DataFrame:
+    """Postings restricted to the ``alive`` doc-blocks (all of them
+    when ``alive`` is None)."""
+    if alive is None:
+        return postings
+    return _with_doc_block(postings, id_col).filter(F.col("doc_block").isin(alive))
 
 
 def with_term_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -204,13 +229,10 @@ def score_expr(
     in as driver-side literals.  Terms are summed in the mapping's
     order; a term absent from a row contributes 0.  Callers drop terms
     with df = 0 (they match no row, and avgdl may then be 0)."""
-    dl = F.col("dl").cast("double")
     total = F.lit(0.0)
     for term, df in term_df.items():
-        tf = F.try_element_at(F.col("tf"), F.lit(term)).cast("double")
-        per_term = idf_expr(F.lit(float(df)), n_docs) * (tf * (k1 + 1.0)) / (
-            tf + k1 * (1.0 - b + b * dl / avgdl)
-        )
+        tf = F.try_element_at(F.col("tf"), F.lit(term))
+        per_term = impact(tf, F.col("dl"), df, n_docs, avgdl, k1, b)
         total = total + F.coalesce(per_term, F.lit(0.0))
     return total
 
@@ -247,7 +269,7 @@ def _alive_blocks(
     cost is <= N_DOC_BLOCKS aggregated rows.  Returns None when every
     block survives (callers then skip the redundant filter)."""
     rows = (
-        blockmax.filter(F.col("term").isin(terms))
+        prune_postings(blockmax, terms)
         .groupBy("doc_block")
         .agg(F.sum("block_max").alias("ub"))
         .collect()
@@ -256,33 +278,27 @@ def _alive_blocks(
     return None if len(alive) == len(rows) else alive
 
 
+def _no_matches(index: BM25Index) -> DataFrame:
+    """The empty (id_col, bm25) result of a query with no keyword
+    evidence in the index."""
+    return index.doclen.select(index.id_col, F.lit(0.0).alias("bm25")).limit(0)
+
+
 def score_query(
     index: BM25Index, query: str, k1: float = K1, b: float = B
 ) -> DataFrame:
     """-> (id_col, bm25) for documents matching >= 1 query term.
 
-    The ``isin`` literal filter is pushed to the postings scan; the
-    single groupBy(doc) is the only shuffle.
+    The query-term filter (:func:`prune_postings`) is pushed to the
+    postings scan — on a persisted index it also prunes term-bucket
+    directories; the single groupBy(doc) is the only shuffle.
     """
     terms = tokenize_query(query)
     if not terms:
         # empty query -> no keyword evidence; all-zero frame
-        return index.doclen.select(index.id_col, F.lit(0.0).alias("bm25")).limit(0)
-    matched = index.postings.filter(F.col("term").isin(terms))
-    # dl rides on the postings rows for indexes built by build_index;
-    # fall back to the doclen join for externally-supplied postings
-    if "dl" not in matched.columns:
-        matched = matched.join(index.doclen, index.id_col)
-    scored = matched.crossJoin(F.broadcast(index.stats))
-    tf, dl = F.col("tf").cast("double"), F.col("dl").cast("double")
-    per_term = idf_expr(F.col("df").cast("double"), F.col("n")) * (
-        tf * (k1 + 1.0)
-    ) / (tf + k1 * (1.0 - b + b * dl / F.col("avgdl")))
-    return (
-        scored.withColumn("s", per_term)
-        .groupBy(index.id_col)
-        .agg(F.sum("s").alias("bm25"))
-    )
+        return _no_matches(index)
+    matched = prune_postings(index.postings, terms)
+    return sum_impacts(matched, index, [index.id_col], k1, b)
 
 
 def term_bucket(col: Column, n_buckets: int = N_TERM_BUCKETS) -> Column:
@@ -296,16 +312,35 @@ def term_bucket_py(term: str, n_buckets: int = N_TERM_BUCKETS) -> int:
     return hash64_py(term) % n_buckets
 
 
-def write_index(
-    index: BM25Index, path: str, n_buckets: int = N_TERM_BUCKETS
-) -> None:
+def prune_postings(frame: DataFrame, terms: list[str]) -> DataFrame:
+    """The query-term filter of every postings/sidecar scan: ``term IN
+    (...)``, preceded on persisted layouts (frames carrying the
+    ``term_bucket`` partition column) by ``term_bucket IN (...)`` over
+    the terms' driver-side buckets — directory pruning to <= |terms|
+    of ``N_TERM_BUCKETS``, then a pushed row filter inside them."""
+    terms = list(terms)
+    if "term_bucket" in frame.columns:
+        buckets = sorted({term_bucket_py(t) for t in terms})
+        frame = frame.filter(F.col("term_bucket").isin(buckets))
+    return frame.filter(F.col("term").isin(terms))
+
+
+def _write_by_term_bucket(frame: DataFrame, path: str) -> None:
+    """Persist ``frame`` partitioned by its terms' ``term_bucket`` —
+    the directory layout :func:`prune_postings` prunes."""
+    frame.withColumn("term_bucket", term_bucket(F.col("term"))).write.mode(
+        "overwrite"
+    ).partitionBy("term_bucket").parquet(path)
+
+
+def write_index(index: BM25Index, path: str) -> None:
     """Persist the index — the 'build once per corpus version' half of
     the scale design in the module doc.
 
     Layout: ``postings/`` parquet partitioned by ``term_bucket`` (query
     terms hash to buckets driver-side, so a q-term query reads <= q of
-    ``n_buckets`` directories — directory-level partition pruning, not
-    just row-group skipping); ``doclen/`` and the 1-row ``stats/``
+    ``N_TERM_BUCKETS`` directories — directory-level partition pruning,
+    not just row-group skipping); ``doclen/`` and the 1-row ``stats/``
     alongside.  df/N/avgdl are frozen at write time, exactly the
     semantics of a Lucene-style segment snapshot."""
     # doc_block rides on the stored postings rows, sorted within each
@@ -314,7 +349,7 @@ def write_index(
     # on-disk analogue of BMW's block skipping
     (
         _with_doc_block(index.postings, index.id_col)
-        .withColumn("term_bucket", term_bucket(F.col("term"), n_buckets))
+        .withColumn("term_bucket", term_bucket(F.col("term")))
         .repartition("term_bucket")
         .sortWithinPartitions("term", "doc_block")
         .write.mode("overwrite")
@@ -323,38 +358,22 @@ def write_index(
     )
     index.doclen.write.mode("overwrite").parquet(f"{path}/doclen")
     index.stats.write.mode("overwrite").parquet(f"{path}/stats")
-    # per-term max-impact sidecar (|vocab| rows, bucket-partitioned
-    # like the postings) — MaxScore bounds come from here at query
-    # time, never from a postings scan
-    tm = index.termmax if index.termmax is not None else term_max_impacts(index)
-    tm.withColumn(
-        "term_bucket", term_bucket(F.col("term"), n_buckets)
-    ).write.mode("overwrite").partitionBy("term_bucket").parquet(
-        f"{path}/termmax"
-    )
     # per-(term, doc-block) bound sidecar — Block-Max refinement
     bm = (
         index.blockmax
         if index.blockmax is not None
         else term_block_max_impacts(index)
     )
-    bm.withColumn(
-        "term_bucket", term_bucket(F.col("term"), n_buckets)
-    ).write.mode("overwrite").partitionBy("term_bucket").parquet(
-        f"{path}/blockmax"
-    )
+    _write_by_term_bucket(bm, f"{path}/blockmax")
 
 
 def read_index(spark: SparkSession, path: str, id_col: str = "doc_id") -> BM25Index:
     """Open a persisted index; partition pruning on ``term_bucket``
-    happens in ``score_query_prebuilt``'s filter.  Indexes persisted
-    before the termmax sidecar existed open with ``termmax=None``
-    (MaxScore then recomputes bounds lazily)."""
+    happens in the scorers' query-term filter (:func:`prune_postings`).
+    Indexes persisted before the blockmax sidecar existed open with
+    ``blockmax=None`` (MaxScore then skips the Block-Max refinement)."""
     import os as _os
 
-    termmax = None
-    if _os.path.isdir(f"{path}/termmax"):
-        termmax = spark.read.parquet(f"{path}/termmax")
     blockmax = None
     if _os.path.isdir(f"{path}/blockmax"):
         blockmax = spark.read.parquet(f"{path}/blockmax")
@@ -363,29 +382,7 @@ def read_index(spark: SparkSession, path: str, id_col: str = "doc_id") -> BM25In
         doclen=spark.read.parquet(f"{path}/doclen"),
         stats=spark.read.parquet(f"{path}/stats"),
         id_col=id_col,
-        termmax=termmax,
         blockmax=blockmax,
-    )
-
-
-def score_query_prebuilt(
-    index: BM25Index,
-    query: str,
-    k1: float = K1,
-    b: float = B,
-    n_buckets: int = N_TERM_BUCKETS,
-) -> DataFrame:
-    """``score_query`` against a persisted index: the driver hashes the
-    query terms to their buckets and the scan carries BOTH predicates —
-    ``term_bucket IN (...)`` (directory pruning) and ``term IN (...)``
-    (pushed row filter inside the surviving buckets)."""
-    terms = tokenize_query(query)
-    if not terms:
-        return index.doclen.select(index.id_col, F.lit(0.0).alias("bm25")).limit(0)
-    buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
-    pruned = index.postings.filter(F.col("term_bucket").isin(buckets))
-    return score_query(
-        BM25Index(pruned, index.doclen, index.stats, index.id_col), query, k1, b
     )
 
 
@@ -397,8 +394,8 @@ def score_query_prebuilt(
 # (Turtle & Flood; the max-impact half of WAND) makes the hot-term work
 # proportional to the CANDIDATES instead:
 #
-#   1. per-term upper bound UB(t) = max per-doc contribution (from the
-#      build-time termmax sidecar — no postings scan at query time);
+#   1. per-term upper bound UB(t) = max per-doc contribution (the
+#      rank-1 impact of the term's own postings);
 #   2. a LOWER bound theta on the k-th best final score: the k-th best
 #      exact partial impact on the highest-UB term's own postings (a
 #      partial score is <= the doc's full score, so theta <= true kth);
@@ -446,7 +443,7 @@ def score_query_maxscore(
     least every document of the true top-``topk`` with EXACT scores
     (possibly plus lower-scored candidates — harmless to the caller's
     TakeOrdered).  Driver-side work is bounded by the query length
-    (<= q termmax rows + topk impact values), the same literal
+    (<= q x topk impact values), the same literal
     contract as the probe-label ANN paths.
 
     ``prune_stats`` (tests/diagnostics): filled with theta, the term
@@ -454,30 +451,16 @@ def score_query_maxscore(
     jobs — leave None in production)."""
     terms = list(dict.fromkeys(tokenize_query(query)))
     if not terms:
-        return index.doclen.select(index.id_col, F.lit(0.0).alias("bm25")).limit(0)
-
-    def _bucket_pruned(postings: DataFrame, term_list: list[str]) -> DataFrame:
-        """Query-term filter with term-bucket DIRECTORY pruning on
-        persisted layouts (the score_query_prebuilt contract, r15 —
-        previously only the final scoring scans of the prebuilt path
-        pruned; the bounds/theta/essential scans here read every
-        bucket)."""
-        if "term_bucket" in postings.columns:
-            bs = sorted({term_bucket_py(t) for t in term_list})
-            postings = postings.filter(F.col("term_bucket").isin(bs))
-        return postings.filter(F.col("term").isin(term_list))
+        return _no_matches(index)
 
     # ONE bounded driver round trip for the bounds AND theta (r15,
     # guide §5 "the driver should do almost no data work"): the
     # per-term top-``topk`` exact impacts of the query terms' postings
     # — rank <= topk per term (WindowGroupLimit keeps it a partial
     # top-k, never a full per-term sort), <= q x topk rows collected.
-    # Each term's rank-1 impact IS its max_impact (the same float the
-    # termmax sidecar stores: a max over identical _impact_expr
-    # values), and the topk-th impact of the highest-bound term is
-    # theta — so ubs, theta and the split are bit-identical to the
-    # former two-collect derivation (termmax filter + star-postings
-    # sort) while touching the postings pipeline ONCE.
+    # Each term's rank-1 impact IS its max_impact, and the topk-th
+    # impact of the highest-bound term is theta — so the postings
+    # pipeline is touched ONCE for ubs, theta and the split.
     from pyspark.sql.window import Window
 
     from qurio_spark.operators.cachectl import attach_caches
@@ -493,7 +476,7 @@ def score_query_maxscore(
     # than the recompute it saved.  The bounds collect doubles as the
     # cache materialization; the handle rides the returned frame for
     # cachectl.release_caches.
-    flt = _bucket_pruned(index.postings, terms).persist()
+    flt = prune_postings(index.postings, terms).persist()
 
     w = Window.partitionBy("term").orderBy(F.desc("imp"))
     top_rows = (
@@ -505,7 +488,7 @@ def score_query_maxscore(
     )
     if not top_rows:  # no query term occurs in the corpus
         flt.unpersist()
-        return index.doclen.select(index.id_col, F.lit(0.0).alias("bm25")).limit(0)
+        return _no_matches(index)
     ubs: dict[str, float] = {}
     term_imps: dict[str, list[float]] = {}
     for r in top_rows:
@@ -518,30 +501,6 @@ def score_query_maxscore(
     star_imps = sorted(term_imps[t_star], reverse=True)
     theta = star_imps[topk - 1] if len(star_imps) >= topk else float("-inf")
     essential, non_essential = maxscore_split(ubs, theta)
-    if prune_stats is not None:
-        prune_stats.update(
-            theta=theta, essential=essential, non_essential=non_essential
-        )
-    if not non_essential:
-        if prune_stats is not None:
-            prune_stats["postings_matched"] = flt.count()
-            prune_stats["postings_scored"] = prune_stats["postings_matched"]
-            prune_stats["alive_blocks"] = None
-        # full scoring straight off the cached slice — the same rows
-        # and the same expression as score_query over this index, so
-        # the result is identical while the corpus pipeline is not
-        # re-run
-        full = flt
-        if "dl" not in full.columns:
-            full = full.join(index.doclen, index.id_col)
-        out = (
-            full.crossJoin(F.broadcast(index.stats))
-            .withColumn("s", _impact_expr(k1, b))
-            .groupBy(index.id_col)
-            .agg(F.sum("s").alias("bm25"))
-        )
-        attach_caches(out, [flt])
-        return out
     # Block-Max refinement: discard whole doc-blocks whose summed
     # per-term block maxima cannot reach theta — this prunes INSIDE
     # the essential lists too (where the global split cannot), and on
@@ -551,39 +510,34 @@ def score_query_maxscore(
     # postings pipeline and cost more than the pruning saves.
     alive = (
         _alive_blocks(index.blockmax, terms, theta)
-        if index.blockmax is not None
+        if non_essential and index.blockmax is not None
         else None
     )
-    if prune_stats is not None:
-        prune_stats["alive_blocks"] = alive
-    ess = flt.filter(F.col("term").isin(essential))
-    if alive is not None:
-        ess = _with_doc_block(ess, index.id_col).filter(
-            F.col("doc_block").isin(alive)
-        )
-    cand = ess.select(index.id_col).distinct()
-    # candidates are SMALL by construction — they come from the
-    # essential (high-impact, therefore rare) lists; when every list
-    # is hot, theta never demotes a term and the full path above runs
-    # with no join at all.  Broadcast makes the hot-postings filter a
-    # map-side semi join instead of shuffling the hot list.
+    # with no non-essential term, full scoring runs straight off the
+    # cached slice — the same rows and the same expression as
+    # score_query over this index, so the result is identical while
+    # the corpus pipeline is not re-run
     matched = flt
-    if alive is not None:
-        matched = _with_doc_block(matched, index.id_col).filter(
-            F.col("doc_block").isin(alive)
-        )
-    matched = matched.join(F.broadcast(cand), index.id_col, "left_semi")
-    if "dl" not in matched.columns:
-        matched = matched.join(index.doclen, index.id_col)
-    scored = matched.crossJoin(F.broadcast(index.stats))
+    if non_essential:
+        ess = _in_blocks(flt.filter(F.col("term").isin(essential)), index.id_col, alive)
+        matched = _in_blocks(matched, index.id_col, alive)
+        # candidates are SMALL by construction — they come from the
+        # essential (high-impact, therefore rare) lists; when every
+        # list is hot, theta never demotes a term and the full path
+        # runs with no join at all.  Broadcast makes the hot-postings
+        # filter a map-side semi join instead of shuffling the hot list.
+        cand = ess.select(index.id_col).distinct()
+        matched = matched.join(F.broadcast(cand), index.id_col, "left_semi")
     if prune_stats is not None:
-        prune_stats["postings_matched"] = flt.count()
-        prune_stats["postings_scored"] = matched.count()
-    out = (
-        scored.withColumn("s", _impact_expr(k1, b))
-        .groupBy(index.id_col)
-        .agg(F.sum("s").alias("bm25"))
-    )
+        prune_stats.update(
+            theta=theta,
+            essential=essential,
+            non_essential=non_essential,
+            alive_blocks=alive,
+            postings_matched=flt.count(),
+            postings_scored=matched.count(),
+        )
+    out = sum_impacts(matched, index, [index.id_col], k1, b)
     attach_caches(out, [flt])
     return out
 
@@ -684,7 +638,9 @@ def score_query_segmented(
     are summed across segments (a per-term aggregate over <= q terms x
     n_segments rows, broadcast back), N/avgdl come from summing the
     1-row-per-segment stats.  Identical scores to a monolithic build
-    over the union'd corpus (pinned in tests/test_bm25_segments.py)."""
+    over the union'd corpus (pinned in tests/test_bm25_segments.py).
+    Persisted segments prune both the postings and the termdf scans to
+    the query terms' buckets (:func:`prune_postings`)."""
     terms = tokenize_query(query)
     if not terms:
         return (
@@ -694,57 +650,34 @@ def score_query_segmented(
             .limit(0)
         )
     df_q = (
-        index.termdf.filter(F.col("term").isin(terms))
+        prune_postings(index.termdf, terms)
         .groupBy("term")
         .agg(F.sum("df").cast("double").alias("df"))
     )
     stats = index.stats.agg(
         F.sum("n").alias("n"), (F.sum("sumdl") / F.sum("n")).alias("avgdl")
     )
-    matched = (
-        index.postings.filter(F.col("term").isin(terms))
+    return (
+        prune_postings(index.postings, terms)
         .join(F.broadcast(df_q), "term")
         .crossJoin(F.broadcast(stats))
-    )
-    tf, dl = F.col("tf").cast("double"), F.col("dl").cast("double")
-    per_term = idf_expr(F.col("df"), F.col("n")) * (tf * (k1 + 1.0)) / (
-        tf + k1 * (1.0 - b + b * dl / F.col("avgdl"))
-    )
-    return (
-        matched.withColumn("s", per_term)
+        .withColumn("s", _impact_expr(k1, b))
         .groupBy(index.id_col)
         .agg(F.sum("s").alias("bm25"))
     )
 
 
-def write_segment(
-    seg: BM25SegmentedIndex,
-    path: str,
-    name: str,
-    n_buckets: int = N_TERM_BUCKETS,
-) -> None:
+def write_segment(seg: BM25SegmentedIndex, path: str, name: str) -> None:
     """Persist one segment under ``{path}/{name}/`` with the same
     term-bucket directory layout as ``write_index`` (query pruning
     composes per segment); appending a batch writes ONLY its own
     segment directory."""
     base = f"{path}/{name}"
-    seg.postings.withColumn(
-        "term_bucket", term_bucket(F.col("term"), n_buckets)
-    ).write.mode("overwrite").partitionBy("term_bucket").parquet(
-        f"{base}/postings"
-    )
-    seg.termdf.withColumn(
-        "term_bucket", term_bucket(F.col("term"), n_buckets)
-    ).write.mode("overwrite").partitionBy("term_bucket").parquet(
-        f"{base}/termdf"
-    )
+    _write_by_term_bucket(seg.postings, f"{base}/postings")
+    _write_by_term_bucket(seg.termdf, f"{base}/termdf")
     seg.stats.write.mode("overwrite").parquet(f"{base}/stats")
     if seg.blockdf is not None:
-        seg.blockdf.withColumn(
-            "term_bucket", term_bucket(F.col("term"), n_buckets)
-        ).write.mode("overwrite").partitionBy("term_bucket").parquet(
-            f"{base}/blockdf"
-        )
+        _write_by_term_bucket(seg.blockdf, f"{base}/blockdf")
 
 
 def read_segments(
@@ -770,30 +703,6 @@ def read_segments(
     return merge_segments(segs)
 
 
-def score_query_segmented_pruned(
-    index: BM25SegmentedIndex,
-    query: str,
-    k1: float = K1,
-    b: float = B,
-    n_buckets: int = N_TERM_BUCKETS,
-) -> DataFrame:
-    """Segmented scoring with driver-side bucket pruning (persisted
-    segments carry ``term_bucket`` partitions): both the postings AND
-    the termdf sidecar scans prune to <= q of ``n_buckets``
-    directories per segment."""
-    terms = tokenize_query(query)
-    if not terms:
-        return score_query_segmented(index, query, k1, b)
-    buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
-    pruned = BM25SegmentedIndex(
-        postings=index.postings.filter(F.col("term_bucket").isin(buckets)),
-        termdf=index.termdf.filter(F.col("term_bucket").isin(buckets)),
-        stats=index.stats,
-        id_col=index.id_col,
-    )
-    return score_query_segmented(pruned, query, k1, b)
-
-
 def score_query_segmented_maxscore(
     index: BM25SegmentedIndex,
     query: str,
@@ -816,7 +725,7 @@ def score_query_segmented_maxscore(
     if not terms:
         return score_query_segmented(index, query, k1, b)
     meta = (
-        index.termdf.filter(F.col("term").isin(terms))
+        prune_postings(index.termdf, terms)
         .groupBy("term")
         .agg(
             F.sum("df").cast("double").alias("df"),
@@ -845,16 +754,9 @@ def score_query_segmented_maxscore(
         for r in meta
     }
     t_star = max(ubs, key=lambda t: (ubs[t], t))
-    imp_star = (
-        F.lit(_idf(dfs[t_star]))
-        * F.col("tf").cast("double") * (k1 + 1.0)
-        / (
-            F.col("tf").cast("double")
-            + k1 * (1.0 - b + b * F.col("dl").cast("double") / avgdl)
-        )
-    )
+    imp_star = impact(F.col("tf"), F.col("dl"), dfs[t_star], n, avgdl, k1, b)
     star_imps = (
-        index.postings.filter(F.col("term") == t_star)
+        prune_postings(index.postings, [t_star])
         .select(imp_star.alias("imp"))
         .orderBy(F.desc("imp"))
         .limit(topk)
@@ -862,26 +764,15 @@ def score_query_segmented_maxscore(
     )
     theta = float(star_imps[-1]["imp"]) if len(star_imps) >= topk else float("-inf")
     essential, non_essential = maxscore_split(ubs, theta)
-    if prune_stats is not None:
-        prune_stats.update(
-            theta=theta, essential=essential, non_essential=non_essential
-        )
-    if not non_essential:
-        if prune_stats is not None:
-            m = index.postings.filter(F.col("term").isin(terms))
-            prune_stats["postings_matched"] = m.count()
-            prune_stats["postings_scored"] = prune_stats["postings_matched"]
-            prune_stats["alive_blocks"] = None
-        return score_query_segmented(index, query, k1, b)
     # Block-Max refinement from the additive per-block partials: the
     # cross-segment (max max_tf, min min_dl) pair dominates every real
     # posting in the block, so UB(t, B) bounds any block member's
     # contribution and a block whose summed UBs miss theta holds no
     # top-k doc.  <= q x N_DOC_BLOCKS rows reach the driver.
     alive = None
-    if index.blockdf is not None:
+    if non_essential and index.blockdf is not None:
         brows = (
-            index.blockdf.filter(F.col("term").isin(terms))
+            prune_postings(index.blockdf, terms)
             .groupBy("term", "doc_block")
             .agg(
                 F.max("max_tf").cast("double").alias("max_tf"),
@@ -897,32 +788,25 @@ def score_query_segmented_maxscore(
             )
         kept = sorted(bk for bk, u in block_ub.items() if u >= theta)
         alive = None if len(kept) == len(block_ub) else kept
-    if prune_stats is not None:
-        prune_stats["alive_blocks"] = alive
-    ess = index.postings.filter(F.col("term").isin(essential))
-    if alive is not None:
-        ess = _with_doc_block(ess, index.id_col).filter(
-            F.col("doc_block").isin(alive)
+    hot = prune_postings(index.postings, terms)
+    pruned = index
+    if non_essential:
+        ess = _in_blocks(prune_postings(index.postings, essential), index.id_col, alive)
+        hot = _in_blocks(hot, index.id_col, alive)
+        cand = ess.select(index.id_col).distinct()
+        hot = hot.join(F.broadcast(cand), index.id_col, "left_semi").drop(
+            "doc_block"
         )
-    cand = ess.select(index.id_col).distinct()
-    hot = index.postings.filter(F.col("term").isin(terms))
-    if alive is not None:
-        hot = _with_doc_block(hot, index.id_col).filter(
-            F.col("doc_block").isin(alive)
-        )
-    pruned = BM25SegmentedIndex(
-        postings=hot.join(
-            F.broadcast(cand), index.id_col, "left_semi"
-        ).drop("doc_block"),
-        termdf=index.termdf,
-        stats=index.stats,
-        id_col=index.id_col,
-    )
+        pruned = BM25SegmentedIndex(hot, index.termdf, index.stats, index.id_col)
     if prune_stats is not None:
-        prune_stats["postings_matched"] = index.postings.filter(
-            F.col("term").isin(terms)
-        ).count()
-        prune_stats["postings_scored"] = pruned.postings.count()
+        prune_stats.update(
+            theta=theta,
+            essential=essential,
+            non_essential=non_essential,
+            alive_blocks=alive,
+            postings_matched=prune_postings(index.postings, terms).count(),
+            postings_scored=hot.count(),
+        )
     return score_query_segmented(pruned, query, k1, b)
 
 
@@ -932,7 +816,6 @@ def compact_segments(
     names: list[str],
     out_name: str,
     id_col: str = "doc_id",
-    n_buckets: int = N_TERM_BUCKETS,
 ) -> None:
     """Offline maintenance: fold segments into one (re-aggregating the
     termdf partials; postings rows are immutable so the fold is a
@@ -966,7 +849,7 @@ def compact_segments(
             .agg(F.max("max_tf").alias("max_tf"), F.min("min_dl").alias("min_dl"))
         ),
     )
-    write_segment(folded, path, out_name, n_buckets)
+    write_segment(folded, path, out_name)
 
 
 def score_query_inline(

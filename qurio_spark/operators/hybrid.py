@@ -26,6 +26,11 @@ statistic and normalization constant reaches it as a driver-side
 literal.  The serving engine (``api.Engine``) prepares those maps once
 per chunk frame, so a request pays only for its own query.  Nothing
 here grows with corpus size except the pruned candidate scans.
+
+The batch forms (``hybrid_search_batch`` over corpus x queries, and
+``hybrid_search_batch_ivf`` over IVF-probed candidates plus keyword
+matches) score a table of queries at once; both end in one fusion step,
+``_fuse_top_k``: per-query min-max, alpha fusion, per-query top-k.
 """
 
 from __future__ import annotations
@@ -119,7 +124,7 @@ def hybrid_search(
         return job_description(docs.sparkSession, job_label and f"{job_label}:{name}")
 
     if bm25_index is not None and not filters:
-        kw = bm25_op.score_query_prebuilt(bm25_index, query_text)
+        kw = bm25_op.score_query(bm25_index, query_text)
         cand = cand.join(F.broadcast(kw), id_col, "left")
         bm25 = F.coalesce(F.col("bm25"), F.lit(0.0))
         with phase("stats"):
@@ -210,36 +215,43 @@ def hybrid_search_batch(
         .select(qid_col, id_col, "bm25", "cos")
         .transform(checkpoint_df)  # shared by stats agg + value branch
     )
+    return _fuse_top_k(scored, a, k, qid_col, id_col)
+
+
+def _fuse_top_k(
+    scored: DataFrame, a: float, k: int, qid_col: str, id_col: str
+) -> DataFrame:
+    """(qid, id, bm25, cos) candidate rows -> per-query top-k (qid, id,
+    bm25_norm, vec_norm, score): each score min-max normalized over the
+    query's candidates (constant -> 0), fused by ``a``.
+
+    The per-query ranges come from a partial-agged groupBy broadcast
+    back, not a per-query window, which would ship every candidate row
+    of a hot query to ONE reducer; the agg's map-side partials absorb
+    it.  The top-k runs through grouped_top_n: its map-side
+    WindowGroupLimit(Partial) pre-filter keeps a hot query's candidate
+    list off any single reducer; identical output (the oracle stays
+    plain single-window SQL)."""
+    from qurio_spark.operators.topn import grouped_top_n
+
     mm = scored.groupBy(qid_col).agg(
         F.min("bm25").alias("_bmn"), F.max("bm25").alias("_bmx"),
         F.min("cos").alias("_cmn"), F.max("cos").alias("_cmx"),
     )
+
+    def norm(x: str, lo: str, hi: str) -> Column:
+        return F.when(
+            F.col(hi) > F.col(lo), (F.col(x) - F.col(lo)) / (F.col(hi) - F.col(lo))
+        ).otherwise(F.lit(0.0))
+
     fused = (
         scored.join(F.broadcast(mm), qid_col)
-        .withColumn(
-            "bm25_norm",
-            F.when(
-                F.col("_bmx") > F.col("_bmn"),
-                (F.col("bm25") - F.col("_bmn")) / (F.col("_bmx") - F.col("_bmn")),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "vec_norm",
-            F.when(
-                F.col("_cmx") > F.col("_cmn"),
-                (F.col("cos") - F.col("_cmn")) / (F.col("_cmx") - F.col("_cmn")),
-            ).otherwise(F.lit(0.0)),
-        )
+        .withColumn("bm25_norm", norm("bm25", "_bmn", "_bmx"))
+        .withColumn("vec_norm", norm("cos", "_cmn", "_cmx"))
         .withColumn(
             "score", F.lit(a) * F.col("vec_norm") + F.lit(1.0 - a) * F.col("bm25_norm")
         )
     )
-    # per-query top-k through grouped_top_n (r15): the map-side
-    # WindowGroupLimit(Partial) pre-filter keeps a hot query's
-    # candidate list off any single reducer; identical output (the
-    # oracle stays plain single-window SQL)
-    from qurio_spark.operators.topn import grouped_top_n
-
     return grouped_top_n(
         fused,
         [qid_col],
@@ -255,11 +267,11 @@ def _batch_keyword_scores(
     query terms broadcast into the postings join, one partial-agg
     shuffle — cost O(sum over queries of df(t)).
 
-    ``index``: a prebuilt (possibly persisted) BM25Index.  When its
-    postings carry the ``term_bucket`` partition column, the batch's
-    query terms are collected driver-side (the query table is small by
-    definition) and hashed to bucket literals, so the postings scan is
-    directory-pruned exactly like bm25.score_query_prebuilt."""
+    ``index``: a prebuilt (possibly persisted) BM25Index.  Its postings
+    scan is pruned to the batch's query terms (``prune_terms``, else
+    collected driver-side — the query table is small by definition)
+    through bm25.prune_postings, so a persisted layout is also
+    directory-pruned to the terms' buckets."""
     from qurio_spark.functions.text import tokenize
 
     if index is None:
@@ -267,7 +279,6 @@ def _batch_keyword_scores(
         postings = idx.postings
     else:
         idx = index
-        postings = idx.postings
         if prune_terms is None:
             prune_terms = sorted(
                 {
@@ -276,32 +287,13 @@ def _batch_keyword_scores(
                     for t in bm25_op.tokenize_query(r[qtext_col] or "")
                 }
             )
-        if not prune_terms:
-            postings = postings.limit(0)
-        else:
-            if "term_bucket" in postings.columns:
-                buckets = sorted({bm25_op.term_bucket_py(t) for t in prune_terms})
-                postings = postings.filter(F.col("term_bucket").isin(buckets))
-            postings = postings.filter(F.col("term").isin(list(prune_terms)))
+        postings = bm25_op.prune_postings(idx.postings, prune_terms)
     qterms = queries.select(
         F.col(qid_col),
         F.explode(F.array_distinct(tokenize(F.col(qtext_col)))).alias("term"),
     )
     matched = postings.join(F.broadcast(qterms), "term")
-    # dl rides on postings rows built by bm25.build_index — no per-query
-    # doclen join (the classic denormalized posting payload)
-    if "dl" not in matched.columns:
-        matched = matched.join(idx.doclen, id_col)
-    scored_kw = matched.crossJoin(F.broadcast(idx.stats))
-    tf, dl = F.col("tf").cast("double"), F.col("dl").cast("double")
-    per_term = bm25_op.idf_expr(F.col("df").cast("double"), F.col("n")) * (
-        tf * (bm25_op.K1 + 1.0)
-    ) / (tf + bm25_op.K1 * (1.0 - bm25_op.B + bm25_op.B * dl / F.col("avgdl")))
-    return (
-        scored_kw.withColumn("s", per_term)
-        .groupBy(qid_col, id_col)
-        .agg(F.sum("s").alias("bm25"))
-    )
+    return bm25_op.sum_impacts(matched, idx, [qid_col, id_col])
 
 
 def hybrid_search_batch_ivf(
@@ -320,7 +312,6 @@ def hybrid_search_batch_ivf(
     iters: int = 3,
     nprobe: int = 3,
     fit_sample_mod: int | None = 4,
-    exact_stats: bool = False,
     ivf_index: tuple[DataFrame, DataFrame] | None = None,
     bm25_index=None,
     codebook: list[tuple[int, list[float]]] | None = None,
@@ -334,22 +325,12 @@ def hybrid_search_batch_ivf(
     materialized/windowed row count drops from N*Q to roughly
     N*Q*nprobe/k_clusters + sparse keyword matches.
 
-    ``exact_stats=False`` (the DEFAULT — the pure-pruned 100 TB shape)
-    normalizes over the candidate set and never touches the full
-    corpus; its normalization constants differ from the dense oracle's,
-    but the retrieved top-k doc set matches the dense result whenever
-    the probes reach every true top-k doc (pinned by the doc-set oracle
-    and the recall test).  ``exact_stats=True`` is the parity/test
-    configuration: it reproduces the dense result EXACTLY (same hash)
-    by computing min-max constants over the FULL corpus — the cos stats
-    via a map-only generate-and-aggregate pass (broadcast nested-loop
-    against the query table, partial agg, nothing materialized), the
-    bm25 stats reconstructed exactly from the sparse side (docs without
-    keyword evidence score 0, so dense min/max = min/max of
-    {sparse scores} U {0} whenever any doc is unmatched) — at the cost
-    of a full-corpus pass per run, which is why it is not the default.
+    Normalization runs over each query's candidate set and never
+    touches the full corpus, so its constants differ from the dense
+    oracle's; the retrieved top-k doc set matches the dense result
+    whenever the probes reach every true top-k doc (pinned by the
+    doc-set oracle and the recall test).
     """
-    from qurio_spark.functions.vector import cosine
     from qurio_spark.operators.similarity import ivf_build
 
     a, k = resolve_params(alpha, limit, settings)
@@ -359,10 +340,6 @@ def hybrid_search_batch_ivf(
     # a hash-sample + one full labeling pass, in-DAG.
     if ivf_index is not None:
         labeled, centroids = ivf_index
-        # the persisted labeled corpus IS the vector table: candidate
-        # lookups and stats scans read it directly — the query never
-        # touches ``docs`` (no documents-x-embeddings join at all)
-        vecs = labeled.select(F.col(id_col), F.col(vec_col))
     else:
         vecs = checkpoint_df(docs.select(F.col(id_col), F.col(vec_col)))
         labeled, centroids = ivf_build(
@@ -462,209 +439,63 @@ def hybrid_search_batch_ivf(
     )
     qvecs = queries.select(qid_col, qvec_col)
 
-    if not exact_stats:
-        # Pure-pruned fast path — everything not listed is broadcast
-        # map-side:
-        #   1. the keyword partial-agg inside ``kw``;
-        #   2. the per-query min-max stats agg — partial-agged, so a
-        #      hot query's candidates collapse map-side (r15: was an
-        #      unordered per-query window riding one Exchange(query),
-        #      which shipped every candidate row of a query to ONE
-        #      reducer — cheaper by one exchange, single-reducer at
-        #      scale);
-        #   3. the per-query top-k Exchange(query) — fed by the
-        #      map-side WindowGroupLimit(Partial) pre-filter
-        #      (operators/topn), so it carries <= k rows per (query,
-        #      map partition), never a hot query's candidate list.
-        # The two candidate branches are DISJOINT by construction
-        # (keyword pairs whose (query, label) is probed are anti-joined
-        # out against the broadcast probe table), so there is no
-        # dedupe shuffle.  ``kw`` feeds both branches — one lazy
-        # lineage cut so the postings scan + agg run once, not twice.
-        # cache, not localCheckpoint: both consumers sit in the SAME
-        # action, so lazy caching materializes kw once inside the main
-        # job (no separate checkpoint job); the ContextCleaner drops the
-        # blocks when the frame is collected.  (Measured: cache 0.97 s,
-        # eager localCheckpoint 1.11 s, no cut 2.4 s at sf0.1.)
-        kw = kw.cache()
-        # cosine is computed BEFORE the bm25-attach join so the join
-        # exchange shuffles (qid, doc, cos) scalars — projecting it
-        # after the join would drag both embedding arrays through the
-        # Exchange (measured ~2x the shuffle bytes at 64 dims)
-        probed_cos = probed.join(F.broadcast(qvecs), qid_col).select(
-            qid_col,
+    # Everything not listed is broadcast map-side:
+    #   1. the keyword partial-agg inside ``kw``;
+    #   2. the per-query min-max stats agg of ``_fuse_top_k`` —
+    #      partial-agged, so a hot query's candidates collapse map-side;
+    #   3. the per-query top-k Exchange(query) — fed by the map-side
+    #      WindowGroupLimit(Partial) pre-filter (operators/topn), so it
+    #      carries <= k rows per (query, map partition), never a hot
+    #      query's candidate list.
+    # The two candidate branches are DISJOINT by construction (keyword
+    # pairs whose (query, label) is probed are anti-joined out against
+    # the broadcast probe table), so there is no dedupe shuffle.
+    # ``kw`` feeds both branches — one lazy lineage cut so the postings
+    # scan + agg run once, not twice.  cache, not localCheckpoint: both
+    # consumers sit in the SAME action, so lazy caching materializes kw
+    # once inside the main job (no separate checkpoint job); the handle
+    # on the returned frame releases it (operators/cachectl).
+    # (Measured: cache 0.97 s, eager localCheckpoint 1.11 s, no cut
+    # 2.4 s at sf0.1.)
+    kw = kw.cache()
+    # cosine is computed BEFORE the bm25-attach join so the join
+    # exchange shuffles (qid, doc, cos) scalars — projecting it after
+    # the join would drag both embedding arrays through the Exchange
+    # (measured ~2x the shuffle bytes at 64 dims)
+    probed_cos = probed.join(F.broadcast(qvecs), qid_col).select(
+        qid_col,
+        id_col,
+        cosine(F.col(vec_col), F.col(qvec_col)).alias("cos"),
+    )
+    probed_scored = probed_cos.join(kw, [qid_col, id_col], "left").select(
+        qid_col,
+        id_col,
+        F.coalesce(F.col("bm25"), F.lit(0.0)).alias("bm25"),
+        F.col("cos"),
+    )
+    kw_outside = (
+        kw.join(
+            labeled.select(F.col(id_col), F.col("label"), F.col(vec_col)),
             id_col,
-            cosine(F.col(vec_col), F.col(qvec_col)).alias("cos"),
         )
-        probed_scored = (
-            probed_cos.join(kw, [qid_col, id_col], "left")
-            .select(
-                qid_col,
-                id_col,
-                F.coalesce(F.col("bm25"), F.lit(0.0)).alias("bm25"),
-                F.col("cos"),
-            )
-        )
-        kw_outside = (
-            kw.join(
-                labeled.select(F.col(id_col), F.col("label"), F.col(vec_col)),
-                id_col,
-            )
-            .join(F.broadcast(probes), [qid_col, "label"], "left_anti")
-            .join(F.broadcast(qvecs), qid_col)
-            .select(
-                qid_col,
-                id_col,
-                F.col("bm25"),
-                cosine(F.col(vec_col), F.col(qvec_col)).alias("cos"),
-            )
-        )
-        # r15: min/max per query via a partial-agged groupBy broadcast
-        # back, not an unordered per-query window — the window form
-        # shipped every candidate row of a hot query to ONE reducer
-        # before any normalization ran; the agg's map-side partials
-        # absorb it.  cache (the ``kw`` convention, NOT localCheckpoint:
-        # both consumers sit in the same action, and a cache keeps the
-        # candidate subtree — IVF partition pruning included — visible
-        # to the plan audit) shares the candidate build between the
-        # stats agg and the value branch; the handle on the returned
-        # frame releases it (operators/cachectl).
-        cand = probed_scored.unionByName(kw_outside).cache()
-        mm = cand.groupBy(qid_col).agg(
-            F.min("bm25").alias("_bmn"), F.max("bm25").alias("_bmx"),
-            F.min("cos").alias("_cmn"), F.max("cos").alias("_cmx"),
-        )
-        fused = (
-            cand.join(F.broadcast(mm), qid_col)
-            .withColumn(
-                "bm25_norm",
-                F.when(
-                    F.col("_bmx") > F.col("_bmn"),
-                    (F.col("bm25") - F.col("_bmn"))
-                    / (F.col("_bmx") - F.col("_bmn")),
-                ).otherwise(F.lit(0.0)),
-            )
-            .withColumn(
-                "vec_norm",
-                F.when(
-                    F.col("_cmx") > F.col("_cmn"),
-                    (F.col("cos") - F.col("_cmn"))
-                    / (F.col("_cmx") - F.col("_cmn")),
-                ).otherwise(F.lit(0.0)),
-            )
-            .withColumn(
-                "score",
-                F.lit(a) * F.col("vec_norm") + F.lit(1.0 - a) * F.col("bm25_norm"),
-            )
-        )
-        from qurio_spark.operators.cachectl import attach_caches
-        from qurio_spark.operators.topn import grouped_top_n
-
-        out = grouped_top_n(
-            fused,
-            [qid_col],
-            [F.desc(stable_round(F.col("score"), 6)), F.asc(id_col)],
-            k,
-        ).select(qid_col, id_col, "bm25_norm", "vec_norm", "score")
-        return attach_caches(out, [kw, cand])
-
-    kw_vec = (
-        kw.select(qid_col, id_col)
-        .join(vecs, id_col)
-        .select(qid_col, id_col, vec_col)
-    )
-    cand = (
-        probed.unionByName(kw_vec)
-        .dropDuplicates([qid_col, id_col])
+        .join(F.broadcast(probes), [qid_col, "label"], "left_anti")
         .join(F.broadcast(qvecs), qid_col)
-        .withColumn("cos", cosine(F.col(vec_col), F.col(qvec_col)))
-        .join(kw, [qid_col, id_col], "left")
-        .withColumn("bm25", F.coalesce(F.col("bm25"), F.lit(0.0)))
-        .select(qid_col, id_col, "bm25", "cos")
-        .transform(checkpoint_df)  # shared by the exact-stats branch + values
-    )
-
-    # cos stats: full-corpus map-only pass — rows are generated by the
-    # broadcast nested-loop and immediately partially aggregated;
-    # nothing N*Q-sized is shuffled or materialized.
-    # cos stats AND the corpus size in one pass (every query sees
-    # every doc in the generate-and-aggregate, so count(*) per
-    # query IS the corpus size — no separate count job).
-    cos_mm = (
-        vecs.select(vec_col)
-        .crossJoin(F.broadcast(qvecs))
-        .select(qid_col, cosine(F.col(vec_col), F.col(qvec_col)).alias("cos"))
-        .groupBy(qid_col)
-        .agg(
-            F.min("cos").alias("_cmn"),
-            F.max("cos").alias("_cmx"),
-            F.count("*").alias("_n"),
-        )
-    )
-    # bm25 stats reconstructed exactly from the sparse side: every
-    # doc outside the match set scores 0.0, so whenever the match
-    # count is below the corpus size the dense extrema must include 0.
-    mm = (
-        cos_mm.join(
-            kw.groupBy(qid_col).agg(
-                F.min("bm25").alias("_kmn"),
-                F.max("bm25").alias("_kmx"),
-                F.count("*").alias("_kcnt"),
-            ),
-            qid_col,
-            "left",
-        )
         .select(
             qid_col,
-            "_cmn",
-            "_cmx",
-            F.when(
-                F.coalesce(F.col("_kcnt"), F.lit(0)) < F.col("_n"),
-                F.least(F.lit(0.0), F.coalesce(F.col("_kmn"), F.lit(0.0))),
-            )
-            .otherwise(F.col("_kmn"))
-            .alias("_bmn"),
-            F.when(
-                F.coalesce(F.col("_kcnt"), F.lit(0)) < F.col("_n"),
-                F.greatest(F.lit(0.0), F.coalesce(F.col("_kmx"), F.lit(0.0))),
-            )
-            .otherwise(F.col("_kmx"))
-            .alias("_bmx"),
+            id_col,
+            F.col("bm25"),
+            cosine(F.col(vec_col), F.col(qvec_col)).alias("cos"),
         )
     )
+    # cache (the ``kw`` convention, NOT localCheckpoint: both consumers
+    # sit in the same action, and a cache keeps the candidate subtree —
+    # IVF partition pruning included — visible to the plan audit)
+    # shares the candidate build between the stats agg and the value
+    # branch of the fusion.
+    cand = probed_scored.unionByName(kw_outside).cache()
+    from qurio_spark.operators.cachectl import attach_caches
 
-    fused = (
-        cand.join(F.broadcast(mm), qid_col)
-        .withColumn(
-            "bm25_norm",
-            F.when(
-                F.col("_bmx") > F.col("_bmn"),
-                (F.col("bm25") - F.col("_bmn")) / (F.col("_bmx") - F.col("_bmn")),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "vec_norm",
-            F.when(
-                F.col("_cmx") > F.col("_cmn"),
-                (F.col("cos") - F.col("_cmn")) / (F.col("_cmx") - F.col("_cmn")),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "score", F.lit(a) * F.col("vec_norm") + F.lit(1.0 - a) * F.col("bm25_norm")
-        )
-    )
-    # per-query top-k through grouped_top_n (r15): the map-side
-    # WindowGroupLimit(Partial) pre-filter keeps a hot query's
-    # candidate list off any single reducer; identical output (the
-    # oracle stays plain single-window SQL)
-    from qurio_spark.operators.topn import grouped_top_n
-
-    return grouped_top_n(
-        fused,
-        [qid_col],
-        [F.desc(stable_round(F.col("score"), 6)), F.asc(id_col)],
-        k,
-    ).select(qid_col, id_col, "bm25_norm", "vec_norm", "score")
+    return attach_caches(_fuse_top_k(cand, a, k, qid_col, id_col), [kw, cand])
 
 
 def hybrid_search_rrf(
@@ -701,11 +532,12 @@ def hybrid_search_rrf(
 
     _, k = resolve_params(None, limit, settings)
     cand = apply_metadata_filters(docs, filters)
-    if bm25_index is not None and not filters:
-        kw = bm25_op.score_query_prebuilt(bm25_index, query_text)
-    else:
-        idx = bm25_op.build_index(cand, id_col, text_col)
-        kw = bm25_op.score_query(idx, query_text)
+    idx = (
+        bm25_index
+        if bm25_index is not None and not filters
+        else bm25_op.build_index(cand, id_col, text_col)
+    )
+    kw = bm25_op.score_query(idx, query_text)
 
     def branch_ranks(scored, score_col, rank_col):
         top = (

@@ -51,8 +51,8 @@ Scale shape (100 TB posture):
     fallback safe: a hot pair ("of the") contributes at most ONE row
     per document to the exchange, not one per occurrence.  Callers
     who need the all-broadcast plan bound ``bi`` directly by lowering
-    ``max_vocab`` (bi <= V^2).  Skew evidence: tools/lm_skew_check.py
-    (planted Zipf bigrams, broadcast forced off).
+    ``max_vocab`` (bi <= V^2).  Skew evidence: SCALE.md "Round 14: lm_quality
+    hot-bigram hardening" (planted Zipf bigrams, broadcast forced off).
   - training aggregations are map-side-partial groupBy counts over
     the train subset (vocab-sized results, not corpus-sized);
   - the top-K vocab selection is ``orderBy(...).limit(K)`` — Spark's
@@ -247,7 +247,7 @@ def lm_buckets(
     partial-agged sketch per (source, input partition) — the corpus
     rows never shuffle for bucketing (pinned by the plan assert in
     tests/test_textstats.py; planted approx==exact agreement at scale
-    in tools/lm_approx_check.py, committed in SCALE.md).
+    in SCALE.md "Round 15: planted approx==exact agreement at scale").
     The scored frame is persisted (narrow: id, source, 2 ints) —
     both paths consume it more than once, and re-deriving it would
     re-run LM training.  The cache is attached to the returned frame:

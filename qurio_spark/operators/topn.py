@@ -14,7 +14,8 @@ most n x num_map_partitions rows, not the group.  The hand-rolled
 form paid an extra exchange + sort and an md5 sub-bucket hash per row
 for a marginally tighter final bound; at 40M rows in ONE group the
 native plan ran 0.6 s vs 10.2 s for the two-phase rewrite
-(tools/dewindow_scale_check.py, SCALE.md r15).  Rule of the repo:
+SCALE.md "Round 14 (cont.): de-windowed primitives at 40M rows,
+ONE group").  Rule of the repo:
 don't hand-schedule what Catalyst already does.
 
 This helper therefore emits the plain window and exists to (a) name

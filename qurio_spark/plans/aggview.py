@@ -231,10 +231,21 @@ def refresh_agg_view(
 
     if txn is not None and snap_txn_seen(path, *txn):
         return  # replayed micro-batch: already merged into the view
-    if hist_bounds is not None:
-        _check_hist_bounds(path, hist_bounds)
     if (states is None) == (delta is None):
         raise ValueError("pass exactly one of delta / states")
+    if states is not None:
+        # a pre-built frame must carry exactly the state columns these
+        # arguments define, checked before anything is committed
+        want = set(group_cols) | set(STATE_COLS)
+        want |= {"hs"} if distinct_col is not None else set()
+        want |= {"hb"} if hist_bounds is not None else set()
+        if set(states.columns) != want:
+            raise ValueError(
+                f"states columns {sorted(states.columns)} do not match "
+                f"the view definition {sorted(want)}"
+            )
+    if hist_bounds is not None:
+        _check_hist_bounds(path, hist_bounds)
     new = states if states is not None else partial_states(
         delta, group_cols, value_col, distinct_col, hist_bounds
     )

@@ -1093,8 +1093,7 @@ LIMIT 10""",
         # doc-set oracle: the pruned IVF path normalizes over its
         # candidate set (scores not dense-comparable), but the
         # RETRIEVED top-k doc set must equal the dense oracle's exactly
-        # (recall 1 at this sf with nprobe=3 of 8 clusters; exact-score
-        # parity for exact_stats=True is pinned in tests/test_search.py)
+        # (recall 1 at this sf with nprobe=3 of 8 clusters)
         "batch_hybrid_ivf": _batch_hybrid_sql(alpha=0.5, k=5, doc_set_only=True),
         "lsh_topk": _lsh_topk_sql(n_planes=3, k=10),
         # identical semantics by construction: the persisted index only

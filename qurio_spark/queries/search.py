@@ -28,16 +28,26 @@ from qurio_spark.operators.hybrid import hybrid_search
 from qurio_spark.operators.similarity import brute_force_topk, ivf_topk
 
 
+def _keyword_top10(scored: DataFrame) -> DataFrame:
+    """The pure-keyword queries' shared tail: the top-10 (doc_id, bm25)
+    of the documents with keyword evidence, bm25 4-digit stable-rounded.
+    Caches the scorer attached to ``scored`` move to the result."""
+    from qurio_spark.operators.cachectl import propagate_caches
+
+    return propagate_caches(
+        scored,
+        scored.filter(F.col("bm25") > 0)
+        .select("doc_id", stable_round("bm25", 4).alias("bm25"))
+        .orderBy(F.desc(stable_round("bm25", 6)), F.asc("doc_id"))
+        .limit(10),
+    )
+
+
 def q_bm25_topk(spark, sf_dir):
     """Q2 alpha=0: pure keyword BM25 top-10."""
     docs = _t(spark, sf_dir, "documents")
     scored = bm25_op.score_query_inline(docs, QUERY_TEXT)
-    return (
-        scored.filter(F.col("bm25") > 0)
-        .select("doc_id", stable_round("bm25", 4).alias("bm25"))
-        .orderBy(F.desc(stable_round("bm25", 6)), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _keyword_top10(scored)
 
 
 def q_bm25_maxscore(spark, sf_dir):
@@ -59,15 +69,7 @@ def q_bm25_maxscore(spark, sf_dir):
     # saves); the r15 win is inside score_query_maxscore instead (one
     # fused bounds+theta collect, term-bucket pruning).
     scored = bm25_op.score_query_maxscore(idx, QUERY_TEXT, 20)
-    from qurio_spark.operators.cachectl import propagate_caches
-
-    return propagate_caches(
-        scored,
-        scored.filter(F.col("bm25") > 0)
-        .select("doc_id", stable_round("bm25", 4).alias("bm25"))
-        .orderBy(F.desc(stable_round("bm25", 6)), F.asc("doc_id"))
-        .limit(10),
-    )
+    return _keyword_top10(scored)
 
 
 def q_bm25_blockmax(spark, sf_dir):
@@ -87,15 +89,7 @@ def q_bm25_blockmax(spark, sf_dir):
     both paths pinned in tests/test_bm25_segments.py::TestBlockMax."""
     idx = _bm25_index_handle(spark, sf_dir, "documents")
     scored = bm25_op.score_query_maxscore(idx, QUERY_TEXT, 20)
-    from qurio_spark.operators.cachectl import propagate_caches
-
-    return propagate_caches(
-        scored,
-        scored.filter(F.col("bm25") > 0)
-        .select("doc_id", stable_round("bm25", 4).alias("bm25"))
-        .orderBy(F.desc(stable_round("bm25", 6)), F.asc("doc_id"))
-        .limit(10),
-    )
+    return _keyword_top10(scored)
 
 
 # Per-process cache of persisted index locations (sf_dir -> path).
@@ -192,9 +186,8 @@ def _ivf_index_path(spark, sf_dir: str) -> str:
         emb = _docs_with_vecs(spark, sf_dir).select("doc_id", "embedding")
         # k=16: finer codebook than the in-DAG default (8) — per-query
         # probe fraction drops to 3/16 and the probed-label union stays
-        # well under the full corpus; verified hash-identical to the
-        # dense oracle (exact mode) and recall 1.0 (pruned mode) at
-        # sf0.001/0.01/0.1
+        # well under the full corpus; verified recall 1.0 against the
+        # dense oracle at sf0.001/0.01/0.1
         labeled, centroids = ivf_build(
             emb, k=16, iters=3, id_col="doc_id", fit_sample_mod=4
         )
@@ -318,12 +311,7 @@ def q_bm25_incremental(spark, sf_dir):
     delta = docs.filter(F.col("doc_id") % 3 == 0)
     merged = merge_segments([build_segment(base), build_segment(delta)])
     scored = score_query_segmented(merged, QUERY_TEXT)
-    return (
-        scored.filter(F.col("bm25") > 0)
-        .select("doc_id", stable_round("bm25", 4).alias("bm25"))
-        .orderBy(F.desc(stable_round("bm25", 6)), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _keyword_top10(scored)
 
 
 def q_bm25_prebuilt(spark, sf_dir):
@@ -331,15 +319,10 @@ def q_bm25_prebuilt(spark, sf_dir):
     partitioned by md5 term-bucket, query terms hashed driver-side so
     the scan prunes to <= |q| of 64 bucket directories then applies the
     pushed ``term IN``  filter — per-query cost O(sum df(t)), corpus
-    scanned zero times (operators/bm25.write_index/score_query_prebuilt)."""
+    scanned zero times (operators/bm25.write_index/prune_postings)."""
     idx = _bm25_index_handle(spark, sf_dir, "documents")
-    scored = bm25_op.score_query_prebuilt(idx, QUERY_TEXT)
-    return (
-        scored.filter(F.col("bm25") > 0)
-        .select("doc_id", stable_round("bm25", 4).alias("bm25"))
-        .orderBy(F.desc(stable_round("bm25", 6)), F.asc("doc_id"))
-        .limit(10)
-    )
+    scored = bm25_op.score_query(idx, QUERY_TEXT)
+    return _keyword_top10(scored)
 
 
 def q_vector_topk(spark, sf_dir):
@@ -464,16 +447,14 @@ def q_batch_hybrid(spark, sf_dir):
 
 
 def q_batch_hybrid_ivf(spark, sf_dir):
-    """Q2 batch form, IVF-pruned (the 100 TB configuration, default
-    ``exact_stats=False``): candidates = (nprobe nearest clusters per
-    query) U (keyword matches) instead of corpus x queries, and
-    normalization over the candidate set — NO full-corpus pass
-    anywhere.  Candidate-set normalization constants differ from the
-    dense oracle's, so the oracle pins the retrieved DOC SET: the
-    output is (query_id, doc_id) and must equal the dense SQL top-k
-    exactly (recall 1.0; also pinned in tests/test_queries_full.py).
-    Exact-score parity for the probes lives in tests/test_search.py
-    (exact_stats=True reproduces q_batch_hybrid hash-identically)."""
+    """Q2 batch form, IVF-pruned (the 100 TB configuration):
+    candidates = (nprobe nearest clusters per query) U (keyword
+    matches) instead of corpus x queries, and normalization over the
+    candidate set — NO full-corpus pass anywhere.  Candidate-set
+    normalization constants differ from the dense oracle's, so the
+    oracle pins the retrieved DOC SET: the output is (query_id, doc_id)
+    and must equal the dense SQL top-k exactly (recall 1.0; also pinned
+    in tests/test_queries_full.py::test_ivf_pruned_recall)."""
     from qurio_spark.operators.hybrid import hybrid_search_batch_ivf
 
     docs = _docs_with_vecs(spark, sf_dir)
@@ -490,7 +471,7 @@ def q_batch_hybrid_ivf(spark, sf_dir):
     )
     from qurio_spark.operators.cachectl import propagate_caches
 
-    # the pruned fast path attaches its kw/cand caches to `res`
+    # the operator attaches its kw/cand caches to `res`
     # (hybrid.py) — hand them to the projection we return, or the
     # harnesses' release_caches(result) is a no-op and every call
     # leaks two persisted frames

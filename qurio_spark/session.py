@@ -28,6 +28,11 @@ ENV_SF_DIR = "SPARK_GRAFT_SF_DIR"
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
+#: The directory holding the ``qurio_spark`` package.  Python workers
+#: import the engine's UDF code from it, whatever the driver's working
+#: directory is.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_parallelism() -> int:
     return int(os.environ.get(ENV_CPUS, "0") or 0) or (os.cpu_count() or 8)
@@ -70,7 +75,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # executors import qurio_spark for pandas/Arrow UDFs: put the
+    # package's parent first on their PYTHONPATH
+    pythonpath = conf.get("spark.executorEnv.PYTHONPATH")
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, pythonpath) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -476,6 +476,33 @@ class TestHistogramState:
         assert hb["b"] == [0, 0, 1, 0]
 
 
+@pytest.mark.parametrize(
+    "state_keys,build,refresh",
+    [
+        # states built without the histogram, refreshed as if with one
+        (["k"], {}, {"hist_bounds": (0.0, 10.0, 4)}),
+        # states carrying a sketch the refresh does not define
+        (["k"], {"distinct_col": "u"}, {}),
+        # states grouped by other keys than the refresh names
+        (["u"], {}, {}),
+    ],
+)
+def test_prebuilt_states_columns_validated(
+    spark, tmp_path, state_keys, build, refresh
+):
+    """refresh_agg_view(states=) checks the frame's columns against
+    group_cols + STATE_COLS (+ hs / hb per the flags) and refuses a
+    mismatch before anything reaches the view's directory."""
+    path = str(tmp_path / "v")
+    df = spark.createDataFrame(
+        [("a", "x", 1.0), ("b", "y", 5.0)], "k string, u string, value double"
+    )
+    states = partial_states(df, state_keys, "value", **build)
+    with pytest.raises(ValueError, match="states columns"):
+        refresh_agg_view(spark, path, None, ["k"], "value", states=states, **refresh)
+    assert not os.path.exists(path)
+
+
 class TestExactlyOnceRefresh:
     """refresh_agg_view(txn=): a replayed micro-batch (foreachBatch is
     at-least-once) must NOT merge into the states a second time."""

@@ -53,6 +53,16 @@ def test_large_bitmap_routes_through_arrow_stage(spark, monkeypatch):
         bloom_might_contain("k", [0] * 9, m_bits=1 << 12)
 
 
+@pytest.mark.parametrize("k_hashes", [0, -1])
+def test_k_hashes_below_one_rejected(spark, k_hashes):
+    """Zero hash positions test nothing: both the SQL-string form
+    (column name) and the Column form must refuse, not parse ``()``
+    or match every row."""
+    for key in ("k", F.col("k")):
+        with pytest.raises(ValueError, match="k_hashes"):
+            bloom_might_contain(key, [0] * 16, 1 << 10, k_hashes)
+
+
 def test_bitmap_with_sign_bit_word_parity(spark):
     """A build whose bitmap sets bit 63 of a word (negative long) must
     probe identically through the literal and Arrow paths."""

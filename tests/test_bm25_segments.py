@@ -17,7 +17,6 @@ from qurio_spark.operators.bm25 import (
     read_segments,
     score_query,
     score_query_segmented,
-    score_query_segmented_pruned,
     write_segment,
 )
 
@@ -58,7 +57,8 @@ def test_three_way_and_skewed_split(spark, docs):
 
 def test_persisted_segments_roundtrip_and_append(spark, docs, tmp_path):
     """Appending a segment writes ONLY its own directory; the merged
-    read scores like the monolithic rebuild (pruned path included)."""
+    read scores like the monolithic rebuild (the scorer prunes the
+    persisted term-bucket layout itself)."""
     path = str(tmp_path / "bm25_segs")
     base = docs.filter(F.col("doc_id") % 3 != 0)
     delta = docs.filter(F.col("doc_id") % 3 == 0)
@@ -81,7 +81,6 @@ def test_persisted_segments_roundtrip_and_append(spark, docs, tmp_path):
     merged = read_segments(spark, path, ["seg0", "seg1"])
     want = _scores(score_query(build_index(docs), QUERY))
     assert _scores(score_query_segmented(merged, QUERY)) == want
-    assert _scores(score_query_segmented_pruned(merged, QUERY)) == want
 
 
 def test_compaction_preserves_scores(spark, docs, tmp_path):
@@ -91,7 +90,7 @@ def test_compaction_preserves_scores(spark, docs, tmp_path):
     compact_segments(spark, path, ["a", "b"], "compacted")
     one = read_segments(spark, path, ["compacted"])
     want = _scores(score_query(build_index(docs), QUERY))
-    assert _scores(score_query_segmented_pruned(one, QUERY)) == want
+    assert _scores(score_query_segmented(one, QUERY)) == want
 
 
 def test_compaction_heals_missing_blockmax_sidecar(spark, docs, tmp_path):
@@ -118,7 +117,7 @@ def test_compaction_heals_missing_blockmax_sidecar(spark, docs, tmp_path):
     )
     assert got == want
     # and the healed segment scores exactly like the monolithic build
-    assert _scores(score_query_segmented_pruned(healed, QUERY)) == _scores(
+    assert _scores(score_query_segmented(healed, QUERY)) == _scores(
         score_query(build_index(docs), QUERY)
     )
 
@@ -131,7 +130,7 @@ def test_pruned_scan_has_partition_filters(spark, docs, tmp_path):
     path = str(tmp_path / "bm25_prune")
     write_segment(build_segment(docs), path, "s")
     idx = read_segments(spark, path, ["s"])
-    a = audit(score_query_segmented_pruned(idx, QUERY))
+    a = audit(score_query_segmented(idx, QUERY))
     assert a["partition_filters"] >= 2, a["plan"]
 
 

@@ -250,8 +250,9 @@ class TestBloomSurvivesDml:
     """r11: bloom_cols is a TABLE-level property recorded in the
     manifest — DML rewrites re-derive blooms for the files they write,
     so point-lookup pruning does not silently degrade as a bloomed
-    table is mutated (found by tools/storage_scale_check.py: before
-    this, every merged/rewritten file was forever unprunable)."""
+    table is mutated (found at 6M rows, SCALE.md "Round 11: storage DML
+    one decade up": before this, every merged/rewritten file was
+    forever unprunable)."""
 
     def _mk(self, spark, lo, hi, v=0.0):
         return spark.range(lo, hi).select(

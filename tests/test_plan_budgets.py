@@ -93,7 +93,7 @@ BUDGETS = {
     # path runs — ONE dedup-agg exchange + ONE per-source window
     # exchange, no boundary collect, no cache (the r14 bucketed
     # machinery tripled the query at toy scale; it still engages past
-    # SMALL_THRESHOLD rows — tools/cumsum_scale_check.py)
+    # SMALL_THRESHOLD rows — SCALE.md "Round 14: distributed prefix sum")
     "curate": {"shuffles": ("<=", 2)},
     # sessionization: one per-user window shuffle
     "events_sessions": {"shuffles": ("<=", 1)},

@@ -292,7 +292,7 @@ class TestPersistentBM25Index:
         live = {r["doc_id"]: r["bm25"] for r in bm25_op.score_query(idx, q).collect()}
         pre = {
             r["doc_id"]: r["bm25"]
-            for r in bm25_op.score_query_prebuilt(stored, q).collect()
+            for r in bm25_op.score_query(stored, q).collect()
         }
         assert set(live) == set(pre)
         for d in live:
@@ -319,7 +319,7 @@ class TestPersistentBM25Index:
         path = str(tmp_path / "bm25_idx3")
         bm25_op.write_index(idx, path)
         stored = bm25_op.read_index(spark, path)
-        assert bm25_op.score_query_prebuilt(stored, "!!!").count() == 0
+        assert bm25_op.score_query(stored, "!!!").count() == 0
 
 
 class TestBatchHybridIVF:
@@ -335,40 +335,14 @@ class TestBatchHybridIVF:
         )
         return docs, lits.join(qe, "qvec_id").drop("qvec_id")
 
-    def test_exact_match_vs_dense(self, spark, sf_dir):
-        """exact_stats=True (the parity/test configuration — NOT the
-        default, which is the pure-pruned scale mode) must reproduce
-        the dense batch result exactly (same pairs, same scores) —
-        recall 1 at this sf."""
-        from qurio_spark.operators.hybrid import (
-            hybrid_search_batch,
-            hybrid_search_batch_ivf,
-        )
-
-        docs, queries = self._fixture(spark, sf_dir)
-
-        def rows(df):
-            return sorted(
-                (r["query_id"], r["doc_id"], round(r["score"], 9))
-                for r in df.collect()
-            )
-
-        dense = rows(hybrid_search_batch(docs, queries, alpha=0.5, limit=5))
-        ivf = rows(
-            hybrid_search_batch_ivf(
-                docs, queries, alpha=0.5, limit=5, exact_stats=True
-            )
-        )
-        assert dense == ivf
-
     def test_candidate_normalized_mode_is_sane(self, spark, sf_dir):
-        """exact_stats=False (the pure-pruned scale mode) still returns
-        k rows per query with scores in [0, 1]."""
+        """The pruned scale path (candidate-set normalization) still
+        returns k rows per query with scores in [0, 1]."""
         from qurio_spark.operators.hybrid import hybrid_search_batch_ivf
 
         docs, queries = self._fixture(spark, sf_dir)
         res = hybrid_search_batch_ivf(
-            docs, queries, alpha=0.5, limit=5, exact_stats=False
+            docs, queries, alpha=0.5, limit=5
         ).collect()
         per_q = {}
         for r in res:

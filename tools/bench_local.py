@@ -64,11 +64,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
+    # a failed index build raises, as in bench.py
     if hasattr(entrymod, "prepare_indexes"):
-        try:
-            entrymod.prepare_indexes(spark, target)
-        except Exception as e:
-            print(f"bench prepare error: {e}", file=sys.stderr)
+        entrymod.prepare_indexes(spark, target)
 
     all_queries = entrymod.queries()
     wanted = sys.argv[1:]

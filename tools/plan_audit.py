@@ -67,7 +67,7 @@ def split_cached_blocks(plan: str):
     InMemoryRelation subtrees, plus one ``(header, body_lines)`` pair
     per cached block (subtree = the indented block under the IMR
     line).  Input should already be ``strip_initial_plans()``-ed.
-    THE shared walk — tools/lm_approx_check and the plan asserts in
+    THE shared walk — the plan asserts in
     tests/test_prefix + tests/test_textstats reuse it rather than
     re-implementing the depth/IMR logic (three copies of which drifted
     before r15's nested-AQE fix)."""
