@@ -34,31 +34,8 @@ from qurio_spark.queries.common import (  # noqa: F401
     _t,
 )
 
-# Persisted-index registry (tests clear/restore these dicts IN PLACE,
-# so re-binding the same objects here preserves their behavior).
-from qurio_spark.queries.search import (  # noqa: F401
-    _BATCH_QUERIES,
-    _BM25_INDEX_DIRS,
-    _BM25_INDEX_HANDLES,
-    _DEDUP_INDEX_DIRS,
-    _IVF_INDEX_DIRS,
-    _IVF_INDEX_HANDLES,
-    _LSH_INDEX_DIRS,
-    _LSH_INDEX_HANDLES,
-    _PQ_INDEX_DIRS,
-    _PQ_INDEX_HANDLES,
-    _batch_queries_frame,
-    _bm25_index_handle,
-    _bm25_index_path,
-    _dedup_index_path,
-    _hybrid_bm25_index,
-    _ivf_index_handle,
-    _ivf_index_path,
-    _lsh_index_path,
-    _pq_index_handle,
-    _pq_index_path,
-    prepare_indexes,
-)
+from qurio_spark.queries.indexes import prepare_indexes  # noqa: F401
+from qurio_spark.queries.search import _BATCH_QUERIES  # noqa: F401
 
 from qurio_spark.queries.catalog import (  # noqa: F401
     q_catalog_crud,
@@ -249,451 +226,17 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Ordering contract: the driver's correctness gate checks the
     FIRST 50 dict entries, so positions 1-50 are exactly 50
-    oracle-backed queries (one per operator family, every
-    never-before-checked and new-this-round entry included).
-    Round 8 rotation — IN (new this round): ``canonical_docs`` (the
-    dedup keep-decision: CC cluster labels x PageRank centrality ->
-    argmax-per-cluster survivor with min-id demoted to tie-breaker,
-    vs an oracle composing the recursive-CTE closure with the
-    unrolled-PR CTEs), ``tpch_q2`` (min-cost supplier per part
-    within a region — the correlated-min decorrelated to per-part min
-    + join-back on the rounded cost; completes 22/22 TPC-H shapes),
-    ``snap_compact`` (small-file bin-packing: compacted table ==
-    plain full-table aggregation — the rows-byte-equal contract),
-    ``snap_quarantine`` (dead-letter quality gates: quarantined
-    side == the complement-predicate SELECT with per-row gate tags),
-    and ``batch_ann_pq`` (a query TABLE served in one Arrow scan of
-    the packed codes — (Q,m,k) LUT tensor, per-partition shortlists,
-    one refine join; oracle = per-query exact dot top-10).
-    CHANGED-in-place: ``ann_pq``/``ann_ivfpq``
-    (fine m=16,k=256 quantizer + SUBLINEAR c*sqrt(n) shortlist +
-    shuffle-refine guard — results still the exact top-10, oracles
-    unchanged), ``streaming_ingest`` (chunks table routed through the
-    exactly-once snapshot sink), ``time_travel``/``snap_scan`` (table
-    format now two-level manifests + optimistic concurrency;
-    read-path semantics identical).  OUT: ``tpch_q1`` (pure
-    scan-groupBy aggregation, green since round 1; the agg family
-    stays in-window via tpch_q9/tpch_q16/tpch_q21 and events_cube)
-    and ``tpch_q3`` (join+agg+topk, green since round 1; covered
-    in-window by tpch_q9/tpch_q21 joins and events_top_users topk),
-    ``word_concentration`` (textstats sibling of the in-window
-    repetition + keyword_extract; green since round 5), and
-    ``embedding_near_dup`` (the pair oracle is a strict subset of the
-    in-window canonical_docs/pagerank_centrality, which run the same
-    embedding_near_dup_pairs build against composed oracles; green
-    since round 5), and ``streaming_hourly`` (its oracle SQL is
-    IDENTICAL to events_hourly's, and the streaming family keeps
-    three hard signals in-window: streaming_ingest, streaming_join,
-    streaming_near_dedup; green since round 3).
-    Round 7 rotation — IN (all new that round): ``ann_ivfpq`` (IVF
-    label pruning composed with the packed-PQ ADC scan + exact refine,
-    the FAISS IndexIVFPQ shape), ``events_range_left`` (the
-    ``how='left'`` path of the binned range join, keyed join-back with
-    NULL-mate zero buckets), ``pagerank_centrality`` (fixed-3-iteration
-    PageRank over the near-dup graph vs an unrolled-CTE oracle),
-    ``bloom_semi_join`` (distributed-built bloom runtime filter; plain
-    semi-join oracle), ``incremental_hourly`` (additive materialized
-    agg-view refresh == one-shot recompute), ``stratified_sample``
-    (exact-n per-stratum hash-rank holdout), ``hybrid_rrf``
-    (reciprocal-rank fusion over the two branches' top-100 lists —
-    integer ranks, float-exact fused scores), ``time_travel``
-    (manifest-versioned snapshot table: v0 read == first batch, latest
-    == all, pinned files invisible to later commits), and ``snap_scan``
-    (manifest-stats data skipping: pruned scan == plain BETWEEN).
-    CHANGED-in-place
-    (already in-window): ``ann_pq`` (adaptive shortlist — the round-6
-    recall cliff fix — plus packed codes and the persisted-index bench
-    path) and the four streaming entries (state-partition sizing +
-    staged-input coalesce; results bit-identical, oracles unchanged).
-    OUT: ``ann_ivf`` (label-pruned probe now proven in-window by
-    ann_ivfpq, which runs the same probe contract plus the compressed
-    scan; 4 green rounds), ``revenue_rollup`` (grouping-sets machinery
-    proven by the in-window events_cube, whose CUBE is rollup's
-    superset; green since round 5), ``first_order_per_customer``
-    (per-key window argmax, proven by the in-window events_sessions
-    and the 51+ cheapest_order sibling; green since round 3),
-    ``tpch_q20`` (threshold-vs-correlated-agg, join family covered
-    in-window by q3/q9/q16/q21; green since round 3), ``tpch_q11``
-    (fraction-of-global agg, proven by the in-window q9/q16 agg
-    family; green since rounds 5-6), and ``curate`` (the
-    dedup→quality→budget chain's components are all in-window —
-    exact_dedup, repetition, word_concentration — and the
-    sampling/curation family is now represented in-window by
-    stratified_sample; green since round 3), and ``exact_dedup``
-    (sha256 groupBy, green since round 2; the dedup family stays
-    in-window via ngram_jaccard_capped, simhash_near,
-    embedding_near_dup, streaming_near_dedup, and
-    pagerank_centrality's edge build), and ``filter_offset``
-    (limit/offset pagination, green since round 1; the filter family
-    stays in-window via filter_equality and source_list), and
-    ``source_completion`` (status-derivation agg, green since round 2;
-    the crawl family stays in-window via link_filter_chain).
-    Round 6 brought in: resize_targets, streaming_near_dedup,
-    events_asof_attribution/recovery, events_range_proximity,
-    events_cube, audio_features, ann_pq, bm25_incremental,
-    streaming_join, events_unpivot, keyword_extract, decontaminate,
-    events_histogram, merge_orders — all still in-window; the round-6
-    OUT list (tpch_q5/q18, parts_never_shipped, sitemap_urls,
-    doc_meta_norm, stuck_reset, dlq_retry, events_top_users,
-    events_hourly, events_pivot, quality_scores, lang_id, pii_redact,
-    reingest_upsert, md_extract) stays at 51+, each justified by an
-    in-window sibling as recorded in the round-6 entry docstring
-    (git history) and re-verified by the committed out-of-window
-    oracle_check artifact each round.
-    Positions 51+ hold (a) oracle-backed entries whose operator is
-    already proven by an in-window sibling (count_global/count_filtered
-    ⊂ stats_fanin, simhash ⊂ simhash_near, lsh_topk ⊂ lsh_prebuilt
-    [same oracle SQL, in-DAG twin of the persisted index], minhash ⊂
-    minhash_lsh signature build + ngram shingle family, ngram_jaccard ⊂
-    ngram_jaccard_capped [same join, uncapped], hybrid_filtered ⊂
-    hybrid_topk + filter_equality, batch_hybrid ⊂ batch_hybrid_ivf
-    [doc-set twin; exact-score parity in tests/test_search.py],
-    ann_ivf ⊂ ann_ivfpq [same label-probe contract, exact scan vs
-    ADC+refine], revenue_rollup ⊂ events_cube [grouping-sets subset],
-    token_counts/fingerprints ⊂
-    the in-window text_profile siblings quality_scores/lang_id,
-    content_hash ⊂ the sha2 family fingerprints also exercises,
-    lsh_multiprobe ⊂ lsh_prebuilt [same persisted-index probe,
-    n_probe=2], events_json ⊂ the regex-extraction family md_extract
-    and pii_redact exercise, reingest_skip_unchanged ⊂ reingest_upsert
-    + the streaming_ingest body-hash ledger,
-    top_customers/tpch_q6/tpch_q14/events_setops/value_percentiles —
-    all green in earlier rounds' CORRECTNESS_r0*.json), then (b) the
-    rows-only entries (chunker / embedder / iterative k-means).
-    Round 10 rotation — IN (new): ``bm25_maxscore`` (MaxScore/WAND
-    top-k pruning — build-time per-term max-impact bounds, theta from
-    the highest-bound list's exact partials, non-essential-term
-    candidate elimination; LOSSLESS, so its oracle is bm25_topk's SQL
-    verbatim).  OUT: ``bm25_prebuilt`` — oracle SQL identical to the
-    in-window bm25_topk's; the persisted-layout pruning stays pinned
-    by pytest (test_search) and the persisted-index pattern stays
-    in-window via lsh_prebuilt.  The bm25 family keeps three
-    in-window signals (bm25_topk, bm25_incremental, bm25_maxscore).
-    Also IN (new): ``catalog_crud`` — the snapshot-backed catalog
-    store e2e (dedup-checked create x2 per source, soft delete,
-    status merge, list; every mutation an atomic OCC snapshot
-    commit) with the surviving list reproduced by the oracle from
-    documents.  OUT: ``source_list`` — its group/count oracle is a
-    strict subset of the in-window stats_fanin count family, and the
-    S7 listing semantic is covered STRONGER by catalog_crud (list
-    after real mutations); green since round 1.
-    Also IN (new): ``weighted_sample`` (Efraimidis-Spirakis A-ES
-    deterministic weighted sampling — portable-hash u, ln(u)/w key
-    through stable_round, exact-key oracle) and ``events_gapfill``
-    (regular-grid resample + LOCF forward fill vs a
-    generate_series x last_value-IGNORE-NULLS oracle).  OUT:
-    ``events_histogram`` (binning agg; proven by the in-window
-    events_cube and the 51+ value_percentiles sibling; green since
-    round 6) and ``events_unpivot`` (stack/melt, sibling of the 51+
-    events_pivot — same reshaping family; green since round 6).
-    Also IN (new): ``snap_dv`` (merge-on-read DELETE via deletion
-    vectors — two stacked positional-delete commits that move zero
-    data bytes, read-side anti-join application, then
-    snap_materialize_dvs folding the vectors away; both phases vs the
-    complement-predicate oracle).  OUT: ``events_asof_recovery`` —
-    the as-of join operator keeps ``events_asof_attribution``
-    in-window (same temporal.asof_join contract, opposite direction)
-    plus the two range-join siblings; green since round 6.
-    Also IN (new): ``snap_zorder`` (Morton-clustered snapshot write +
-    multi-column manifest skipping: the two-dimensional box predicate
-    prunes files on BOTH columns before Spark sees a path, residual
-    filter exact vs the conjunctive-range oracle).  OUT:
-    ``events_range_proximity`` — the binned range-join operator keeps
-    ``events_range_left`` in-window (same bucket-equality join
-    contract plus the left-outer path); green since round 6.
-    Also IN (new): ``snap_bloom`` (manifest-level bloom skipping:
-    per-file bloom filters recorded at commit prune an equality probe
-    on a high-cardinality unsorted hash column before any file opens;
-    residual filter exact vs the plain hash-equality oracle).  OUT:
-    ``audio_features`` — the S5 media family keeps ``resize_targets``
-    in-window (same mapInPandas decode-pipeline contract) and the
-    full codec matrix stays pytest-pinned in test_multimodal.py;
-    green since round 6.
-    Also IN (new): ``snap_merge`` (snapshot-table MERGE INTO +
-    UPDATE WHERE — Delta DML parity: stats-pruned discovery join
-    rewrites only matched files, source appends, mid-band UPDATE
-    CoW; vs the oracle's CASE-reconstruction of both mutations).
-    OUT: ``snap_scan`` — the single-column manifest range-pruning
-    contract is a strict subset of the in-window snap_zorder
-    (conjunctive multi-column ranges) and snap_bloom (equality +
-    range) scans; green since round 7.
-    Also IN (new): ``rollup_daily`` (CASCADING materialized views —
-    the daily view maintained from the hourly view's CDC feed via
-    refresh_rollup, mergeable states re-aggregated to the coarser
-    grain; vs the direct daily aggregation oracle under
-    boundary-tolerant rounding).  OUT: ``events_cube`` — the
-    grouping-sets family keeps its reshaping siblings events_pivot /
-    events_unpivot / value_percentiles at 51+ and cube itself is a
-    one-call builtin; green since round 6.
-    Also IN (new): ``quantile_view`` (mergeable fixed-bound
-    histogram state + read-time interpolated p50/p90/p99 — the oracle
-    repeats the histogram definition and arithmetic order in SQL, so
-    pre-rounding doubles are bit-identical).  OUT: ``merge_orders`` —
-    the M1/F5 upsert family keeps reingest_upsert (sweep) and the
-    STRONGER snap_merge (Delta MERGE semantics) in-window;
-    plans/merge.py stays pinned by 6 pytest cases; green since
-    round 6.
-    Also IN (new): ``line_dedup`` (corpus-level duplicated-line
-    removal — the CCNet/RefinedWeb boilerplate-cleanup step: one
-    global trimmed-line count shuffle + anti-join vs the hot set,
-    docs rebuilt in order; vs a generate_subscripts/string_agg
-    oracle).  OUT: ``dedup_anti_join`` — the sha2-anti-join family
-    keeps content_hash (sweep) and exact_dedup (51+, auto-oracled
-    each pytest run), and the catalog-mutation semantics moved
-    in-window with catalog_crud; green since round 1.
-    Round 11 rotation — IN (new): ``snap_widen`` (type-widening
-    schema evolution: a narrow int/float batch then a wide
-    bigint/double append widens the manifest schema; v0 time-travels
-    with its own narrow types and the widened read must carry the
-    narrow files' float-truncated bytes exactly — the oracle repeats
-    the REAL-cast roundtrip) and ``bm25_blockmax`` (Block-Max
-    MaxScore: per-(term, doc-block) bounds discard whole doc-blocks
-    against theta; LOSSLESS, oracle = bm25_topk SQL verbatim).
-    OUT: ``snap_compact`` — the bin-pack rows-identical contract is a
-    strict subset of every other in-window snapshot read (merge, DV,
-    zorder, bloom all read through the same pinned-manifest path) and
-    the layout/file-count contract stays pinned by pytest TestCompact
-    + test_maintenance; green since round 7.  OUT: ``ann_pq`` — the
-    flat ADC+refine contract is a strict subset of the in-window
-    ann_ivfpq (IVF partition pruning + the same ADC + the same exact
-    refine) and batch_ann_pq (same codebooks, batched probe); recall
-    extras stay pinned in tests/test_pq.py; green since round 8.
-    Also IN (new): ``snap_dropcol`` (metadata-only DROP COLUMN with
-    resurrection tombstones: O(1) manifest commit, live read sheds
-    the column — sees_col is computed from the actual read schema —
-    and time travel to the pre-drop version still groups by it).
-    OUT: ``time_travel`` — its v0/latest pinning contract is a strict
-    subset of snap_widen (v0 read under the narrow schema) and
-    snap_dropcol (pre-drop version read); green since round 6.
-    Also IN (new): ``snap_renamecol`` (metadata-only RENAME COLUMN
-    via column mapping: the live aggregation spans pre- and
-    post-rename physical files through the union-schema coalescing
-    read; time travel shows the old name; sees computed from the
-    actual read schema).  OUT: ``batch_ann_pq`` — its batched
-    flat-PQ contract decomposes into the in-window ann_ivfpq (same
-    codebooks, same ADC, same exact refine) plus batch_hybrid_ivf
-    (the batched-probe shape); recall extras stay pinned in
-    tests/test_pq.py; green since round 9.
-    Also IN (new): ``streaming_sessions_final`` (the EVICTING
-    applyInPandasWithState sessionizer — event-time timeouts finalize
-    idle sessions and REMOVE state; append-mode closed sessions only;
-    the oracle recomputes the closed set from the batch
-    sessionization + the final-watermark condition).  OUT:
-    ``events_sessions`` — the batch lag+cumsum sessionization is a
-    strict subset of the new oracle's CTEs and stays sweep-checked at
-    51+; green since round 5.
-    Round 12 rotation — IN (new): ``gopher_rules`` (the Gopher
-    quality-filter rule set, Rae et al. 2021 A1.1, as per-document 0/1
-    gates + pass conjunction — the canonical pretraining hard document
-    filter; pure column expressions, one map-stage scan).  OUT:
-    ``rerank_overlap`` — the identity-rerank contract (stable sort,
-    overlap with the unranked top-k) is pinned by tests/test_rerank.py
-    and the Jina/Cohere-shaped provider fake-server tests; green since
-    round 3, stays sweep-checked at 51+.  ``streaming_sessions_final``
-    stays in-window per the r11 verdict (its oracle hash-flaked once on
-    the driver; r12 made both sides exact-integer — it needs a clean
-    driver round before it can rotate).
-    Round 12 second rotation — IN (all new this round, per the
-    every-new-entry-in-window rule): ``fuzzy_join`` (SymSpell
-    symmetric-delete edit-distance join — lossless k=1 blocking,
-    levenshtein verify, vs a brute-force quadratic oracle; planted
-    recall 1.0 at 200k strings, SCALE.md), ``span_dedup`` (Lee et al.
-    ExactSubstr duplicate-substring removal at 10-token-gram
-    granularity — the span-level twin of the in-window line_dedup;
-    planted-span exactness at 100k docs), ``data_quality``
-    (Deequ-style one-pass metric profile of orders — single agg,
-    stack unpivot, exact-integer fractions), ``anomaly_events``
-    (per-user 3x-mean outliers — one window shuffle, all-integer
-    comparison), ``export_shards`` (the JSONL training-shard export
-    sink: executor-side writes, manifest packing rule oracle-checked,
-    bytes/checksums pytest-pinned), ``triangle_count`` (global
-    triangle census via degree-ordered orientation, hash-thinned
-    co-event graph; vs the a<b<c three-way-join oracle),
-    ``fuzzy_join2`` (the k=2 double-delete neighborhood — two planted
-    deletions per dirty name, brute-force lev<=2 oracle).  Additional
-    OUT for the fuzzy_join2 slot: ``ngram_jaccard_capped`` — the
-    stop-shingle cap is pinned by pytest and its uncapped sibling
-    ngram_jaccard stays sweep-checked at 51+; green since round 7.  Additional
-    OUT for the triangle slot: ``events_asof_attribution`` — the
-    as-of union-window contract is pinned by tests/test_temporal.py
-    and its sibling events_asof_recovery stays sweep-checked at 51+;
-    green since round 6.  OUT (all long-green,
-    sweep-checked at 51+ and pinned by their own pytest suites):
-    ``repetition``/``keyword_extract`` (map-stage text profiles,
-    golden-tested in test_textstats paths; green since r5/r6),
-    ``simhash_near`` (banded near-pair contract — sibling of the
-    in-window ngram_jaccard_capped, pinned in test_dedup; green since
-    r5), ``weighted_sample`` (exact A-ES contract pinned by pytest +
-    a frozen zero-shuffle plan budget; green since r9),
-    ``tpch_q16`` (relational breadth — q2/q9/q21 remain the
-    in-window TPC-H representatives; green since r6).
-
-    Round 14 rotation — the r13 verdict asked for the 7 remaining
-    never-windowed TPC-H breadth entries (#3), completing the rotation
-    plan: IN ``tpch_q8`` (two-nation market share),
-    ``tpch_q10`` (returned-item revenue), ``tpch_q13`` (customer
-    order-count distribution), ``tpch_q15`` (top supplier via view
-    decorrelation), ``tpch_q17`` (small-quantity avg subquery),
-    ``tpch_q19`` (disjunctive part-lineitem predicate), ``tpch_q22``
-    (global-avg anti-join) — with q8/q10/q13/q15/q17/q19/q22 every
-    TPC-H entry has now had a driver-window appearance.  The round-14
-    diff also touches pack_shards/pack_sequences (distributed prefix
-    sum), lm_quality (per-doc bigram pre-agg), lm_buckets (approx
-    flag; exact default unchanged) and fuzzy_join (name guard) — all
-    already in-window, per the changed-entry rule.  OUT (all
-    long-green, each with in-window siblings + pytest pins):
-    ``bm25_blockmax`` (bm25_topk + bm25_incremental stay; green since
-    r10), ``batch_hybrid_ivf`` (ann_ivfpq + hybrid_topk stay; pruned
-    recall pinned by test_queries_full; green since r8),
-    ``streaming_near_dedup`` (streaming family keeps streaming_join /
-    streaming_ingest / streaming_sessions_final; green since r9),
-    ``canonical_docs`` (graph family keeps triangle_count +
-    near_dup_clusters; green since r7), ``events_range_left``
-    (temporal family pinned by test_temporal; green since r6),
-    ``snap_zorder`` (snapshot family keeps snap_merge / snap_dv /
-    snap_dropcol / snap_renamecol / snap_bloom; green since r8),
-    ``gopher_rules`` (text family keeps lm_quality / lm_buckets /
-    span_dedup / line_dedup; pinned in test_textstats; green since
-    r6).
-
-    Round 13 rotation — the r12 verdict traced the two red driver
-    cells (streaming_sessions_final, export_shards) to uncast DuckDB
-    ``sum()`` HUGEINT outputs in their oracles, now CAST to BIGINT
-    (tests/test_oracle_types.py guards the class).  Both stay
-    in-window for their clean proving round.  IN (tpch_q12 proves the
-    class fix on the driver — it was the third HUGEINT-emitting
-    oracle, cast prophylactically before ever rotating in; the other
-    eight are the remaining oracle-backed entries that have NEVER had
-    a driver-window appearance, per the verdict's rotate-with-intent
-    ask — the full never-windowed list was tpch_q7/q8/q10/q12/q13/
-    q15/q17/q19/q22, minhash_lsh, events_funnel, events_retention,
-    near_dup_clusters, cheapest_order_per_customer, pack_shards,
-    sample_mixture, plus the four rows-only entries):
-    ``tpch_q12``, ``tpch_q7`` (two-nation volume shipping — the
-    cross-filtered 6-way join), ``minhash_lsh`` (banded MinHash
-    near-dup pairs), ``events_funnel`` (ordered multi-step funnel),
-    ``events_retention`` (cohort retention triangle),
-    ``near_dup_clusters`` (the CC closure clusters themselves),
-    ``cheapest_order_per_customer`` (per-key window argmin),
-    ``pack_shards`` (the offset-packing cumsum rule on its own),
-    ``sample_mixture`` (deterministic domain-mixture sampling).
-    The remaining never-windowed TPC-H breadth entries
-    (q8/q10/q13/q15/q17/q19/q22) rotate in over future rounds.
-    Also IN (new this round, per the every-new-entry-in-window rule):
-    ``lm_quality`` (operators/lm — CCNet-shaped bigram-LM
-    cross-entropy quality scoring, exact integer milli-nats).  OUT
-    for its slot: ``snap_quarantine`` — the dead-letter gate contract
-    is pinned by pytest and the snapshot family keeps SIX in-window
-    signals (snap_merge, snap_dv, snap_widen, snap_zorder,
-    snap_bloom, snap_renamecol) plus catalog_crud and
-    streaming_ingest's exactly-once sink; green since r8.
-    Also IN (new this round): ``dsir_weights`` (operators/dsir —
-    hashed-ngram importance weights for target-domain data selection,
-    exact integer milli-nats over portable-hash bucket counts).  OUT
-    for its slot: ``lsh_prebuilt`` — the ANN family keeps ann_ivfpq +
-    batch_hybrid_ivf in-window, the persisted-index pattern's oracle
-    twins lsh_topk/lsh_multiprobe (same SQL) stay sweep-checked at
-    51+, and the index persistence/layout is pinned by pytest; green
-    since r8.
-    Also IN (new this round): ``pack_sequences`` (GPT-style
-    concat-and-chunk sequence packing — long docs span fixed 512-token
-    sequences; the whole-doc sibling pack_shards is also in-window
-    this round).  OUT for its slot: ``resize_targets`` — the S5 media
-    decode-pipeline contract is pinned by the full codec matrix in
-    tests/test_multimodal.py and stays sweep-checked at 51+ (its
-    mapInPandas shape is also exercised in-window by export_shards);
-    green since r6.
-    Also IN (new this round): ``lm_buckets`` (the CCNet head/middle/
-    tail selection — per-source ntile(3) over the lm_quality scores).
-    OUT for its slot: ``snap_widen`` — the schema-evolution family
-    keeps BOTH its siblings in-window (snap_dropcol, snap_renamecol —
-    the same union-schema coalescing read path), the snapshot family
-    keeps six signals overall, and widening itself stays pinned by
-    pytest + the 51+ sweep; green since r11.
-    OUT (all green every appearance, each with an in-window sibling):
-    ``bm25_maxscore`` (lossless pruning, oracle = bm25_topk verbatim;
-    bm25_topk/bm25_blockmax/bm25_incremental stay in-window; green
-    r10-12), ``hybrid_rrf`` (fusion twin of in-window hybrid_topk;
-    green since r7), ``decontaminate`` (broadcast-shingle semi-join;
-    text family keeps gopher_rules + span_dedup's gram machinery
-    in-window; green since r6), ``bloom_semi_join`` (runtime bloom ⊂
-    in-window snap_bloom's manifest blooms + line_dedup's semi-join;
-    green since r7), ``incremental_hourly`` (additive refresh ⊂
-    in-window rollup_daily, which re-aggregates the hourly states via
-    CDC; green since r7), ``events_gapfill`` (grid+LOCF pinned by
-    test_temporal; temporal family keeps events_range_left; green
-    since r10), ``stratified_sample`` (replaced in-window by the
-    sampling siblings sample_mixture [IN] + weighted_sample at 51+;
-    green since r7), ``pagerank_centrality`` (the PR unroll stays
-    in-window INSIDE canonical_docs, and near_dup_clusters [IN]
-    brings the CC closure; green since r7), ``tpch_q2``
-    (correlated-min decorrelation; TPC-H keeps q9/q21 + the new
-    q7/q12 in-window; green since r8).
-
-    Round 15 rotation — the r14 verdict (#3) flagged that four
-    operators rewritten in r14 (``curate``, ``exact_dedup``,
-    ``canonical_docs``, ``stratified_sample``) never had an in-window
-    appearance after their rewrites; all four rotate IN, plus the two
-    entries materially changed THIS round: ``curate`` again (the
-    prefix-sum small-input fast path — one count job + plain window at
-    or below SMALL_THRESHOLD rows, the r14 boundary-collect overhead
-    gone; median back to 0.74 s at sf0.1 from r14's 1.54 s) and
-    ``events_top_users`` (two-phase per-type top-n — phase 1 prunes
-    within (event_type, hash sub-bucket), so a billion-user type never
-    funnels one window reducer; ranks identical by the union-of-top-ns
-    argument).  ``anomaly_events`` (de-windowed outlier_events: group
-    stats via partial-agged groupBy + broadcast join back) and
-    ``lm_buckets`` (approx path: HOF lambda replaced by element_at
-    comparisons, safe under persist=False) also changed and were
-    ALREADY in-window, as were pack_shards/pack_sequences/lm_quality
-    (cache-lifetime handles only; plans unchanged at window SF).
-    OUT (all long-green, each with in-window siblings + pytest pins):
-    ``triangle_count`` (graph family keeps near_dup_clusters +
-    canonical_docs [IN], which exercise the same edge build; census
-    pinned by test_graph + the 200k scale check; green r12-r14),
-    ``vector_topk`` (exact cosine top-k is the vector branch of the
-    in-window hybrid_topk and the refine step of ann_ivfpq; green
-    since r1), ``read_page`` (F3/Q5 reconstruction; filter family
-    keeps filter_equality + link_filter_chain; pinned by test_search's
-    page tests; green since r1), ``line_dedup`` (the corpus
-    boilerplate step; its strictly-harder sibling span_dedup stays
-    in-window, both pinned by test_dedup goldens; green since r10),
-    ``snap_dv`` (deletion-vector MERGE-on-read; the snapshot family
-    keeps snap_merge/snap_dropcol/snap_renamecol/snap_bloom in-window
-    and the DV read path is pinned by tests/test_dv.py; green
-    r10-r14).
-
-    Round 16 rotation — this optimization round touched a set of
-    queries the window should re-verify (VERDICT r15 #8), so they
-    rotate IN: ``snap_dv`` (overlapped seed appends + the DV read
-    path), ``snap_scan`` / ``snap_compact`` (overlapped appends),
-    ``incremental_hourly`` (the new precomputed-states refresh hook),
-    ``streaming_near_dedup`` (overlapped sink appends),
-    ``bloom_semi_join`` (single-parse SQL membership predicate), plus
-    the two r15-optimized entries the r15 verdict asked in (#8):
-    ``bm25_maxscore`` (fused bounds collect + postings-slice cache)
-    and ``ngram_jaccard`` (xxhash64-folded shingles).  (Also asked:
-    ``kmeans_ivf`` — golden-checked, not SQL-oracle-backed, so it
-    cannot hold a window slot; ``fuzzy_join``/``snap_bloom`` were
-    already in-window.)  OUT for their slots, all long-green with
-    in-window siblings and pytest pins: ``tpch_q22`` (TPC-H keeps 9
-    in-window incl. the q21 anti/exists shape; green since r8),
-    ``tpch_q10`` (join+agg+top-n ⊂ q9/q13/top_customers; green since
-    r8), ``events_retention`` (cohort windows ⊂ in-window
-    events_funnel + events_top_users; green since r9),
-    ``link_filter_chain`` (filter family keeps filter_equality;
-    pinned by test_crawl; green since r6), ``data_quality`` (quality
-    family keeps anomaly_events in-window + gopher_rules at 51+;
-    green since r6), ``cheapest_order_per_customer`` (min_by-per-group
-    ⊂ in-window exact_dedup/events_top_users machinery; green since
-    r9), ``stats_fanin`` (three global counts crossJoined; trivial
-    plan, green since r1), ``pack_shards`` (packing family keeps the
-    strictly-harder pack_sequences in-window; green since r13).
+    oracle-backed queries, one or more per operator family, with every
+    entry a change touched rotated into the window so the gate
+    re-verifies it; long-green entries with an in-window sibling
+    rotate out to make room.  Positions 51+ are oracle-backed entries
+    whose operator an in-window sibling proves, then the rows-only
+    (non-SQL-expressible) entries.  Past rotations and their reasons
+    are in git history.
 
     EVERY entry, in-window or not, is additionally oracle-compared at
-    sf0.001 by ``tests/test_queries_full.py`` on each pytest run — the
-    round-4 lesson was that out-of-window entries had no committed
-    signal."""
+    sf0.001 by ``tests/test_queries_full.py`` on each pytest run
+    (rows-only entries against golden row-hashes where pinned)."""
     return {
         # -- driver-checked window (all oracle-backed) ----------------
         "catalog_crud": q_catalog_crud,

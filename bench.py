@@ -42,8 +42,7 @@ def main() -> None:
     # prepared indexes still work (build inline) when this isn't called,
     # but a failed build raises: queries silently building in-DAG would
     # change what is measured.
-    if hasattr(entrymod, "prepare_indexes"):
-        entrymod.prepare_indexes(spark, target)
+    entrymod.prepare_indexes(spark, target)
 
     from qurio_spark.operators.cachectl import release_caches
 

@@ -38,17 +38,6 @@ def hash64_py(s: str) -> int:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
-def affine_rehash(h: Column, a: int, b: int) -> Column:
-    """One member of a universal hash family over ``hash64`` output:
-    ``(a*h + b) mod (2^61-1)``.  The product exceeds int64, so it is
-    computed in decimal(38,0) (exact to 1e38 > 2^122) — the DuckDB
-    oracle uses HUGEINT for the same expression."""
-    hd = h.cast("decimal(38,0)")
-    return (
-        (hd * F.lit(a).cast("decimal(38,0)") + F.lit(b)) % F.lit(MERSENNE_61)
-    ).cast("bigint")
-
-
 def minhash_coeffs(num_perm: int, seed: int = 7) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for ``num_perm`` permutations.
     Derived from md5 of the (seed, i) pair so Spark/DuckDB/Python agree

@@ -37,21 +37,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokenize(col))
 
 
-def distinct_token_count(col: Column) -> Column:
-    return F.size(F.array_distinct(tokenize(col)))
-
-
-def char_ngrams(col: Column, n: int = 3) -> Column:
-    """string -> array<string> of character n-grams (shingles) over the
-    lowercased raw text.  Used by Jaccard / MinHash dedup.
-    """
-    lower = F.lower(col)
-    return F.transform(
-        F.sequence(F.lit(0), F.greatest(F.length(lower) - n, F.lit(0))),
-        lambda i: lower.substr(i + 1, F.lit(n)),
-    )
-
-
 def word_ngrams(col: Column, n: int = 3) -> Column:
     """array of n-token shingles joined by a space.
 

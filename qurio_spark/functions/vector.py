@@ -66,8 +66,3 @@ def literal_vector(vec: list[float]) -> Column:
         return f"CAST({v!r} AS DOUBLE)"
 
     return F.expr("array(" + ",".join(sql(v) for v in vals) + ")")
-
-
-def l2_normalize(a: Column) -> Column:
-    n = norm(a)
-    return F.when(n > 0, F.transform(a, lambda x: (x.cast("double") / n).cast("float"))).otherwise(a)

@@ -38,7 +38,6 @@ from typing import NamedTuple
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.column import Column
 
 from qurio_spark.schemas import CHUNK_RESULT
 
@@ -357,14 +356,3 @@ def chunk_documents(
             yield pd.DataFrame(out, columns=out_cols)
 
     return df.mapInPandas(chunk_batches, out_schema)
-
-
-def clean_markdown_noise_col(col: Column) -> Column:
-    """F10 as pure column expressions (regexp_replace), JVM-side."""
-    c = F.regexp_replace(col, r"(?mi)^\[edit[^\]]*\]\([^\)]+\)[ \t]*$", "")
-    c = F.regexp_replace(
-        c,
-        r"(?mi)^#{1,3}[ \t]*(?:table of )?contents?[ \t]*\n(?:[ \t]*[-*][ \t]*\[.*?\]\(#.*?\)[ \t]*\n)*",
-        "",
-    )
-    return c

@@ -6,8 +6,9 @@ embed -> store with 50-way consumers (M7).  Spark-native shape: the
 queue hops collapse into stage boundaries of ONE declarative job —
 
     documents_raw (success rows)
-      -> CleanMarkdownNoise (F10, regexp exprs)
-      -> chunker UDF + posexplode (T1-T4, F9)         [map-only]
+      -> chunk_documents: mapInPandas over chunk_markdown,
+         which cleans (F10, clean_markdown_noise), then
+         chunks (T1-T4) and drops noise chunks (F9)    [map-only]
       -> contextual prefix (T5, concat exprs)          [map-only]
       -> embedder pandas UDF (T6, Arrow-batched)       [map-only]
       -> write chunks partitioned by source_id

@@ -3,24 +3,9 @@ SimHash, embedding near-dup."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
-from pyspark.sql.window import Window
+from pyspark.sql import functions as F
 
-from qurio_spark.functions.frames import local_frame
 from qurio_spark.functions.numeric import stable_round
-
-from .common import (
-    QUERY_TEXT,
-    QUERY_VEC_ID,
-    _docs_with_vecs,
-    _epoch_secs,
-    _events,
-    _normalize_events_ts,
-    _qvec,
-    _t,
-)
-
 from qurio_spark.operators.dedup import (
     exact_dedup,
     minhash_signatures,
@@ -29,7 +14,15 @@ from qurio_spark.operators.dedup import (
 )
 from qurio_spark.operators.similarity import embedding_near_dup_pairs
 
-from .search import _DEDUP_INDEX_DIRS
+from . import indexes
+from .common import _events, _t
+
+
+def _prepared_signatures(spark, sf_dir, table):
+    """The prepared dedup ``table`` (simhash, minhash or shingles), or
+    None when this process prepared no dedup index."""
+    h = indexes.prepared(spark, sf_dir, "dedup")
+    return None if h is None else h[table]
 
 
 def q_exact_dedup(spark, sf_dir):
@@ -44,9 +37,8 @@ def q_minhash(spark, sf_dir):
     """MinHash signatures (4 portable universal-hash permutations).
     Reads the persisted signature table when bench prepared one (the
     deterministic twin of the in-DAG build, same as minhash_lsh)."""
-    if sf_dir in _DEDUP_INDEX_DIRS:
-        sig = spark.read.parquet(f"{_DEDUP_INDEX_DIRS[sf_dir]}/minhash")
-    else:
+    sig = _prepared_signatures(spark, sf_dir, "minhash")
+    if sig is None:
         sig = minhash_signatures(_t(spark, sf_dir, "documents"), num_perm=4)
     return sig.select(
         "doc_id",
@@ -57,9 +49,7 @@ def q_minhash(spark, sf_dir):
 def q_ngram_jaccard(spark, sf_dir):
     """3-gram Jaccard near-dup pairs via shingle inverted-index join.
     Reads the persisted shingle index when bench prepared one."""
-    sh = None
-    if sf_dir in _DEDUP_INDEX_DIRS:
-        sh = spark.read.parquet(f"{_DEDUP_INDEX_DIRS[sf_dir]}/shingles")
+    sh = _prepared_signatures(spark, sf_dir, "shingles")
     return ngram_jaccard_pairs(
         _t(spark, sf_dir, "documents"), threshold=0.1, n=3, shingles=sh
     )
@@ -71,9 +61,7 @@ def q_ngram_jaccard_capped(spark, sf_dir):
     inverted-index self-join, bounding per-key join fan-out — the
     adversarial-boilerplate guard at 100 TB
     (operators/dedup.ngram_jaccard_pairs)."""
-    sh = None
-    if sf_dir in _DEDUP_INDEX_DIRS:
-        sh = spark.read.parquet(f"{_DEDUP_INDEX_DIRS[sf_dir]}/shingles")
+    sh = _prepared_signatures(spark, sf_dir, "shingles")
     return ngram_jaccard_pairs(
         _t(spark, sf_dir, "documents"), threshold=0.1, n=3, shingles=sh, max_df=3
     )
@@ -86,9 +74,7 @@ def q_minhash_lsh(spark, sf_dir):
     the persisted signature table when bench prepared one."""
     from qurio_spark.operators.dedup import minhash_lsh_pairs
 
-    sig = None
-    if sf_dir in _DEDUP_INDEX_DIRS:
-        sig = spark.read.parquet(f"{_DEDUP_INDEX_DIRS[sf_dir]}/minhash")
+    sig = _prepared_signatures(spark, sf_dir, "minhash")
     return minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"),
         num_perm=4,
@@ -101,11 +87,9 @@ def q_minhash_lsh(spark, sf_dir):
 def q_simhash(spark, sf_dir):
     """SimHash fingerprints; persisted-index read when available (the
     signature table IS this query's output, built by the same op)."""
-    if sf_dir in _DEDUP_INDEX_DIRS:
-        return (
-            spark.read.parquet(f"{_DEDUP_INDEX_DIRS[sf_dir]}/simhash")
-            .select("doc_id", "simhash")
-        )
+    sig = _prepared_signatures(spark, sf_dir, "simhash")
+    if sig is not None:
+        return sig.select("doc_id", "simhash")
     return simhash64(_t(spark, sf_dir, "documents"))
 
 
@@ -116,9 +100,7 @@ def q_simhash_near(spark, sf_dir):
     identical to the in-DAG build the oracle mirrors)."""
     from qurio_spark.operators.dedup import simhash_near_pairs
 
-    sig = None
-    if sf_dir in _DEDUP_INDEX_DIRS:
-        sig = spark.read.parquet(f"{_DEDUP_INDEX_DIRS[sf_dir]}/simhash")
+    sig = _prepared_signatures(spark, sf_dir, "simhash")
     return simhash_near_pairs(
         _t(spark, sf_dir, "documents"), max_hamming=30, signatures=sig
     )

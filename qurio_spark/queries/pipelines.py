@@ -3,34 +3,15 @@ iterative k-means (IVF codebook), chunker corpus, LSH top-k twins."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
-from pyspark.sql.window import Window
+from pyspark.sql import functions as F
 
-from qurio_spark.functions.frames import local_frame
 from qurio_spark.functions.numeric import stable_round
-
-from .common import (
-    QUERY_TEXT,
-    QUERY_VEC_ID,
-    _docs_with_vecs,
-    _epoch_secs,
-    _events,
-    _normalize_events_ts,
-    _qvec,
-    _t,
-)
-
 from qurio_spark.operators.chunker import chunk_documents
 from qurio_spark.operators.similarity import lsh_topk
 
-from .search import (
-    _LSH_INDEX_HANDLES,
-    _PQ_INDEX_DIRS,
-    _batch_queries_frame,
-    _lsh_index_path,
-    _pq_index_handle,
-)
+from . import indexes
+from .common import QUERY_VEC_ID, _qvec, _t
+from .search import _batch_queries_frame
 
 
 def q_ingest_pipeline(spark, sf_dir):
@@ -103,6 +84,31 @@ def q_semantic_dedup(spark, sf_dir):
     )
 
 
+def _pq_codes(spark, sf_dir, emb, label=None):
+    """(packed codes, codebooks, n) for the PQ queries.  ``n`` sizes
+    the shortlist: the corpus count, or with ``label`` the count of
+    that coarse label's rows (and the codes keep ``label`` so the probe
+    can filter on it).
+
+    The prepared IVF x PQ index when bench made one (the label filter
+    prunes its directories; counts come from the opened handle, no
+    per-query count job), else an in-DAG fit + encode — the fit is
+    hash-sampled and deterministic, so the results are identical.  The
+    in-DAG counts read the source table (parquet stats), never the
+    encode lineage."""
+    from qurio_spark.operators.pq import pq_encode, pq_fit
+
+    h = indexes.prepared(spark, sf_dir, "pq")
+    if h is not None:
+        codes, books, n, counts = h
+        return codes, books, n if label is None else counts[label]
+    books = pq_fit(emb, m=16, k=256, iters=10)
+    if label is None:
+        return pq_encode(emb, books, packed=True), books, emb.count()
+    codes = pq_encode(emb, books, keep_cols=["label"], packed=True)
+    return codes, books, emb.filter(F.col("label") == label).count()
+
+
 def q_ann_pq(spark, sf_dir):
     """Product-quantization ANN with exact refine (operators/pq.py):
     fit m=16 x k=256 codebooks (the FAISS PQ16x8 shape) on the
@@ -120,20 +126,11 @@ def q_ann_pq(spark, sf_dir):
     (pinned in tests/test_pq.py and gated at the bench SF by the
     ann_pq_recall extra), so the refined top-10 IS the exact dot
     top-10."""
-    from qurio_spark.operators.pq import pq_encode, pq_fit, pq_topk_refined
+    from qurio_spark.operators.pq import pq_topk_refined
 
     emb = _t(spark, sf_dir, "embeddings")
     q = _qvec(spark, sf_dir)
-    if sf_dir in _PQ_INDEX_DIRS:
-        # bench path: the persisted packed index (built untimed, like
-        # BM25/IVF/LSH) — deterministic fit, so identical results
-        codes, books, n, _counts = _pq_index_handle(spark, sf_dir)
-    else:
-        books = pq_fit(emb, m=16, k=256, iters=10)
-        codes = pq_encode(emb, books, packed=True)
-        # corpus count from the source table's parquet stats — sizing
-        # the shortlist must not re-run the encode lineage
-        n = emb.count()
+    codes, books, n = _pq_codes(spark, sf_dir, emb)
     top = pq_topk_refined(codes, emb, books, q, topk=10, n_candidates=n)
     return top.select("vec_id", stable_round("score", 4).alias("score"))
 
@@ -149,18 +146,13 @@ def q_batch_ann_pq(spark, sf_dir):
     exactly.  Oracle: per-query brute-force dot top-10 — valid because
     the sublinear shortlist keeps recall 1.0 (same law as ann_pq,
     pinned in tests/test_pq.py)."""
-    from qurio_spark.operators.pq import pq_encode, pq_fit, pq_topk_batch
+    from qurio_spark.operators.pq import pq_topk_batch
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = _batch_queries_frame(spark, sf_dir).select(
         "query_id", F.col("query_vec").alias("qvec")
     )
-    if sf_dir in _PQ_INDEX_DIRS:
-        codes, books, n, _counts = _pq_index_handle(spark, sf_dir)
-    else:
-        books = pq_fit(emb, m=16, k=256, iters=10)
-        codes = pq_encode(emb, books, packed=True)
-        n = emb.count()
+    codes, books, n = _pq_codes(spark, sf_dir, emb)
     out = pq_topk_batch(
         codes, emb, books, queries, topk=10, n_candidates=n
     )
@@ -180,7 +172,7 @@ def q_ann_ivfpq(spark, sf_dir):
     raw-vector fetch.  Recall vs the label-restricted exact top-10 is
     1.0 at every test SF (tests/test_pq.py) and gated at the bench SF
     by the ann_ivfpq_recall extra."""
-    from qurio_spark.operators.pq import ivfpq_topk, pq_encode, pq_fit
+    from qurio_spark.operators.pq import ivfpq_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     # one driver round trip for query vector AND probe label (r15 —
@@ -193,16 +185,7 @@ def q_ann_ivfpq(spark, sf_dir):
     )
     q = [float(x) for x in row["embedding"]]
     label = int(row["label"])
-    if sf_dir in _PQ_INDEX_DIRS:
-        # bench path: probe the persisted label-partitioned index —
-        # the label filter prunes directories, per-label counts come
-        # from the opened handle (no per-query count job)
-        codes, books, _n, counts = _pq_index_handle(spark, sf_dir)
-        n_probe = counts[label]
-    else:
-        books = pq_fit(emb, m=16, k=256, iters=10)
-        codes = pq_encode(emb, books, keep_cols=["label"], packed=True)
-        n_probe = emb.filter(F.col("label") == label).count()
+    codes, books, n_probe = _pq_codes(spark, sf_dir, emb, label)
     top = ivfpq_topk(
         codes, emb, books, q, probe_labels=[label], topk=10,
         n_candidates=n_probe,
@@ -232,12 +215,9 @@ def q_lsh_multiprobe(spark, sf_dir):
     directories read) — the standard recall/latency dial for hyperplane
     LSH, with the probe set still a driver-side literal so directory
     pruning holds (operators/similarity.lsh_probe_buckets)."""
-    from qurio_spark.operators.similarity import lsh_topk_prebuilt, read_lsh_index
+    from qurio_spark.operators.similarity import lsh_topk_prebuilt
 
-    idx = _LSH_INDEX_HANDLES.get(sf_dir)
-    if idx is None:
-        idx = read_lsh_index(spark, _lsh_index_path(spark, sf_dir))
-        _LSH_INDEX_HANDLES[sf_dir] = idx
+    idx = indexes.handle(spark, sf_dir, "lsh")
     top = lsh_topk_prebuilt(idx, _qvec(spark, sf_dir), k=10, n_probe_buckets=2)
     return top.select("vec_id", stable_round("score", 4).alias("score"))
 
@@ -249,12 +229,9 @@ def q_lsh_prebuilt(spark, sf_dir):
     zero per-query corpus passes (operators/similarity.write_lsh_index /
     lsh_topk_prebuilt; same write-time layout as BM25 term buckets and
     IVF labels)."""
-    from qurio_spark.operators.similarity import lsh_topk_prebuilt, read_lsh_index
+    from qurio_spark.operators.similarity import lsh_topk_prebuilt
 
-    idx = _LSH_INDEX_HANDLES.get(sf_dir)
-    if idx is None:
-        idx = read_lsh_index(spark, _lsh_index_path(spark, sf_dir))
-        _LSH_INDEX_HANDLES[sf_dir] = idx
+    idx = indexes.handle(spark, sf_dir, "lsh")
     top = lsh_topk_prebuilt(idx, _qvec(spark, sf_dir), k=10)
     return top.select("vec_id", stable_round("score", 4).alias("score"))
 

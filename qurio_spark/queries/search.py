@@ -1,29 +1,19 @@
 """Search-family queries (Q1/Q2/F1): BM25, vector, hybrid, batch
-hybrid, IVF/ANN — plus the persisted-index registry shared by the
-prebuilt variants (tests clear/restore these dicts in place)."""
+hybrid, IVF/ANN.  Persisted indexes come from the registry in
+``indexes.py``."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from qurio_spark.functions.frames import local_frame
 from qurio_spark.functions.numeric import stable_round
 
-from .common import (
-    QUERY_TEXT,
-    QUERY_VEC_ID,
-    _docs_with_vecs,
-    _epoch_secs,
-    _events,
-    _normalize_events_ts,
-    _qvec,
-    _t,
-)
+from . import indexes
+from .common import QUERY_TEXT, QUERY_VEC_ID, _docs_with_vecs, _qvec, _t
 
 from qurio_spark.operators import bm25 as bm25_op
-from qurio_spark.operators.dedup import minhash_signatures, simhash64
 from qurio_spark.operators.hybrid import hybrid_search
 from qurio_spark.operators.similarity import brute_force_topk, ivf_topk
 
@@ -87,209 +77,9 @@ def q_bm25_blockmax(spark, sf_dir):
     indexes deliberately skip the refinement (build_index leaves the
     sidecar None: the extra postings pass costs more than it saves);
     both paths pinned in tests/test_bm25_segments.py::TestBlockMax."""
-    idx = _bm25_index_handle(spark, sf_dir, "documents")
+    idx = indexes.handle(spark, sf_dir, "bm25_documents")
     scored = bm25_op.score_query_maxscore(idx, QUERY_TEXT, 20)
     return _keyword_top10(scored)
-
-
-# Per-process cache of persisted index locations (sf_dir -> path).
-# bench.py populates these via prepare_indexes() OUTSIDE the timed
-# region (index builds amortize over a query stream in production); the
-# driver's correctness run skips prepare, so the prebuilt-index queries
-# fall back to building inline — same results either way (both the
-# k-means seeding and the bucket hash are md5-deterministic).
-#
-# BM25 indexes are keyed by (sf_dir, corpus): BM25 stats (df/N/avgdl)
-# are defined over the scored corpus, and the pure-keyword queries
-# score the full ``documents`` table while the hybrid family scores
-# documents JOIN embeddings — at sf0.1 those differ (5000 vs 2000
-# docs), so one shared index would silently change hybrid scores.
-_BM25_INDEX_DIRS: dict[tuple[str, str], str] = {}
-_IVF_INDEX_DIRS: dict[str, str] = {}
-_DEDUP_INDEX_DIRS: dict[str, str] = {}
-_LSH_INDEX_DIRS: dict[str, str] = {}
-_PQ_INDEX_DIRS: dict[str, str] = {}
-# Opened-handle caches: a serving system opens an index once and keeps
-# the handle (DataFrame over the persisted layout + driver-resident
-# metadata like the IVF codebook) across queries; re-opening parquet
-# per query would re-pay schema/footer reads.  Keyed like the DIRS
-# caches; invalidated together (tests clear both).
-_BM25_INDEX_HANDLES: dict[tuple[str, str], object] = {}
-_IVF_INDEX_HANDLES: dict[str, tuple] = {}
-_LSH_INDEX_HANDLES: dict[str, object] = {}
-_PQ_INDEX_HANDLES: dict[str, tuple] = {}
-
-
-def _bm25_index_path(spark, sf_dir: str, corpus: str = "documents") -> str:
-    import tempfile
-
-    path = _BM25_INDEX_DIRS.get((sf_dir, corpus))
-    if path is None:
-        path = tempfile.mkdtemp(prefix=f"qurio-bm25-idx-{corpus}-")
-        base = (
-            _docs_with_vecs(spark, sf_dir).select("doc_id", "text")
-            if corpus == "joined"
-            else _t(spark, sf_dir, "documents")
-        )
-        idx = bm25_op.build_index(base)
-        bm25_op.write_index(idx, path)
-        _BM25_INDEX_DIRS[(sf_dir, corpus)] = path
-    return path
-
-
-def _bm25_index_handle(spark, sf_dir: str, corpus: str):
-    """Open-once BM25Index handle over the persisted layout."""
-    key = (sf_dir, corpus)
-    idx = _BM25_INDEX_HANDLES.get(key)
-    if idx is None:
-        idx = bm25_op.read_index(spark, _bm25_index_path(spark, sf_dir, corpus))
-        _BM25_INDEX_HANDLES[key] = idx
-    return idx
-
-
-def _hybrid_bm25_index(spark, sf_dir: str):
-    """Persisted BM25 index over the corpus the hybrid family actually
-    scores (documents JOIN embeddings), or None when bench didn't
-    prepare one.  Never hands the documents-table index to a hybrid
-    query: its frozen stats belong to a different corpus."""
-    if (sf_dir, "joined") not in _BM25_INDEX_DIRS:
-        return None
-    return _bm25_index_handle(spark, sf_dir, "joined")
-
-
-def _ivf_index_handle(spark, sf_dir: str):
-    """Open-once (labeled, centroids, codebook-rows) for the persisted
-    IVF index; the codebook (k x dim floats) stays driver-resident —
-    it's index metadata, the moral equivalent of BM25's 1-row stats."""
-    from qurio_spark.operators.similarity import read_ivf_index
-
-    h = _IVF_INDEX_HANDLES.get(sf_dir)
-    if h is None:
-        labeled, centroids = read_ivf_index(spark, _IVF_INDEX_DIRS[sf_dir])
-        codebook = [
-            (int(r["label"]), [float(x) for x in r["centroid"]])
-            for r in centroids.collect()
-        ]
-        h = (labeled, centroids, codebook)
-        _IVF_INDEX_HANDLES[sf_dir] = h
-    return h
-
-
-def _ivf_index_path(spark, sf_dir: str) -> str:
-    import tempfile
-
-    from qurio_spark.operators.similarity import ivf_build, write_ivf_index
-
-    path = _IVF_INDEX_DIRS.get(sf_dir)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="qurio-ivf-idx-")
-        emb = _docs_with_vecs(spark, sf_dir).select("doc_id", "embedding")
-        # k=16: finer codebook than the in-DAG default (8) — per-query
-        # probe fraction drops to 3/16 and the probed-label union stays
-        # well under the full corpus; verified recall 1.0 against the
-        # dense oracle at sf0.001/0.01/0.1
-        labeled, centroids = ivf_build(
-            emb, k=16, iters=3, id_col="doc_id", fit_sample_mod=4
-        )
-        write_ivf_index(labeled, centroids, path)
-        _IVF_INDEX_DIRS[sf_dir] = path
-    return path
-
-
-def _dedup_index_path(spark, sf_dir: str) -> str:
-    """Persist the dedup signature tables (simhash fingerprints +
-    minhash signatures) — signatures are an index, built once per
-    corpus version; deterministic, so prebuilt == in-DAG."""
-    import tempfile
-
-    path = _DEDUP_INDEX_DIRS.get(sf_dir)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="qurio-dedup-idx-")
-        from qurio_spark.operators.dedup import shingle_docs
-
-        d = _t(spark, sf_dir, "documents")
-        simhash64(d).write.mode("overwrite").parquet(f"{path}/simhash")
-        minhash_signatures(d, num_perm=4).write.mode("overwrite").parquet(
-            f"{path}/minhash"
-        )
-        shingle_docs(d, n=3).write.mode("overwrite").parquet(f"{path}/shingles")
-        _DEDUP_INDEX_DIRS[sf_dir] = path
-    return path
-
-
-def _pq_index_path(spark, sf_dir: str) -> str:
-    """Persist ONE IVF x PQ index per sf_dir — packed codes partitioned
-    by the embeddings table's coarse label, codebooks alongside — and
-    it serves BOTH PQ queries: ann_pq scans every label directory
-    (plain PQ), ann_ivfpq prunes to the probe labels.  Deterministic
-    (hash-sampled fit), so prebuilt == in-DAG results."""
-    import tempfile
-
-    from qurio_spark.operators.pq import pq_fit, write_ivfpq_index
-
-    path = _PQ_INDEX_DIRS.get(sf_dir)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="qurio-pq-idx-")
-        emb = _t(spark, sf_dir, "embeddings")
-        books = pq_fit(emb, m=16, k=256, iters=10)
-        write_ivfpq_index(emb, books, path)
-        _PQ_INDEX_DIRS[sf_dir] = path
-    return path
-
-
-def _pq_index_handle(spark, sf_dir: str):
-    """Open-once (codes_df, codebooks, total_n, per_label_counts) over
-    the persisted IVF x PQ layout; the counts are index metadata the
-    adaptive shortlist sizing needs (computed once at open, not per
-    query)."""
-    from qurio_spark.operators.pq import read_pq_index
-
-    h = _PQ_INDEX_HANDLES.get(sf_dir)
-    if h is None:
-        codes, books = read_pq_index(spark, _pq_index_path(spark, sf_dir))
-        counts = {
-            int(r["label"]): int(r["n"])
-            for r in codes.groupBy("label").agg(F.count("*").alias("n")).collect()
-        }
-        h = (codes, books, sum(counts.values()), counts)
-        _PQ_INDEX_HANDLES[sf_dir] = h
-    return h
-
-
-def _lsh_index_path(spark, sf_dir: str) -> str:
-    import tempfile
-
-    from qurio_spark.operators.similarity import write_lsh_index
-
-    path = _LSH_INDEX_DIRS.get(sf_dir)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="qurio-lsh-idx-")
-        emb = _t(spark, sf_dir, "embeddings")
-        write_lsh_index(emb, path, dim=len(_qvec(spark, sf_dir)), n_planes=3)
-        _LSH_INDEX_DIRS[sf_dir] = path
-    return path
-
-
-def prepare_indexes(spark, sf_dir: str) -> None:
-    """Amortized index builds (called untimed by bench.py), with the
-    opened handles pre-warmed — a serving system opens an index once,
-    so the first query shouldn't pay the parquet-footer reads either."""
-    from qurio_spark.operators.similarity import read_lsh_index
-
-    _bm25_index_path(spark, sf_dir, "documents")
-    _bm25_index_path(spark, sf_dir, "joined")
-    _ivf_index_path(spark, sf_dir)
-    _dedup_index_path(spark, sf_dir)
-    _lsh_index_path(spark, sf_dir)
-    _pq_index_path(spark, sf_dir)
-    _bm25_index_handle(spark, sf_dir, "documents")
-    _bm25_index_handle(spark, sf_dir, "joined")
-    _ivf_index_handle(spark, sf_dir)
-    _pq_index_handle(spark, sf_dir)
-    if sf_dir not in _LSH_INDEX_HANDLES:
-        _LSH_INDEX_HANDLES[sf_dir] = read_lsh_index(
-            spark, _lsh_index_path(spark, sf_dir)
-        )
 
 
 def q_bm25_incremental(spark, sf_dir):
@@ -320,7 +110,7 @@ def q_bm25_prebuilt(spark, sf_dir):
     the scan prunes to <= |q| of 64 bucket directories then applies the
     pushed ``term IN``  filter — per-query cost O(sum df(t)), corpus
     scanned zero times (operators/bm25.write_index/prune_postings)."""
-    idx = _bm25_index_handle(spark, sf_dir, "documents")
+    idx = indexes.handle(spark, sf_dir, "bm25_documents")
     scored = bm25_op.score_query(idx, QUERY_TEXT)
     return _keyword_top10(scored)
 
@@ -345,7 +135,7 @@ def register_search_sql(spark, sf_dir):
         return hybrid_search(
             _docs_with_vecs(spark, sf_dir), query, _qvec(spark, sf_dir),
             alpha=alpha, limit=int(k),
-            bm25_index=_hybrid_bm25_index(spark, sf_dir),
+            bm25_index=indexes.prepared(spark, sf_dir, "bm25_joined"),
         )
 
     def _bm25(spark, query, k=10):
@@ -441,7 +231,7 @@ def q_batch_hybrid(spark, sf_dir):
     queries = _batch_queries_frame(spark, sf_dir)
     res = hybrid_search_batch(
         docs, queries, alpha=0.5, limit=5,
-        bm25_index=_hybrid_bm25_index(spark, sf_dir),
+        bm25_index=indexes.prepared(spark, sf_dir, "bm25_joined"),
     )
     return res.select("query_id", "doc_id", stable_round("score", 4).alias("score"))
 
@@ -462,12 +252,14 @@ def q_batch_hybrid_ivf(spark, sf_dir):
     # prebuilt persisted indexes when bench prepared them; the driver's
     # correctness run builds in-DAG (deterministically identical)
     ivf_idx = codebook = None
-    if sf_dir in _IVF_INDEX_DIRS:
-        labeled, centroids, codebook = _ivf_index_handle(spark, sf_dir)
+    ivf = indexes.prepared(spark, sf_dir, "ivf")
+    if ivf is not None:
+        labeled, centroids, codebook = ivf
         ivf_idx = (labeled, centroids)
     res = hybrid_search_batch_ivf(
         docs, queries, alpha=0.5, limit=5, ivf_index=ivf_idx,
-        bm25_index=_hybrid_bm25_index(spark, sf_dir), codebook=codebook,
+        bm25_index=indexes.prepared(spark, sf_dir, "bm25_joined"),
+        codebook=codebook,
     )
     from qurio_spark.operators.cachectl import propagate_caches
 
@@ -526,6 +318,6 @@ def q_hybrid_rrf(spark, sf_dir):
     docs = _docs_with_vecs(spark, sf_dir)
     res = hybrid_search_rrf(
         docs, QUERY_TEXT, _qvec(spark, sf_dir), limit=10,
-        bm25_index=_hybrid_bm25_index(spark, sf_dir),
+        bm25_index=indexes.prepared(spark, sf_dir, "bm25_joined"),
     )
     return res.select("doc_id", stable_round("score", 6).alias("score"))

@@ -29,3 +29,24 @@ def _fresh_worker_provider_cache():
 
     _WORKER_PROVIDER_CACHE.clear()
     yield
+
+
+@pytest.fixture(scope="module")
+def index_registry():
+    """The prepared-index registry (qurio_spark.queries.indexes) as it
+    was before this module, restored after it: indexes one module
+    prepares never move another module's queries off their in-DAG
+    builds.  Calling the fixture empties the registry and returns it."""
+    from qurio_spark.queries import indexes
+
+    saved = dict(indexes._DIRS), dict(indexes._HANDLES)
+
+    def empty():
+        indexes._DIRS.clear()
+        indexes._HANDLES.clear()
+        return indexes
+
+    yield empty
+    empty()
+    indexes._DIRS.update(saved[0])
+    indexes._HANDLES.update(saved[1])

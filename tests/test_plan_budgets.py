@@ -16,28 +16,13 @@ from tools.plan_audit import audit
 
 
 @pytest.fixture(scope="module")
-def prepared(spark, sf_dir):
-    """Persisted indexes for the prebuilt-path queries, with the module
-    caches restored afterwards so other test files see their own state."""
+def prepared(spark, sf_dir, index_registry):
+    """Persisted indexes for the prebuilt-path queries, dropped after
+    this module so other test files see their own state."""
     import __spark_entry__ as m
 
-    saved = (
-        dict(m._BM25_INDEX_DIRS), dict(m._IVF_INDEX_DIRS),
-        dict(m._DEDUP_INDEX_DIRS), dict(m._LSH_INDEX_DIRS),
-        dict(m._PQ_INDEX_DIRS),
-        dict(m._BM25_INDEX_HANDLES), dict(m._IVF_INDEX_HANDLES),
-        dict(m._LSH_INDEX_HANDLES), dict(m._PQ_INDEX_HANDLES),
-    )
     m.prepare_indexes(spark, sf_dir)
-    yield m
-    for cache, snap in zip(
-        (m._BM25_INDEX_DIRS, m._IVF_INDEX_DIRS, m._DEDUP_INDEX_DIRS,
-         m._LSH_INDEX_DIRS, m._PQ_INDEX_DIRS, m._BM25_INDEX_HANDLES,
-         m._IVF_INDEX_HANDLES, m._LSH_INDEX_HANDLES, m._PQ_INDEX_HANDLES),
-        saved,
-    ):
-        cache.clear()
-        cache.update(snap)
+    return m
 
 
 #: name -> {metric: (op, bound)}; op "<=" is a ceiling, ">=" a floor.

@@ -352,7 +352,7 @@ class TestBatchHybridIVF:
 
 
 class TestPreparedIndexParity:
-    def test_prepared_paths_equal_inline(self, spark, sf_dir):
+    def test_prepared_paths_equal_inline(self, spark, sf_dir, index_registry):
         """Every query that can consume a prepared (persisted) index
         must return exactly the inline-build result: bm25_prebuilt,
         hybrid_topk, batch_hybrid, batch_hybrid_ivf, simhash_near,
@@ -369,49 +369,29 @@ class TestPreparedIndexParity:
             return sorted(tuple(r) for r in m.queries()[name](spark, sf_dir).collect())
 
         # force the inline path even if another test prepared indexes
-        saved = (dict(m._BM25_INDEX_DIRS), dict(m._IVF_INDEX_DIRS),
-                 dict(m._DEDUP_INDEX_DIRS), dict(m._LSH_INDEX_DIRS),
-                 dict(m._PQ_INDEX_DIRS))
-        saved_handles = (dict(m._BM25_INDEX_HANDLES), dict(m._IVF_INDEX_HANDLES),
-                         dict(m._LSH_INDEX_HANDLES), dict(m._PQ_INDEX_HANDLES))
-        try:
-            m._BM25_INDEX_DIRS.clear(); m._IVF_INDEX_DIRS.clear()
-            m._DEDUP_INDEX_DIRS.clear(); m._LSH_INDEX_DIRS.clear()
-            m._PQ_INDEX_DIRS.clear()
-            m._BM25_INDEX_HANDLES.clear(); m._IVF_INDEX_HANDLES.clear()
-            m._LSH_INDEX_HANDLES.clear(); m._PQ_INDEX_HANDLES.clear()
-            inline = {n: rows(n) for n in names}
-            # the persisted-only LSH path must equal its in-DAG twin
-            inline["lsh_prebuilt_vs_in_dag"] = rows("lsh_topk")
-            m.prepare_indexes(spark, sf_dir)
-            prepared = {n: rows(n) for n in names}
-            prepared["lsh_prebuilt_vs_in_dag"] = rows("lsh_prebuilt")
-        finally:
-            m._BM25_INDEX_DIRS.clear(); m._BM25_INDEX_DIRS.update(saved[0])
-            m._IVF_INDEX_DIRS.clear(); m._IVF_INDEX_DIRS.update(saved[1])
-            m._DEDUP_INDEX_DIRS.clear(); m._DEDUP_INDEX_DIRS.update(saved[2])
-            m._LSH_INDEX_DIRS.clear(); m._LSH_INDEX_DIRS.update(saved[3])
-            m._BM25_INDEX_HANDLES.clear()
-            m._BM25_INDEX_HANDLES.update(saved_handles[0])
-            m._IVF_INDEX_HANDLES.clear()
-            m._IVF_INDEX_HANDLES.update(saved_handles[1])
-            m._LSH_INDEX_HANDLES.clear()
-            m._LSH_INDEX_HANDLES.update(saved_handles[2])
-            m._PQ_INDEX_DIRS.clear(); m._PQ_INDEX_DIRS.update(saved[4])
-            m._PQ_INDEX_HANDLES.clear()
-            m._PQ_INDEX_HANDLES.update(saved_handles[3])
+        index_registry()
+        inline = {n: rows(n) for n in names}
+        # the persisted-only LSH path must equal its in-DAG twin
+        inline["lsh_prebuilt_vs_in_dag"] = rows("lsh_topk")
+        m.prepare_indexes(spark, sf_dir)
+        prepared = {n: rows(n) for n in names}
+        prepared["lsh_prebuilt_vs_in_dag"] = rows("lsh_prebuilt")
         for n in list(names) + ["lsh_prebuilt_vs_in_dag"]:
             assert prepared[n] == inline[n], n
 
-    def test_hybrid_prebuilt_index_over_joined_corpus(self, spark, tmp_path):
+    def test_hybrid_prebuilt_index_over_joined_corpus(
+        self, spark, tmp_path, index_registry
+    ):
         """BM25 stats (df/N/avgdl) are frozen into a persisted index at
         build time and are DEFINED over the scored corpus.  The hybrid
         family scores documents JOIN embeddings; at sf0.1 the documents
         table is 2.5x larger than the joined corpus, so an index built
         over bare ``documents`` carries the wrong stats.  This pins the
-        fix at the operator level, on a fixture where the two corpora
+        registry's two BM25 kinds on a fixture where the two corpora
         actually differ (the existing parity test runs at scales where
         they coincide)."""
+        import __spark_entry__ as m
+
         docs = spark.createDataFrame(
             [
                 (i, f"spark hash join doc number {i} " + ("filler words " * (i % 4)))
@@ -423,60 +403,70 @@ class TestPreparedIndexParity:
             [(i, [float(i + 1), 1.0, 0.5]) for i in range(6)],
             "vec_id long, embedding array<float>",
         )
-        joined = docs.join(emb, docs["doc_id"] == emb["vec_id"]).drop("vec_id")
+        sf = str(tmp_path / "sf")
+        docs.write.parquet(f"{sf}/documents.parquet")
+        emb.write.parquet(f"{sf}/embeddings.parquet")
+        joined = m._docs_with_vecs(spark, sf)
         qvec = [1.0, 0.2, 0.1]
+        indexes = index_registry()
 
-        def rows(df):
-            return [
-                (r["doc_id"], round(r["score"], 9)) for r in df.collect()
-            ]
+        def rows(kind=None):
+            bm25_index = indexes.handle(spark, sf, kind) if kind else None
+            df = hybrid_search(
+                joined, "hash join spark", qvec, alpha=0.5, limit=5,
+                bm25_index=bm25_index,
+            )
+            return [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
 
-        inline = rows(
-            hybrid_search(joined, "hash join spark", qvec, alpha=0.5, limit=5)
-        )
-
+        inline = rows()
         # index over the JOINED corpus — what prepare_indexes ships to
         # the hybrid queries — must reproduce the in-DAG scores exactly
-        good = bm25_op.build_index(joined.select("doc_id", "text"))
-        good_path = str(tmp_path / "bm25_joined")
-        bm25_op.write_index(good, good_path)
-        prebuilt = rows(
-            hybrid_search(
-                joined, "hash join spark", qvec, alpha=0.5, limit=5,
-                bm25_index=bm25_op.read_index(spark, good_path),
-            )
-        )
-        assert prebuilt == inline
-
+        assert rows("bm25_joined") == inline
         # index over the bare documents table (the pre-fix behavior)
         # demonstrably diverges: N=10/avgdl include 4 unscored docs
-        wrong = bm25_op.build_index(docs)
-        wrong_path = str(tmp_path / "bm25_documents")
-        bm25_op.write_index(wrong, wrong_path)
-        mismatched = rows(
-            hybrid_search(
-                joined, "hash join spark", qvec, alpha=0.5, limit=5,
-                bm25_index=bm25_op.read_index(spark, wrong_path),
-            )
-        )
-        assert mismatched != inline
+        assert rows("bm25_documents") != inline
 
-    def test_entrypoint_hybrid_index_is_joined_corpus(self, spark, sf_dir):
-        """prepare_indexes registers BOTH corpora and _hybrid_bm25_index
-        hands the hybrid family the joined-corpus one."""
+    def test_entrypoint_hybrid_index_is_joined_corpus(
+        self, spark, sf_dir, index_registry
+    ):
+        """prepare_indexes registers BOTH corpora and the registry hands
+        the hybrid family the joined-corpus one."""
         import __spark_entry__ as m
 
-        saved = dict(m._BM25_INDEX_DIRS)
-        try:
-            m._BM25_INDEX_DIRS.clear()
-            m.prepare_indexes(spark, sf_dir)
-            assert (sf_dir, "documents") in m._BM25_INDEX_DIRS
-            assert (sf_dir, "joined") in m._BM25_INDEX_DIRS
-            idx = m._hybrid_bm25_index(spark, sf_dir)
-            n_joined = m._docs_with_vecs(spark, sf_dir).count()
-            assert idx.n_docs == n_joined
-        finally:
-            m._BM25_INDEX_DIRS.clear(); m._BM25_INDEX_DIRS.update(saved)
+        indexes = index_registry()
+        m.prepare_indexes(spark, sf_dir)
+        assert ("bm25_documents", sf_dir) in indexes._DIRS
+        assert ("bm25_joined", sf_dir) in indexes._DIRS
+        idx = indexes.prepared(spark, sf_dir, "bm25_joined")
+        n_joined = m._docs_with_vecs(spark, sf_dir).count()
+        assert idx.n_docs == n_joined
+
+    def test_only_persisted_layout_queries_build_indexes(
+        self, spark, sf_dir, index_registry
+    ):
+        """Queries with an in-DAG fallback never build an index, so a
+        correctness run without ``prepare_indexes`` writes none; the queries
+        whose point is a persisted layout build exactly their own kind
+        on first use."""
+        import __spark_entry__ as m
+        from qurio_spark.operators.cachectl import release_caches
+
+        indexes = index_registry()
+
+        def run(name):
+            df = m.queries()[name](spark, sf_dir)
+            try:
+                assert df.collect()
+            finally:
+                release_caches(df)
+
+        for name in ("hybrid_topk", "batch_hybrid_ivf", "minhash", "ann_pq"):
+            run(name)
+        assert not indexes._DIRS and not indexes._HANDLES
+        run("bm25_prebuilt")
+        run("lsh_prebuilt")
+        expected = {("bm25_documents", sf_dir), ("lsh", sf_dir)}
+        assert set(indexes._DIRS) == set(indexes._HANDLES) == expected
 
 
 class TestPersistedIVFIndex:

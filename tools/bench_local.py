@@ -65,8 +65,7 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     # a failed index build raises, as in bench.py
-    if hasattr(entrymod, "prepare_indexes"):
-        entrymod.prepare_indexes(spark, target)
+    entrymod.prepare_indexes(spark, target)
 
     all_queries = entrymod.queries()
     wanted = sys.argv[1:]

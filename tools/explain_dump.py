@@ -44,11 +44,9 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    if hasattr(entrymod, "prepare_indexes"):
-        try:
-            entrymod.prepare_indexes(spark, target)
-        except Exception as e:
-            print(f"prepare error: {e}", file=sys.stderr)
+    # a failed index build raises: swallowing it would capture the
+    # in-DAG plans instead of the bench-path ones
+    entrymod.prepare_indexes(spark, target)
     all_queries = entrymod.queries()
     wanted = sys.argv[2:] or list(all_queries)
     unknown = [n for n in wanted if n not in all_queries]

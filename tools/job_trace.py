@@ -82,8 +82,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    if hasattr(entrymod, "prepare_indexes"):
-        entrymod.prepare_indexes(spark, target)
+    entrymod.prepare_indexes(spark, target)
     qs = entrymod.queries()
     for name in names:
         before_ids = {j[0] for j in jobs_snapshot(spark)}

@@ -15,11 +15,10 @@ import sys
 
 sys.path.insert(0, ".")
 
-import duckdb
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as entrymod
-from qurio_spark.oracle import compare, register_views
+from tools.oracle_check import check_queries
 
 
 def main():
@@ -31,8 +30,6 @@ def main():
         .config("spark.sql.session.timeZone", "Asia/Kolkata")
         .getOrCreate()
     )
-    con = duckdb.connect()
-    register_views(con, sf_dir)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     if only:
@@ -50,24 +47,13 @@ def main():
         print("ERROR: nothing to probe")
         sys.exit(2)
     passed = failed = 0
-    for name in names:
-        try:
-            sdf = qs[name](spark, sf_dir)
-            scols, srows = sdf.columns, sdf.collect()
-            res = con.execute(oracles[name])
-            dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
-            problems = compare(scols, srows, dcols, drows)
-            ok, why = not problems, "; ".join(problems)
-        except Exception as e:
-            ok, why = False, f"error: {e}"
-            srows = []
-        if ok:
+    for name, verdict, note, n, _ in check_queries(spark, sf_dir, names):
+        if verdict == "PASS":
             passed += 1
-            print(f"PASS {name} ({len(srows)} rows) [tz=Asia/Kolkata]")
+            print(f"PASS {name} ({n} rows) [tz=Asia/Kolkata]")
         else:
             failed += 1
-            print(f"FAIL {name}: {why}")
+            print(f"FAIL {name}: {note}")
     print(f"\n{passed} passed, {failed} failed under Asia/Kolkata")
     sys.exit(1 if failed else 0)
 
