@@ -155,13 +155,6 @@ def stats(sources: DataFrame, chunks: DataFrame, failed_rows: DataFrame) -> dict
     }
 
 
-def pending_pages_count(pages: DataFrame, source_id: str) -> int:
-    """Q9 (job/repo.go:69-74 analogue)."""
-    return pages.filter(
-        (F.col("source_id") == source_id) & (F.col("status") == "pending")
-    ).count()
-
-
 class QueryLogger:
     """Q11: append-mode query log (retrieval/logger.go:13-58's JSONL,
     as a table)."""

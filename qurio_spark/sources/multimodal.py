@@ -2,18 +2,20 @@
 
 Image/audio/video are opaque ``binary`` columns with typed metadata
 structs.  The Spark-side plumbing — schema, binaryFile ingestion,
-Arrow-batched mapInPandas, partitioning — is real and tested; the
-actual byte decoding is hermetic where stdlib+numpy allow —
-uncompressed BMP, 8/16-bit PNG incl. Adam7 interlace (struct + zlib +
-PNG filter reconstruction), GIF (pure-Python LZW), BASELINE JPEG
-(numpy Huffman + vectorized IDCT), PCM WAV samples — and STUBBED
-where it genuinely needs a codec library (progressive JPEG, JPX,
-compressed audio): ``decode_image_meta`` parses container
-headers (PNG/JPEG/GIF dimensions — plain struct parsing), and
-``extract_features`` computes a deterministic byte-histogram feature
-vector standing in for a real vision embedding.  A production build
-swaps ``_decode_pixels`` for PIL/libvips inside the same mapInPandas
-contract.
+Arrow-batched mapInPandas, partitioning — is real and tested.
+
+Pixel decode is hermetic (stdlib + numpy) for exactly three inputs:
+uncompressed BMP, PNG at every depth incl. Adam7 interlace, and raw or
+FlateDecode PDF image XObjects.  Every other codec (GIF, JPEG, JPX,
+compressed BMP) goes through a decode provider — the ``decode=`` slot
+of ``resize_pixels`` / ``extract_features``, e.g.
+:class:`PilDecodeProvider`; without one those rows are quarantined
+with NULL pixels and the reason.  Header sniffing needs no codec:
+``decode_image_meta`` reads PNG/GIF/JPEG/BMP dimensions with plain
+struct parsing.  Audio decodes PCM, G.711 and IMA-ADPCM WAV samples;
+compressed audio and video frames stay stubbed.  ``extract_features``
+computes a deterministic histogram feature vector standing in for a
+real vision embedding.
 
 The reference's closest operator is docling file conversion (S5,
 handlers/file.py:196-299: binary -> markdown + metadata in a process
@@ -79,9 +81,10 @@ def read_binary_dir(spark, path: str, glob: str = "*") -> DataFrame:
 
 
 def _parse_image_header(data: bytes | None) -> tuple:
-    """Header-only dimension sniffing (PNG/GIF/JPEG) — deterministic,
-    no codecs.  Full pixel decode lives in ``_decode_pixels`` (real
-    for BMP, PNG, and GIF; honestly stubbed for codec formats)."""
+    """Header-only dimension sniffing (PNG/GIF/JPEG/BMP) —
+    deterministic, no codecs.  Full pixel decode lives in
+    ``_decode_pixels`` (BMP and PNG; other formats need a decode
+    provider)."""
     if not data or len(data) < 12:
         return (None, None, None, False)
     if data[:8] == b"\x89PNG\r\n\x1a\n" and len(data) >= 24:
@@ -317,572 +320,13 @@ def _decode_png_pixels(data: bytes) -> "np.ndarray":
     return np.ascontiguousarray(px[:, :, :3])  # RGB / RGBA
 
 
-def _gif_lzw_decode(data: bytes, min_code_size: int) -> list[int]:
-    """GIF's variable-width LZW (little-endian bit packing, dictionary
-    reset on CLEAR, width grows at 2^width up to 12 bits) -> color
-    indices.  Pure Python — fine for fixture-scale frames; a real
-    pipeline swaps the whole decode for PIL inside the same contract."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    width = min_code_size + 1
-    dictionary: list[list[int]] = [[i] for i in range(clear)] + [[], []]
-    out: list[int] = []
-    prev: list[int] | None = None
-    acc = bits = pos = 0
-    while True:
-        while bits < width:
-            if pos >= len(data):
-                return out  # truncated stream: emit what we have
-            acc |= data[pos] << bits
-            bits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        bits -= width
-        if code == clear:
-            dictionary = [[i] for i in range(clear)] + [[], []]
-            width = min_code_size + 1
-            prev = None
-            continue
-        if code == end:
-            return out
-        if code < len(dictionary) and dictionary[code]:
-            entry = dictionary[code]
-        elif code == len(dictionary) and prev is not None:
-            entry = prev + [prev[0]]  # the KwKwK case
-        else:
-            raise ValueError(f"bad LZW code {code}")
-        out.extend(entry)
-        if prev is not None:
-            dictionary.append(prev + [entry[0]])
-            if len(dictionary) == (1 << width) and width < 12:
-                width += 1
-        prev = entry
-
-
-def _decode_gif_pixels(data: bytes) -> "np.ndarray":
-    """GIF87a/89a first frame -> (h, w, 3) uint8 RGB, pure stdlib:
-    color tables + LZW (``_gif_lzw_decode``) + optional Adam-less
-    4-pass interlace reorder.  Animated GIFs decode their FIRST image
-    block; transparency is dropped (RGB contract, like PNG alpha)."""
-    if data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF")
-    sw, sh = _struct.unpack("<HH", data[6:10])
-    packed = data[10]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = np.frombuffer(data, np.uint8, n * 3, pos).reshape(n, 3)
-        pos += n * 3
-    while pos < len(data):
-        b = data[pos]
-        if b == 0x21:  # extension: label + sub-blocks
-            pos += 2
-            while pos < len(data) and data[pos] != 0:
-                pos += 1 + data[pos]
-            pos += 1
-        elif b == 0x2C:  # image descriptor
-            _, _, w, h = _struct.unpack("<HHHH", data[pos + 1 : pos + 9])
-            ipacked = data[pos + 9]
-            pos += 10
-            ct = gct
-            if ipacked & 0x80:  # local color table
-                n = 2 << (ipacked & 0x07)
-                ct = np.frombuffer(data, np.uint8, n * 3, pos).reshape(n, 3)
-                pos += n * 3
-            if ct is None:
-                raise ValueError("GIF image without a color table")
-            min_code = data[pos]
-            pos += 1
-            chunks = []
-            while pos < len(data) and data[pos] != 0:
-                ln = data[pos]
-                chunks.append(data[pos + 1 : pos + 1 + ln])
-                pos += 1 + ln
-            idx = _gif_lzw_decode(b"".join(chunks), min_code)
-            if len(idx) < w * h:
-                raise ValueError("truncated GIF pixel data")
-            grid = np.asarray(idx[: w * h], dtype=np.int64).reshape(h, w)
-            if ipacked & 0x40:  # interlaced: rows arrive in 4 passes
-                order = (
-                    list(range(0, h, 8)) + list(range(4, h, 8))
-                    + list(range(2, h, 4)) + list(range(1, h, 2))
-                )
-                deinter = np.empty_like(grid)
-                deinter[order] = grid
-                grid = deinter
-            if grid.max() >= len(ct):
-                raise ValueError("GIF index out of color-table range")
-            return np.ascontiguousarray(ct[grid])
-        elif b == 0x3B:  # trailer
-            break
-        else:
-            raise ValueError(f"bad GIF block 0x{b:02x}")
-    raise ValueError("GIF missing image descriptor")
-
-
-#: JPEG/zigzag scan order (spec figure A.6): zigzag position -> raster
-#: index in the 8x8 block.  Re-derived algorithmically in tests so a
-#: transcription slip here cannot hide behind a symmetric round-trip.
-_JPEG_ZIGZAG = (
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-)
-
-
-def _jpeg_dct_matrix() -> "np.ndarray":
-    """The 8x8 DCT-II basis C with C[u, x] = c(u)/2 cos((2x+1)u pi/16)
-    — spatial = C.T @ coeffs @ C (IDCT), coeffs = C @ spatial @ C.T
-    (FDCT, used by the test-side encoder twin)."""
-    x = np.arange(8)
-    C = np.cos((2 * x[None, :] + 1) * x[:, None] * np.pi / 16) / 2.0
-    C[0] /= np.sqrt(2.0)
-    return C
-
-
-class _JpegBitReader:
-    """MSB-first bit reader over entropy-coded data with 0xFF00
-    stuffing removed and RSTn awareness (``align_restart`` consumes a
-    restart marker and resets byte alignment)."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.data, self.pos, self.bit = data, pos, 0
-
-    def read_bit(self) -> int:
-        d = self.data
-        if self.pos >= len(d):
-            return 1  # past the stream: pad with 1-bits (spec F.2.2.5)
-        if self.bit == 0:
-            # skip stuffed 0x00 after a literal 0xFF byte
-            if self.pos > 0 and d[self.pos - 1] == 0xFF and d[self.pos] == 0x00:
-                self.pos += 1
-                if self.pos >= len(d):
-                    return 1
-        byte = d[self.pos]
-        if byte == 0xFF and (self.pos + 1 >= len(d) or d[self.pos + 1] != 0x00):
-            # a real marker inside entropy data (truncated scan):
-            # baseline decoders pad with 1-bits
-            return 1
-        b = (byte >> (7 - self.bit)) & 1
-        self.bit += 1
-        if self.bit == 8:
-            self.bit, self.pos = 0, self.pos + 1
-        return b
-
-    def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def align_restart(self) -> None:
-        d = self.data
-        if self.bit:
-            self.bit, self.pos = 0, self.pos + 1
-        # an all-ones pad byte is 0xFF and carries a 0x00 stuffing byte
-        # before the RST marker — skip it like any stuffed byte
-        if self.pos > 0 and self.pos < len(d) and d[self.pos - 1] == 0xFF \
-                and d[self.pos] == 0x00:
-            self.pos += 1
-        if self.pos + 1 < len(d) and d[self.pos] == 0xFF \
-                and 0xD0 <= d[self.pos + 1] <= 0xD7:
-            self.pos += 2
-
-
-def _jpeg_huff_decode_table(counts: list[int], symbols: bytes) -> dict:
-    """Canonical JPEG Huffman table -> {(length, code): symbol}."""
-    table, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            table[(length, code)] = symbols[k]
-            code, k = code + 1, k + 1
-        code <<= 1
-    return table
-
-
-def _jpeg_huff_read(r: "_JpegBitReader", table: dict) -> int:
-    code, length = 0, 0
-    while length < 16:
-        code = (code << 1) | r.read_bit()
-        length += 1
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid JPEG Huffman code")
-
-
-def _jpeg_extend(v: int, t: int) -> int:
-    """DC/AC magnitude-category decode (spec F.12): t read bits map to
-    [-2^t+1, -2^(t-1)] U [2^(t-1), 2^t-1]."""
-    if t == 0:
-        return 0
-    return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-
-def _jpeg_entropy_end(data: bytes, pos: int) -> int:
-    """First byte of the next real marker after entropy data starting
-    at ``pos`` (skipping 0xFF00 stuffing and RSTn)."""
-    i = pos
-    while i + 1 < len(data):
-        if data[i] == 0xFF and data[i + 1] != 0x00 \
-                and not (0xD0 <= data[i + 1] <= 0xD7):
-            return i
-        i += 1
-    return len(data)
-
-
-def _decode_jpeg_pixels(data: bytes) -> "np.ndarray":
-    """Baseline (SOF0) AND progressive (SOF2) JPEG -> (h, w, 3) uint8
-    RGB, pure numpy: marker parse (DQT/DHT/SOF/DRI/SOS), canonical
-    Huffman entropy decode with byte-stuffing and restart markers,
-    dequantize + dezigzag, one vectorized 8x8 IDCT over all blocks per
-    component (einsum against the DCT basis — the per-block work stays
-    in BLAS, only the Huffman bit loop is Python), nearest-neighbor
-    chroma upsampling for 4:2:0/4:2:2, BT.601 YCbCr -> RGB.  Grayscale
-    broadcasts.  Progressive scans accumulate into the per-component
-    coefficient stores across every SOS: DC first/refine (successive
-    approximation via point transform), AC first with EOB runs, and
-    AC refinement with correction bits (spec G.1.2.2-3, the libjpeg
-    shape).  Arithmetic coding, hierarchical (SOF3/5-7/9-15), and
-    12-bit precision raise NotImplementedError — the honest stub
-    boundary."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    qt: dict[int, np.ndarray] = {}
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
-    comps: list[dict] = []
-    w = h = 0
-    hmax = vmax = mcux = mcuy = 1
-    progressive = False
-    restart_interval = 0
-    store: dict[int, np.ndarray] = {}
-    zz = np.asarray(_JPEG_ZIGZAG)
-    saw_scan = False
-
-    def nonint_grid(c):
-        """Non-interleaved block extent for one component (spec A.2.2:
-        ceil of the component's true sample dims, NOT the padded MCU
-        grid)."""
-        cw = -(-w * c["hs"] // hmax)
-        ch = -(-h * c["vs"] // vmax)
-        return -(-ch // 8), -(-cw // 8)
-
-    def decode_scan(scan_comps, ss, se, ah, al, pos) -> None:
-        # a DC-refinement scan reads raw bits only; every other scan
-        # type reads Huffman symbols from its declared table
-        needs_dc = ss == 0 and (not progressive or ah == 0)
-        needs_ac = not progressive or ss > 0
-        for c in scan_comps:
-            if needs_dc and c["dc"] not in huff_dc:
-                raise ValueError("JPEG scan references undefined DC table")
-            if needs_ac and c["ac"] not in huff_ac:
-                raise ValueError("JPEG scan references undefined AC table")
-        r = _JpegBitReader(data, pos)
-        pred = {c["id"]: 0 for c in scan_comps}
-        eobrun = 0
-        unit = 0  # MCUs (interleaved) or blocks (single-component)
-
-        def maybe_restart():
-            nonlocal pred, eobrun
-            if restart_interval and unit and unit % restart_interval == 0:
-                r.align_restart()
-                pred = {c["id"]: 0 for c in scan_comps}
-                eobrun = 0
-
-        def dc_first(c, block):
-            t = _jpeg_huff_read(r, huff_dc[c["dc"]])
-            pred[c["id"]] += _jpeg_extend(r.read_bits(t), t)
-            block[0] = pred[c["id"]] << al
-
-        def dc_refine(_c, block):
-            if r.read_bit():
-                block[0] |= 1 << al
-
-        def ac_first(c, block):
-            nonlocal eobrun
-            if eobrun > 0:
-                eobrun -= 1
-                return
-            k = ss
-            while k <= se:
-                rs = _jpeg_huff_read(r, huff_ac[c["ac"]])
-                rr, s = rs >> 4, rs & 15
-                if s == 0:
-                    if rr == 15:
-                        k += 16
-                        continue
-                    eobrun = (1 << rr) - 1
-                    if rr:
-                        eobrun += r.read_bits(rr)
-                    break
-                k += rr
-                if k > se:
-                    raise ValueError("JPEG AC index overflow")
-                block[zz[k]] = _jpeg_extend(r.read_bits(s), s) << al
-                k += 1
-
-        def ac_refine(c, block):
-            # spec G.1.2.3 / libjpeg decode_mcu_AC_refine: correction
-            # bits for already-nonzero coefficients, s==1 symbols
-            # introduce newly-nonzero ones, EOB runs cover whole bands
-            nonlocal eobrun
-            p1, m1 = 1 << al, -1 << al
-            k = ss
-            if eobrun == 0:
-                while k <= se:
-                    rs = _jpeg_huff_read(r, huff_ac[c["ac"]])
-                    rr, s = rs >> 4, rs & 15
-                    if s == 0:
-                        if rr < 15:
-                            # refinement EOB runs INCLUDE the current
-                            # block's remainder (its history coeffs'
-                            # correction bits follow the EOBn symbol),
-                            # so the count stays N here and decrements
-                            # after the tail consume — unlike ac_first,
-                            # where the current block is already done
-                            eobrun = 1 << rr
-                            if rr:
-                                eobrun += r.read_bits(rr)
-                            break
-                        newval = 0  # ZRL: skip 16 zero-history coeffs
-                    else:  # s is always 1 in a refinement scan
-                        newval = p1 if r.read_bit() else m1
-                    while k <= se:
-                        ki = zz[k]
-                        if block[ki] != 0:
-                            if r.read_bit() and (block[ki] & p1) == 0:
-                                block[ki] += p1 if block[ki] >= 0 else m1
-                        else:
-                            if rr == 0:
-                                if newval:
-                                    block[ki] = newval
-                                k += 1
-                                break
-                            rr -= 1
-                        k += 1
-            if eobrun > 0:
-                while k <= se:
-                    ki = zz[k]
-                    if block[ki] != 0:
-                        if r.read_bit() and (block[ki] & p1) == 0:
-                            block[ki] += p1 if block[ki] >= 0 else m1
-                    k += 1
-                eobrun -= 1
-
-        def full_baseline(c, block):
-            dc_first(c, block)  # al == 0: plain DC
-            k = 1
-            while k < 64:
-                rs = _jpeg_huff_read(r, huff_ac[c["ac"]])
-                rr, s = rs >> 4, rs & 15
-                if s == 0:
-                    if rr == 15:
-                        k += 16
-                        continue
-                    break  # EOB
-                k += rr
-                if k > 63:
-                    raise ValueError("JPEG AC index overflow")
-                block[zz[k]] = _jpeg_extend(r.read_bits(s), s)
-                k += 1
-
-        if not progressive:
-            per_block = full_baseline
-        elif ss == 0 and ah == 0:
-            per_block = dc_first
-        elif ss == 0:
-            per_block = dc_refine
-        elif ah == 0:
-            per_block = ac_first
-        else:
-            per_block = ac_refine
-        if progressive and ss > 0 and len(scan_comps) != 1:
-            raise ValueError("progressive AC scan must be single-component")
-
-        if len(scan_comps) == 1:
-            # non-interleaved: raster over the component's OWN block
-            # grid (spec A.2.2 — ceil of the true component dims, NOT
-            # the padded MCU grid).  This applies to ANY single-
-            # component scan, baseline included: a baseline multi-scan
-            # file, or grayscale with sampling factors > 1, has a
-            # component grid smaller than the padded grid and the MCU
-            # loop would misdecode it silently.
-            c = scan_comps[0]
-            bh, bw = nonint_grid(c)
-            blocks = store[c["id"]]
-            for byi in range(bh):
-                for bxi in range(bw):
-                    maybe_restart()
-                    per_block(c, blocks[byi, bxi])
-                    unit += 1
-        else:
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    maybe_restart()
-                    for c in scan_comps:
-                        for by in range(c["vs"]):
-                            for bx in range(c["hs"]):
-                                per_block(
-                                    c,
-                                    store[c["id"]][
-                                        my * c["vs"] + by, mx * c["hs"] + bx
-                                    ],
-                                )
-                    unit += 1
-
-    i = 2
-    while i + 2 <= len(data):
-        if data[i] != 0xFF:
-            raise ValueError("bad JPEG marker stream")
-        marker = data[i + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        if marker == 0xD9:  # EOI
-            break
-        if i + 4 > len(data):
-            break
-        (seg_len,) = _struct.unpack(">H", data[i + 2 : i + 4])
-        body = data[i + 4 : i + 2 + seg_len]
-        if marker == 0xDB:  # DQT
-            p = 0
-            while p < len(body):
-                pq, tq = body[p] >> 4, body[p] & 15
-                p += 1
-                if pq == 0:
-                    tbl = np.frombuffer(body, np.uint8, 64, p).astype(np.int32)
-                    p += 64
-                else:
-                    tbl = np.frombuffer(
-                        body, ">u2", 64, p
-                    ).astype(np.int32)
-                    p += 128
-                qt[tq] = tbl
-        elif marker == 0xC4:  # DHT
-            p = 0
-            while p < len(body):
-                tc, th = body[p] >> 4, body[p] & 15
-                counts = list(body[p + 1 : p + 17])
-                n = sum(counts)
-                symbols = body[p + 17 : p + 17 + n]
-                if len(counts) < 16 or len(symbols) < n:
-                    raise ValueError("truncated JPEG DHT")
-                (huff_dc if tc == 0 else huff_ac)[th] = (
-                    _jpeg_huff_decode_table(counts, symbols)
-                )
-                p += 17 + n
-        elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
-            progressive = marker == 0xC2
-            if len(body) < 6 or len(body) < 6 + 3 * body[5]:
-                raise ValueError("truncated JPEG SOF")
-            prec, h, w, ncomp = body[0], *_struct.unpack(">HH", body[1:5]), body[5]
-            if prec != 8:
-                raise NotImplementedError(f"JPEG precision {prec} != 8")
-            comps = [
-                {
-                    "id": body[6 + 3 * c],
-                    "hs": body[7 + 3 * c] >> 4,
-                    "vs": body[7 + 3 * c] & 15,
-                    "tq": body[8 + 3 * c],
-                }
-                for c in range(ncomp)
-            ]
-            if not comps or not all(
-                1 <= c["hs"] <= 4 and 1 <= c["vs"] <= 4 for c in comps
-            ) or not w or not h:
-                raise ValueError("malformed JPEG SOF")
-            hmax = max(c["hs"] for c in comps)
-            vmax = max(c["vs"] for c in comps)
-            mcux = -(-w // (8 * hmax))
-            mcuy = -(-h // (8 * vmax))
-            for c in comps:
-                store[c["id"]] = np.zeros(
-                    (mcuy * c["vs"], mcux * c["hs"], 64), dtype=np.int32
-                )
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"non-baseline/progressive JPEG (SOF{marker - 0xC0}) not "
-                "hermetically decodable; swap in PIL/libvips in production"
-            )
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = _struct.unpack(">H", body[:2])
-        elif marker == 0xDA:  # SOS
-            if not comps:
-                raise ValueError("JPEG SOS before SOF")
-            if not body or len(body) < 4 + 2 * body[0]:
-                raise ValueError("truncated JPEG SOS")
-            ns = body[0]
-            scan_comps = []
-            for c in range(ns):
-                cid, tabs = body[1 + 2 * c], body[2 + 2 * c]
-                comp = next(
-                    (x for x in comps if x["id"] == cid), None
-                )
-                if comp is None:
-                    raise ValueError("JPEG SOS references unknown component")
-                scan_comps.append({**comp, "dc": tabs >> 4, "ac": tabs & 15})
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            approx = body[3 + 2 * ns]
-            ah, al = approx >> 4, approx & 15
-            scan_start = i + 2 + seg_len
-            decode_scan(scan_comps, ss, se, ah, al, scan_start)
-            saw_scan = True
-            i = _jpeg_entropy_end(data, scan_start)
-            continue
-        i += 2 + seg_len
-    if not comps or not saw_scan:
-        raise ValueError("JPEG missing SOF0/SOS")
-
-    C = _jpeg_dct_matrix()
-    planes = []
-    for c in comps:
-        blocks = store[c["id"]]
-        by, bx = blocks.shape[:2]
-        # the store holds NATURAL-order coefficients (progressive
-        # refinement indexes by raster position, the libjpeg layout),
-        # so the zigzag-order quant table is dezigzagged instead
-        qraster = np.zeros(64, dtype=np.int64)
-        qraster[zz] = qt[c["tq"]]
-        grid = (blocks.astype(np.float64) * qraster[None, None, :]).reshape(
-            by, bx, 8, 8
-        )
-        # IDCT every block at once: spatial = C.T @ F @ C, i.e.
-        # spatial[x, y] = sum_{u,v} C[u, x] F[u, v] C[v, y]
-        spatial = np.einsum("ux,abuv,vy->abxy", C, grid, C, optimize=True)
-        plane = spatial.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8) + 128.0
-        # clip to this component's true extent, then upsample to full
-        ch = -(-h * c["vs"] // vmax)
-        cw = -(-w * c["hs"] // hmax)
-        plane = plane[:ch, :cw]
-        plane = np.repeat(plane, vmax // c["vs"], axis=0)
-        plane = np.repeat(plane, hmax // c["hs"], axis=1)
-        planes.append(plane[:h, :w])
-    if len(planes) == 1:
-        y = np.clip(planes[0], 0, 255).astype(np.uint8)
-        return np.ascontiguousarray(np.repeat(y[:, :, None], 3, axis=2))
-    y, cb, cr = planes[0], planes[1] - 128.0, planes[2] - 128.0
-    rgb = np.stack(
-        [
-            y + 1.402 * cr,
-            y - 0.344136 * cb - 0.714136 * cr,
-            y + 1.772 * cb,
-        ],
-        axis=2,
-    )
-    return np.ascontiguousarray(np.clip(np.round(rgb), 0, 255).astype(np.uint8))
-
-
-#: decode ceilings, checked BEFORE any entropy-decode work: the JPEG
-#: Huffman scan is serial Python per image, so one adversarial 100-MP
-#: file (a few hundred KB of bytes) would otherwise wedge an executor
-#: core for minutes.  Both are caller-tunable resource guards (pass
-#: None to lift), not result-shaping constants — a refused file is a
-#: NULL-honest quarantined row, never a wrong answer.
+#: decode ceilings, checked BEFORE any decode work, on the hermetic
+#: PNG/BMP path and in front of every decode provider: a few hundred
+#: KB of bytes can declare 100 MP (or inflate, as a zlib bomb, into
+#: gigabytes) and would otherwise wedge an executor core.  Both are
+#: caller-tunable resource guards (pass None to lift), not
+#: result-shaping constants — a refused file is a NULL-honest
+#: quarantined row, never a wrong answer.
 MAX_DECODE_BYTES = 64 << 20
 MAX_DECODE_PIXELS = 1 << 24  # ~16.8 MP
 
@@ -914,16 +358,12 @@ def _decode_pixels(
     max_bytes: int | None = MAX_DECODE_BYTES,
     max_pixels: int | None = MAX_DECODE_PIXELS,
 ):
-    """Full pixel decode.  Real branches: uncompressed BMP (stdlib
-    struct — VERDICT r5 item 7), PNG at every spec depth/color pair —
-    1/2/4/8/16-bit, plain or Adam7-interlaced (stdlib zlib +
-    byte-wise filter reconstruction — rounds 6-8), GIF (pure-Python
-    LZW — round 7), and JPEG both BASELINE and PROGRESSIVE (numpy
-    Huffman + vectorized IDCT; SOF2 successive approximation +
-    spectral selection + AC refinement — round 8); arithmetic coding
-    and hierarchical/lossless SOFs remain honestly stubbed: no image
-    libraries in this environment.  The mapInPandas contract around
-    it is the real, tested surface either way.
+    """Hermetic pixel decode -> (h, w, 3) uint8 RGB.  Two codecs, both
+    stdlib + numpy: uncompressed BMP and PNG at every spec depth/color
+    pair (1/2/4/8/16-bit, plain or Adam7-interlaced).  Every other
+    format (GIF, JPEG, compressed BMP...) raises NotImplementedError:
+    those go through a decode provider (:class:`PilDecodeProvider`),
+    and the callers quarantine the row when none decodes it.
 
     Inputs over the byte/pixel ceilings are REFUSED with ValueError
     before any decode work (see :func:`_decode_guard`)."""
@@ -934,10 +374,6 @@ def _decode_pixels(
         codec = ("BMP", _decode_bmp_pixels)
     elif data is not None and bytes(data[:8]) == b"\x89PNG\r\n\x1a\n":
         codec = ("PNG", _decode_png_pixels)
-    elif data is not None and bytes(data[:6]) in (b"GIF87a", b"GIF89a"):
-        codec = ("GIF", _decode_gif_pixels)
-    elif data is not None and bytes(data[:2]) == b"\xff\xd8":
-        codec = ("JPEG", _decode_jpeg_pixels)
     if codec is not None:
         fmt, fn = codec
         # corrupt bytes surface as whatever the parser tripped on
@@ -953,16 +389,17 @@ def _decode_pixels(
                 f"corrupt {fmt} data: {type(exc).__name__}: {exc}"
             ) from exc
     raise NotImplementedError(
-        "pixel decode requires an image codec library; swap this stub "
-        "for PIL/libvips in production"
+        "pixel decode requires an image codec library; pass a decode "
+        "provider such as PilDecodeProvider"
     )
 
 
 class HermeticDecodeProvider:
-    """Default decode provider: the pure-Python/numpy codecs above —
-    the CORRECTNESS TWIN, not a production scan path (~0.3 MP/s on
-    JPEG; fine for tests and small re-ingests).  Provider contract
-    (the OCR/embedder pattern, one slot a deployment swaps):
+    """Default decode provider: the hermetic BMP/PNG codecs above
+    (:func:`_decode_pixels`); every other format gets ``None``, so a
+    deployment that needs GIF, JPEG or anything else swaps in
+    :class:`PilDecodeProvider`.  Provider contract (the OCR/embedder
+    pattern, one slot a deployment swaps):
     ``decode_batch(blobs) -> [HxWx3 uint8 ndarray | None]`` — one
     entry per blob, ``None`` = this provider cannot decode that blob
     (caller falls back / quarantines); resource refusals raise
@@ -993,16 +430,14 @@ class HermeticDecodeProvider:
 
 class PilDecodeProvider:
     """Native decode provider over Pillow — the production slot for
-    the 100 TB multimodal scan (libjpeg-turbo class throughput instead
-    of the hermetic ~0.3 MP/s).  Import-gated: this container has no
-    image libraries, so constructing it raises ImportError and tests
-    skip; the Spark-side plumbing (batch contract, guard-first order,
-    fallback) is exercised with a test double either way.
+    the multimodal scan and the only path for GIF, JPEG and every other
+    codec the hermetic BMP/PNG decoder refuses.  Import-gated: without
+    Pillow, constructing it raises ImportError and tests skip; the
+    Spark-side plumbing (batch contract, guard-first order, fallback)
+    is exercised with a test double either way.
 
-    Parity with the hermetic codecs is EXACT for the losslessly
-    specified formats (BMP/PNG/GIF — the spec mandates the pixels) and
-    near-exact for JPEG (IDCT rounding differs across conformant
-    decoders; the parity test pins a small tolerance)."""
+    On BMP and PNG its pixels equal the hermetic decoder's exactly
+    (both formats are lossless, so the spec mandates the pixels)."""
 
     def __init__(
         self,
@@ -1232,9 +667,7 @@ def _ima_adpcm_mono(payload: bytes, block_align: int) -> "np.ndarray":
     """Mono IMA-ADPCM WAV data -> int16-range samples.  Each block is
     independent: a 4-byte header (predictor int16, step index, pad)
     then 2 nibbles/byte, low nibble first.  Sequential per block (the
-    predictor is a running state) but blocks decode independently —
-    the same bounded-Python shape as the Huffman loop in the JPEG
-    decoder."""
+    predictor is a running state) but blocks decode independently."""
     out = []
     for off in range(0, len(payload) - 3, block_align):
         block = payload[off : off + block_align]
@@ -1894,9 +1327,10 @@ def resize_spec(
     scale = min(1, max_side / longest_side), never upscaled, floors at
     1 px.  Pure column expressions — the geometry every vision-encoder
     batcher shards on is computed JVM-side in the same scan as
-    ``decode_image_meta``; only the pixel resample itself sits behind
-    the ``_decode_pixels`` stub.  NULL dims (unparseable header) pass
-    through as NULL targets so failures stay visible downstream."""
+    ``decode_image_meta``, for every format whose header it sniffs;
+    only the pixel resample (``resize_pixels``) needs a decoder.  NULL
+    dims (unparseable header) pass through as NULL targets so failures
+    stay visible downstream."""
     w = F.col(width_col).cast("double")
     h = F.col(height_col).cast("double")
     # greatest/least SKIP nulls in Spark, so a missing dim (or the NULL
@@ -1931,15 +1365,17 @@ def resize_pixels(
     max_decode_pixels: int | None = MAX_DECODE_PIXELS,
     decode=None,
 ) -> DataFrame:
-    """The end-to-end pixel path: ``content`` bytes -> ``_decode_pixels``
-    -> nearest-neighbor resample to the ``resize_spec`` targets -> raw
-    RGB24 bytes.  Real for uncompressed BMP and 8-bit PNG; codec
-    formats surface NotImplementedError per-row in ``resize_error`` (NULL pixels)
-    instead of failing the job, so a mixed 100 TB corpus keeps flowing
-    and the un-decodable slice stays countable.  Oversized inputs
-    (byte/pixel ceilings — one adversarial 100-MP JPEG must not wedge
-    an executor core) are refused the same NULL-honest way, with the
-    refusal reason in ``resize_error``.
+    """The end-to-end pixel path: ``content`` bytes -> decode ->
+    nearest-neighbor resample to the ``resize_spec`` targets -> raw
+    RGB24 bytes.  Hermetic decode covers BMP and PNG
+    (``_decode_pixels``); every other codec needs a ``decode``
+    provider, and without one its rows get NULL pixels and the
+    codec-library message in ``resize_error`` instead of failing the
+    job, so a mixed corpus keeps flowing and the un-decodable slice
+    stays countable.  Oversized inputs (byte/pixel ceilings — a small
+    file declaring 100 MP must not wedge an executor core) are refused
+    the same NULL-honest way, with the refusal reason in
+    ``resize_error``.
 
     Arrow-batched mapInPandas: decode + resample are per-row numpy on
     executor-local batches, no shuffle — parallelism is the binaryFile
@@ -2010,10 +1446,9 @@ def _pdf_image_xobjects(data: bytes):
     """(width, height, (h, w, 3) uint8 RGB) per hermetically-decodable
     image XObject in a PDF: /Subtype /Image, 8 bits/component,
     /DeviceRGB or /DeviceGray, stored raw or FlateDecode (zlib is
-    stdlib — ``_pdf_streams`` already inflated it) — and, since round
-    8, /DCTDecode streams whose bytes are a BASELINE JPEG
-    (``_decode_jpeg_pixels``); progressive-JPEG and JPX XObjects stay
-    behind the stub boundary.
+    stdlib — ``_pdf_streams`` already inflated it).  Any other filter
+    (/DCTDecode JPEG, /JPXDecode...) is codec territory and is skipped,
+    so ``pdf_image_inventory`` counts it as not decodable.
 
     Reference parity: docling rasterizes PDF images for OCR
     (handlers/file.py:196-299); this is the no-codec-library subset."""
@@ -2026,21 +1461,8 @@ def _pdf_image_xobjects(data: bytes):
         w, h, bpc = _num(b"Width"), _num(b"Height"), _num(b"BitsPerComponent")
         if not w or not h or bpc != 8:
             continue
-        if _re.search(rb"/Filter\s*(?:/DCTDecode|\[\s*/DCTDecode\s*\])", head):
-            # same ceilings as _decode_pixels, checked on the PDF
-            # dict's declared dims before the serial entropy decode
-            if len(body) > MAX_DECODE_BYTES or w * h > MAX_DECODE_PIXELS:
-                continue  # oversized: refused, stays quarantinable
-            try:
-                px = _decode_jpeg_pixels(bytes(body))
-            except (NotImplementedError, ValueError):
-                continue  # progressive/corrupt: stays stubbed
-            if px.shape[0] != h or px.shape[1] != w:
-                continue
-            yield w, h, px
-            continue
         if _re.search(rb"/Filter(?!\s*(?:/FlateDecode|\[\s*/FlateDecode\s*\]))", head):
-            continue  # JPX etc.: codec territory
+            continue  # DCT, JPX etc.: codec territory
         if b"/DeviceRGB" in head:
             nch = 3
         elif b"/DeviceGray" in head:

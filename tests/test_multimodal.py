@@ -80,10 +80,33 @@ def make_jpeg(w=32, h=24) -> bytes:
 
 
 def make_jpeg_arith(w=16, h=9) -> bytes:
-    """SOF9 (arithmetic) header — the slice that STAYS stubbed (SOF2
-    progressive decodes since round 8)."""
+    """SOF9 (arithmetic) header: a JPEG no hermetic path decodes."""
     sof = b"\xff\xc9" + struct.pack(">H", 17) + b"\x08" + struct.pack(">HH", h, w) + b"\x03" + b"\x00" * 9
     return b"\xff\xd8" + b"\xff\xe0" + struct.pack(">H", 4) + b"\x00\x00" + sof
+
+
+# Complete, valid files an image library decodes: an 8x8 baseline JPEG
+# (RGB, pixel (x, y) = bmp_golden) and a 4x3 GIF over a three-colour
+# palette.  The hermetic path decodes only BMP and PNG, so both must
+# come back quarantined, never as pixels.
+JPEG_8X8 = bytes.fromhex(
+    "ffd8ffdb00430001010101010101010101010101010101010101010101010101"
+    "0101010101010101010101010101010101010101010101010101010101010101"
+    "01010101010101ffc00011080008000803011100021100031100ffc4001f0000"
+    "00000c000000000000000000000000000102030405060708090a0bffc400b510"
+    "00000000000000a20000000000000000000102030405060708090a1112131415"
+    "161718191a2122232425262728292a3132333435363738393a41424344454647"
+    "48494a5152535455565758595a6162636465666768696a717273747576777879"
+    "7a8182838485868788898a9192939495969798999aa1a2a3a4a5a6a7a8a9aab1"
+    "b2b3b4b5b6b7b8b9bac1c2c3c4c5c6c7c8c9cad1d2d3d4d5d6d7d8d9dae1e2e3"
+    "e4e5e6e7e8e9eaf0f1f2f3f4f5f6f7f8f9faffda000c03010002000300003f00"
+    "9630397094c1120d3268162238f80086b05383f8204634cc572360108610f213"
+    "0022119d9ab2c8471f401fffd9"
+)
+GIF_4X3 = bytes.fromhex(
+    "47494638396104000300810000fa0a0a0afa0a0a0afa00000021fe0568656c6c"
+    "6f002c000000000400030000020444647859003b"
+)
 
 
 class TestHeaderParsing:
@@ -194,15 +217,12 @@ class TestBinaryIngestion:
 
         with pytest.raises(NotImplementedError):
             _decode_pixels(b"anything")
-        # BASELINE JPEG now decodes (TestJpegDecode) — progressive is
-        # the honest stub boundary; PNG/GIF/JPEG data-less headers are
-        # malformed-file errors, not stubs
-        with pytest.raises(NotImplementedError, match="SOF9"):
-            _decode_pixels(make_jpeg_arith())
-        with pytest.raises(ValueError):
-            _decode_pixels(make_jpeg())
-        with pytest.raises(ValueError):
-            _decode_pixels(make_gif())
+        # every JPEG and GIF, valid or not, needs a decode provider; a
+        # data-less PNG header is a malformed-file error, not a stub
+        for blob in (make_jpeg_arith(), make_jpeg(), make_gif(),
+                     JPEG_8X8, GIF_4X3):
+            with pytest.raises(NotImplementedError, match="codec library"):
+                _decode_pixels(blob)
         with pytest.raises(ValueError, match="IDAT"):
             _decode_pixels(make_png())
 
@@ -309,7 +329,7 @@ class TestPixelDecode:
             golden,
         )
         b = out["img/b.jpg"]
-        assert b["pixels"] is None and "SOF9" in b["resize_error"]
+        assert b["pixels"] is None and "codec library" in b["resize_error"]
 
     def test_pdf_image_xobjects(self):
         import numpy as np
@@ -333,15 +353,10 @@ class TestPixelDecode:
         assert (w, h) == (6, 4)
         assert np.array_equal(px, np.repeat(gray, 3, axis=2))
 
-        # DCTDecode with a real BASELINE JPEG now decodes (round 8)
-        jpeg = make_jpeg_full(rgb)
-        dct_pdf = make_image_pdf(6, 4, jpeg, codec="DCTDecode")
-        (w, h, px), = list(_pdf_image_xobjects(dct_pdf))
-        assert (w, h) == (6, 4)
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        assert np.array_equal(px, _decode_pixels(jpeg))
-        # corrupt/non-baseline DCT bytes are skipped, not misdecoded
+        # DCTDecode is codec territory: skipped even around a valid
+        # JPEG, and corrupt DCT bytes are skipped, not misdecoded
+        dct_pdf = make_image_pdf(8, 8, JPEG_8X8, codec="DCTDecode")
+        assert list(_pdf_image_xobjects(dct_pdf)) == []
         bad_pdf = make_image_pdf(6, 4, b"\xff\xd8jpegbytes", codec="DCTDecode")
         assert list(_pdf_image_xobjects(bad_pdf)) == []
 
@@ -354,12 +369,14 @@ class TestPixelDecode:
         rgb = bmp_golden(8, 6)
         raw_pdf = make_image_pdf(8, 6, rgb.tobytes())
         dct_pdf = make_image_pdf(6, 4, b"\xff\xd8jpeg", codec="DCTDecode")
+        real_dct_pdf = make_image_pdf(8, 8, JPEG_8X8, codec="DCTDecode")
         text_pdf = make_pdf([["just text"]])
         df = spark.createDataFrame(
             [("a.pdf", bytearray(raw_pdf)),
              ("b.pdf", bytearray(dct_pdf)),
              ("c.pdf", bytearray(text_pdf)),
-             ("d.pdf", None)],
+             ("d.pdf", None),
+             ("e.pdf", bytearray(real_dct_pdf))],
             "path string, content binary",
         )
         got = {r["path"]: r for r in pdf_image_inventory(df).collect()}
@@ -371,6 +388,9 @@ class TestPixelDecode:
         assert b["max_width"] is None
         assert got["c.pdf"]["n_images"] == 0
         assert got["d.pdf"]["n_images"] is None
+        e = got["e.pdf"]
+        assert (e["n_images"], e["n_decodable"]) == (1, 0)
+        assert e["max_width"] is None
 
 
 class TestFileConversion:
@@ -1117,9 +1137,9 @@ class TestPngDecode:
             _decode_pixels(make_png(8, 8))
 
     def test_resize_pixels_png_end_to_end(self, spark):
-        """The pixel path over a mixed PNG + BMP + JPEG frame: both
-        hermetic formats decode + resample; JPEG stays an honest
-        per-row error."""
+        """The pixel path over a mixed PNG + BMP + JPEG + GIF frame:
+        both hermetic formats decode + resample; JPEG and GIF, valid
+        files included, stay an honest per-row error."""
         import numpy as np
 
         from qurio_spark.sources.multimodal import (
@@ -1134,7 +1154,8 @@ class TestPngDecode:
             [
                 ("img/p.png", bytearray(make_png_full(arr, filters=[4, 3, 2, 1, 0]))),
                 ("img/a.bmp", bytearray(make_bmp(7, 5))),
-                ("img/j.jpg", bytearray(make_jpeg_full(arr))),
+                ("img/j.jpg", bytearray(JPEG_8X8)),
+                ("img/g.gif", bytearray(GIF_4X3)),
                 ("img/pr.jpg", bytearray(make_jpeg_arith(32, 24))),
             ],
             "path string, content binary",
@@ -1152,1141 +1173,11 @@ class TestPngDecode:
             assert (r["out_width"], r["out_height"]) == (4, 3)
             got = np.frombuffer(bytes(r["pixels"]), np.uint8).reshape(3, 4, 3)
             assert np.array_equal(got, golden), p
-        # the baseline JPEG row now decodes: lossy, so compare to the
-        # decoder's own full-size output resampled
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        j = out["img/j.jpg"]
-        assert (j["out_width"], j["out_height"]) == (4, 3)
-        want = _resample_nearest(_decode_pixels(make_jpeg_full(arr)), 4, 3)
-        got = np.frombuffer(bytes(j["pixels"]), np.uint8).reshape(3, 4, 3)
-        assert np.array_equal(got, want)
-        # arithmetic coding stays a visible per-row degrade, not a
-        # job failure (progressive itself decodes since round 8)
-        assert out["img/pr.jpg"]["pixels"] is None
-        assert "SOF9" in out["img/pr.jpg"]["resize_error"]
-
-
-def make_gif_full(idx, palette, interlaced=False, uncompressed=False,
-                  extra_frame=False) -> bytes:
-    """Real GIF encoder (test-side twin of _decode_gif_pixels): idx is
-    an (h, w) index grid into palette (n, 3).  Variable-width LZW with
-    proper width growth, or the clear-code-per-symbol 'uncompressed'
-    style; optional interlaced row order and a second (garbage) frame
-    to pin first-frame semantics.  stdlib only."""
-    import numpy as np
-
-    h, w = idx.shape
-    n = len(palette)
-    ctbits = max(1, (n - 1).bit_length())
-    min_code = max(2, ctbits)
-    clear, end = 1 << min_code, (1 << min_code) + 1
-
-    rows = list(range(h))
-    if interlaced:
-        rows = (
-            list(range(0, h, 8)) + list(range(4, h, 8))
-            + list(range(2, h, 4)) + list(range(1, h, 2))
-        )
-    seq = [int(v) for r in rows for v in idx[r]]
-
-    out_bits = []  # (code, width) pairs
-
-    def lzw(symbols):
-        width = min_code + 1
-        table = {(i,): i for i in range(clear)}
-        nxt = end + 1
-        out_bits.append((clear, width))
-        prev = ()
-        for s in symbols:
-            cand = prev + (s,)
-            if cand in table:
-                prev = cand
-                continue
-            out_bits.append((table[prev], width))
-            table[cand] = nxt
-            nxt += 1
-            # the canonical off-by-one: the DECODER lags one entry
-            # behind (it builds entry j after reading code j+1), so an
-            # aligned encoder grows its width one assignment later
-            # than next == 2^width — at next == 2^width + 1
-            if nxt == (1 << width) + 1 and width < 12:
-                width += 1
-            prev = (s,)
-        if prev:
-            out_bits.append((table[prev], width))
-        out_bits.append((end, width))
-
-    def lzw_uncompressed(symbols):
-        width = min_code + 1
-        for s in symbols:
-            out_bits.append((clear, width))
-            out_bits.append((s, width))
-        out_bits.append((end, width))
-
-    (lzw_uncompressed if uncompressed else lzw)(seq)
-
-    # little-endian bit packing
-    acc = bits = 0
-    data = bytearray()
-    for code, width in out_bits:
-        acc |= code << bits
-        bits += width
-        while bits >= 8:
-            data.append(acc & 0xFF)
-            acc >>= 8
-            bits -= 8
-    if bits:
-        data.append(acc & 0xFF)
-
-    def subblocks(b):
-        out = bytearray()
-        for i in range(0, len(b), 255):
-            chunk = b[i : i + 255]
-            out.append(len(chunk))
-            out += chunk
-        out.append(0)
-        return bytes(out)
-
-    gct_n = 1 << ctbits
-    gct = bytearray()
-    for i in range(gct_n):
-        gct += bytes(palette[i]) if i < n else b"\x00\x00\x00"
-    packed = 0x80 | (ctbits - 1)
-    hdr = b"GIF89a" + struct.pack("<HH", w, h) + bytes([packed, 0, 0]) + gct
-    ipacked = 0x40 if interlaced else 0
-    img = (
-        b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + bytes([ipacked])
-        + bytes([min_code]) + subblocks(data)
-    )
-    frames = img
-    if extra_frame:
-        # a second 1x1 frame that must be IGNORED (first-frame contract)
-        f2 = (
-            b"\x2c" + struct.pack("<HHHH", 0, 0, 1, 1) + b"\x00"
-            + bytes([min_code]) + subblocks(bytes([1, clear & 0xFF]))
-        )
-        frames = img + f2
-    # a comment extension before the image exercises the skip path
-    ext = b"\x21\xfe" + bytes([5]) + b"hello" + b"\x00"
-    return hdr + ext + frames + b"\x3b"
-
-
-class TestGifDecode:
-    """_decode_gif_pixels: pure-Python LZW (round-7 hermetic slice)."""
-
-    def _fixture(self, w=9, h=7):
-        import numpy as np
-
-        palette = np.array(
-            [[i * 16, 255 - i * 16, (i * 37) % 256] for i in range(16)],
-            dtype=np.uint8,
-        )
-        idx = np.fromfunction(
-            lambda y, x: (x + y * 3) % 16, (h, w), dtype=np.int64
-        )
-        return idx, palette
-
-    @pytest.mark.parametrize("uncompressed", [False, True])
-    def test_roundtrip(self, uncompressed):
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        idx, palette = self._fixture()
-        got = _decode_pixels(
-            make_gif_full(idx, palette, uncompressed=uncompressed)
-        )
-        assert np.array_equal(got, palette[idx]), f"uncompressed={uncompressed}"
-
-    def test_interlaced_roundtrip(self):
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        idx, palette = self._fixture(8, 11)
-        got = _decode_pixels(make_gif_full(idx, palette, interlaced=True))
-        assert np.array_equal(got, palette[idx])
-
-    def test_dictionary_growth_long_runs(self):
-        """Repetitive data drives real dictionary growth (and the
-        KwKwK special case) — the paths the clear-code variant never
-        touches."""
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        palette = np.array([[0, 0, 0], [255, 255, 255]], dtype=np.uint8)
-        idx = np.zeros((16, 64), dtype=np.int64)
-        idx[::2] = 1  # long alternating runs
-        got = _decode_pixels(make_gif_full(idx, palette))
-        assert np.array_equal(got, palette[idx])
-
-    def test_animated_takes_first_frame(self):
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        idx, palette = self._fixture(5, 4)
-        got = _decode_pixels(make_gif_full(idx, palette, extra_frame=True))
-        assert got.shape == (4, 5, 3)
-        assert np.array_equal(got, palette[idx])
-
-    def test_header_only_is_malformed_not_stubbed(self):
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        with pytest.raises(ValueError):
-            _decode_pixels(make_gif())
-
-    def test_resize_pixels_gif_end_to_end(self, spark):
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import (
-            _resample_nearest,
-            decode_image_meta,
-            resize_pixels,
-            resize_spec,
-        )
-
-        idx, palette = self._fixture(7, 5)
-        df = spark.createDataFrame(
-            [("img/g.gif", bytearray(make_gif_full(idx, palette)))],
-            "path string, content binary",
-        )
-        meta = df.withColumn("meta", decode_image_meta("content")).select(
-            "path", "content", "meta.width", "meta.height"
-        )
-        r = resize_pixels(resize_spec(meta, max_side=4)).collect()[0]
-        assert (r["out_width"], r["out_height"]) == (4, 3)
-        got = np.frombuffer(bytes(r["pixels"]), np.uint8).reshape(3, 4, 3)
-        assert np.array_equal(got, _resample_nearest(palette[idx], 4, 3))
-
-
-def make_jpeg_full(arr, subsample=(1, 1), qval=1, restart_interval=0):
-    """Baseline JPEG encoder (test-side twin of _decode_jpeg_pixels):
-    (h, w, 3) RGB or (h, w, 1) gray uint8 -> SOI..EOI bytes.  FDCT via
-    the same orthonormal basis, flat quant table of ``qval``, canonical
-    equal-length Huffman tables built per image and emitted as DHT
-    (so the decoder exercises arbitrary-table decode, not baked-in
-    constants), FF byte stuffing, optional restart markers.
-    ``subsample=(2, 2)`` emits 4:2:0 chroma."""
-    import zlib  # noqa: F401  (parity with PNG encoder imports)
-
-    import numpy as np
-
-    h, w, nch = arr.shape
-    gray = nch == 1
-    sh, sv = subsample if not gray else (1, 1)
-
-    a = arr.astype(np.float64)
-    if gray:
-        planes = [a[:, :, 0]]
-        samps = [(1, 1)]
-    else:
-        r, g, b = a[:, :, 0], a[:, :, 1], a[:, :, 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-        def sub(p):
-            if sh == sv == 1:
-                return p
-            ph = -(-p.shape[0] // sv) * sv
-            pw = -(-p.shape[1] // sh) * sh
-            pp = np.pad(p, ((0, ph - p.shape[0]), (0, pw - p.shape[1])),
-                        mode="edge")
-            return pp.reshape(ph // sv, sv, pw // sh, sh).mean(axis=(1, 3))
-        planes = [y, sub(cb), sub(cr)]
-        samps = [(sh, sv), (1, 1), (1, 1)]
-
-    hmax = max(s[0] for s in samps)
-    vmax = max(s[1] for s in samps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-
-    x8 = np.arange(8)
-    C = np.cos((2 * x8[None, :] + 1) * x8[:, None] * np.pi / 16) / 2.0
-    C[0] /= np.sqrt(2.0)
-    ZZ = [0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-          12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-          35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-          58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63]
-
-    # quantized zigzag coefficient blocks per component, MCU layout
-    comp_blocks = []
-    for p, (chs, cvs) in zip(planes, samps):
-        bh, bw = mcuy * cvs * 8, mcux * chs * 8
-        pp = np.pad(p, ((0, bh - p.shape[0]), (0, bw - p.shape[1])),
-                    mode="edge")
-        blocks = np.zeros((mcuy * cvs, mcux * chs, 64), dtype=np.int64)
-        for byi in range(mcuy * cvs):
-            for bxi in range(mcux * chs):
-                blk = pp[byi * 8:(byi + 1) * 8, bxi * 8:(bxi + 1) * 8] - 128.0
-                F_ = C @ blk @ C.T
-                q = np.round(F_ / qval).astype(np.int64)
-                blocks[byi, bxi] = q.reshape(64)[ZZ]
-        comp_blocks.append(blocks)
-
-    def category(v):
-        return int(abs(v)).bit_length()
-
-    # gather symbol sets to build per-table canonical codes
-    def dc_ac_symbols(blocks_list):
-        dcs, acs = set(), set()
-        for blocks in blocks_list:
-            for blk in blocks.reshape(-1, 64):
-                dcs.add(category(0))  # ensure 0 present for diffs
-                acs.add(0x00)
-                dcs.add(category(int(blk[0])))
-                # conservative: all categories that can appear as diffs
-        return dcs, acs
-
-    # simpler: fixed symbol universes (all DC categories 0-11, all AC
-    # run/size bytes that CAN occur) keep the encoder honest without
-    # tracking exact stats
-    dc_syms = list(range(12))
-    ac_syms = sorted({0x00, 0xF0} | {
-        (rr << 4) | s for rr in range(16) for s in range(1, 11)
-    })
-
-    def build_table(symbols):
-        n = len(symbols)
-        L = max(2, (n + 2 - 1).bit_length())  # 2^L >= n+2: all-ones unused
-        counts = [0] * 16
-        counts[L - 1] = n
-        code_of = {}
-        code = 0
-        for length in range(1, 17):
-            for _ in range(counts[length - 1]):
-                code_of[symbols[len(code_of)]] = (length, code)
-                code += 1
-            code <<= 1
-        return counts, symbols, code_of
-
-    dc_tbl = build_table(dc_syms)
-    ac_tbl = build_table(ac_syms)
-
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker, body):
-        out.extend(bytes([0xFF, marker]))
-        out.extend(struct.pack(">H", len(body) + 2))
-        out.extend(body)
-
-    qtable = bytes([0]) + bytes([min(255, qval)] * 64)
-    seg(0xDB, qtable)
-    ncomp = len(planes)
-    sof = bytearray(struct.pack(">BHHB", 8, h, w, ncomp))
-    for ci, (chs, cvs) in enumerate(samps):
-        sof += bytes([ci + 1, (chs << 4) | cvs, 0])
-    seg(0xC0, bytes(sof))
-    for tc, (counts, symbols, _) in ((0, dc_tbl), (1, ac_tbl)):
-        seg(0xC4, bytes([tc << 4]) + bytes(counts) + bytes(symbols))
-    if restart_interval:
-        seg(0xDD, struct.pack(">H", restart_interval))
-    sos = bytearray([ncomp])
-    for ci in range(ncomp):
-        sos += bytes([ci + 1, 0x00])
-    sos += bytes([0, 63, 0])
-    seg(0xDA, bytes(sos))
-
-    bits = []
-
-    def put(code, length):
-        for i in range(length - 1, -1, -1):
-            bits.append((code >> i) & 1)
-
-    def put_coeff(v, t):
-        if t:
-            put(v if v >= 0 else v + (1 << t) - 1, t)
-
-    def flush_stuffed():
-        while len(bits) % 8:
-            bits.append(1)
-        for i in range(0, len(bits), 8):
-            byte = 0
-            for b in bits[i:i + 8]:
-                byte = (byte << 1) | b
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-        bits.clear()
-
-    pred = [0] * ncomp
-    mcu_count = 0
-    rst = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_count \
-                    and mcu_count % restart_interval == 0:
-                flush_stuffed()
-                out.extend(bytes([0xFF, 0xD0 + (rst % 8)]))
-                rst += 1
-                pred = [0] * ncomp
-            for ci, (chs, cvs) in enumerate(samps):
-                for by in range(cvs):
-                    for bx in range(chs):
-                        blk = comp_blocks[ci][my * cvs + by, mx * chs + bx]
-                        dc = int(blk[0])
-                        diff = dc - pred[ci]
-                        pred[ci] = dc
-                        t = category(diff)
-                        ln, cd = dc_tbl[2][t]
-                        put(cd, ln)
-                        put_coeff(diff, t)
-                        run = 0
-                        last_nz = max(
-                            (k for k in range(1, 64) if blk[k]), default=0
-                        )
-                        for k in range(1, last_nz + 1):
-                            v = int(blk[k])
-                            if v == 0:
-                                run += 1
-                                continue
-                            while run > 15:
-                                ln, cd = ac_tbl[2][0xF0]
-                                put(cd, ln)
-                                run -= 16
-                            s = category(v)
-                            ln, cd = ac_tbl[2][(run << 4) | s]
-                            put(cd, ln)
-                            put_coeff(v, s)
-                            run = 0
-                        if last_nz < 63:
-                            ln, cd = ac_tbl[2][0x00]
-                            put(cd, ln)
-            mcu_count += 1
-    flush_stuffed()
-    out.extend(b"\xff\xd9")
-    return bytes(out)
-
-
-class TestJpegDecode:
-    """_decode_jpeg_pixels (round-8 hermetic slice): baseline Huffman +
-    vectorized IDCT against the test-side encoder twin."""
-
-    def test_zigzag_table_matches_algorithmic_derivation(self):
-        """Independent re-derivation of the spec's zigzag walk — a
-        transcription slip in the module constant cannot hide behind
-        the (symmetric) encode/decode round-trip."""
-        from qurio_spark.sources.multimodal import _JPEG_ZIGZAG
-
-        # even diagonals run bottom-left -> top-right (x ascending),
-        # odd ones the reverse (y ascending)
-        order = sorted(
-            ((x + y, (x if (x + y) % 2 == 0 else y), x, y)
-             for y in range(8) for x in range(8))
-        )
-        derived = [y * 8 + x for (_, _, x, y) in order]
-        assert list(_JPEG_ZIGZAG) == derived
-
-    def test_rgb_444_near_lossless_roundtrip(self):
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        arr = bmp_golden(24, 17)
-        got = _decode_pixels(make_jpeg_full(arr))
-        assert got.shape == arr.shape
-        diff = np.abs(got.astype(int) - arr.astype(int))
-        assert diff.max() <= 6 and diff.mean() < 2.0
-
-    def test_grayscale_single_component(self):
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        gray = bmp_golden(19, 11)[:, :, :1]
-        got = _decode_pixels(make_jpeg_full(gray))
-        want = np.repeat(gray, 3, axis=2)
-        diff = np.abs(got.astype(int) - want.astype(int))
-        assert diff.max() <= 4
-
-    def test_420_subsampled_chroma(self):
-        """4:2:0: luma detail survives; constant-chroma content (pure
-        gray ramp) is exact up to DCT rounding even through the
-        subsample/upsample pair."""
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        g = bmp_golden(20, 14)[:, :, :1]
-        arr = np.repeat(g, 3, axis=2)  # gray as RGB: Cb = Cr = 128
-        got = _decode_pixels(make_jpeg_full(arr, subsample=(2, 2)))
-        diff = np.abs(got.astype(int) - arr.astype(int))
-        assert diff.max() <= 6 and diff.mean() < 2.0
-
-    def test_restart_markers(self):
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        arr = bmp_golden(40, 9)  # 5 MCUs wide at 4:4:4
-        got = _decode_pixels(make_jpeg_full(arr, restart_interval=2))
-        base = _decode_pixels(make_jpeg_full(arr))
-        assert np.array_equal(got, base)  # markers change bytes, not pixels
-
-    def test_coarse_quantization_still_decodes(self):
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        arr = bmp_golden(16, 16)
-        got = _decode_pixels(make_jpeg_full(arr, qval=16))
-        assert got.shape == arr.shape
-        # lossy but recognizable: mean error bounded
-        assert np.abs(got.astype(int) - arr.astype(int)).mean() < 16
-
-    def test_arithmetic_sofs_stay_stubbed(self):
-        """Progressive (SOF2) now decodes — TestJpegProgressive — so
-        the stub boundary is arithmetic/lossless/hierarchical SOFs."""
-        import pytest as _pytest
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        data = bytearray(make_jpeg_full(bmp_golden(8, 8)))
-        i = data.index(b"\xff\xc0")
-        data[i + 1] = 0xC9  # SOF9: arithmetic sequential
-        with _pytest.raises(NotImplementedError, match="SOF9"):
-            _decode_pixels(bytes(data))
-
-
-def make_jpeg_baseline_scanned(arr, subsample=(1, 1), qval=1,
-                               gray_sampling=None):
-    """Baseline (SOF0) encoder emitting ONE SOS PER COMPONENT — the
-    non-interleaved baseline layout spec A.2.2 allows (and some
-    encoders emit for 3-scan sequential files).  Each scan rasters its
-    component's TRUE block grid (ceil of the component dims), NOT the
-    padded MCU grid — the case the round-9 decode fix covers.
-    ``gray_sampling=(2, 2)`` declares sampling factors > 1 on a
-    single-component image (legal; single-component scans must ignore
-    them)."""
-    import numpy as np
-
-    h, w, nch = arr.shape
-    gray = nch == 1
-    sh, sv = subsample if not gray else (1, 1)
-    a = arr.astype(np.float64)
-    if gray:
-        planes = [a[:, :, 0]]
-        samps = [gray_sampling or (1, 1)]
-    else:
-        r, g, b = a[:, :, 0], a[:, :, 1], a[:, :, 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-
-        def sub(p):
-            if sh == sv == 1:
-                return p
-            ph = -(-p.shape[0] // sv) * sv
-            pw = -(-p.shape[1] // sh) * sh
-            pp = np.pad(p, ((0, ph - p.shape[0]), (0, pw - p.shape[1])),
-                        mode="edge")
-            return pp.reshape(ph // sv, sv, pw // sh, sh).mean(axis=(1, 3))
-
-        planes = [y, sub(cb), sub(cr)]
-        samps = [(sh, sv), (1, 1), (1, 1)]
-    hmax = max(s[0] for s in samps)
-    vmax = max(s[1] for s in samps)
-    x8 = np.arange(8)
-    C = np.cos((2 * x8[None, :] + 1) * x8[:, None] * np.pi / 16) / 2.0
-    C[0] /= np.sqrt(2.0)
-    ZZ = [0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-          12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-          35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-          58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63]
-
-    def category(v):
-        return int(abs(v)).bit_length()
-
-    dc_syms = list(range(12))
-    ac_syms = sorted({0x00, 0xF0} | {
-        (rr << 4) | s for rr in range(16) for s in range(1, 11)
-    })
-
-    def build_table(symbols):
-        n = len(symbols)
-        L = max(2, (n + 2 - 1).bit_length())
-        counts = [0] * 16
-        counts[L - 1] = n
-        code_of, code = {}, 0
-        for length in range(1, 17):
-            for _ in range(counts[length - 1]):
-                code_of[symbols[len(code_of)]] = (length, code)
-                code += 1
-            code <<= 1
-        return counts, symbols, code_of
-
-    dc_tbl, ac_tbl = build_table(dc_syms), build_table(ac_syms)
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker, body):
-        out.extend(bytes([0xFF, marker]))
-        out.extend(struct.pack(">H", len(body) + 2))
-        out.extend(body)
-
-    seg(0xDB, bytes([0]) + bytes([min(255, qval)] * 64))
-    ncomp = len(planes)
-    sof = bytearray(struct.pack(">BHHB", 8, h, w, ncomp))
-    for ci, (chs, cvs) in enumerate(samps):
-        sof += bytes([ci + 1, (chs << 4) | cvs, 0])
-    seg(0xC0, bytes(sof))
-    for tc, (counts, symbols, _) in ((0, dc_tbl), (1, ac_tbl)):
-        seg(0xC4, bytes([tc << 4]) + bytes(counts) + bytes(symbols))
-
-    bits = []
-
-    def put(code, length):
-        for i in range(length - 1, -1, -1):
-            bits.append((code >> i) & 1)
-
-    def put_coeff(v, t):
-        if t:
-            put(v if v >= 0 else v + (1 << t) - 1, t)
-
-    def flush_stuffed():
-        while len(bits) % 8:
-            bits.append(1)
-        for i in range(0, len(bits), 8):
-            byte = 0
-            for b in bits[i:i + 8]:
-                byte = (byte << 1) | b
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-        bits.clear()
-
-    # one scan per component over its TRUE (ceil-of-dims) block grid
-    for ci, (p, (chs, cvs)) in enumerate(zip(planes, samps)):
-        ch = -(-h * cvs // vmax)
-        cw = -(-w * chs // hmax)
-        p = p[:ch, :cw]
-        bh, bw = -(-ch // 8), -(-cw // 8)
-        pp = np.pad(p, ((0, bh * 8 - ch), (0, bw * 8 - cw)), mode="edge")
-        seg(0xDA, bytes([1, ci + 1, 0x00, 0, 63, 0]))
-        pred = 0
-        for byi in range(bh):
-            for bxi in range(bw):
-                blk8 = pp[byi * 8:(byi + 1) * 8, bxi * 8:(bxi + 1) * 8] - 128.0
-                blk = np.round((C @ blk8 @ C.T) / qval).astype(
-                    np.int64
-                ).reshape(64)[ZZ]
-                dc = int(blk[0])
-                diff = dc - pred
-                pred = dc
-                t = category(diff)
-                ln, cd = dc_tbl[2][t]
-                put(cd, ln)
-                put_coeff(diff, t)
-                run = 0
-                last_nz = max((k for k in range(1, 64) if blk[k]), default=0)
-                for k in range(1, last_nz + 1):
-                    v = int(blk[k])
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        ln, cd = ac_tbl[2][0xF0]
-                        put(cd, ln)
-                        run -= 16
-                    s = category(v)
-                    ln, cd = ac_tbl[2][(run << 4) | s]
-                    put(cd, ln)
-                    put_coeff(v, s)
-                    run = 0
-                if last_nz < 63:
-                    ln, cd = ac_tbl[2][0x00]
-                    put(cd, ln)
-        flush_stuffed()
-    out.extend(b"\xff\xd9")
-    return bytes(out)
-
-
-class TestJpegBaselineNonInterleaved:
-    """Round-9 ADVICE fix: a single-component scan rasters the
-    component's OWN ceil-of-dims block grid (spec A.2.2) even in
-    BASELINE files — previously only progressive scans took that path,
-    so baseline multi-scan files and grayscale with sampling factors
-    > 1 misdecoded silently."""
-
-    def test_three_scan_444_matches_interleaved(self):
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        arr = bmp_golden(24, 17)
-        got = _decode_pixels(make_jpeg_baseline_scanned(arr))
-        base = _decode_pixels(make_jpeg_full(arr))
-        assert np.array_equal(got, base)
-
-    def test_three_scan_420_subsampled(self):
-        """4:2:0 chroma components have a TRUE grid smaller than the
-        padded MCU grid whenever dims aren't multiples of 16 — the
-        silent-misdecode case the fix targets."""
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        g = bmp_golden(20, 14)[:, :, :1]
-        arr = np.repeat(g, 3, axis=2)
-        got = _decode_pixels(make_jpeg_baseline_scanned(arr, subsample=(2, 2)))
-        diff = np.abs(got.astype(int) - arr.astype(int))
-        assert diff.max() <= 6 and diff.mean() < 2.0
-
-    def test_grayscale_with_sampling_factors_ignored(self):
-        """A single-component image may DECLARE hs=vs=2; a single-
-        component scan must ignore the factors and raster ceil(h/8) x
-        ceil(w/8) blocks (libjpeg behavior)."""
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        gray = bmp_golden(19, 11)[:, :, :1]
-        got = _decode_pixels(
-            make_jpeg_baseline_scanned(gray, gray_sampling=(2, 2))
-        )
-        want = np.repeat(gray, 3, axis=2)
-        diff = np.abs(got.astype(int) - want.astype(int))
-        assert diff.max() <= 4
-
-
-def make_jpeg_progressive_full(arr, qval=1, bands=((1, 5), (6, 63)),
-                               restart_interval=0, subsample=(1, 1)):
-    """Progressive JPEG encoder (test-side twin of the SOF2 decode
-    path): DC first scan at Al=1 + DC refinement, then per component
-    per band an AC first scan at Al=1 (with cross-block EOB runs) and
-    an AC refinement scan (Ah=1 -> Al=0: newly-significant s=1
-    symbols, correction bits, EOB-run pending bits) — the libjpeg
-    encode_mcu_AC_{first,refine} shapes.  ``subsample=(2, 2)`` emits
-    4:2:0 (interleaved-MCU DC scans over the padded grid,
-    non-interleaved AC scans over each component's TRUE block grid —
-    the libjpeg-default progressive layout).  stdlib+numpy."""
-    import numpy as np
-
-    h, w, nch = arr.shape
-    gray = nch == 1
-    ZZ = [0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-          12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-          35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-          58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63]
-    x8 = np.arange(8)
-    C = np.cos((2 * x8[None, :] + 1) * x8[:, None] * np.pi / 16) / 2.0
-    C[0] /= np.sqrt(2.0)
-
-    sh, sv = subsample if not gray else (1, 1)
-    a = arr.astype(np.float64)
-    if gray:
-        planes = [a[:, :, 0]]
-        samps = [(1, 1)]
-    else:
-        r_, g, b = a[:, :, 0], a[:, :, 1], a[:, :, 2]
-        y = 0.299 * r_ + 0.587 * g + 0.114 * b
-        cb = 128.0 - 0.168736 * r_ - 0.331264 * g + 0.5 * b
-        cr = 128.0 + 0.5 * r_ - 0.418688 * g - 0.081312 * b
-
-        def sub(p):
-            if sh == sv == 1:
-                return p
-            ph = -(-p.shape[0] // sv) * sv
-            pw = -(-p.shape[1] // sh) * sh
-            pp = np.pad(p, ((0, ph - p.shape[0]), (0, pw - p.shape[1])),
-                        mode="edge")
-            return pp.reshape(ph // sv, sv, pw // sh, sh).mean(axis=(1, 3))
-
-        planes = [y, sub(cb), sub(cr)]
-        samps = [(sh, sv), (1, 1), (1, 1)]
-    ncomp = len(planes)
-    hmax = max(s0 for s0, _ in samps)
-    vmax = max(s1 for _, s1 in samps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    # per component: PADDED (MCU-grid) quantized zigzag blocks for the
-    # interleaved DC scans, plus the TRUE block grid the
-    # non-interleaved AC scans cover
-    comp_blocks, true_grids = [], []
-    for p, (chs, cvs) in zip(planes, samps):
-        pbh, pbw = mcuy * cvs, mcux * chs
-        pp = np.pad(
-            p, ((0, pbh * 8 - p.shape[0]), (0, pbw * 8 - p.shape[1])),
-            mode="edge",
-        )
-        blocks = np.zeros((pbh, pbw, 64), dtype=np.int64)
-        for byi in range(pbh):
-            for bxi in range(pbw):
-                blk = pp[byi * 8:(byi + 1) * 8, bxi * 8:(bxi + 1) * 8] - 128.0
-                q = np.round((C @ blk @ C.T) / qval).astype(np.int64)
-                blocks[byi, bxi] = q.reshape(64)[ZZ]
-        comp_blocks.append(blocks)
-        true_grids.append((-(-p.shape[0] // 8), -(-p.shape[1] // 8)))
-    bh, bw = true_grids[0]  # luma true grid (== padded when 4:4:4)
-
-    def category(v):
-        return int(abs(v)).bit_length()
-
-    dc_syms = list(range(12))
-    # incl. every EOBn symbol (rr<<4) the progressive scans can emit
-    ac_syms = sorted({rr << 4 for rr in range(16)} | {
-        (rr << 4) | s for rr in range(16) for s in range(1, 11)
-    })
-
-    def build_table(symbols):
-        n = len(symbols)
-        L = max(2, (n + 2 - 1).bit_length())
-        counts = [0] * 16
-        counts[L - 1] = n
-        code_of, code = {}, 0
-        for length in range(1, 17):
-            for _ in range(counts[length - 1]):
-                code_of[symbols[len(code_of)]] = (length, code)
-                code += 1
-            code <<= 1
-        return counts, symbols, code_of
-
-    dc_tbl, ac_tbl = build_table(dc_syms), build_table(ac_syms)
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker, body):
-        out.extend(bytes([0xFF, marker]))
-        out.extend(struct.pack(">H", len(body) + 2))
-        out.extend(body)
-
-    seg(0xDB, bytes([0]) + bytes([min(255, qval)] * 64))
-    sof = bytearray(struct.pack(">BHHB", 8, h, w, ncomp))
-    for ci, (chs, cvs) in enumerate(samps):
-        sof += bytes([ci + 1, (chs << 4) | cvs, 0])
-    seg(0xC2, bytes(sof))  # SOF2: progressive
-    for tc, tbl in ((0, dc_tbl), (1, ac_tbl)):
-        seg(0xC4, bytes([tc << 4]) + bytes(tbl[0]) + bytes(tbl[1]))
-    if restart_interval:
-        seg(0xDD, struct.pack(">H", restart_interval))
-
-    bits = []
-
-    def put(code, length):
-        for i in range(length - 1, -1, -1):
-            bits.append((code >> i) & 1)
-
-    def put_sym(tbl, sym):
-        ln, cd = tbl[2][sym]
-        put(cd, ln)
-
-    def put_coeff(v, t):
-        if t:
-            put(v if v >= 0 else v + (1 << t) - 1, t)
-
-    def flush_scan():
-        while len(bits) % 8:
-            bits.append(1)
-        for i in range(0, len(bits), 8):
-            byte = 0
-            for b in bits[i:i + 8]:
-                byte = (byte << 1) | b
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-        bits.clear()
-
-    def sos(scan_comps, ss, se, ah, al, dc_t=0, ac_t=0):
-        body = bytearray([len(scan_comps)])
-        for ci in scan_comps:
-            body += bytes([ci + 1, (dc_t << 4) | ac_t])
-        body += bytes([ss, se, (ah << 4) | al])
-        seg(0xDA, bytes(body))
-
-    rst = [0]
-
-    def emit_restart():
-        flush_scan()
-        out.extend(bytes([0xFF, 0xD0 + (rst[0] % 8)]))
-        rst[0] += 1
-
-    # --- scan 1: DC first, interleaved MCU order, Al=1 ---------------
-    sos(list(range(ncomp)), 0, 0, 0, 1)
-    pred = [0] * ncomp
-    unit = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and unit and unit % restart_interval == 0:
-                emit_restart()
-                pred = [0] * ncomp
-            for ci, (chs, cvs) in enumerate(samps):
-                for by in range(cvs):
-                    for bx in range(chs):
-                        dc1 = int(
-                            comp_blocks[ci][my * cvs + by, mx * chs + bx][0]
-                        ) >> 1  # arith shift
-                        diff = dc1 - pred[ci]
-                        pred[ci] = dc1
-                        t = category(diff)
-                        put_sym(dc_tbl, t)
-                        put_coeff(diff, t)
-            unit += 1
-    flush_scan()
-
-    # --- scan 2: DC refinement, Ah=1 -> Al=0 -------------------------
-    sos(list(range(ncomp)), 0, 0, 1, 0)
-    unit = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and unit and unit % restart_interval == 0:
-                emit_restart()
-            for ci, (chs, cvs) in enumerate(samps):
-                for by in range(cvs):
-                    for bx in range(chs):
-                        bits.append(
-                            int(
-                                comp_blocks[ci][
-                                    my * cvs + by, mx * chs + bx
-                                ][0]
-                            ) & 1
-                        )
-            unit += 1
-    flush_scan()
-
-    # --- AC scans per component per band -----------------------------
-    def ac_first_scan(ci, ss, se, al):
-        sos([ci], ss, se, 0, al)
-        eobrun = [0]
-
-        def flush_eobrun():
-            if eobrun[0] > 0:
-                rr = eobrun[0].bit_length() - 1
-                put_sym(ac_tbl, rr << 4)
-                if rr:
-                    put(eobrun[0] - (1 << rr), rr)
-                eobrun[0] = 0
-
-        unit = 0
-        cbh, cbw = true_grids[ci]
-        for byi in range(cbh):
-            for bxi in range(cbw):
-                if restart_interval and unit and unit % restart_interval == 0:
-                    flush_eobrun()
-                    emit_restart()
-                blk = comp_blocks[ci][byi, bxi]
-                vals = [int(blk[k]) for k in range(ss, se + 1)]
-                # point transform: toward-zero division
-                pt = [v // 2 if v >= 0 else -((-v) // 2) for v in vals] \
-                    if al else vals
-                last_nz = max(
-                    (idx for idx, v in enumerate(pt) if v), default=-1
-                )
-                if last_nz < 0:
-                    eobrun[0] += 1
-                    if eobrun[0] == 0x7FFF:
-                        flush_eobrun()
-                    unit += 1
-                    continue
-                flush_eobrun()
-                run = 0
-                for idx in range(last_nz + 1):
-                    v = pt[idx]
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        put_sym(ac_tbl, 0xF0)
-                        run -= 16
-                    s = category(v)
-                    put_sym(ac_tbl, (run << 4) | s)
-                    put_coeff(v, s)
-                    run = 0
-                if last_nz < se - ss:
-                    eobrun[0] += 1
-                    if eobrun[0] == 0x7FFF:
-                        flush_eobrun()
-                unit += 1
-        flush_eobrun()
-        flush_scan()
-
-    def ac_refine_scan(ci, ss, se, ah, al):
-        """libjpeg encode_mcu_AC_refine: newly-significant s=1 symbols
-        with sign bits, correction bits for history coefficients,
-        cross-block EOB runs carrying pending correction bits."""
-        sos([ci], ss, se, ah, al)
-        eobrun = [0]
-        pending = []  # correction bits owed to the current EOB run
-
-        def flush_eobrun():
-            if eobrun[0] > 0 or pending:
-                if eobrun[0] == 0:
-                    pass
-                else:
-                    rr = eobrun[0].bit_length() - 1
-                    put_sym(ac_tbl, rr << 4)
-                    if rr:
-                        put(eobrun[0] - (1 << rr), rr)
-                bits.extend(pending)
-                pending.clear()
-                eobrun[0] = 0
-
-        unit = 0
-        cbh, cbw = true_grids[ci]
-        for byi in range(cbh):
-            for bxi in range(cbw):
-                if restart_interval and unit and unit % restart_interval == 0:
-                    flush_eobrun()
-                    emit_restart()
-                blk = comp_blocks[ci][byi, bxi]
-                vals = [int(blk[k]) for k in range(ss, se + 1)]
-                absv = [abs(v) >> al for v in vals]
-                # EOB = index after the LAST newly-significant coeff
-                eob = 0
-                for idx, t in enumerate(absv):
-                    if t == 1:
-                        eob = idx + 1
-                if eob == 0:
-                    # no new significance: whole block joins the EOB
-                    # run; history coeffs owe correction bits
-                    if eobrun[0] == 0x7FFF:
-                        flush_eobrun()
-                    eobrun[0] += 1
-                    pending.extend(t & 1 for t in absv if t > 1)
-                    unit += 1
-                    continue
-                flush_eobrun()
-                run = 0
-                local_pending = []
-                for idx in range(eob):
-                    t = absv[idx]
-                    if t == 0:
-                        run += 1
-                        # EAGER ZRL at exactly 16 zeros: the decoder's
-                        # ZRL window ends at its 16th zero-history
-                        # position, so correction bits flushed here are
-                        # precisely the ones that window passes —
-                        # deferring the ZRL to the next nonzero could
-                        # smear bits across two windows and desync
-                        if run == 16:
-                            put_sym(ac_tbl, 0xF0)
-                            bits.extend(local_pending)
-                            local_pending.clear()
-                            run = 0
-                        continue
-                    if t > 1:  # history: correction bit, no symbol
-                        local_pending.append(t & 1)
-                        continue
-                    put_sym(ac_tbl, (run << 4) | 1)
-                    run = 0
-                    bits.append(1 if vals[idx] >= 0 else 0)
-                    bits.extend(local_pending)
-                    local_pending.clear()
-                # positions past the last newly-significant coeff: the
-                # decoder keeps scanning, so an EOB must terminate the
-                # block whenever any remain (its history coeffs'
-                # correction bits ride the run)
-                if eob < len(absv):
-                    tail_bits = [
-                        absv[idx] & 1 for idx in range(eob, len(absv))
-                        if absv[idx] > 1
-                    ]
-                    if eobrun[0] == 0x7FFF:
-                        flush_eobrun()
-                    eobrun[0] += 1
-                    pending.extend(tail_bits)
-                unit += 1
-        flush_eobrun()
-        flush_scan()
-
-    for ci in range(ncomp):
-        for ss, se in bands:
-            ac_first_scan(ci, ss, se, 1)
-    for ci in range(ncomp):
-        for ss, se in bands:
-            ac_refine_scan(ci, ss, se, 1, 0)
-
-    out.extend(b"\xff\xd9")
-    return bytes(out)
-
-
-class TestJpegProgressive:
-    """SOF2 decode (round-8): DC successive approximation, spectral
-    band selection, AC first with EOB runs, AC refinement with
-    correction bits — against the libjpeg-shaped encoder twin."""
-
-    def _assert_equals_baseline(self, arr, **kw):
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        prog = _decode_pixels(make_jpeg_progressive_full(arr, **kw))
-        base = _decode_pixels(make_jpeg_full(arr, qval=kw.get("qval", 1)))
-        assert np.array_equal(prog, base), (
-            np.abs(prog.astype(int) - base.astype(int)).max()
-        )
-
-    def test_rgb_roundtrip_equals_baseline(self):
-        """Same quantized coefficients -> the progressive scan
-        sequence must reconstruct the baseline decode BIT-IDENTICALLY."""
-        self._assert_equals_baseline(bmp_golden(24, 17))
-
-    def test_grayscale(self):
-        self._assert_equals_baseline(bmp_golden(19, 11)[:, :, :1])
-
-    def test_block_multiple_and_single_block(self):
-        self._assert_equals_baseline(bmp_golden(16, 16))
-        self._assert_equals_baseline(bmp_golden(8, 8))
-        self._assert_equals_baseline(bmp_golden(5, 3))
-
-    def test_band_split_variants(self):
-        """Different spectral selections (single full AC band; three
-        bands) exercise EOB-run bookkeeping across band shapes."""
-        arr = bmp_golden(20, 14)
-        self._assert_equals_baseline(arr, bands=((1, 63),))
-        self._assert_equals_baseline(arr, bands=((1, 2), (3, 20), (21, 63)))
-
-    def test_coarse_quantization_eob_runs(self):
-        """qval=24 zeroes most AC coefficients -> long cross-block EOB
-        runs in both first and refinement scans."""
-        self._assert_equals_baseline(bmp_golden(32, 24), qval=24)
-
-    def test_restart_markers(self):
-        self._assert_equals_baseline(bmp_golden(24, 17), restart_interval=2)
-
-    def test_420_subsampled(self):
-        """The libjpeg-default progressive layout: interleaved 4:2:0
-        DC scans over the padded MCU grid, non-interleaved AC scans
-        over each component's TRUE block grid (luma grid larger than
-        chroma, both possibly smaller than the padded grid)."""
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        for dims in ((24, 17), (16, 16), (20, 9)):
-            arr = bmp_golden(*dims)
-            prog = _decode_pixels(
-                make_jpeg_progressive_full(arr, subsample=(2, 2))
-            )
-            base = _decode_pixels(
-                make_jpeg_full(arr, subsample=(2, 2), qval=1)
-            )
-            assert np.array_equal(prog, base), dims
-
-    def test_420_with_restarts_and_coarse_quant(self):
-        import numpy as np
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        arr = bmp_golden(32, 24)
-        prog = _decode_pixels(
-            make_jpeg_progressive_full(
-                arr, subsample=(2, 2), qval=12, restart_interval=2
-            )
-        )
-        base = _decode_pixels(make_jpeg_full(arr, subsample=(2, 2), qval=12))
-        assert np.array_equal(prog, base)
-
-    def test_arithmetic_and_hierarchical_stay_stubbed(self):
-        import pytest as _pytest
-
-        from qurio_spark.sources.multimodal import _decode_pixels
-
-        data = bytearray(make_jpeg_full(bmp_golden(8, 8)))
-        i = data.index(b"\xff\xc0")
-        for sof in (0xC9, 0xC3, 0xCB):  # arithmetic / lossless / etc.
-            data[i + 1] = sof
-            with _pytest.raises(NotImplementedError, match="SOF"):
-                _decode_pixels(bytes(data))
+        # no decode provider: every JPEG/GIF row is a visible per-row
+        # degrade, not a job failure
+        for p in ("img/j.jpg", "img/g.gif", "img/pr.jpg"):
+            assert out[p]["pixels"] is None, p
+            assert "codec library" in out[p]["resize_error"], p
 
 
 class TestPngSubByte:
@@ -2349,10 +1240,10 @@ class TestPngSubByte:
 
 
 class TestDecodeGuards:
-    """Byte/pixel ceilings refuse oversized inputs BEFORE any entropy
-    decode — one adversarial 100-MP JPEG (a few hundred KB of bytes)
-    must not wedge an executor core; refused rows stay NULL-honest
-    quarantinable, never wrong."""
+    """Byte/pixel ceilings refuse oversized inputs BEFORE any decode
+    work — a few hundred KB declaring 100 MP must not wedge an
+    executor core; refused rows stay NULL-honest quarantinable, never
+    wrong."""
 
     def _huge_png_header(self, w=100_000, h=100_000) -> bytes:
         """A tiny byte string whose PNG header declares w*h pixels —
@@ -2419,10 +1310,11 @@ class TestDecodeGuards:
 
 class TestDecodeProviderSlot:
     """VERDICT r10 item 3: the native decode provider slot — the
-    production swap for the hermetic ~0.3 MP/s codecs, mirroring the
-    OCR/embedder provider pattern.  The plumbing (one batched call,
-    guard-before-provider, None-falls-back-to-hermetic) is pinned with
-    a test double; real-library parity is import-gated."""
+    production swap for the hermetic BMP/PNG codecs and the only path
+    for every other format, mirroring the OCR/embedder provider
+    pattern.  The plumbing (one batched call, guard-before-provider,
+    None-falls-back-to-hermetic) is pinned with a test double;
+    real-library parity is import-gated."""
 
     class FakeNativeProvider:
         """Test double: decodes BMP via a fixed color, refuses
@@ -2508,18 +1400,12 @@ class TestDecodeProviderSlot:
             resize_spec,
         )
 
-        import numpy as np
-
-        idx = np.arange(20, dtype=np.uint8).reshape(4, 5) % 3
-        palette = np.array(
-            [[250, 10, 10], [10, 250, 10], [10, 10, 250]], dtype=np.uint8
-        )
         rows = [
             ("img/a.bmp", bytearray(make_bmp(7, 5))),
             ("img/b.png", bytearray(make_png_full(bmp_golden(16, 9)))),
-            ("img/c.gif", bytearray(make_gif_full(idx, palette))),
-            ("img/d.jpg", bytearray(make_jpeg_full(bmp_golden(24, 17)))),
-            ("img/e.jpg", bytearray(make_jpeg_arith(16, 9))),  # stubbed
+            ("img/c.gif", bytearray(GIF_4X3)),  # provider territory
+            ("img/d.jpg", bytearray(JPEG_8X8)),  # provider territory
+            ("img/e.jpg", bytearray(make_jpeg_arith(16, 9))),
         ]
         spec = resize_spec(self._meta(spark, rows), max_side=4)
         base = {
@@ -2537,6 +1423,8 @@ class TestDecodeProviderSlot:
             assert (
                 base[p]["resize_error"] is None
             ) == (via_provider[p]["resize_error"] is None), p
+        for p in ("img/c.gif", "img/d.jpg", "img/e.jpg"):
+            assert base[p]["pixels"] is None, p
 
     def test_pil_parity(self, spark):
         """Real-library parity — runs only where Pillow exists."""
@@ -2549,23 +1437,10 @@ class TestDecodeProviderSlot:
         )
 
         prov = PilDecodeProvider()
-        idx = np.arange(20, dtype=np.uint8).reshape(4, 5) % 3
-        palette = np.array(
-            [[250, 10, 10], [10, 250, 10], [10, 10, 250]], dtype=np.uint8
-        )
         # lossless formats: exact pixel equality is spec-mandated
-        for blob in (
-            make_bmp(7, 5),
-            make_png_full(bmp_golden(16, 9)),
-            make_gif_full(idx, palette),
-        ):
+        for blob in (make_bmp(7, 5), make_png_full(bmp_golden(16, 9))):
             got = prov.decode_batch([blob])[0]
             assert np.array_equal(got, _decode_pixels(blob))
-        # JPEG: conformant decoders may differ by IDCT rounding
-        blob = make_jpeg_full(bmp_golden(24, 17))
-        got = prov.decode_batch([blob])[0].astype(np.int16)
-        ref = _decode_pixels(blob).astype(np.int16)
-        assert np.abs(got - ref).max() <= 4
 
     def test_provider_raise_quarantines_row_not_task(self, spark):
         """A corrupt blob that makes the provider RAISE (the hermetic
