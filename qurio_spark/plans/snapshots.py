@@ -32,13 +32,13 @@ Versions written by older single-level code (inline ``files``) stay
 readable and are upgraded to a manifest file on their first child
 commit.
 
-Concurrency: commits use OPTIMISTIC concurrency — the version file is
-claimed with the commit store's PUT-IF-ABSENT, and a loser re-reads
-the new latest and retries its bookkeeping.  Data files are written
-once (uuid-unique names) regardless of retries; only manifest
-composition re-runs.  The ``_latest`` pointer only moves forward and
-readers roll it ahead over any version files a crashed writer left
-unpointed.  All commit METADATA goes through a pluggable CommitStore
+Concurrency: every commit runs ONE optimistic loop, ``_occ_commit``:
+compute the commit against the head version, claim the next version
+file with the commit store's PUT-IF-ABSENT, and on a lost claim back
+off and recompute against the new head.  Appended data files are
+written once (uuid-unique names) regardless of retries.  The
+``_latest`` pointer only moves forward and readers roll it ahead
+over any version files a crashed writer left unpointed.  All commit METADATA goes through a pluggable CommitStore
 (plans/commitstore.py — the Delta LogStore / Iceberg catalog-swap
 pattern): the default local store claims via exclusive hard link and
 advances the pointer by atomic rename; object-store deployments
@@ -50,13 +50,15 @@ Readers are fully isolated and distributed: ``snap_read`` hands Spark
 the pinned file list, so scans parallelize exactly like any parquet
 read, and a version's file list never changes after commit.
 
-Row-level DELETE comes in both lakehouse flavors: COPY-ON-WRITE
-(``snap_delete_where`` — affected files rewrite without the matching
-rows) and MERGE-ON-READ (``snap_delete_where_mor`` — a positional
-DELETION VECTOR sidecar under ``dv/`` commits with zero data movement;
-readers apply it as an anti-join via ``_read_files``, and
-``snap_materialize_dvs`` folds vectors back into files when the
-read-side tax outgrows ``maybe_materialize``'s gate).
+Row-level mutations share one core: stats prune the files, then the
+COPY-ON-WRITE step (``_cow_fields``: affected files rewrite through
+``_read_files`` with the op's frame transform — delete, update,
+replace, merge, materialize, compact) or the MERGE-ON-READ step
+(``_mor_fields``: the matching rows' positions commit as a DELETION
+VECTOR sidecar under ``dv/``, zero data movement — the ``_mor`` ops).
+Readers apply vectors as an anti-join via ``_read_files``;
+``snap_materialize_dvs`` folds them back into files when the
+read-side tax outgrows ``maybe_materialize``'s gate.
 
 Data skipping covers all three predicate shapes: RANGE (per-file
 min/max stats in the manifest), MULTI-COLUMN boxes (``zorder_by``
@@ -68,6 +70,7 @@ data file opens).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import uuid
@@ -156,12 +159,6 @@ def _carried_manifests(path: str, m: dict | None) -> list[str]:
     return [_write_manifest_file(path, m["files"])]
 
 
-def _advance_pointer(path: str, version: int) -> None:
-    """Move ``_latest`` forward (never back — a racing writer with a
-    higher committed version must win the pointer)."""
-    store_for(path).advance_pointer(path, version)
-
-
 def _try_commit(path: str, version: int, manifest: dict) -> bool:
     """Atomically CLAIM ``v{version}.json`` via the commit store's
     put-if-absent (exclusive hard link on local fs, conditional put on
@@ -177,15 +174,12 @@ def _try_commit(path: str, version: int, manifest: dict) -> bool:
     import time as _time
 
     manifest = {**manifest, "ts": _time.time()}
-    # Propagate TABLE-level layout markers from the parent: the
-    # value-clustered marker (snap_replace_values(cluster=True) —
-    # compaction consults it to avoid merging value-exact files,
-    # ADVICE r10) and the bloom-column list (DML rewrites re-derive
-    # blooms for the files they write so point-lookup pruning
-    # survives mutation).  These properties live on the TABLE, not
-    # one commit, so intermediate appends/deletes/merges must not
-    # silently drop them; an overwrite replaces the whole content
-    # with a fresh write, so it resets both.
+    # Propagate TABLE-level properties from the parent unless the
+    # commit sets them: the value-clustered marker (compaction must
+    # not merge value-exact files, ADVICE r10) and the bloom-column
+    # list (appends and DML rewrites bloom the files they write).
+    # Only an overwrite, a fresh write of the whole content, resets
+    # them.
     if manifest.get("op") != "overwrite":
         missing = [
             k for k in ("clustered", "bloom_cols") if k not in manifest
@@ -202,7 +196,8 @@ def _try_commit(path: str, version: int, manifest: dict) -> bool:
     data = json.dumps(manifest, indent=1, sort_keys=True).encode()
     if not store_for(path).put_if_absent(path, f"v{version}.json", data):
         return False
-    _advance_pointer(path, version)
+    # forward only: a racing writer with a higher version keeps it
+    store_for(path).advance_pointer(path, version)
     return True
 
 
@@ -242,6 +237,39 @@ def _commit(path: str, version: int, manifest: dict) -> None:
             f"concurrent commit: version {version} of {path} was claimed "
             "by another writer"
         )
+
+
+def _occ_commit(path: str, attempt):
+    """THE optimistic commit loop every commit of this module runs:
+    ``attempt(v, m)`` gets the head version and manifest (None before
+    the table exists) and returns the manifest fields to claim at
+    ``v + 1``, or a non-dict result (None for a no-op) returned as is.
+    The loop fills in ``version`` and ``parent`` and carries the head's
+    ``txn`` and ``schema`` unless the fields set them.  A lost claim
+    re-runs the attempt against the new head after a backoff, first
+    removing the deletion-vector sidecars it listed under
+    ``staged_dvs`` (positions against a stale head; never recorded)."""
+    for i in range(_MAX_COMMIT_RETRIES):
+        _conflict_backoff(i)
+        v = _latest_version(path)
+        m = None if v is None else _read_manifest(path, v)
+        fields = attempt(v, m)
+        if not isinstance(fields, dict):
+            return fields
+        staged = fields.pop("staged_dvs", [])
+        version = 0 if v is None else v + 1
+        head = {"txn": dict(m.get("txn", {})), "schema": m.get("schema")} if m else {}
+        fields.update(version=version, parent=v)
+        if _try_commit(path, version, {**head, **fields}):
+            return version
+        for n in staged:
+            try:
+                os.remove(os.path.join(path, n))
+            except FileNotFoundError:
+                pass
+    raise RuntimeError(
+        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
+    )
 
 
 def _file_stats(fpath: str) -> tuple[dict, dict, int]:
@@ -502,13 +530,13 @@ def _write_data_files(
     return entries
 
 
-def _inherit_bloom_cols(m: dict, df: DataFrame) -> list[str] | None:
+def _inherit_bloom_cols(m: dict | None, df: DataFrame) -> list[str] | None:
     """The parent manifest's table-level bloom columns that exist in
-    the frame being written — DML rewrites pass this to
+    the frame being written — appends and DML rewrites pass this to
     ``_write_data_files`` so the files they create keep the bloom
     pruning the table was built with (a merged/rewritten file without
     a bloom is forever unprunable for point lookups)."""
-    cols = [c for c in m.get("bloom_cols", []) if c in df.columns]
+    cols = [c for c in (m or {}).get("bloom_cols", []) if c in df.columns]
     return cols or None
 
 
@@ -582,10 +610,7 @@ def snap_txn_seen(path: str, app_id: str, batch_id: int) -> bool:
     ``batch_id`` (or later) for ``app_id`` — the cheap pre-flight a
     streaming caller uses to skip ALL batch work on a replay, before
     any Spark job runs."""
-    v = _latest_version(path)
-    if v is None:
-        return False
-    return _read_manifest(path, v).get("txn", {}).get(app_id, -1) >= batch_id
+    return snap_txn_mark(path, app_id) >= batch_id
 
 
 def snap_txn_mark(path: str, app_id: str) -> int:
@@ -636,6 +661,33 @@ def snap_txn_version(path: str, app_id: str, batch_id: int) -> int | None:
     return v
 
 
+def _txn_advance(m: dict | None, mark: tuple[str, int] | None) -> dict | None:
+    """The head's replay markers advanced by ``mark = (app_id,
+    batch_id)``; None when the head already records the batch.  Run
+    per claim attempt: a concurrent writer of the same app may have
+    landed the batch since the caller's pre-flight."""
+    txn = dict((m or {}).get("txn", {}))
+    if mark is not None:
+        if txn.get(mark[0], -1) >= mark[1]:
+            return None
+        txn[mark[0]] = mark[1]
+    return txn
+
+
+def _check_expected(path: str, expect_version, v, what: str) -> None:
+    """Lost-update guard of the versioned writes: raise
+    :class:`SnapConflict` unless the head the claim will parent on —
+    not a separate pre-read, which would leave a window for a
+    concurrent commit — is ``expect_version`` (-1 = no table yet;
+    None = no expectation)."""
+    actual = -1 if v is None else v
+    if expect_version is not None and actual != expect_version:
+        raise SnapConflict(
+            f"{path}: expected version {expect_version}, found "
+            f"{actual} — {what} was computed from a stale read"
+        )
+
+
 def _snap_commit(
     df: DataFrame,
     path: str,
@@ -655,62 +707,41 @@ def _snap_commit(
     ``txn_mark = (app_id, batch_id)`` makes the commit IDEMPOTENT
     under streaming replays (the Delta txn pattern): a batch the
     latest manifest already records is skipped (returns None), and
-    the committed manifest advances the app's high-water mark."""
+    the committed manifest advances the app's high-water mark.
+
+    Caller-given ``bloom_cols`` set the table property; a plain append
+    blooms its files on the property's columns the frame has."""
     if txn_mark is not None and snap_txn_seen(path, *txn_mark):
         return None
     prev0 = _latest_version(path)
+    write_blooms = bloom_cols
     if bloom_cols is None and op == "append" and prev0 is not None:
-        # a plain append to a bloomed table keeps blooming its new
-        # files — the table-level property, not a per-call option
-        bloom_cols = _inherit_bloom_cols(_read_manifest(path, prev0), df)
-    new_files = _write_data_files(
+        write_blooms = _inherit_bloom_cols(_read_manifest(path, prev0), df)
+    new_name = _write_manifest_file(path, _write_data_files(
         df, path, 0 if prev0 is None else prev0 + 1,
-        zorder_by=zorder_by, bloom_cols=bloom_cols,
-    )
-    new_name = _write_manifest_file(path, new_files)
-    for _attempt in range(_MAX_COMMIT_RETRIES):
-        _conflict_backoff(_attempt)
-        prev = _latest_version(path)
-        if expect_version is not None:
-            actual = -1 if prev is None else prev
-            if actual != expect_version:
-                raise SnapConflict(
-                    f"{path}: expected version {expect_version}, found "
-                    f"{actual} — content was computed from a stale read"
-                )
-        version = 0 if prev is None else prev + 1
-        m_prev = _read_manifest(path, prev) if prev is not None else None
-        if op == "append" and m_prev is not None:
-            manifests = _carried_manifests(path, m_prev) + [new_name]
-            schema = _evolved_schema(m_prev.get("schema"), df, op)
-            # append keeps the parent's deletion vectors (its files
-            # are all still live); overwrite drops them with the files
-            dv = _dv_carry(m_prev)
-        else:
-            manifests = [new_name]
-            schema = _evolved_schema(None, df, op)
-            dv = {}
+        zorder_by=zorder_by, bloom_cols=write_blooms,
+    ))
+
+    def attempt(v, m):
+        _check_expected(path, expect_version, v, "content")
         # streaming replay markers survive ANY commit (the Delta txn
         # posture): an append or overwrite between micro-batches must
         # not reopen the exactly-once window
-        txn = dict(m_prev.get("txn", {})) if m_prev is not None else {}
-        if txn_mark is not None:
-            # re-check per claim attempt: a concurrent writer of the
-            # same app may have landed this batch since the pre-flight
-            if txn.get(txn_mark[0], -1) >= txn_mark[1]:
-                return None
-            txn[txn_mark[0]] = txn_mark[1]
-        if _try_commit(
-            path, version,
-            {"version": version, "op": op, "parent": prev,
-             "manifests": manifests, "schema": schema, "txn": txn,
-             **({"bloom_cols": bloom_cols} if bloom_cols else {}),
-             **dv},
-        ):
-            return version
-    raise RuntimeError(
-        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
-    )
+        txn = _txn_advance(m, txn_mark)
+        if txn is None:
+            return None
+        # append keeps the parent's files and deletion vectors (its
+        # files are all still live); overwrite drops both
+        carry = m if op == "append" else None
+        return {
+            "op": op, "txn": txn,
+            **({"bloom_cols": bloom_cols} if bloom_cols else {}),
+            "manifests": _carried_manifests(path, carry) + [new_name],
+            "schema": _evolved_schema((m or {}).get("schema"), df, op),
+            **(_dv_carry(carry) if carry else {}),
+        }
+
+    return _occ_commit(path, attempt)
 
 
 def snap_append(
@@ -766,26 +797,12 @@ def snap_versions(path: str) -> list[dict]:
         if f.startswith("v") and f.endswith(".json"):
             m = _read_manifest(path, int(f[1:-5]))
             entries = _manifest_entries(path, m)
-            rows = 0
-            if m.get("dvs") and "dv_counts" not in m:
-                rows = None  # legacy ledger: dv_rows may be stale
-            for e in entries:
-                if rows is None:
-                    break
-                if not isinstance(e, dict) or "rows" not in e:
-                    rows = None
-                    break
-                rows += e["rows"]
             out.append(
                 {
                     "version": m["version"], "op": m["op"],
                     "parent": m["parent"],
                     "n_files": len(entries),
-                    "n_rows": (
-                        rows - m.get("dv_rows", 0)
-                        if rows is not None
-                        else None
-                    ),
+                    "n_rows": _live_rows(m, entries),
                     "dv_rows": m.get("dv_rows", 0),
                     "ts": m.get("ts"),
                 }
@@ -830,6 +847,17 @@ def _pinned_reader(spark: SparkSession, m: dict):
 _BROADCAST_DV_ROWS = 4_000_000
 
 
+def _dv_frame(spark: SparkSession, path: str, m: dict) -> DataFrame:
+    """The (file, pos) rows of a version's deletion vectors, broadcast
+    while the ledger is within ``_BROADCAST_DV_ROWS``."""
+    from pyspark.sql import functions as F
+
+    dv = spark.read.parquet(
+        *[os.path.join(path, n) for n in m["dvs"]]
+    ).select("file", "pos")
+    return F.broadcast(dv) if m.get("dv_rows", 0) <= _BROADCAST_DV_ROWS else dv
+
+
 def _apply_dvs(spark: SparkSession, path: str, m: dict, base: DataFrame):
     """Filter out rows a version's DELETION VECTORS mark deleted: an
     anti-join of (file name, row position) against the union of the
@@ -839,16 +867,11 @@ def _apply_dvs(spark: SparkSession, path: str, m: dict, base: DataFrame):
     stale entries are harmless, which is what lets every commit carry
     the DV list forward untouched.  No DVs -> ``base`` unchanged (the
     common case costs nothing)."""
-    names = m.get("dvs", [])
-    if not names:
+    if not m.get("dvs"):
         return base
     from pyspark.sql import functions as F
 
-    dv = spark.read.parquet(
-        *[os.path.join(path, n) for n in names]
-    ).select("file", "pos")
-    if m.get("dv_rows", 0) <= _BROADCAST_DV_ROWS:
-        dv = F.broadcast(dv)
+    dv = _dv_frame(spark, path, m)
     # tag position into real columns BEFORE the join: the _metadata
     # pseudo-column resolves on the scan relation, not join outputs
     tagged = base.withColumns(
@@ -975,6 +998,161 @@ def _dv_carry(m: dict, drop_files: set | None = None) -> dict:
         "dv_counts": counts,
         "dv_rows": sum(counts.values()),
     }
+
+
+def _split_manifests(path: str, m: dict, touched) -> tuple[list, list, list]:
+    """Classify a version's files for a rewrite at MANIFEST
+    granularity: ``(carried, loose, affected)``.  A per-commit manifest
+    none of whose entries ``touched(entry)`` is carried forward BY NAME
+    (bytes untouched); a manifest holding a touched entry is re-listed
+    — its other entries are ``loose``, the touched ones ``affected``
+    (the files the op rewrites or drops)."""
+    carried, loose, affected = [], [], []
+    for name in _carried_manifests(path, m):
+        entries = _read_manifest_file(path, name)
+        hit = [touched(e) for e in entries]
+        if not any(hit):
+            carried.append(name)
+            continue
+        for e, h in zip(entries, hit):
+            (affected if h else loose).append(e)
+    return carried, loose, affected
+
+
+def _cow_fields(
+    spark: SparkSession, path: str, v: int, m: dict, split: tuple, transform,
+    added: list = (), dropped: list = (), zorder_by: list[str] | None = None,
+) -> dict:
+    """THE copy-on-write step: the ``affected`` files of ``split`` are
+    read through ``_read_files`` (vectors applied — a rewrite never
+    resurrects a MOR-deleted row), passed through ``transform`` and
+    rewritten with the table's bloom columns; ONE new manifest lists
+    ``loose`` + rewritten + ``added`` entries after the carried
+    manifests.  ``dropped``: entries removed unread.  Rewritten and
+    dropped files leave the DV ledger.  Returns the commit's
+    ``manifests`` and DV fields."""
+    carried, loose, affected = split
+    files: list[dict] = []
+    if affected:
+        rows = transform(
+            _read_files(spark, path, m, [_entry_name(e) for e in affected])
+        )
+        files = _write_data_files(
+            rows, path, v + 1, zorder_by=zorder_by,
+            bloom_cols=_inherit_bloom_cols(m, rows),
+        )
+    gone = {os.path.basename(_entry_name(e)) for e in [*affected, *dropped]}
+    return {
+        "manifests": carried + [
+            _write_manifest_file(path, [*loose, *files, *added])
+        ],
+        **_dv_carry(m, gone),
+    }
+
+
+def _mor_fields(
+    spark: SparkSession, path: str, m: dict, cand: list[str],
+    cols: dict[str, str], hits_of,
+) -> dict:
+    """THE merge-on-read step: scan the candidate files' positions
+    (``file``, ``pos``) and ONLY the columns ``cols`` ({alias: column},
+    rename-aware), drop positions the vectors already delete (a row is
+    never deleted twice, so the ledger stays exact), stage the
+    positions ``hits_of(scan)`` keeps as sidecars under ``dv/``, and
+    return the parent's DV ledger extended with them plus
+    ``staged_dvs`` for the commit loop."""
+    from pyspark.sql import functions as F
+
+    moved, new_counts = [], {}
+    if cand:
+        scan = _pinned_reader(spark, m).parquet(
+            *[os.path.join(path, f) for f in cand]
+        ).select(
+            F.col("_metadata.file_name").alias("file"),
+            F.col("_metadata.row_index").alias("pos"),
+            *[
+                F.coalesce(*[F.col(n) for n in _stat_names(m, c)]).alias(a)
+                for a, c in cols.items()
+            ],
+        )
+        if m.get("dvs"):
+            scan = scan.join(
+                _dv_frame(spark, path, m), ["file", "pos"], "left_anti"
+            )
+        moved, new_counts = _stage_dvs(spark, path, hits_of(scan), len(cand))
+    dv = _dv_carry(m)
+    if moved and dv and "dv_counts" not in dv:
+        # legacy parent ledger (dvs without per-file counts): a fresh
+        # dv_counts would OMIT the legacy vectors' rows — snap_count
+        # overcounts and a later rewrite could drop the legacy vectors
+        # via an emptied ledger, resurrecting deleted rows.  Stay
+        # additive without per-file counts.
+        dv = {
+            "dvs": dv["dvs"] + moved,
+            "dv_rows": dv["dv_rows"] + sum(new_counts.values()),
+        }
+    elif moved:
+        counts = dict(dv.get("dv_counts", {}))
+        for f, n in new_counts.items():
+            counts[f] = counts.get(f, 0) + n
+        dv = {
+            "dvs": dv.get("dvs", []) + moved,
+            "dv_counts": counts,
+            "dv_rows": sum(counts.values()),
+        }
+    return {**dv, "staged_dvs": moved}
+
+
+def _range_match(c, lo, hi):
+    """NULL-safe ``c BETWEEN lo AND hi`` (None = open bound): FALSE —
+    never NULL — for a NULL value, even with both bounds open (SQL
+    DELETE/UPDATE WHERE never matches NULL), so ``~match`` is a safe
+    keep-filter: NULL rows survive, identically in rewritten and
+    carried files."""
+    from pyspark.sql import functions as F
+
+    match = c.isNotNull()
+    if lo is not None:
+        match = match & (c >= F.lit(lo))
+    if hi is not None:
+        match = match & (c <= F.lit(hi))
+    return match
+
+
+def _range_rewrite(
+    spark: SparkSession, path: str, op: str, col: str, lo, hi, transform,
+    set_cols: list[str] = (),
+) -> int | None:
+    """Copy-on-write commit of a range-predicated row-level op
+    (DELETE / UPDATE ... WHERE col BETWEEN lo AND hi): files whose
+    stats prove the range disjoint stay untouched, the affected ones
+    rewrite through ``transform(rows, match)``.  ``set_cols`` must be
+    columns of the table.  None when stats prove no file can match."""
+    from pyspark.sql import functions as F
+
+    def attempt(v, m):
+        if m is None:
+            raise FileNotFoundError(f"no snapshot table at {path}")
+        if m.get("schema"):
+            table_cols = [f["name"] for f in m["schema"]["fields"]]
+            unknown = [c for c in set_cols if c not in table_cols]
+            if unknown:
+                raise ValueError(f"UPDATE SET on unknown columns {unknown}")
+        names = _stat_names(m, col)  # hoisted once per attempt
+        split = _split_manifests(
+            path, m, lambda e: not _range_disjoint_any(e, names, lo, hi)
+        )
+        if not split[2]:
+            return None
+        match = _range_match(F.col(col), lo, hi)
+        return {
+            "op": op,
+            **_cow_fields(
+                spark, path, v, m, split, lambda rows: transform(rows, match)
+            ),
+        }
+
+    return _occ_commit(path, attempt)
 
 
 def snap_version_at(path: str, as_of: float) -> int:
@@ -1609,49 +1787,7 @@ def snap_append_txn(
     recovery) is detected and SKIPPED, so foreachBatch's at-least-once
     delivery becomes exactly-once at the table.  Returns the committed
     version, or None for a detected replay."""
-    prev0 = _latest_version(path)
-    if prev0 is not None:
-        txn0 = _read_manifest(path, prev0).get("txn", {})
-        if txn0.get(app_id, -1) >= batch_id:
-            return None  # replay: this batch is already in the table
-    bc = (
-        _inherit_bloom_cols(_read_manifest(path, prev0), df)
-        if prev0 is not None
-        else None
-    )
-    new_files = _write_data_files(
-        df, path, 0 if prev0 is None else prev0 + 1, bloom_cols=bc
-    )
-    new_name = _write_manifest_file(path, new_files)
-    for _attempt in range(_MAX_COMMIT_RETRIES):
-        _conflict_backoff(_attempt)
-        prev = _latest_version(path)
-        if prev is not None:
-            m_prev = _read_manifest(path, prev)
-            txn = dict(m_prev.get("txn", {}))
-            # the replay check must re-run per attempt: a CONCURRENT
-            # writer of the same app may have committed this batch
-            # between our first check and this claim
-            if txn.get(app_id, -1) >= batch_id:
-                return None
-            manifests = _carried_manifests(path, m_prev) + [new_name]
-        else:
-            manifests, txn = [new_name], {}
-        txn[app_id] = batch_id
-        version = 0 if prev is None else prev + 1
-        schema = _evolved_schema(
-            m_prev.get("schema") if prev is not None else None, df, "append"
-        )
-        dv = _dv_carry(m_prev) if prev is not None else {}
-        if _try_commit(
-            path, version,
-            {"version": version, "op": "append", "parent": prev,
-             "manifests": manifests, "txn": txn, "schema": schema, **dv},
-        ):
-            return version
-    raise RuntimeError(
-        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
-    )
+    return _snap_commit(df, path, "append", txn_mark=(app_id, batch_id))
 
 
 def maybe_compact(
@@ -1776,70 +1912,11 @@ def snap_delete_where(
     the affected files; deleted rows stay readable at older versions
     until vacuum (deletes are just another version).  Returns the new
     version, or None when the stats prove no file holds a matching
-    row (a provable no-op never commits)."""
-    from pyspark.sql import functions as F
-
-    for _attempt in range(_MAX_COMMIT_RETRIES):
-        _conflict_backoff(_attempt)
-        v = _latest_version(path)
-        if v is None:
-            raise FileNotFoundError(f"no snapshot table at {path}")
-        m = _read_manifest(path, v)
-        names = _stat_names(m, col)  # hoisted once per attempt
-
-        def _disjoint(e) -> bool:
-            return _range_disjoint_any(e, names, lo, hi)
-
-        # Classify at MANIFEST granularity: a per-commit manifest whose
-        # every file is provably range-disjoint is carried forward BY
-        # NAME (bytes untouched); only manifests holding an affected
-        # file are re-listed, and only their affected files rewrite.
-        carried, loose_entries, affected = [], [], []
-        for name in _carried_manifests(path, m):
-            entries = _read_manifest_file(path, name)
-            if all(_disjoint(e) for e in entries):
-                carried.append(name)
-            else:
-                for e in entries:
-                    (loose_entries if _disjoint(e) else affected).append(e)
-        if not affected:
-            return None
-        # NULL-safe keep: SQL `DELETE WHERE col BETWEEN lo AND hi`
-        # never matches NULL, so NULL rows must SURVIVE the rewrite
-        # (without the isNull branch, `col < lo` evaluates NULL and
-        # filter drops them — and only in rewritten files, making
-        # behavior file-dependent).
-        keep = F.col(col).isNull()
-        if lo is not None:
-            keep = keep | (F.col(col) < F.lit(lo))
-        if hi is not None:
-            keep = keep | (F.col(col) > F.lit(hi))
-        # the rewrite read applies the version's deletion vectors —
-        # a CoW delete after a MOR delete must not resurrect rows
-        survivors = _read_files(
-            spark, path, m, [_entry_name(e) for e in affected]
-        ).filter(keep)
-        new_files = _write_data_files(
-                survivors, path, v + 1,
-                bloom_cols=_inherit_bloom_cols(m, survivors),
-            )
-        new_name = _write_manifest_file(path, loose_entries + new_files)
-        if _try_commit(
-            path, v + 1,
-            {"version": v + 1, "op": "delete", "parent": v,
-             "manifests": carried + [new_name],
-             "txn": dict(m.get("txn", {})), "schema": m.get("schema"),
-             **_dv_carry(
-                 m,
-                 {os.path.basename(_entry_name(e)) for e in affected},
-             )},
-        ):
-            return v + 1
-        # a concurrent commit landed between classification and claim:
-        # the classification (and the survivor rewrite) must re-run
-        # against the new latest
-    raise RuntimeError(
-        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
+    row (a provable no-op never commits).  NULL rows survive (SQL
+    ``DELETE WHERE`` never matches NULL)."""
+    return _range_rewrite(
+        spark, path, "delete", col, lo, hi,
+        lambda rows, match: rows.filter(~match),
     )
 
 
@@ -1856,17 +1933,20 @@ def snap_count(path: str, version: int | None = None) -> int | None:
     if v is None:
         raise FileNotFoundError(f"no snapshot table at {path}")
     m = _read_manifest(path, v)
+    return _live_rows(m, _manifest_entries(path, m))
+
+
+def _live_rows(m: dict, entries: list) -> int | None:
+    """A version's file row counts minus its deleted-row ledger; None
+    when any entry predates row-count stats, or for a legacy ledger
+    (dvs without per-file counts: ``dv_rows`` cannot prune on
+    rewrites, so after any rewrite it may double-subtract — the caller
+    falls back to a real count rather than drift)."""
     if m.get("dvs") and "dv_counts" not in m:
-        # legacy ledger: dv_rows cannot prune on rewrites, so after
-        # any rewrite it may double-subtract — fall back to a real
-        # count rather than drift
         return None
-    total = 0
-    for e in _manifest_entries(path, m):
-        if not isinstance(e, dict) or "rows" not in e:
-            return None
-        total += e["rows"]
-    return total - m.get("dv_rows", 0)
+    if any(not isinstance(e, dict) or "rows" not in e for e in entries):
+        return None
+    return sum(e["rows"] for e in entries) - m.get("dv_rows", 0)
 
 
 def snap_restore(path: str, version: int) -> int:
@@ -1917,23 +1997,16 @@ def snap_restore(path: str, version: int) -> int:
         # refreshes the store mtime, re-entering them into the grace
         # window alongside the utime'd data/dv/bloom files above
         st.put(path, name, st.read(path, name))
-    for _attempt in range(_MAX_COMMIT_RETRIES):
-        _conflict_backoff(_attempt)
-        cur = _latest_version(path)
-        if cur is None:
+
+    def attempt(v, m):
+        if m is None:
             raise FileNotFoundError(f"no snapshot table at {path}")
-        m_cur = _read_manifest(path, cur)
-        if _try_commit(
-            path, cur + 1,
-            {"version": cur + 1, "op": "restore", "parent": cur,
-             "restored": version, "manifests": manifests,
-             "txn": dict(m_cur.get("txn", {})),
-             "schema": target.get("schema"), **_dv_carry(target)},
-        ):
-            return cur + 1
-    raise RuntimeError(
-        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
-    )
+        return {
+            "op": "restore", "restored": version, "manifests": manifests,
+            "schema": target.get("schema"), **_dv_carry(target),
+        }
+
+    return _occ_commit(path, attempt)
 
 
 def snap_drop_column(path: str, col: str) -> int:
@@ -1950,49 +2023,53 @@ def snap_drop_column(path: str, col: str) -> int:
     refuse (``overwrite`` resets the table wholesale and clears the
     tombstones).  Refuses the last column and the value-cluster
     column; the bloom table property sheds the dropped name."""
-    for _attempt in range(_MAX_COMMIT_RETRIES):
-        _conflict_backoff(_attempt)
-        v = _latest_version(path)
-        if v is None:
-            raise FileNotFoundError(f"no snapshot table at {path}")
-        m = _read_manifest(path, v)
-        schema = m.get("schema")
-        if schema is None:
-            raise ValueError(
-                "drop column needs a schema-carrying manifest "
-                "(legacy schema-less table)"
-            )
+
+    def change(schema):
         keep = [f for f in schema["fields"] if f["name"] != col]
         if len(keep) == len(schema["fields"]):
             raise ValueError(f"no such column {col!r}")
         if not keep:
             raise ValueError("cannot drop the last column")
+        return keep
+
+    return _alter_column(path, "drop_column", col, None, change,
+                         {"dropped_col": col})
+
+
+def _alter_column(path: str, op: str, col: str, new, change, extra: dict) -> int:
+    """Metadata-only commit of DROP (``new`` None) or RENAME COLUMN:
+    ``change(schema)`` validates and returns the new field list; ``col``
+    joins the tombstones, the bloom table property follows, manifests
+    carry by name and no data byte moves.  The table's value-cluster
+    key is refused (refresh machinery addresses it by name)."""
+
+    def attempt(v, m):
+        if m is None:
+            raise FileNotFoundError(f"no snapshot table at {path}")
+        schema = m.get("schema")
+        if schema is None:
+            raise ValueError(
+                f"{op.replace('_', ' ')} needs a schema-carrying manifest "
+                "(legacy schema-less table)"
+            )
+        fields = change(schema)
         if m.get("clustered") == col:
             raise ValueError(
                 f"column {col!r} is the table's value-cluster key — "
                 "refresh machinery depends on it"
             )
-        new_schema = {
-            **schema,
-            "fields": keep,
-            "dropped": sorted(set(schema.get("dropped", [])) | {col}),
+        renamed = [new if c == col else c for c in m.get("bloom_cols", [])]
+        return {
+            "op": op, **extra, "manifests": _carried_manifests(path, m),
+            "schema": {
+                **schema, "fields": fields,
+                "dropped": sorted(set(schema.get("dropped", [])) | {col}),
+            },
+            "bloom_cols": [c for c in renamed if c is not None],
+            **_dv_carry(m),
         }
-        if _try_commit(
-            path, v + 1,
-            {"version": v + 1, "op": "drop_column", "parent": v,
-             "dropped_col": col,
-             "manifests": _carried_manifests(path, m),
-             "txn": dict(m.get("txn", {})),
-             "schema": new_schema,
-             "bloom_cols": [
-                 c for c in m.get("bloom_cols", []) if c != col
-             ],
-             **_dv_carry(m)},
-        ):
-            return v + 1
-    raise RuntimeError(
-        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
-    )
+
+    return _occ_commit(path, attempt)
 
 
 def snap_rename_column(path: str, old: str, new: str) -> int:
@@ -2014,18 +2091,8 @@ def snap_rename_column(path: str, old: str, new: str) -> int:
     Delta's physical-name field IDs exist to prevent.  Renaming the
     value-cluster key is refused (refresh machinery addresses it by
     name); the bloom table property follows the rename."""
-    for _attempt in range(_MAX_COMMIT_RETRIES):
-        _conflict_backoff(_attempt)
-        v = _latest_version(path)
-        if v is None:
-            raise FileNotFoundError(f"no snapshot table at {path}")
-        m = _read_manifest(path, v)
-        schema = m.get("schema")
-        if schema is None:
-            raise ValueError(
-                "rename column needs a schema-carrying manifest "
-                "(legacy schema-less table)"
-            )
+
+    def change(schema):
         names = [f["name"] for f in schema["fields"]]
         if old not in names:
             raise ValueError(f"no such column {old!r}")
@@ -2042,11 +2109,6 @@ def snap_rename_column(path: str, old: str, new: str) -> int:
                 f"column name {new!r} is a prior physical name of "
                 "another column"
             )
-        if m.get("clustered") == old:
-            raise ValueError(
-                f"column {old!r} is the table's value-cluster key — "
-                "refresh machinery depends on it"
-            )
         fields = []
         for f in schema["fields"]:
             if f["name"] == old:
@@ -2055,27 +2117,10 @@ def snap_rename_column(path: str, old: str, new: str) -> int:
                 fields.append({**f, "name": new, "metadata": meta})
             else:
                 fields.append(f)
-        new_schema = {
-            **schema,
-            "fields": fields,
-            "dropped": sorted(set(schema.get("dropped", [])) | {old}),
-        }
-        if _try_commit(
-            path, v + 1,
-            {"version": v + 1, "op": "rename_column", "parent": v,
-             "renamed": {"from": old, "to": new},
-             "manifests": _carried_manifests(path, m),
-             "txn": dict(m.get("txn", {})),
-             "schema": new_schema,
-             "bloom_cols": [
-                 new if c == old else c for c in m.get("bloom_cols", [])
-             ],
-             **_dv_carry(m)},
-        ):
-            return v + 1
-    raise RuntimeError(
-        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
-    )
+        return fields
+
+    return _alter_column(path, "rename_column", old, new, change,
+                         {"renamed": {"from": old, "to": new}})
 
 
 def _stage_dvs(
@@ -2192,98 +2237,34 @@ def snap_delete_where_mor(
     small); ``snap_materialize_dvs`` folds them back into rewritten
     files when the read-side tax grows.
 
-    Manifest stats prune the scan: only files whose [min, max] for
-    ``col`` can intersect [lo, hi] are read, and the read projects
-    just ``col`` + the parquet metadata column.  Rows already deleted
-    by earlier vectors are excluded, so ``dv_rows`` stays an exact
-    live-deleted count and re-running the same delete is a no-op.
-    NULL never matches (SQL DELETE WHERE semantics).  Returns the new
-    version, or None when no row matches (a no-op never commits)."""
+    Manifest stats prune the scan to files whose [min, max] for
+    ``col`` can intersect [lo, hi]; re-running the same delete is a
+    no-op (:func:`_mor_fields` skips already-deleted rows).  NULL never
+    matches (SQL DELETE WHERE semantics).  Returns the new version, or
+    None when no row matches (a no-op never commits)."""
     from pyspark.sql import functions as F
 
-    for _attempt in range(_MAX_COMMIT_RETRIES):
-        _conflict_backoff(_attempt)
-        v = _latest_version(path)
-        if v is None:
+    def attempt(v, m):
+        if m is None:
             raise FileNotFoundError(f"no snapshot table at {path}")
-        m = _read_manifest(path, v)
         names = _stat_names(m, col)  # hoisted once per attempt
         cand = [
             _entry_name(e)
             for e in _manifest_entries(path, m)
             if not _range_disjoint_any(e, names, lo, hi)
         ]
-        if not cand:
-            return None
-        # project ONLY the predicate column + position metadata: the
-        # scan reads one column of the candidate files, not the table
-        tagged = _pinned_reader(spark, m).parquet(
-            *[os.path.join(path, f) for f in cand]
-        ).select(
-            F.col("_metadata.file_name").alias("file"),
-            F.col("_metadata.row_index").alias("pos"),
-            # rename-aware: a candidate file carries the column under
-            # whichever name it was written with
-            F.coalesce(*[F.col(n) for n in names]).alias("__v"),
+        dv = _mor_fields(
+            spark, path, m, cand, {"__v": col},
+            lambda scan: scan.filter(_range_match(F.col("__v"), lo, hi)),
         )
-        # NULL never matches (SQL DELETE WHERE semantics) — even with
-        # both bounds open, NULL-valued rows survive, matching the CoW
-        # delete's keep predicate
-        match = F.col("__v").isNotNull()
-        if lo is not None:
-            match = match & (F.col("__v") >= F.lit(lo))
-        if hi is not None:
-            match = match & (F.col("__v") <= F.lit(hi))
-        hits = tagged.filter(match).select("file", "pos")
-        prior = m.get("dvs", [])
-        if prior:
-            old = spark.read.parquet(
-                *[os.path.join(path, n) for n in prior]
-            ).select("file", "pos")
-            if m.get("dv_rows", 0) <= _BROADCAST_DV_ROWS:
-                old = F.broadcast(old)
-            hits = hits.join(old, ["file", "pos"], "left_anti")
-        moved, new_counts = _stage_dvs(spark, path, hits, len(cand))
-        if not new_counts:
+        if not dv["staged_dvs"]:
             return None
-        if prior and "dv_counts" not in m:
-            # legacy parent ledger (dvs without per-file counts): a
-            # fresh dv_counts would OMIT the legacy vectors' rows —
-            # snap_count overcounts and a later rewrite could drop the
-            # legacy vectors via an emptied ledger, resurrecting
-            # deleted rows.  Stay additive without per-file counts.
-            dv_meta = {
-                "dvs": prior + moved,
-                "dv_rows": m.get("dv_rows", 0) + sum(new_counts.values()),
-            }
-        else:
-            counts = dict(m.get("dv_counts", {}))
-            for f, n in new_counts.items():
-                counts[f] = counts.get(f, 0) + n
-            dv_meta = {
-                "dvs": prior + moved,
-                "dv_counts": counts,
-                "dv_rows": sum(counts.values()),
-            }
-        if _try_commit(
-            path, v + 1,
-            {"version": v + 1, "op": "delete-mor", "parent": v,
-             "manifests": _carried_manifests(path, m),
-             "txn": dict(m.get("txn", {})), "schema": m.get("schema"),
-             **dv_meta},
-        ):
-            return v + 1
-        # lost the claim: positions were computed against a stale
-        # version (the winner may have rewritten candidate files) —
-        # drop our unreferenced vectors and redo against the new latest
-        for n in moved:
-            try:
-                os.remove(os.path.join(path, n))
-            except FileNotFoundError:
-                pass
-    raise RuntimeError(
-        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
-    )
+        return {
+            "op": "delete-mor", "manifests": _carried_manifests(path, m),
+            **dv,
+        }
+
+    return _occ_commit(path, attempt)
 
 
 def snap_materialize_dvs(spark: SparkSession, path: str) -> int | None:
@@ -2296,57 +2277,30 @@ def snap_materialize_dvs(spark: SparkSession, path: str) -> int | None:
     version, or None when the table has no vectors.  Vectors whose
     every referenced file is already gone (rewritten by later CoW /
     compaction) clear with a metadata-only commit — no data moves."""
-    for _attempt in range(_MAX_COMMIT_RETRIES):
-        _conflict_backoff(_attempt)
-        v = _latest_version(path)
-        if v is None:
+
+    def attempt(v, m):
+        if m is None:
             raise FileNotFoundError(f"no snapshot table at {path}")
-        m = _read_manifest(path, v)
-        names = m.get("dvs", [])
-        if not names:
+        if not m.get("dvs"):
             return None
         dead = {
             r["file"]
             for r in spark.read.parquet(
-                *[os.path.join(path, n) for n in names]
+                *[os.path.join(path, n) for n in m["dvs"]]
             ).select("file").distinct().collect()
         }  # distinct FILE names: bounded by the manifest's file count
-        carried, loose, affected = [], [], []
-        for name in _carried_manifests(path, m):
-            entries = _read_manifest_file(path, name)
-            if all(
-                os.path.basename(_entry_name(e)) not in dead for e in entries
-            ):
-                carried.append(name)
-            else:
-                for e in entries:
-                    (
-                        affected
-                        if os.path.basename(_entry_name(e)) in dead
-                        else loose
-                    ).append(e)
-        new_files: list[dict] = []
-        if affected:
-            survivors = _read_files(
-                spark, path, m, [_entry_name(e) for e in affected]
-            )
-            new_files = _write_data_files(
-                survivors, path, v + 1,
-                bloom_cols=_inherit_bloom_cols(m, survivors),
-            )
-        manifests = list(carried)
-        if loose or new_files:
-            manifests.append(_write_manifest_file(path, loose + new_files))
-        if _try_commit(
-            path, v + 1,
-            {"version": v + 1, "op": "materialize", "parent": v,
-             "manifests": manifests,
-             "txn": dict(m.get("txn", {})), "schema": m.get("schema")},
-        ):
-            return v + 1
-    raise RuntimeError(
-        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
-    )
+        split = _split_manifests(
+            path, m, lambda e: os.path.basename(_entry_name(e)) in dead
+        )
+        # the commit drops the whole ledger: only the manifests carry
+        manifests = split[0]
+        if split[2]:
+            manifests = _cow_fields(
+                spark, path, v, m, split, lambda rows: rows
+            )["manifests"]
+        return {"op": "materialize", "manifests": manifests}
+
+    return _occ_commit(path, attempt)
 
 
 def maybe_materialize(
@@ -2399,31 +2353,24 @@ def snap_mutate(
 
     ``fn`` receives None when the table does not exist yet (creation
     races are settled by the same version-0 claim)."""
-    for _attempt in range(_MAX_COMMIT_RETRIES):
-        _conflict_backoff(_attempt)
-        v = _latest_version(path)
+
+    def attempt(v, m):
         cur = snap_read(spark, path, v) if v is not None else None
         try:
             new = fn(cur)
         except SnapNoChange:
             return v if v is not None else -1
-        version = 0 if v is None else v + 1
         # the new content may read `cur` lazily during this write —
         # safe: version v's files are immutable even if a concurrent
         # commit lands meanwhile
-        new_files = _write_data_files(new, path, version)
-        name = _write_manifest_file(path, new_files)
-        txn = dict(_read_manifest(path, v).get("txn", {})) if v is not None else {}
-        if _try_commit(
-            path, version,
-            {"version": version, "op": "overwrite", "parent": v,
-             "manifests": [name], "txn": txn,
-             "schema": _evolved_schema(None, new, "overwrite")},
-        ):
-            return version
-    raise RuntimeError(
-        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
-    )
+        new_files = _write_data_files(new, path, 0 if v is None else v + 1)
+        return {
+            "op": "overwrite", "manifests": [_write_manifest_file(path, new_files)],
+            "txn": dict((m or {}).get("txn", {})),
+            "schema": _evolved_schema(None, new, "overwrite"),
+        }
+
+    return _occ_commit(path, attempt)
 
 
 def snap_read_if_exists(
@@ -2463,22 +2410,19 @@ def snap_replace_values(
 
     Files whose stats prove they hold none of ``values`` are carried
     by manifest/entry untouched; affected files are rewritten keeping
-    only non-matching rows (NULL-safe: NULL never matches an IN
-    list).  First call (no table) just commits ``replacement``.
-    ``values`` is a driver-side list — callers pass the micro-batch's
-    touched keys (bounded by batch size), not table-scale sets.
+    only non-matching rows.  First call (no table) just commits
+    ``replacement``.  ``values`` is a driver-side list — callers pass
+    the micro-batch's touched keys (bounded by batch size), not
+    table-scale sets.  It may contain ``None`` (a NULL cluster key —
+    null ts -> day_key, null source_id): the keep predicate is
+    :func:`value_match`, and file skipping uses the manifests' per-file
+    NULL COUNTS (absent count = may hold NULLs = not skippable).
 
     ``cluster=True`` writes VALUE-EXACT files for ``col`` (see
     ``_write_data_files``): each file holds one value, so later
     replaces rewrite exactly the touched values' files and nothing
     else — the property the agg view's O(|delta|) refresh pins by
     mtime.
-
-    NULL-safe: ``values`` may contain ``None`` (a NULL cluster key —
-    null ts -> day_key, null source_id).  NULL never matches an IN
-    list, so the match/keep predicates branch on ``isNull``
-    explicitly, and file skipping uses the manifests' per-file NULL
-    COUNTS (absent count = may hold NULLs = not skippable).
 
     ``txn = (app_id, batch_id)`` makes the replace IDEMPOTENT under
     streaming replays (the Delta txn pattern): a batch the latest
@@ -2495,36 +2439,8 @@ def snap_replace_values(
     caller must re-read and recompute (see ``refresh_agg_view``)."""
     from pyspark.sql import functions as F
 
-    def _check_expected(cur: int | None):
-        if expect_version is None:
-            return
-        actual = -1 if cur is None else cur
-        if actual != expect_version:
-            raise SnapConflict(
-                f"{path}: expected version {expect_version}, found "
-                f"{actual} — replacement was computed from a stale read"
-            )
-
     if txn is not None and snap_txn_seen(path, *txn):
         return None
-    cb = col if cluster else None
-    if _latest_version(path) is None:
-        _check_expected(None)
-        new_files = _write_data_files(replacement, path, 0, cluster_by=cb)
-        name = _write_manifest_file(path, new_files)
-        if _try_commit(
-            path, 0,
-            {"version": 0, "op": "append", "parent": None,
-             "manifests": [name],
-             "schema": _evolved_schema(None, replacement, "append"),
-             **({"clustered": col} if cluster else {}),
-             **({"txn": {txn[0]: txn[1]}} if txn is not None else {})},
-        ):
-            return 0
-        # lost the table-creation race: with an expectation this IS a
-        # conflict (the replacement assumed an empty table); without
-        # one, fall through and replace against the winner
-        _check_expected(_latest_version(path))
     has_null = any(v is None for v in values)
     vs = sorted(v for v in values if v is not None)
 
@@ -2543,88 +2459,55 @@ def snap_replace_values(
         mn, mx = st
         return all(v < mn or v > mx for v in vs)
 
-    def _disjoint(e, names: list[str]) -> bool:
-        # rename-aware: a file's stats/null-counts sit under its
-        # write-time column name (exactly one of names has them)
-        return any(_disjoint_under(e, nm) for nm in names)
+    # a file whose stats are a POINT range on a replaced value — and
+    # which provably holds no NULLs — is wholly replaced: no survivor
+    # rows can exist, so it needs no read or rewrite (the
+    # value-clustered layout makes this the common case: a refresh
+    # then only ever writes the delta)
+    def _wholly_replaced(e, nm: str) -> bool:
+        st = e.get("stats", {}).get(nm) if isinstance(e, dict) else None
+        return (
+            st is not None and st[0] == st[1] and st[0] in vs
+            and e.get("nulls", {}).get(nm) == 0
+        )
 
-    for _attempt in range(_MAX_COMMIT_RETRIES):
-        _conflict_backoff(_attempt)
-        v = _latest_version(path)
-        # compare the SAME version the claim will parent on — a
-        # separate pre-read would leave a window where a concurrent
-        # commit slips between check and claim (the lost update this
-        # parameter exists to prevent)
-        _check_expected(v)
-        m = _read_manifest(path, v)
-        txn_map = dict(m.get("txn", {}))
-        if txn is not None:
-            # re-check per claim attempt: a concurrent writer of the
-            # same app may have landed this batch since the pre-flight
-            if txn_map.get(txn[0], -1) >= txn[1]:
-                return None
-            txn_map[txn[0]] = txn[1]
-        col_names = _stat_names(m, col)  # hoisted once per attempt
-        carried, loose_entries, affected = [], [], []
-        for name in _carried_manifests(path, m):
-            entries = _read_manifest_file(path, name)
-            if all(_disjoint(e, col_names) for e in entries):
-                carried.append(name)
-            else:
-                for e in entries:
-                    (
-                        loose_entries
-                        if _disjoint(e, col_names)
-                        else affected
-                    ).append(e)
-        # a file whose stats are a POINT range on a replaced value —
-        # and which provably holds no NULLs — is wholly replaced: no
-        # survivor rows can exist, so it needs no read or rewrite (the
-        # value-clustered layout makes this the common case: a refresh
-        # then only ever writes the delta)
-        def _wholly_replaced(e) -> bool:
-            if not isinstance(e, dict):
-                return False
-            for nm in col_names:
-                st = e.get("stats", {}).get(nm)
-                if (
-                    st is not None and st[0] == st[1] and st[0] in vs
-                    and e.get("nulls", {}).get(nm) == 0
-                ):
-                    return True
-            return False
-
-        mixed = [e for e in affected if not _wholly_replaced(e)]
-        new_files = []
-        if mixed:
-            keep = ~value_match(F.col(col), values)
-            survivors = _read_files(
-                spark, path, m, [_entry_name(e) for e in mixed]
-            ).filter(keep)
-            new_files += _write_data_files(
-                survivors, path, v + 1,
-                bloom_cols=_inherit_bloom_cols(m, survivors),
-            )
-        new_files += _write_data_files(
-            replacement, path, v + 1, cluster_by=cb,
+    def attempt(v, m):
+        _check_expected(path, expect_version, v, "replacement")
+        txn_map = _txn_advance(m, txn)
+        if txn_map is None:
+            return None
+        new_files = _write_data_files(
+            replacement, path, 0 if v is None else v + 1,
+            cluster_by=col if cluster else None,
             bloom_cols=_inherit_bloom_cols(m, replacement),
         )
-        new_name = _write_manifest_file(path, loose_entries + new_files)
-        if _try_commit(
-            path, v + 1,
-            {"version": v + 1, "op": "replace", "parent": v,
-             "manifests": carried + [new_name],
-             "txn": txn_map, "schema": m.get("schema"),
-             **({"clustered": col} if cluster else {}),
-             **_dv_carry(
-                 m,
-                 {os.path.basename(_entry_name(e)) for e in affected},
-             )},
-        ):
-            return v + 1
-    raise RuntimeError(
-        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
-    )
+        fields = {"clustered": col} if cluster else {}
+        if m is None:  # first call: the replacement IS the table
+            return {
+                **fields, "op": "append",
+                "manifests": [_write_manifest_file(path, new_files)],
+                "schema": _evolved_schema(None, replacement, "append"),
+                **({"txn": txn_map} if txn is not None else {}),
+            }
+        # rename-aware: a file's stats/null-counts sit under its
+        # write-time column name (exactly one of names has them)
+        names = _stat_names(m, col)  # hoisted once per attempt
+        carried, loose, affected = _split_manifests(
+            path, m, lambda e: not any(_disjoint_under(e, n) for n in names)
+        )
+        mixed, whole = [], []
+        for e in affected:
+            (whole if any(_wholly_replaced(e, n) for n in names) else mixed).append(e)
+        keep = ~value_match(F.col(col), values)
+        return {
+            **fields, "op": "replace", "txn": txn_map,
+            **_cow_fields(
+                spark, path, v, m, (carried, loose, mixed),
+                lambda rows: rows.filter(keep), added=new_files, dropped=whole,
+            ),
+        }
+
+    return _occ_commit(path, attempt)
 
 
 def snap_merge(
@@ -2640,22 +2523,11 @@ def snap_merge(
     rest of the source inserts, everything else is untouched — ONE
     atomic commit.
 
-    Scale shape (the Delta MERGE file-pruning discipline):
-
-    1. Source key tuples reduce to one partial-agg frame (dup counts
-       ride along for the ambiguity check).
-    2. Manifest stats prune candidate files per key column (a file
-       range-disjoint from the source's key bounds on ANY key column
-       cannot hold a match) — at 100 TB most files never reach Spark.
-    3. ONE discovery join of the candidate scan (keys + file tag,
-       deletion vectors applied — a key matching only MOR-deleted
-       rows is NOT matched) against the source keys yields the
-       affected-file set (bounded by file count, never row count) and
-       the max per-key source multiplicity.
-    4. Only affected files rewrite: survivors = anti-join on keys
-       (NULL-keyed target rows always survive — SQL equality);
-       the whole source appends as new files.  Untouched manifests
-       carry by name; rewritten files leave the DV ledger.
+    Scale shape (Delta's MERGE file pruning): ONE discovery join of the
+    stats-pruned candidate scan (deletion vectors applied — a key
+    matching only MOR-deleted rows is NOT matched) against the source
+    keys yields the affected files; only those rewrite, to an anti-join
+    on keys (NULL-keyed target rows always survive).
 
     A source key tuple that is duplicated AND matched raises (Delta's
     "multiple source rows matched" error — replacing one row with two
@@ -2673,10 +2545,144 @@ def snap_merge(
     round protocols (the resumable crawl's ledger advance)."""
     from pyspark.sql import functions as F
 
+    src = _merge_source(path, source, keys, "snap_merge", txn)
+    if src is None:
+        return None
+
+    def attempt(v, m):
+        txn_map = _txn_advance(m, txn)
+        if txn_map is None:
+            return None
+        fields = {
+            "op": "merge", "txn": txn_map,
+            "schema": _evolved_schema(
+                (m or {}).get("schema"), src.source, "append"
+            ),
+        }
+        if m is None:  # first call: the source IS the table
+            return {
+                **fields,
+                "manifests": [_write_manifest_file(path, src.files(v, m))],
+            }
+        cand = src.candidates(m)
+        hit_files: set[str] = set()
+        if cand:
+            hit = (
+                _read_files(
+                    spark, path, m,
+                    [_entry_name(e) for e in cand], file_col="__file",
+                )
+                .select("__file", *keys)
+                .join(src.key_counts, keys, "inner")
+                .agg(
+                    F.collect_set("__file").alias("files"),
+                    F.max("__cnt").alias("max_cnt"),
+                )
+                .first()
+            )
+            src.check_unique(hit["max_cnt"])
+            hit_files = set(hit["files"])
+        carried, loose, affected = _split_manifests(
+            path, m, lambda e: os.path.basename(_entry_name(e)) in hit_files
+        )
+        return {
+            **fields,
+            **_cow_fields(
+                spark, path, v, m,
+                (carried, loose + src.files(v, m), affected),
+                lambda rows: rows.join(
+                    src.key_counts.select(*keys), keys, "left_anti"
+                ),
+            ),
+        }
+
+    return _occ_commit(path, attempt)
+
+
+class _MergeSource:
+    """The source side of ``MERGE INTO`` (CoW and MoR): the source, its
+    non-NULL key tuples with their multiplicity and per-key bounds
+    (computed on first use: a table-creating merge needs neither),
+    stats pruning of a version's files, and the source's files."""
+
+    def __init__(self, path: str, source: DataFrame, keys: list[str], who: str):
+        self.path, self.source, self.keys, self.who = path, source, keys, who
+        self._files: list[dict] | None = None
+
+    @functools.cached_property
+    def key_counts(self) -> DataFrame:
+        from pyspark.sql import functions as F
+
+        from qurio_spark.functions.checkpointing import checkpoint_df
+
+        counts = self.source.groupBy(*self.keys).agg(F.count("*").alias("__cnt"))
+        for k in self.keys:
+            counts = counts.filter(F.col(k).isNotNull())
+        return checkpoint_df(counts, eager=True)
+
+    @functools.cached_property
+    def bounds(self):
+        from pyspark.sql import functions as F
+
+        return self.key_counts.agg(*[
+            f for k in self.keys for f in (
+                F.min(k).alias(f"__mn_{k}"), F.max(k).alias(f"__mx_{k}"),
+            )
+        ]).first()
+
+    def candidates(self, m: dict) -> list:
+        """Entries of version ``m`` that may hold a matching key: a
+        file range-disjoint from the source's key bounds on ANY key
+        column cannot (rename-aware; names hoisted once per call)."""
+        if m.get("schema"):
+            table_cols = [f["name"] for f in m["schema"]["fields"]]
+            absent = [k for k in self.keys if k not in table_cols]
+            if absent:
+                raise ValueError(f"table is missing key columns {absent}")
+        b = self.bounds
+        names = {k: _stat_names(m, k) for k in self.keys}
+        return [
+            e for e in _manifest_entries(self.path, m)
+            if not any(
+                _range_disjoint_any(e, names[k], b[f"__mn_{k}"], b[f"__mx_{k}"])
+                for k in self.keys
+            )
+        ]
+
+    def check_unique(self, max_cnt) -> None:
+        """Delta's "multiple source rows matched" error: a duplicated
+        AND matched key tuple cannot update one target row."""
+        if max_cnt is not None and max_cnt > 1:
+            raise ValueError(
+                f"{self.who}: multiple source rows share a matched key "
+                "tuple — an update cannot replace one target row with "
+                "several"
+            )
+
+    def files(self, v: int | None, m: dict | None) -> list[dict]:
+        """The source's data files, written ONCE (a retry must not
+        re-write the source as orphans) and lazily, after the first
+        discovery pass (staged earlier, they would sit unreferenced
+        through the long join on a concurrent vacuum's grace clock)."""
+        if self._files is None:
+            self._files = _write_data_files(
+                self.source, self.path, 0 if v is None else v + 1,
+                bloom_cols=_inherit_bloom_cols(m, self.source),
+            )
+        return self._files
+
+
+def _merge_source(
+    path: str, source: DataFrame, keys: list[str], who: str,
+    txn: tuple[str, int] | None = None,
+) -> _MergeSource | None:
+    """The merge preamble: key checks, the ``txn`` replay pre-flight,
+    and the source checkpoint — None for a replay or an empty source
+    (no version is committed)."""
     from qurio_spark.functions.checkpointing import checkpoint_df
 
     if not keys:
-        raise ValueError("snap_merge needs at least one key column")
+        raise ValueError(f"{who} needs at least one key column")
     missing = [k for k in keys if k not in source.columns]
     if missing:
         raise ValueError(f"source is missing key columns {missing}")
@@ -2685,135 +2691,7 @@ def snap_merge(
     source = checkpoint_df(source, eager=True)
     if source.isEmpty():
         return None
-    if _latest_version(path) is None:
-        new_files = _write_data_files(source, path, 0)
-        name = _write_manifest_file(path, new_files)
-        if _try_commit(
-            path, 0,
-            {"version": 0, "op": "merge", "parent": None,
-             "manifests": [name],
-             "txn": {txn[0]: txn[1]} if txn is not None else {},
-             "schema": _evolved_schema(None, source, "append")},
-        ):
-            return 0
-        # lost the table-creation race: merge against the winner
-    src_keys = source.groupBy(*keys).agg(F.count("*").alias("__cnt"))
-    for k in keys:
-        src_keys = src_keys.filter(F.col(k).isNotNull())
-    src_keys = checkpoint_df(src_keys, eager=True)
-    bounds = src_keys.agg(
-        *[f for k in keys for f in (
-            F.min(k).alias(f"__mn_{k}"), F.max(k).alias(f"__mx_{k}"),
-        )]
-    ).first()
-
-    def _candidate(e, names_of) -> bool:
-        # disjoint on ANY key column proves no row can match (rename-
-        # aware: a file's stats sit under its write-time column name;
-        # names hoisted once per attempt, not per entry)
-        return not any(
-            _range_disjoint_any(
-                e, names_of[k], bounds[f"__mn_{k}"], bounds[f"__mx_{k}"]
-            )
-            for k in keys
-        )
-
-    # the source's data files are version-independent (uuid-unique
-    # names): written ONCE, lazily after the first discovery pass —
-    # an OCC retry must not re-shuffle and re-write the whole source
-    # as orphans, and staging before the (long) discovery join would
-    # expose unreferenced files to a concurrent vacuum's grace clock
-    src_files: list | None = None
-    for _attempt in range(_MAX_COMMIT_RETRIES):
-        _conflict_backoff(_attempt)
-        v = _latest_version(path)
-        m = _read_manifest(path, v)
-        if m.get("schema"):
-            table_cols = [f["name"] for f in m["schema"]["fields"]]
-            absent = [k for k in keys if k not in table_cols]
-            if absent:
-                raise ValueError(f"table is missing key columns {absent}")
-        parent_manifests = _carried_manifests(path, m)
-        key_names = {k: _stat_names(m, k) for k in keys}  # per attempt
-        cand = [
-            e
-            for name in parent_manifests
-            for e in _read_manifest_file(path, name)
-            if _candidate(e, key_names)
-        ]
-        affected_names: set[str] = set()
-        if cand:
-            hit = (
-                _read_files(
-                    spark, path, m,
-                    [_entry_name(e) for e in cand], file_col="__file",
-                )
-                .select("__file", *keys)
-                .join(src_keys, keys, "inner")
-                .agg(
-                    F.collect_set("__file").alias("files"),
-                    F.max("__cnt").alias("max_cnt"),
-                )
-                .first()
-            )
-            if hit["max_cnt"] is not None and hit["max_cnt"] > 1:
-                raise ValueError(
-                    "snap_merge: multiple source rows share a matched "
-                    "key tuple — an update cannot replace one target "
-                    "row with several"
-                )
-            affected_names = set(hit["files"])
-        carried, loose, affected = [], [], []
-        for name in parent_manifests:
-            entries = _read_manifest_file(path, name)
-            if all(
-                os.path.basename(_entry_name(e)) not in affected_names
-                for e in entries
-            ):
-                carried.append(name)
-            else:
-                for e in entries:
-                    (
-                        affected
-                        if os.path.basename(_entry_name(e)) in affected_names
-                        else loose
-                    ).append(e)
-        if src_files is None:
-            src_files = _write_data_files(
-                source, path, v + 1,
-                bloom_cols=_inherit_bloom_cols(m, source),
-            )
-        new_files = list(src_files)
-        if affected:
-            survivors = _read_files(
-                spark, path, m, [_entry_name(e) for e in affected]
-            ).join(src_keys.select(*keys), keys, "left_anti")
-            new_files += _write_data_files(
-                survivors, path, v + 1,
-                bloom_cols=_inherit_bloom_cols(m, survivors),
-            )
-        new_name = _write_manifest_file(path, loose + new_files)
-        txn_map = dict(m.get("txn", {}))
-        if txn is not None:
-            # re-check per attempt: a concurrent writer of the same app
-            # may have committed this batch since the pre-flight
-            if txn_map.get(txn[0], -1) >= txn[1]:
-                return None
-            txn_map[txn[0]] = txn[1]
-        if _try_commit(
-            path, v + 1,
-            {"version": v + 1, "op": "merge", "parent": v,
-             "manifests": carried + [new_name],
-             "txn": txn_map,
-             "schema": _evolved_schema(m.get("schema"), source, "append"),
-             **_dv_carry(m, {os.path.basename(n) for n in affected_names})},
-        ):
-            return v + 1
-        # lost the claim: matched files were computed against a stale
-        # version — rerun discovery against the new latest
-    raise RuntimeError(
-        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
-    )
+    return _MergeSource(path, source, keys, who)
 
 
 def snap_merge_mor(
@@ -2830,152 +2708,45 @@ def snap_merge_mor(
     tax is the usual DV anti-join; ``maybe_materialize`` folds the
     vectors away when it grows.
 
-    The position scan projects ONLY the key columns + parquet
-    metadata over stats-pruned candidate files, applies the prior
-    vectors first (a key matching only already-deleted rows is NOT
-    matched — it inserts, and no duplicate vector entry is written),
-    then joins the deduped source keys once.  Duplicated-AND-matched
-    source keys raise, like CoW merge.  Returns the new version, or
-    None for an empty source."""
+    The position scan (:func:`_mor_fields`) skips already-deleted rows,
+    so a key matching only those is NOT matched — it inserts, and no
+    duplicate vector entry is written.  Duplicated-AND-matched source
+    keys raise, like CoW merge.  Returns the new version, or None for
+    an empty source."""
     from pyspark.sql import functions as F
 
     from qurio_spark.functions.checkpointing import checkpoint_df
 
-    if not keys:
-        raise ValueError("snap_merge_mor needs at least one key column")
-    absent = [k for k in keys if k not in source.columns]
-    if absent:
-        raise ValueError(f"source is missing key columns {absent}")
-    source = checkpoint_df(source, eager=True)
-    if source.isEmpty():
+    src = _merge_source(path, source, keys, "snap_merge_mor")
+    if src is None:
         return None
-    if _latest_version(path) is None:
-        new_files = _write_data_files(source, path, 0)
-        name = _write_manifest_file(path, new_files)
-        if _try_commit(
-            path, 0,
-            {"version": 0, "op": "merge-mor", "parent": None,
-             "manifests": [name],
-             "schema": _evolved_schema(None, source, "append")},
-        ):
-            return 0
-    src_keys = source.groupBy(*keys).agg(F.count("*").alias("__cnt"))
-    for k in keys:
-        src_keys = src_keys.filter(F.col(k).isNotNull())
-    src_keys = checkpoint_df(src_keys, eager=True)
-    bounds = src_keys.agg(
-        *[f for k in keys for f in (
-            F.min(k).alias(f"__mn_{k}"), F.max(k).alias(f"__mx_{k}"),
-        )]
-    ).first()
 
-    def _candidate(e, names_of) -> bool:
-        return not any(
-            _range_disjoint_any(
-                e, names_of[k], bounds[f"__mn_{k}"], bounds[f"__mx_{k}"]
-            )
-            for k in keys
+    def matched(scan):
+        hits = checkpoint_df(
+            scan.join(src.key_counts, keys, "inner").select(
+                "file", "pos", "__cnt"
+            ),
+            eager=True,
         )
+        src.check_unique(hits.agg(F.max("__cnt")).first()[0])
+        return hits
 
-    # source data files: written once, lazily after discovery (see
-    # snap_merge)
-    src_files: list | None = None
-    for _attempt in range(_MAX_COMMIT_RETRIES):
-        _conflict_backoff(_attempt)
-        v = _latest_version(path)
-        m = _read_manifest(path, v)
-        if m.get("schema"):
-            table_cols = [f["name"] for f in m["schema"]["fields"]]
-            miss = [k for k in keys if k not in table_cols]
-            if miss:
-                raise ValueError(f"table is missing key columns {miss}")
-        key_names = {k: _stat_names(m, k) for k in keys}  # per attempt
-        cand = [
-            _entry_name(e)
-            for e in _manifest_entries(path, m)
-            if _candidate(e, key_names)
-        ]
-        moved: list[str] = []
-        new_counts: dict = {}
-        if cand:
-            scan = _pinned_reader(spark, m).parquet(
-                *[os.path.join(path, f) for f in cand]
-            ).select(
-                F.col("_metadata.file_name").alias("file"),
-                F.col("_metadata.row_index").alias("pos"),
-                *[
-                    F.coalesce(
-                        *[F.col(n) for n in key_names[k]]
-                    ).alias(k)
-                    for k in keys
-                ],
-            )
-            prior = m.get("dvs", [])
-            if prior:
-                old = spark.read.parquet(
-                    *[os.path.join(path, n) for n in prior]
-                ).select("file", "pos")
-                if m.get("dv_rows", 0) <= _BROADCAST_DV_ROWS:
-                    old = F.broadcast(old)
-                scan = scan.join(old, ["file", "pos"], "left_anti")
-            hits = checkpoint_df(
-                scan.join(src_keys, keys, "inner").select(
-                    "file", "pos", "__cnt"
-                ),
-                eager=True,
-            )
-            mx_cnt = hits.agg(F.max("__cnt")).first()[0]
-            if mx_cnt is not None and mx_cnt > 1:
-                raise ValueError(
-                    "snap_merge_mor: multiple source rows share a "
-                    "matched key tuple — an update cannot replace one "
-                    "target row with several"
-                )
-            moved, new_counts = _stage_dvs(spark, path, hits, len(cand))
-        if src_files is None:
-            src_files = _write_data_files(
-                source, path, v + 1,
-                bloom_cols=_inherit_bloom_cols(m, source),
-            )
-        new_name = _write_manifest_file(path, src_files)
-        dv_meta = _dv_carry(m)  # nothing rewritten: carry verbatim
-        if moved:
-            if dv_meta and "dv_counts" not in dv_meta:
-                # legacy parent ledger (dvs without per-file counts):
-                # extend the list, keep the row total additive
-                dv_meta = {
-                    "dvs": dv_meta["dvs"] + moved,
-                    "dv_rows": dv_meta["dv_rows"]
-                    + sum(new_counts.values()),
-                }
-            else:
-                counts = dict(dv_meta.get("dv_counts", {}))
-                for f, n in new_counts.items():
-                    counts[f] = counts.get(f, 0) + n
-                dv_meta = {
-                    "dvs": dv_meta.get("dvs", []) + moved,
-                    "dv_counts": counts,
-                    "dv_rows": sum(counts.values()),
-                }
-        if _try_commit(
-            path, v + 1,
-            {"version": v + 1, "op": "merge-mor", "parent": v,
-             "manifests": _carried_manifests(path, m) + [new_name],
-             "txn": dict(m.get("txn", {})),
-             "schema": _evolved_schema(m.get("schema"), source, "append"),
-             **dv_meta},
-        ):
-            return v + 1
-        # lost the claim: positions were computed against a stale
-        # version — drop our unreferenced vectors and redo
-        for n in moved:
-            try:
-                os.remove(os.path.join(path, n))
-            except FileNotFoundError:
-                pass
-    raise RuntimeError(
-        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
-    )
+    def attempt(v, m):
+        dv = {}
+        if m is not None:  # else the first call: the source IS the table
+            cand = [_entry_name(e) for e in src.candidates(m)]
+            dv = _mor_fields(spark, path, m, cand, {k: k for k in keys}, matched)
+        # nothing rewritten: the parent's manifests carry verbatim
+        return {
+            "op": "merge-mor",
+            "schema": _evolved_schema((m or {}).get("schema"), src.source, "append"),
+            "manifests": _carried_manifests(path, m) + [
+                _write_manifest_file(path, src.files(v, m))
+            ],
+            **dv,
+        }
+
+    return _occ_commit(path, attempt)
 
 
 def snap_update_where(
@@ -2999,65 +2770,17 @@ def snap_update_where(
     prove no file holds a matching row."""
     from pyspark.sql import functions as F
 
-    for _attempt in range(_MAX_COMMIT_RETRIES):
-        _conflict_backoff(_attempt)
-        v = _latest_version(path)
-        if v is None:
-            raise FileNotFoundError(f"no snapshot table at {path}")
-        m = _read_manifest(path, v)
-        if m.get("schema"):
-            table_cols = [f["name"] for f in m["schema"]["fields"]]
-            unknown = [c for c in set_exprs if c not in table_cols]
-            if unknown:
-                raise ValueError(f"UPDATE SET on unknown columns {unknown}")
-        names = _stat_names(m, col)  # hoisted once per attempt
-        carried, loose, affected = [], [], []
-        for name in _carried_manifests(path, m):
-            entries = _read_manifest_file(path, name)
-            if all(_range_disjoint_any(e, names, lo, hi) for e in entries):
-                carried.append(name)
-            else:
-                for e in entries:
-                    (
-                        loose
-                        if _range_disjoint_any(e, names, lo, hi)
-                        else affected
-                    ).append(e)
-        if not affected:
-            return None
-        # NULL predicate values never match — even with both bounds
-        # open, NULL rows pass through unchanged (the documented
-        # contract, and snap_delete_where's behavior)
-        matched = F.col(col).isNotNull()
-        if lo is not None:
-            matched = matched & (F.col(col) >= F.lit(lo))
-        if hi is not None:
-            matched = matched & (F.col(col) <= F.lit(hi))
-        rows = _read_files(spark, path, m, [_entry_name(e) for e in affected])
+    def update(rows, match):
         types = {f.name: f.dataType for f in rows.schema.fields}
-        rows = rows.withColumns(
+        return rows.withColumns(
             {
-                c: F.when(matched, expr.cast(types[c])).otherwise(F.col(c))
+                c: F.when(match, expr.cast(types[c])).otherwise(F.col(c))
                 for c, expr in set_exprs.items()
             }
         )
-        new_files = _write_data_files(
-            rows, path, v + 1, bloom_cols=_inherit_bloom_cols(m, rows)
-        )
-        new_name = _write_manifest_file(path, loose + new_files)
-        if _try_commit(
-            path, v + 1,
-            {"version": v + 1, "op": "update", "parent": v,
-             "manifests": carried + [new_name],
-             "txn": dict(m.get("txn", {})), "schema": m.get("schema"),
-             **_dv_carry(
-                 m,
-                 {os.path.basename(_entry_name(e)) for e in affected},
-             )},
-        ):
-            return v + 1
-    raise RuntimeError(
-        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
+
+    return _range_rewrite(
+        spark, path, "update", col, lo, hi, update, set_cols=list(set_exprs)
     )
 
 
@@ -3086,12 +2809,9 @@ def snap_compact(
     into a multi-dimensionally skippable layout."""
     import math
 
-    for _attempt in range(_MAX_COMMIT_RETRIES):
-        _conflict_backoff(_attempt)
-        v = _latest_version(path)
-        if v is None:
+    def attempt(v, m):
+        if m is None:
             raise FileNotFoundError(f"no snapshot table at {path}")
-        m = _read_manifest(path, v)
         if m.get("clustered"):
             # VALUE-CLUSTERED table (snap_replace_values cluster=True /
             # agg views): bin-packing would merge value-exact files and
@@ -3101,8 +2821,7 @@ def snap_compact(
         small, kept = [], []
         total_small = 0
         for e in _manifest_entries(path, m):
-            fpath = os.path.join(path, _entry_name(e))
-            size = os.path.getsize(fpath)
+            size = os.path.getsize(os.path.join(path, _entry_name(e)))
             if size < small_bytes:
                 small.append(e)
                 total_small += size
@@ -3111,29 +2830,16 @@ def snap_compact(
         if len(small) < 2:
             return None
         n_out = max(1, math.ceil(total_small / target_bytes))
-        # the packed read applies deletion vectors: compaction must
-        # not resurrect MOR-deleted rows into the rewritten files
-        packed = _read_files(
-            spark, path, m, [_entry_name(e) for e in small]
-        ).coalesce(n_out)
-        new_files = _write_data_files(
-            packed, path, v + 1, zorder_by=zorder_by,
-            bloom_cols=_inherit_bloom_cols(m, packed),
-        )
-        new_name = _write_manifest_file(path, kept + new_files)
-        if _try_commit(
-            path, v + 1,
-            {"version": v + 1, "op": "compact", "parent": v,
-             "manifests": [new_name], "txn": dict(m.get("txn", {})),
-             "schema": m.get("schema"),
-             **_dv_carry(
-                 m, {os.path.basename(_entry_name(e)) for e in small}
-             )},
-        ):
-            return v + 1
-    raise RuntimeError(
-        f"commit contention on {path}: {_MAX_COMMIT_RETRIES} retries lost"
-    )
+        # every manifest folds into one: kept entries + packed files
+        return {
+            "op": "compact",
+            **_cow_fields(
+                spark, path, v, m, ([], kept, small),
+                lambda rows: rows.coalesce(n_out), zorder_by=zorder_by,
+            ),
+        }
+
+    return _occ_commit(path, attempt)
 
 
 def snap_append_validated(

@@ -424,3 +424,51 @@ class TestBloomSurvivesDml:
         snap_append(self._mk(spark, 100, 200).coalesce(1), path)
         cols, bloomed, total = self._all_bloomed(path)
         assert cols is None and bloomed == 0
+
+    @pytest.mark.parametrize("txn", [False, True])
+    def test_append_lacking_a_bloom_column_keeps_the_property(
+        self, spark, tmp_path, txn
+    ):
+        """A plain append whose batch lacks one of the table's bloom
+        columns blooms what it has and leaves the table property
+        whole: a later batch that carries the column blooms it again,
+        so eq-probes keep pruning its files."""
+        from qurio_spark.plans.snapshots import (
+            _latest_version,
+            _manifest_entries,
+            snap_append_txn,
+        )
+
+        def append(df, batch):
+            if txn:
+                return snap_append_txn(df, path, "app", batch)
+            return snap_append(df, path)
+
+        path = str(tmp_path / "narrow")
+        both = spark.range(0, 100).select(
+            F.col("id").alias("a"), (F.col("id") * 7).alias("b")
+        )
+        snap_append(both.coalesce(1), path, bloom_cols=["a", "b"])
+        append(spark.range(100, 200).select(F.col("id").alias("a")), 0)
+        assert _read_manifest(path, 1)["bloom_cols"] == ["a", "b"]
+        append(
+            spark.range(200, 300).select(
+                F.col("id").alias("a"), (F.col("id") * 7).alias("b")
+            ).coalesce(1),
+            1,
+        )
+        m = _read_manifest(path, _latest_version(path))
+        assert m["bloom_cols"] == ["a", "b"]
+        last = [
+            e for e in _manifest_entries(path, m)
+            if os.path.basename(e["name"]).startswith("c2-")
+        ]
+        assert last and all(
+            set(e["bloom"]["cols"]) == {"a", "b"} for e in last
+        )
+        names = {e["name"] for e in last}
+        hit = snap_scan_files(path, {}, spark=spark, eq={"b": 250 * 7})
+        assert names <= set(hit)
+        # in the last batch's b range but absent: its bloom prunes it
+        miss = snap_scan_files(path, {}, spark=spark, eq={"b": 1401})
+        assert not names & set(miss)

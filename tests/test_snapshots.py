@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from qurio_spark.plans import snapshots as S
 from qurio_spark.plans.snapshots import (
     snap_append,
     snap_overwrite,
@@ -1612,3 +1613,169 @@ class TestRenameColumn:
             (r["dt"], r["v"]) for r in snap_read(spark, path).collect()
         )
         assert got == [("d1", i) for i in range(5)] + [("d2", 99)]
+
+
+# -- lost claims: every committing op re-runs against the winner --------
+
+_RACE_SCHEMA = "k long, x long, s string"
+#: the concurrent writer's row: outside every op's predicate and keys
+_RACE_ROW = (100, 1000, "c")
+#: live rows of the raced base table (k = 8 is masked by a vector)
+_RACE_BASE = [(k, 10 * k, "a" if k < 5 else "b") for k in range(10) if k != 8]
+
+
+def _race_rows(df):
+    cols = sorted(df.columns)
+    return sorted(tuple((c, r[c]) for c in cols) for r in df.collect())
+
+
+def _as_rows(tuples, cols=("k", "x", "s")):
+    return sorted(
+        tuple(sorted(zip(cols, t))) for t in tuples
+    )
+
+
+def _race_frame(spark, rows):
+    return spark.createDataFrame(rows, _RACE_SCHEMA).coalesce(1)
+
+
+def _update_k_0_2(spark, path):
+    from qurio_spark.plans.snapshots import snap_update_where
+
+    return snap_update_where(spark, path, {"x": F.lit(-1)}, "k", 0, 2)
+
+
+def _replace_k_0_1(spark, path):
+    from qurio_spark.plans.snapshots import snap_replace_values
+
+    return snap_replace_values(
+        spark, path, "k", [0, 1],
+        _race_frame(spark, [(0, -5, "r"), (1, -5, "r")]),
+    )
+
+
+_MERGE_SOURCE = [(1, -7, "m"), (50, 500, "m")]
+_MERGED = [r for r in _RACE_BASE if r[0] != 1] + _MERGE_SOURCE
+
+
+#: (op callable, manifest op name, expected rows over base + the
+#: concurrent row, expected columns)
+_RACED_OPS = {
+    "delete_where": (
+        lambda spark, p: S.snap_delete_where(spark, p, "k", 0, 2),
+        "delete", [r for r in _RACE_BASE if r[0] > 2] + [_RACE_ROW], None,
+    ),
+    "delete_where_mor": (
+        lambda spark, p: S.snap_delete_where_mor(spark, p, "k", 0, 2),
+        "delete-mor", [r for r in _RACE_BASE if r[0] > 2] + [_RACE_ROW],
+        None,
+    ),
+    "update_where": (
+        _update_k_0_2, "update",
+        [(k, -1 if k <= 2 else x, s) for k, x, s in _RACE_BASE]
+        + [_RACE_ROW], None,
+    ),
+    "replace_values": (
+        _replace_k_0_1, "replace",
+        [r for r in _RACE_BASE if r[0] > 1]
+        + [(0, -5, "r"), (1, -5, "r"), _RACE_ROW], None,
+    ),
+    "merge": (
+        lambda spark, p: S.snap_merge(
+            spark, p, _race_frame(spark, _MERGE_SOURCE), ["k"]
+        ),
+        "merge", _MERGED + [_RACE_ROW], None,
+    ),
+    "merge_mor": (
+        lambda spark, p: S.snap_merge_mor(
+            spark, p, _race_frame(spark, _MERGE_SOURCE), ["k"]
+        ),
+        "merge-mor", _MERGED + [_RACE_ROW], None,
+    ),
+    "materialize_dvs": (
+        lambda spark, p: S.snap_materialize_dvs(spark, p),
+        "materialize", _RACE_BASE + [_RACE_ROW], None,
+    ),
+    "compact": (
+        lambda spark, p: S.snap_compact(spark, p),
+        "compact", _RACE_BASE + [_RACE_ROW], None,
+    ),
+    "drop_column": (
+        lambda spark, p: S.snap_drop_column(p, "s"),
+        "drop_column", [(k, x) for k, x, _ in _RACE_BASE + [_RACE_ROW]],
+        ("k", "x"),
+    ),
+    "rename_column": (
+        lambda spark, p: S.snap_rename_column(p, "s", "t"),
+        "rename_column", _RACE_BASE + [_RACE_ROW], ("k", "x", "t"),
+    ),
+    "restore": (
+        lambda spark, p: S.snap_restore(p, 0),
+        "restore", [r for r in _RACE_BASE if r[0] < 5], None,
+    ),
+    "append_txn": (
+        lambda spark, p: S.snap_append_txn(
+            _race_frame(spark, [(200, 2000, "t")]), p, "app", 0
+        ),
+        "append", _RACE_BASE + [_RACE_ROW, (200, 2000, "t")], None,
+    ),
+    "overwrite": (
+        lambda spark, p: S.snap_overwrite(
+            _race_frame(spark, [(300, 3000, "o")]), p
+        ),
+        "overwrite", [(300, 3000, "o")], None,
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def raced_base(spark, tmp_path_factory):
+    """Built once per module: v0 = k 0..4, v1 = k 5..9 (two small
+    files), v2 = a merge-on-read delete of k = 8 (a live vector)."""
+    path = str(tmp_path_factory.mktemp("raced") / "base")
+    S.snap_append(_race_frame(spark, [r for r in _RACE_BASE if r[0] < 5]), path)
+    S.snap_append(
+        _race_frame(
+            spark, [(k, 10 * k, "b") for k in range(5, 10)]
+        ),
+        path,
+    )
+    S.snap_delete_where_mor(spark, path, "k", 8, 8)
+    return path
+
+
+@pytest.mark.parametrize("name", sorted(_RACED_OPS))
+def test_lost_claim_reruns_against_the_winner(
+    spark, raced_base, tmp_path, monkeypatch, name
+):
+    """The op's first claim loses to a concurrent append of a row the
+    op does not touch: the op re-runs against the winner's version,
+    commits right after it, keeps the winner's row (unless the op
+    replaces the whole content) and leaves no staged vector behind."""
+    import shutil
+
+    fn, op, expected, cols = _RACED_OPS[name]
+    path = str(tmp_path / "t")
+    shutil.copytree(raced_base, path)
+    v = S._latest_version(path)
+    real = S._try_commit
+    raced = []
+
+    def racing(p, version, manifest):
+        if not raced:
+            raced.append(version)
+            S.snap_append(_race_frame(spark, [_RACE_ROW]), p)
+        return real(p, version, manifest)
+
+    monkeypatch.setattr(S, "_try_commit", racing)
+    assert fn(spark, path) == v + 2
+    monkeypatch.undo()
+    assert raced == [v + 1]
+    assert [h["op"] for h in snap_versions(path)][-2:] == ["append", op]
+    got = _race_rows(snap_read(spark, path))
+    assert got == _as_rows(expected, cols or ("k", "x", "s"))
+    assert S.snap_count(path) == len(got)
+    if op.endswith("-mor"):
+        m = S._read_manifest(path, v + 2)
+        staged = {f"dv/{f}" for f in os.listdir(os.path.join(path, "dv"))}
+        assert staged <= set(m["dvs"])
