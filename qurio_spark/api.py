@@ -15,18 +15,32 @@ and the JSON-RPC error codes (handler.go:90-96).  The HTTP transport
 e2e test; online serving remains a test/demo surface per BASELINE.json.
 
 The engine serves a prepared snapshot of the chunk frame it was given:
-the first search persists ``chunks`` with each chunk's id and BM25
-term statistics (:func:`prepare_chunks`), and every search runs
-against that snapshot.  Assigning a new frame to ``Engine.chunks``
-releases the snapshot at the next search, which prepares the new
-frame.  A search runs three Spark actions, none of which shuffles the
-corpus; their jobs are labelled ``qurio_search:stats``,
-``qurio_search:bm25_range`` and ``qurio_search:topk``.
+the first search (or page read) builds ``chunks`` with each chunk's id
+and BM25 term statistics (:func:`prepare_chunks`), and every search
+runs against that snapshot.  Assigning a new frame to ``Engine.chunks``
+releases the snapshot at the next call, which prepares the new frame.
+
+The snapshot lives in one of two tiers, chosen once per frame by
+:func:`resident_tier`:
+
+* resident: when its Arrow size fits ``spark.driver.maxResultSize``
+  (the bound Spark puts on collecting it; 0 means unlimited), the
+  snapshot is collected to the driver (job ``qurio_search:snapshot``)
+  as a ``resident.ResidentSnapshot``.  Searches and page reads then
+  run no Spark job, with results bit-identical to the Spark tier.
+* Spark: otherwise the snapshot stays a persisted DataFrame.  A search
+  runs three Spark actions, none of which shuffles the corpus,
+  labelled ``qurio_search:stats``, ``qurio_search:bm25_range`` and
+  ``qurio_search:topk``; a page read is one job over ``chunks``.
+
+Preparing logs the chosen tier, the row count and the snapshot bytes
+(logger ``qurio_spark.api``, level INFO).
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import threading
 import time
 from dataclasses import dataclass, field
@@ -40,6 +54,9 @@ from qurio_spark.operators.catalog import QueryLogger, list_sources
 from qurio_spark.operators.hybrid import hybrid_search
 from qurio_spark.operators.pages import read_page
 from qurio_spark.operators.rerank import IdentityReranker, Reranker, apply_rerank
+from qurio_spark.operators.resident import ResidentSnapshot, snapshot_bytes
+
+_log = logging.getLogger(__name__)
 
 # JSON-RPC error codes (mcp/handler.go:90-96)
 ERR_PARSE = -32700
@@ -62,11 +79,27 @@ TOOLS = [
 ]
 
 
-def prepare_chunks(chunks: DataFrame) -> DataFrame:
-    """The frame searches run against: every chunk column (results and
-    filterable metadata) plus ``chunk_id`` (``url#chunk_index``) and the
-    BM25 ``tf``/``dl`` columns, coalesced to the default parallelism,
-    persisted and materialized before it is returned."""
+def resident_tier(spark, n_bytes: int) -> bool:
+    """The tier choice: whether a snapshot of ``n_bytes`` (its Arrow
+    size) is served from the driver.  The ceiling is Spark's own bound
+    on collecting it, ``spark.driver.maxResultSize`` (0: unlimited)."""
+    conf = spark.sparkContext.getConf().get("spark.driver.maxResultSize", "1g")
+    cap = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
+    return cap == 0 or n_bytes <= cap
+
+
+def prepare_chunks(chunks: DataFrame) -> DataFrame | ResidentSnapshot:
+    """The snapshot searches run against: every chunk column (results
+    and filterable metadata) plus ``chunk_id`` (``url#chunk_index``)
+    and the BM25 ``tf``/``dl`` columns.
+
+    One aggregate (job ``qurio_search:prepare``) materializes the frame,
+    persisted and coalesced to the default parallelism, and measures
+    its rows and Arrow bytes.  On the resident tier the frame is then
+    collected (``qurio_search:snapshot``) into a ``ResidentSnapshot``
+    and unpersisted; on the Spark tier, or when the collect outgrows
+    ``spark.driver.maxResultSize`` after all, the persisted frame is
+    returned."""
     spark = chunks.sparkSession
     prepared = (
         bm25_op.with_term_freqs(
@@ -76,7 +109,22 @@ def prepare_chunks(chunks: DataFrame) -> DataFrame:
         .persist()
     )
     with job_description(spark, "qurio_search:prepare"):
-        prepared.count()
+        n_rows, n_bytes = prepared.agg(
+            F.count("*"), snapshot_bytes(prepared.schema)
+        ).collect()[0]
+    tier = "spark"
+    if resident_tier(spark, n_bytes):
+        try:
+            with job_description(spark, "qurio_search:snapshot"):
+                table = prepared.toArrow()
+        except Exception as e:  # the size estimate fell short: Spark tier
+            if "maxResultSize" not in str(e):
+                raise
+        else:
+            prepared.unpersist()
+            prepared = ResidentSnapshot(table, prepared)
+            tier = "resident"
+    _log.info("qurio_search snapshot: tier=%s rows=%d bytes=%d", tier, n_rows, n_bytes)
     return prepared
 
 
@@ -91,18 +139,18 @@ class Engine:
     embedder: Embedder = field(default_factory=HashingEmbedder)
     reranker: Reranker = field(default_factory=IdentityReranker)
     logger: QueryLogger | None = None
-    # (source frame, its prepared snapshot), built on the first search
-    _prepared: tuple[DataFrame, DataFrame] | None = field(
+    # (source frame, its prepared snapshot), built on the first call
+    _prepared: tuple[DataFrame, DataFrame | ResidentSnapshot] | None = field(
         default=None, init=False, repr=False, compare=False
     )
     _prepare_lock: threading.Lock = field(
         default_factory=threading.Lock, init=False, repr=False, compare=False
     )
 
-    def _search_frame(self) -> DataFrame:
+    def _search_frame(self) -> DataFrame | ResidentSnapshot:
         """The prepared snapshot of ``self.chunks``.  Built once under a
-        lock, so concurrent first searches share one build; rebuilt, and
-        the old snapshot unpersisted, once ``chunks`` is reassigned."""
+        lock, so concurrent first calls share one build; rebuilt, and
+        the old snapshot released, once ``chunks`` is reassigned."""
         with self._prepare_lock:
             if self._prepared is not None and self._prepared[0] is not self.chunks:
                 self._release()
@@ -111,12 +159,12 @@ class Engine:
             return self._prepared[1]
 
     def _release(self) -> None:
-        if self._prepared is not None:
+        if self._prepared is not None and isinstance(self._prepared[1], DataFrame):
             self._prepared[1].unpersist()
-            self._prepared = None
+        self._prepared = None
 
     def close(self) -> None:
-        """Unpersist the prepared snapshot; a later search prepares anew."""
+        """Release the prepared snapshot; a later call prepares anew."""
         with self._prepare_lock:
             self._release()
 
@@ -154,7 +202,8 @@ class Engine:
                         "chunk_index", "type", "language"],
             job_label="qurio_search",
         )
-        with job_description(frame.sparkSession, "qurio_search:topk"):
+        label = "qurio_search:topk" if isinstance(res, DataFrame) else None
+        with job_description(self.chunks.sparkSession, label):
             rows = [r.asDict() for r in res.collect()]
         for r in rows:
             r["score"] = float(r["score"])
@@ -275,7 +324,8 @@ class Engine:
         url = args.get("url")
         if not url:
             return _err(rid, ERR_INVALID_PARAMS, "url is required")
-        text = read_page(self.chunks, url)
+        frame = self._search_frame()
+        text = read_page(frame if isinstance(frame, ResidentSnapshot) else self.chunks, url)
         return _tool_text(rid, text if text else "No content found for this URL.")
 
 

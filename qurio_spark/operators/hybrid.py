@@ -16,16 +16,21 @@ Weaviate's relative-score fusion, store.go:107-110 / SURVEY §4):
   5. top-k by fused score desc, id asc (deterministic tiebreak).
 
 Scale: the filter runs before any scoring (partition pruning on
-source_id-partitioned chunks).  ``hybrid_search`` then runs three
-actions over the candidate set, none of which shuffles rows: a one-row
-aggregate for the collection statistics (N, avgdl, df of each query
-term) and the cosine range, a one-row aggregate for the BM25 range,
-and the top-k as one TakeOrdered.  BM25 is a column expression over
-per-document term-frequency maps (``bm25.with_term_freqs``), and every
-statistic and normalization constant reaches it as a driver-side
-literal.  The serving engine (``api.Engine``) prepares those maps once
-per chunk frame, so a request pays only for its own query.  Nothing
-here grows with corpus size except the pruned candidate scans.
+source_id-partitioned chunks).  Over a DataFrame, ``hybrid_search``
+then runs three actions over the candidate set, none of which shuffles
+rows: a one-row aggregate for the collection statistics (N, avgdl, df
+of each query term) and the cosine range, a one-row aggregate for the
+BM25 range, and the top-k as one TakeOrdered.  BM25 is a column
+expression over per-document term-frequency maps
+(``bm25.with_term_freqs``), and every statistic and normalization
+constant reaches it as a driver-side literal.  Nothing here grows with
+corpus size except the pruned candidate scans.
+
+The serving engine (``api.Engine``) prepares those maps once per chunk
+frame.  Below the driver's result-size ceiling it collects them into a
+``resident.ResidentSnapshot``; ``hybrid_search`` over a snapshot runs
+no Spark job and returns the same rows, bit for bit, as the three
+actions would (``resident`` module doc).
 
 The batch forms (``hybrid_search_batch`` over corpus x queries, and
 ``hybrid_search_batch_ivf`` over IVF-probed candidates plus keyword
@@ -35,6 +40,8 @@ matches) score a table of queries at once; both end in one fusion step,
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from qurio_spark.functions.checkpointing import checkpoint_df
@@ -43,6 +50,9 @@ from qurio_spark.functions.numeric import stable_round
 from qurio_spark.functions.vector import cosine, literal_vector
 from qurio_spark.operators import bm25 as bm25_op
 from qurio_spark.schemas import DEFAULT_SETTINGS
+
+if TYPE_CHECKING:  # imported by the serving engine only: keeps pyarrow out of workers
+    from qurio_spark.operators.resident import ResidentSnapshot, TopK
 
 
 def apply_metadata_filters(df: DataFrame, filters: dict[str, str] | None) -> DataFrame:
@@ -81,7 +91,7 @@ def _minmax(x: Column, lo: float | None, hi: float | None) -> Column:
 
 
 def hybrid_search(
-    docs: DataFrame,
+    docs: DataFrame | ResidentSnapshot,
     query_text: str,
     query_vec: list[float],
     alpha: float | None = None,
@@ -94,8 +104,13 @@ def hybrid_search(
     extra_cols: list[str] | None = None,
     bm25_index=None,
     job_label: str | None = None,
-) -> DataFrame:
+) -> DataFrame | TopK:
     """-> top-k (id, bm25_norm, vec_norm, score [, extra_cols]) rows.
+
+    ``docs`` may be a ``ResidentSnapshot``: the top-k is then computed
+    on the driver and returned as a ``TopK``, whose ``collect()`` gives
+    the rows the Spark path would.  A search the snapshot cannot answer
+    exactly (``ResidentSnapshot.serves``) runs over its ``frame``.
 
     ``docs`` must carry text + embedding columns (join chunks with their
     vectors upstream if stored separately).  It is read once per action,
@@ -117,6 +132,11 @@ def hybrid_search(
     candidates, and one aggregate gives both ranges.
     """
     a, k = resolve_params(alpha, limit, settings)
+    if not isinstance(docs, DataFrame):  # a ResidentSnapshot
+        cols = extra_cols or []
+        if bm25_index is None and docs.serves(filters, query_vec, id_col, vec_col, cols):
+            return docs.top_k(query_text, query_vec, a, k, filters, cols)
+        docs = docs.frame
     cand = apply_metadata_filters(docs, filters)
     cos = cosine(F.col(vec_col), literal_vector(query_vec))
 

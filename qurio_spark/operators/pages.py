@@ -8,6 +8,12 @@ giving code chunks a ``--- Code (lang) ---`` header
 Spark shape: groupBy(page) + collect_list(struct(order, content)) +
 array_sort + concat — one shuffle keyed by the page, each group small
 (<= 1000 chunks by the reference's own limit), so no skew concern.
+
+``read_page`` reads one page from a chunk DataFrame (a filtered,
+ordered, limited collect: one Spark job) or from the serving engine's
+driver-resident snapshot (``resident.ResidentSnapshot``, which keeps
+each URL's rows in ``chunk_index`` order: no Spark job).  Both go
+through one formatter, :func:`format_page`.
 """
 
 from __future__ import annotations
@@ -47,7 +53,7 @@ def reconstruct_pages(
 
 
 def read_page(
-    chunks: DataFrame,
+    chunks,
     url: str,
     url_col: str = "url",
     order_col: str = "chunk_index",
@@ -56,24 +62,36 @@ def read_page(
     lang_col: str = "language",
 ) -> str:
     """Single-page reconstruction with the reference's code-chunk
-    formatting (mcp/handler.go:490-545): code/config/cmd/api chunks are
-    introduced by ``--- Code (lang) ---`` headers.
+    formatting (:func:`format_page`).
 
-    Returns the stitched text (driver-side; the per-URL filter is
-    partition-prunable when chunks are partitioned by source).
-    """
+    ``chunks``: a chunk DataFrame (the per-URL filter is
+    partition-prunable when chunks are partitioned by source) or a
+    ``ResidentSnapshot``, whose page index is keyed by ``url`` and
+    ordered by ``chunk_index``."""
+    cols = [content_col, type_col, lang_col]
+    if not isinstance(chunks, DataFrame):
+        if (url_col, order_col) != ("url", "chunk_index"):
+            raise ValueError("a resident snapshot indexes pages by url and chunk_index")
+        return format_page(chunks.page_rows(url, cols))
     rows = (
         chunks.filter(F.col(url_col) == url)
         .orderBy(F.asc(order_col))
         .limit(READ_PAGE_CHUNK_LIMIT)
-        .select(content_col, type_col, lang_col)
+        .select(*cols)
         .collect()
     )
+    return format_page(tuple(r) for r in rows)
+
+
+def format_page(rows) -> str:
+    """(content, type, language) rows, in page order -> the page text
+    (mcp/handler.go:490-545): code/config/cmd/api chunks are introduced
+    by ``--- Code (lang) ---`` headers, chunks are joined by a blank
+    line."""
     parts = []
-    for r in rows:
-        if r[type_col] in ("code", "config", "cmd", "api"):
-            lang = r[lang_col] or r[type_col]
-            parts.append(f"--- Code ({lang}) ---\n{r[content_col]}")
+    for content, kind, lang in rows:
+        if kind in ("code", "config", "cmd", "api"):
+            parts.append(f"--- Code ({lang or kind}) ---\n{content}")
         else:
-            parts.append(r[content_col])
+            parts.append(content)
     return "\n\n".join(parts)

@@ -2131,7 +2131,9 @@ def _stage_dvs(
     file count sized from the candidate scan, not a constant) and
     return ``(moved sidecar names, per-file deleted-row counts)`` —
     the exact ledger ``snap_count`` subtracts and rewrite commits
-    prune file-by-file.  Empty hits stage nothing."""
+    prune file-by-file.  Empty hits stage nothing, and run no job after
+    the staging write: the per-file counts are read back only when a
+    staged file holds rows."""
     import math
 
     import pyarrow.parquet as pq
@@ -2146,26 +2148,31 @@ def _stage_dvs(
         .write.mode("overwrite")
         .parquet(staging)
     )
-    new_counts = {
-        r["file"]: r["n"]
-        for r in spark.read.parquet(staging)
-        .groupBy("file")
-        .agg(F.count("*").alias("n"))
-        .collect()
+    staged = sorted(os.listdir(staging))
+    rows = {
+        f: pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
+        for f in staged if f.endswith(".parquet")
     }
+    new_counts = {}
+    if any(rows.values()):
+        new_counts = {
+            r["file"]: r["n"]
+            for r in spark.read.parquet(staging)
+            .groupBy("file")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
     dv_dir = os.path.join(path, "dv")
     os.makedirs(dv_dir, exist_ok=True)
     moved: list[str] = []
-    for f in sorted(os.listdir(staging)):
+    for f in staged:
         src = os.path.join(staging, f)
-        if f.endswith(".parquet") and new_counts:
-            n = pq.ParquetFile(src).metadata.num_rows
-            if n:
-                name = f"dv-{uuid.uuid4().hex}.parquet"
-                os.rename(src, os.path.join(dv_dir, name))
-                moved.append(f"dv/{name}")
-                continue
-        os.remove(src)
+        if rows.get(f):
+            name = f"dv-{uuid.uuid4().hex}.parquet"
+            os.rename(src, os.path.join(dv_dir, name))
+            moved.append(f"dv/{name}")
+        else:
+            os.remove(src)
     os.rmdir(staging)
     return moved, new_counts
 

@@ -86,6 +86,29 @@ def test_noop_when_no_row_matches(spark, table):
     assert _read_manifest(table, _latest_version(table))["dv_rows"] == 2
 
 
+def test_repeated_mor_delete_reads_no_empty_staging(spark, table):
+    """A repeated MoR delete (every matching row is already deleted)
+    stages no position, so it does not read the empty staging directory
+    back: 3 jobs, where re-reading it cost 2 more.  The first delete's
+    manifest is the same either way, and the repeat commits nothing."""
+    sc = spark.sparkContext
+    v = snap_delete_where_mor(spark, table, "v", lo=3, hi=12)
+    m = _read_manifest(table, v)
+    assert m["dv_rows"] == 10 and sorted(m["dv_counts"].values()) == [3, 7]
+    sc.setLocalProperty("spark.jobGroup.id", "test-dv-repeat")
+    try:
+        assert snap_delete_where_mor(spark, table, "v", lo=3, hi=12) is None
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("test-dv-repeat")) <= 3
+    assert _latest_version(table) == v and _read_manifest(table, v) == m
+    assert sorted(os.listdir(os.path.join(table, "dv"))) == sorted(
+        os.path.basename(f) for f in m["dvs"]
+    )
+    assert not [f for f in os.listdir(table) if f.startswith("_dvstaging-")]
+
+
 def test_null_rows_survive(spark, tmp_path):
     path = str(tmp_path / "n")
     df = spark.createDataFrame([(1,), (2,), (None,)], "v long")

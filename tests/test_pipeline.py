@@ -27,6 +27,7 @@ from qurio_spark.operators.catalog import (
     soft_delete_source,
     stats,
 )
+from qurio_spark.operators.resident import ResidentSnapshot
 from qurio_spark.plans.pipeline import build_chunks, ingest
 from qurio_spark.schemas import DOCUMENTS_RAW
 
@@ -153,9 +154,19 @@ class TestSearchE2E:
 
 class TestServingSnapshot:
     """Engine.search runs against a snapshot of ``chunks`` it prepares
-    once, in a handful of labelled Spark jobs."""
+    once: on the driver (no Spark job per search or page read) below
+    ``spark.driver.maxResultSize``, else in a handful of labelled Spark
+    jobs.  ``api.resident_tier`` makes the choice; patching it to
+    return False forces the Spark tier."""
 
     _groups = itertools.count()
+
+    @staticmethod
+    def _force(monkeypatch, tier):
+        import qurio_spark.api as api
+
+        if tier == "spark":
+            monkeypatch.setattr(api, "resident_tier", lambda spark, n_bytes: False)
 
     def _in_group(self, spark, fn):
         """Run ``fn`` with this thread's jobs in a fresh job group ->
@@ -175,7 +186,8 @@ class TestServingSnapshot:
             descs.append(d.get() if d.isDefined() else None)
         return out, descs
 
-    def test_search_runs_at_most_five_jobs(self, spark, chunks):
+    def test_search_runs_at_most_five_jobs(self, spark, chunks, monkeypatch):
+        self._force(monkeypatch, "spark")
         eng = Engine(chunks=chunks)
         try:
             eng.search("configure healthcheck", limit=3)  # prepares the snapshot
@@ -187,7 +199,33 @@ class TestServingSnapshot:
         assert rows
         assert 1 <= len(descs) <= 5
 
-    def test_search_jobs_carry_phase_descriptions(self, spark, chunks):
+    def test_resident_search_and_page_read_run_no_job(self, spark, chunks):
+        eng = Engine(chunks=chunks)
+        try:
+            eng.search("configure healthcheck", limit=3)  # prepares the snapshot
+            assert isinstance(eng._prepared[1], ResidentSnapshot)
+            rows, descs = self._in_group(
+                spark, lambda: eng.search("healthcheck interval timeout", limit=3)
+            )
+            filtered, f_descs = self._in_group(
+                spark, lambda: eng.search("healthcheck", limit=3, source_id="s2")
+            )
+            page, p_descs = self._in_group(
+                spark,
+                lambda: eng.process_request({
+                    "jsonrpc": "2.0", "id": 1, "method": "tools/call",
+                    "params": {"name": "qurio_read_page",
+                               "arguments": {"url": "https://d.com/health"}},
+                }),
+            )
+        finally:
+            eng.close()
+        assert rows and filtered and all(r["source_id"] == "s2" for r in filtered)
+        assert "--- Code (yaml) ---" in page["result"]["content"][0]["text"]
+        assert descs == f_descs == p_descs == []
+
+    def test_search_jobs_carry_phase_descriptions(self, spark, chunks, monkeypatch):
+        self._force(monkeypatch, "spark")
         sc = spark.sparkContext
         eng = Engine(chunks=chunks)
         try:
@@ -204,51 +242,75 @@ class TestServingSnapshot:
             "qurio_search:stats", "qurio_search:bm25_range", "qurio_search:topk"
         }
 
+    def test_prepare_jobs_carry_tier_descriptions(self, spark, chunks, monkeypatch):
+        """Preparing runs one measuring aggregate, then the resident
+        tier's collect; the Spark tier stops after the aggregate."""
+        for tier, want in (
+            ("resident", ["qurio_search:prepare", "qurio_search:snapshot"]),
+            ("spark", ["qurio_search:prepare"]),
+        ):
+            with monkeypatch.context() as m:
+                self._force(m, tier)
+                eng = Engine(chunks=chunks)
+                try:
+                    _, descs = self._in_group(spark, eng._search_frame)
+                finally:
+                    eng.close()
+            assert sorted(descs) == want, tier
+
     def test_concurrent_first_searches_prepare_once(self, chunks, monkeypatch):
         import qurio_spark.api as api
 
-        builds = []
         prepare = api.prepare_chunks
+        for tier in ("resident", "spark"):
+            builds, results, errors = [], [], []
 
-        def slow_prepare(df):
-            builds.append(df)
-            time.sleep(0.5)  # both threads are inside search meanwhile
-            return prepare(df)
+            def slow_prepare(df):
+                builds.append(df)
+                time.sleep(0.5)  # both threads are inside search meanwhile
+                return prepare(df)
 
-        monkeypatch.setattr(api, "prepare_chunks", slow_prepare)
-        eng = Engine(chunks=chunks)
-        results, errors = [], []
+            def search():
+                try:
+                    results.append(eng.search("healthcheck probe", limit=2))
+                except Exception as e:  # reported below, never hidden
+                    errors.append(e)
 
-        def search():
-            try:
-                results.append(eng.search("healthcheck probe", limit=2))
-            except Exception as e:  # reported below, never hidden
-                errors.append(e)
+            with monkeypatch.context() as m:
+                self._force(m, tier)
+                m.setattr(api, "prepare_chunks", slow_prepare)
+                eng = Engine(chunks=chunks)
+                threads = [threading.Thread(target=search) for _ in range(2)]
+                try:
+                    for t in threads:
+                        t.start()
+                    for t in threads:
+                        t.join(timeout=300)
+                    served = eng._prepared[1]
+                finally:
+                    eng.close()
+            assert not any(t.is_alive() for t in threads)
+            assert not errors
+            assert len(results) == 2 and results[0] == results[1] and results[0]
+            assert len(builds) == 1
+            assert isinstance(served, ResidentSnapshot) == (tier == "resident")
 
-        threads = [threading.Thread(target=search) for _ in range(2)]
-        try:
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join(timeout=300)
-        finally:
-            eng.close()
-        assert not any(t.is_alive() for t in threads)
-        assert not errors
-        assert len(results) == 2 and results[0] == results[1] and results[0]
-        assert len(builds) == 1
-
-    def test_reassigned_chunks_are_served(self, chunks):
-        eng = Engine(chunks=chunks)
-        try:
-            assert eng.search("healthcheck", limit=5)[0]["source_id"] == "s1"
-            old = eng._prepared[1]
-            eng.chunks = chunks.filter(F.col("source_id") == "s2")
-            rows = eng.search("healthcheck", limit=5)
-        finally:
-            eng.close()
-        assert rows and all(r["source_id"] == "s2" for r in rows)
-        assert not old.is_cached
+    def test_reassigned_chunks_are_served(self, chunks, monkeypatch):
+        for tier in ("resident", "spark"):
+            with monkeypatch.context() as m:
+                self._force(m, tier)
+                eng = Engine(chunks=chunks)
+                try:
+                    assert eng.search("healthcheck", limit=5)[0]["source_id"] == "s1"
+                    old = eng._prepared[1]
+                    eng.chunks = chunks.filter(F.col("source_id") == "s2")
+                    rows = eng.search("healthcheck", limit=5)
+                    assert eng._prepared[1] is not old
+                finally:
+                    eng.close()
+            assert rows and all(r["source_id"] == "s2" for r in rows)
+            assert isinstance(old, ResidentSnapshot) == (tier == "resident")
+            assert not (old.frame if tier == "resident" else old).is_cached
 
 
 class TestMCPContract:

@@ -257,6 +257,200 @@ class TestEngineSearch:
         assert eng.search("spark", filters={"language": "klingon"}) == []
 
 
+PARITY_VOCAB = ["spark", "join", "shuffle", "cache", "probe", "index",
+                "vector", "score", "tie", "page", "alpha", "beta"]
+PARITY_DIM = 8
+
+
+def _parity_rows(seed, n=200):
+    """A seeded chunk table for the tier parity test: NULL and empty
+    content, zero-norm and NULL embeddings, full-precision float32
+    values, and copies of rows under other ids, exact (equal scores)
+    or with the embedding scaled by 3 (scores equal up to rounding, so
+    the 6-digit ranking key ties while the raw scores may differ)."""
+    import random
+
+    import numpy as np
+
+    rng = random.Random(seed)
+
+    def f32(x):
+        return float(np.float32(x))
+
+    rows = []
+    for i in range(n):
+        r, e = rng.random(), rng.random()
+        content = (
+            None if r < 0.05 else "" if r < 0.08
+            else " ".join(rng.choice(PARITY_VOCAB) for _ in range(rng.randint(1, 12)))
+        )
+        emb = (
+            [0.0] * PARITY_DIM if e < 0.05 else None if e < 0.08
+            else [f32(rng.gauss(0, 1)) for _ in range(PARITY_DIM)]
+        )
+        rows.append([
+            f"src{rng.randrange(3)}", None, f"https://p.test/{seed}/{i // 4}", i % 4,
+            content, rng.choice(["prose", "code"]), rng.choice(["en", "de", None]),
+            None, emb,
+        ])
+    for i in range(n // 4):
+        copy = list(rows[rng.randrange(n)])
+        copy[2], copy[3] = f"https://p.test/{seed}/tie{i}", 0
+        if i % 2 and copy[8]:
+            copy[8] = [f32(x * 3.0) for x in copy[8]]
+        rows.append(copy)
+    return rows
+
+
+@pytest.fixture(scope="module")
+def parity_snapshots(spark):
+    """Two seeded tables, each prepared on the resident tier; the
+    snapshot's ``frame`` (re-persisted) is the Spark tier's input."""
+    from qurio_spark.api import prepare_chunks
+
+    snaps = []
+    for seed in (1, 2):
+        snap = prepare_chunks(spark.createDataFrame(_parity_rows(seed), CHUNK_SCHEMA))
+        snap.frame.persist()
+        snaps.append((seed, snap))
+    yield snaps
+    for _, snap in snaps:
+        snap.frame.unpersist()
+
+
+class TestResidentTier:
+    """The driver-resident snapshot returns what the Spark path returns
+    over the same prepared frame: the same ids and the same score bits."""
+
+    COLS = ["content", "source_id", "url", "chunk_index", "language"]
+    FILTERS = [None, {"source_id": "src1"}, {"source_id": "src0", "language": "en"}]
+
+    @staticmethod
+    def _bits(rows):
+        import struct
+
+        return [
+            (r["chunk_id"], r["content"], r["language"],
+             *(struct.pack(">d", r[c]) for c in ("score", "bm25_norm", "vec_norm")))
+            for r in rows
+        ]
+
+    def _queries(self, seed, snap):
+        import random
+
+        rng = random.Random(seed)
+        stored = next(e for e in snap.frame.select("embedding").toLocalIterator() if e[0])
+        out = []
+        for i in range(4):
+            text = " ".join(rng.choice(PARITY_VOCAB) for _ in range(rng.randint(1, 4)))
+            out.append((text, [rng.gauss(0, 1) for _ in range(PARITY_DIM)]))
+        out.append(("zzz spark tie", [float(x) for x in stored[0]]))
+        out.append(("?!", [0.0] * PARITY_DIM))
+        return out
+
+    def _both(self, snap, text, vec, **kw):
+        from qurio_spark.operators.resident import TopK
+
+        kw = dict(id_col="chunk_id", text_col="content", vec_col="embedding",
+                  extra_cols=self.COLS, **kw)
+        resident = hybrid_search(snap, text, vec, **kw)
+        assert isinstance(resident, TopK)
+        return resident.collect(), hybrid_search(snap.frame, text, vec, **kw).collect()
+
+    def test_tiers_return_identical_rows(self, parity_snapshots):
+        checked = 0
+        for seed, snap in parity_snapshots:
+            queries = self._queries(seed, snap)
+            combos = [(a, k) for a in (0.0, 0.3, 0.7, 1.0) for k in (1, 10, 50)]
+            for c, (alpha, limit) in enumerate(combos):
+                filters = self.FILTERS[c % len(self.FILTERS)]
+                text, vec = queries[c % len(queries)]
+                got, want = self._both(
+                    snap, text, vec, alpha=alpha, limit=limit, filters=filters
+                )
+                assert self._bits(got) == self._bits(want), (seed, text, alpha, limit, filters)
+                assert [r.asDict() for r in got] == [r.asDict() for r in want]
+                checked += bool(want)
+        assert checked == 24
+
+    def test_filter_matching_nothing_and_unknown_column(self, parity_snapshots):
+        from pyspark.errors import AnalysisException
+
+        _, snap = parity_snapshots[0]
+        got, want = self._both(snap, "spark", [1.0] * PARITY_DIM, filters={"source_id": "nope"})
+        assert got == want == []
+        for docs in (snap, snap.frame):
+            with pytest.raises(AnalysisException):
+                hybrid_search(docs, "spark", [1.0] * PARITY_DIM, filters={"no_such_col": "x"},
+                              id_col="chunk_id", text_col="content")
+
+
+class TestStrictLog:
+    """``numeric.strict_log`` is Spark's ``log``: Java's StrictMath.log
+    (fdlibm), bit for bit."""
+
+    def test_matches_java_strictmath_log(self, spark):
+        import numpy as np
+
+        from qurio_spark.functions.numeric import strict_log
+
+        rng = np.random.default_rng(7)
+        xs = np.concatenate([
+            rng.uniform(1.0, 3.0, 40_000),  # the idf range
+            np.exp(rng.uniform(-700.0, 700.0, 40_000)),
+            rng.uniform(1.0 - 1e-6, 1.0 + 1e-6, 10_000),  # the |f| < 2**-20 branch
+            rng.uniform(0.0, 2.3e-308, 5_000),  # subnormals
+            np.arange(1.0, 5_001.0),
+            2.0 ** np.arange(-1074, 1024),
+        ])
+        df = spark.createDataFrame([(float(x),) for x in xs], "x double")
+        jvm = np.array([r[0] for r in df.select(F.log("x")).collect()], dtype=np.float64)
+        assert len(xs) >= 100_000
+        assert strict_log(xs).view(np.int64).tolist() == jvm.view(np.int64).tolist()
+
+        log = spark._jvm.java.lang.StrictMath.log
+        special = [0.0, -0.0, -1.0, float("inf"), float("-inf"), float("nan"), 5e-324]
+        sample = [float(x) for x in rng.choice(xs, 300)] + special
+        got = strict_log(np.array(sample))
+        for x, g in zip(sample, got):
+            w = log(x)
+            assert (np.isnan(g) and np.isnan(w)) or np.float64(g).tobytes() == np.float64(w).tobytes(), x
+
+    def test_every_idf_argument_up_to_5000_docs(self, spark):
+        """Every (N, df) with 1 <= df <= N <= 5000: the idf argument
+        ``1 + (N - df + 0.5) / (df + 0.5)`` and its log, computed by
+        Spark, equal the driver's arithmetic and ``strict_log``."""
+        import numpy as np
+        import pyarrow as pa
+
+        def mismatches(batches):
+            from qurio_spark.functions.numeric import strict_log
+
+            for b in batches:
+                n = b.column("n").to_numpy().astype(np.float64)
+                df = b.column("df").to_numpy().astype(np.float64)
+                arg = b.column("arg").to_numpy()
+                lg = b.column("lg").to_numpy()
+                mine = 1.0 + (n - df + 0.5) / (df + 0.5)
+                bad = (mine.view(np.int64) != arg.view(np.int64)) | (
+                    strict_log(arg).view(np.int64) != lg.view(np.int64)
+                )
+                yield pa.record_batch([pa.array([int(bad.sum())]), pa.array([len(n)])],
+                                      names=["bad", "rows"])
+
+        n, df = F.col("n").cast("double"), F.col("df").cast("double")
+        pairs = (
+            spark.range(1, 5001).select(F.col("id").alias("n"))
+            .select("n", F.explode(F.sequence(F.lit(1).cast("long"), "n")).alias("df"))
+            .withColumn("arg", F.lit(1.0) + (n - df + 0.5) / (df + 0.5))
+            .withColumn("lg", F.log("arg"))
+        )
+        out = pairs.mapInArrow(mismatches, "bad long, rows long").agg(
+            F.sum("bad"), F.sum("rows")
+        ).collect()[0]
+        assert (out[0], out[1]) == (0, 5000 * 5001 // 2)
+
+
 class TestBatchHybrid:
     def test_single_query_batch_equals_hybrid_search(self, spark, sf_dir):
         """Invariant: a batch of ONE query reproduces hybrid_search
