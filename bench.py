@@ -6,9 +6,8 @@
     {"metric": "total_query_seconds", "value": N, "unit": "sec",
      "queries": {name: sec, ...}, "sf": 0.1}
 
-Each query is fully executed via the noop datasource sink (whole plan
-runs, nothing is shipped to the driver), which is what a cluster job
-would do — collect() would benchmark the driver pipe instead.
+Each query runs once through the shared loop (``tools/runloop.run``)
+into the noop datasource sink.
 """
 
 from __future__ import annotations
@@ -21,56 +20,20 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
-from qurio_spark.session import get_spark, sf_dir
+from qurio_spark.session import sf_dir
+from tools.runloop import run, sf_value, start
 
 
 def main() -> None:
     target = sf_dir()
-    sf = target.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark(
-        app_name="qurio-spark-bench",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # JVM/Arrow warmup so the first measured query isn't paying JIT cost
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    # Amortized index builds (persisted BM25 postings etc.) happen
-    # outside the timed region — production builds an index once per
-    # corpus version and serves many queries from it.  Queries that use
-    # prepared indexes still work (build inline) when this isn't called,
-    # but a failed build raises: queries silently building in-DAG would
-    # change what is measured.
-    entrymod.prepare_indexes(spark, target)
-
-    from qurio_spark.operators.cachectl import release_caches
+    spark = start("qurio-spark-bench", target)
 
     timings: dict[str, float] = {}
     for name, fn in entrymod.queries().items():
-        t0 = time.time()
-        df = None
-        try:
-            df = fn(spark, target)
-            df.write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.time() - t0, 3)
-        except Exception as e:  # a failed query must not hide the rest
-            timings[name] = -1.0
-            print(f"bench error in {name}: {e}", file=sys.stderr)
-        finally:
-            # cache-lifetime protocol (operators/cachectl): operators
-            # that persist intermediates attach the handles to their
-            # result; releasing after the sink keeps a 149-query
-            # session from accumulating dead cached frames.  Outside
-            # the timed region — bookkeeping, not query work.  In the
-            # finally so a failed write can't leak its builder's cache;
-            # its own failure (e.g. a dead session) must not abort the
-            # remaining queries.
-            if df is not None:
-                try:
-                    release_caches(df)
-                except Exception as e:
-                    print(f"bench release error in {name}: {e}", file=sys.stderr)
+        r = run(spark, target, fn, name=name)
+        timings[name] = round(r.seconds, 3)
+        if r.error is not None:
+            print(f"bench error in {name}: {r.error}", file=sys.stderr)
 
     total = round(sum(v for v in timings.values() if v >= 0), 3)
 
@@ -78,28 +41,25 @@ def main() -> None:
     # batch hybrid against the dense oracle at this SF (the judge's bar
     # for the pruned path is beats-dense wall time AT recall >= 0.95).
     extras: dict[str, float] = {}
-    try:
-        qs = entrymod.queries()
-        if "batch_hybrid" in qs and "batch_hybrid_ivf" in qs:
-            # collect + release: these wrappers carry the hybrid kw/
-            # cand cache handles too (same protocol as the timed loop)
-            def _collect_released(df):
-                rows = df.collect()
-                release_caches(df)
-                return rows
+    qs = entrymod.queries()
 
-            dense = {
-                (r["query_id"], r["doc_id"])
-                for r in _collect_released(qs["batch_hybrid"](spark, target))
-            }
-            pruned = {
-                (r["query_id"], r["doc_id"])
-                for r in _collect_released(qs["batch_hybrid_ivf"](spark, target))
-            }
-            if dense:
-                extras["batch_hybrid_ivf_recall"] = round(
-                    len(dense & pruned) / len(dense), 4
-                )
+    def ids(name, *cols):
+        r = run(spark, target, qs[name], "collect", name=name)
+        if r.error is not None:
+            raise r.error
+        return {tuple(row[c] for c in cols) for row in r.result}
+
+    def recall(key, exact, approx):
+        if exact:
+            extras[key] = round(len(exact & approx) / len(exact), 4)
+
+    try:
+        if "batch_hybrid" in qs and "batch_hybrid_ivf" in qs:
+            recall(
+                "batch_hybrid_ivf_recall",
+                ids("batch_hybrid", "query_id", "doc_id"),
+                ids("batch_hybrid_ivf", "query_id", "doc_id"),
+            )
         # PQ shortlist recall vs the exact dot top-10 (ann_pq's oracle
         # is only valid while this is 1.0 — report it every run; the
         # adaptive shortlist_for sizing is what keeps it 1.0 across SFs)
@@ -113,36 +73,18 @@ def main() -> None:
                 float(x)
                 for x in emb.filter("vec_id = 0").first()["embedding"]
             ]
-            exact = {
-                r["vec_id"]
-                for r in brute_force_topk(emb, qvec, 10, metric="dot").collect()
-            }
-            approx = {
-                r["vec_id"] for r in qs["ann_pq"](spark, target).collect()
-            }
-            if exact:
-                extras["ann_pq_recall"] = round(
-                    len(exact & approx) / len(exact), 4
-                )
+
+            def exact_top10(frame):
+                top = brute_force_topk(frame, qvec, 10, metric="dot")
+                return {(r["vec_id"],) for r in top.collect()}
+
+            recall("ann_pq_recall", exact_top10(emb), ids("ann_pq", "vec_id"))
             # IVF x PQ recall vs the label-restricted exact dot top-10
             # (the probe contract its oracle encodes)
             if "ann_ivfpq" in qs:
                 lab = emb.filter("vec_id = 0").first()["label"]
                 part = emb.filter(F.col("label") == lab)
-                exact_p = {
-                    r["vec_id"]
-                    for r in brute_force_topk(
-                        part, qvec, 10, metric="dot"
-                    ).collect()
-                }
-                approx_p = {
-                    r["vec_id"]
-                    for r in qs["ann_ivfpq"](spark, target).collect()
-                }
-                if exact_p:
-                    extras["ann_ivfpq_recall"] = round(
-                        len(exact_p & approx_p) / len(exact_p), 4
-                    )
+                recall("ann_ivfpq_recall", exact_top10(part), ids("ann_ivfpq", "vec_id"))
     except Exception as e:
         print(f"bench recall error: {e}", file=sys.stderr)
 
@@ -252,19 +194,9 @@ def main() -> None:
     except Exception as e:
         print(f"bench bpe-export error: {e}", file=sys.stderr)
 
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    print(
-        json.dumps(
-            {
-                "metric": "total_query_seconds",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf_val,
-                **({"extras": extras} if extras else {}),
-            }
-        )
-    )
+    head = {"metric": "total_query_seconds", "value": total, "unit": "sec"}
+    tail = {"extras": extras} if extras else {}
+    print(json.dumps({**head, "queries": timings, "sf": sf_value(target), **tail}))
     # The driver records only the last ~2000 chars of stdout; with 100+
     # queries the full dict above overflows that window and the
     # captured artifact stops parsing.  Emit a compact machine-readable
@@ -278,21 +210,15 @@ def main() -> None:
             key=lambda kv: -kv[1],
         )[:10]
     )
-    print(
-        json.dumps(
-            {
-                "metric": "total_query_seconds",
-                "value": total,
-                "unit": "sec",
-                "sf": sf_val,
-                "n": len(timings),
-                "failed": sorted(k for k, v in timings.items() if v < 0),
-                "queries": slowest,
-                "queries_truncated_to_slowest": True,
-                **({"extras": extras} if extras else {}),
-            }
-        )
-    )
+    print(json.dumps({
+        **head,
+        "sf": sf_value(target),
+        "n": len(timings),
+        "failed": sorted(k for k, v in timings.items() if v < 0),
+        "queries": slowest,
+        "queries_truncated_to_slowest": True,
+        **tail,
+    }))
 
 
 if __name__ == "__main__":

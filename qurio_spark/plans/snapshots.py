@@ -1079,7 +1079,7 @@ def _mor_fields(
             scan = scan.join(
                 _dv_frame(spark, path, m), ["file", "pos"], "left_anti"
             )
-        moved, new_counts = _stage_dvs(spark, path, hits_of(scan), len(cand))
+        moved, new_counts = _stage_dvs(path, hits_of(scan), len(cand))
     dv = _dv_carry(m)
     if moved and dv and "dv_counts" not in dv:
         # legacy parent ledger (dvs without per-file counts): a fresh
@@ -2123,21 +2123,19 @@ def snap_rename_column(path: str, old: str, new: str) -> int:
                          {"renamed": {"from": old, "to": new}})
 
 
-def _stage_dvs(
-    spark: SparkSession, path: str, hits: DataFrame, n_cand: int
-) -> tuple[list[str], dict]:
+def _stage_dvs(path: str, hits: DataFrame, n_cand: int) -> tuple[list[str], dict]:
     """Write a (file, pos) frame as deletion-vector sidecars under
     ``dv/`` via a staging dir (same discipline as data files; output
     file count sized from the candidate scan, not a constant) and
     return ``(moved sidecar names, per-file deleted-row counts)`` —
     the exact ledger ``snap_count`` subtracts and rewrite commits
-    prune file-by-file.  Empty hits stage nothing, and run no job after
-    the staging write: the per-file counts are read back only when a
-    staged file holds rows."""
+    prune file-by-file.  The staging write is the only job: the
+    per-file counts come from the staged files' ``file`` column, read
+    on the driver (the sidecars are small)."""
     import math
+    from collections import Counter
 
     import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
 
     staging = os.path.join(path, f"_dvstaging-{uuid.uuid4().hex}")
     n_out = max(1, math.ceil(n_cand / 512))
@@ -2149,19 +2147,12 @@ def _stage_dvs(
         .parquet(staging)
     )
     staged = sorted(os.listdir(staging))
-    rows = {
-        f: pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
-        for f in staged if f.endswith(".parquet")
-    }
-    new_counts = {}
-    if any(rows.values()):
-        new_counts = {
-            r["file"]: r["n"]
-            for r in spark.read.parquet(staging)
-            .groupBy("file")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
+    rows, new_counts = {}, Counter()
+    for f in staged:
+        if f.endswith(".parquet"):
+            table = pq.ParquetFile(os.path.join(staging, f)).read(columns=["file"])
+            rows[f] = table.num_rows
+            new_counts.update(table.column("file").to_pylist())
     dv_dir = os.path.join(path, "dv")
     os.makedirs(dv_dir, exist_ok=True)
     moved: list[str] = []
@@ -2174,7 +2165,7 @@ def _stage_dvs(
         else:
             os.remove(src)
     os.rmdir(staging)
-    return moved, new_counts
+    return moved, dict(new_counts)
 
 
 def snap_clone(src_path: str, dst_path: str, version: int | None = None) -> int:

@@ -87,21 +87,34 @@ def test_noop_when_no_row_matches(spark, table):
 
 
 def test_repeated_mor_delete_reads_no_empty_staging(spark, table):
-    """A repeated MoR delete (every matching row is already deleted)
-    stages no position, so it does not read the empty staging directory
-    back: 3 jobs, where re-reading it cost 2 more.  The first delete's
-    manifest is the same either way, and the repeat commits nothing."""
+    """A MoR delete counts its staged positions per file from the staged
+    sidecars on the driver: the first delete on this two-file table runs
+    one job, the staging write, where reading the staging directory back
+    with Spark cost 2 more (schema read + count).  A repeated delete
+    (every matching row is already deleted) stages no position: at most
+    3 jobs, and it commits nothing."""
     sc = spark.sparkContext
-    v = snap_delete_where_mor(spark, table, "v", lo=3, hi=12)
+
+    def in_group(group, fn):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def delete():
+        return snap_delete_where_mor(spark, table, "v", lo=3, hi=12)
+
+    v, n_jobs = in_group("test-dv-first", delete)
+    assert n_jobs == 1
     m = _read_manifest(table, v)
     assert m["dv_rows"] == 10 and sorted(m["dv_counts"].values()) == [3, 7]
-    sc.setLocalProperty("spark.jobGroup.id", "test-dv-repeat")
-    try:
-        assert snap_delete_where_mor(spark, table, "v", lo=3, hi=12) is None
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup("test-dv-repeat")) <= 3
+    assert set(m["dv_counts"]) <= set(os.listdir(os.path.join(table, "data")))
+    assert _vals(snap_read(spark, table)) == [0, 1, 2] + list(range(13, 20))
+    again, n_jobs = in_group("test-dv-repeat", delete)
+    assert again is None and n_jobs <= 3
     assert _latest_version(table) == v and _read_manifest(table, v) == m
     assert sorted(os.listdir(os.path.join(table, "dv"))) == sorted(
         os.path.basename(f) for f in m["dvs"]

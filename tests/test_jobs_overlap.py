@@ -55,7 +55,7 @@ class TestJobTraceTimeline:
         """A job the status store lists before its submission time is
         known gets nan offset/duration/gap, and does not move the base
         the other jobs are offset from."""
-        from tools.job_trace import timeline
+        from tools.runloop import timeline
 
         jobs = [(7, None, None, "pending"), (5, 1000, 1500, "a"), (6, 2000, 2250, "b")]
         lines, busy = timeline(jobs)

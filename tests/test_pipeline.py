@@ -258,6 +258,45 @@ class TestServingSnapshot:
                     eng.close()
             assert sorted(descs) == want, tier
 
+    def test_snapshot_collect_over_max_result_size_falls_back(self, chunks, monkeypatch):
+        """When the resident collect hits ``spark.driver.maxResultSize``
+        despite the size estimate, the engine serves the same rows from
+        the persisted Spark tier; any other collect error propagates."""
+        eng = Engine(chunks=chunks)
+        try:
+            want = eng.search("configure healthcheck", limit=3)
+            assert isinstance(eng._prepared[1], ResidentSnapshot)
+        finally:
+            eng.close()
+        assert want
+        collected = []
+
+        def too_big(df):
+            collected.append(df)
+            raise RuntimeError(
+                "Total size of serialized results is bigger than spark.driver.maxResultSize"
+            )
+
+        monkeypatch.setattr(type(chunks), "toArrow", too_big)
+        eng = Engine(chunks=chunks)
+        try:
+            got = eng.search("configure healthcheck", limit=3)
+            served = eng._prepared[1]
+            assert not isinstance(served, ResidentSnapshot) and served.is_cached
+        finally:
+            eng.close()
+        assert got == want
+
+        def broken(df):
+            collected.append(df)
+            raise RuntimeError("executor lost")
+
+        monkeypatch.setattr(type(chunks), "toArrow", broken)
+        with pytest.raises(RuntimeError, match="executor lost"):
+            Engine(chunks=chunks).search("configure healthcheck", limit=3)
+        assert len(collected) == 2
+        collected[-1].unpersist()  # the failed prepare's frame
+
     def test_concurrent_first_searches_prepare_once(self, chunks, monkeypatch):
         import qurio_spark.api as api
 

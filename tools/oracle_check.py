@@ -11,25 +11,24 @@ Usage: python tools/oracle_check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
-import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
 import __spark_entry__ as entrymod
 from qurio_spark.goldens import golden_for, rows_hash
-from qurio_spark.operators.cachectl import release_caches
 from qurio_spark.oracle import compare, register_views
 from qurio_spark.session import get_spark
+from tools.runloop import run, select
 
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    names = list(select(sys.argv[2:]))
     spark = get_spark(app_name="oracle-check")
-    names = [n for n in entrymod.queries() if not only or n in only]
     counts = {"PASS": 0, "FAIL": 0, "SKIP": 0}
     for name, verdict, note, n, secs in check_queries(spark, sf_dir, names):
         counts[verdict] += 1
@@ -72,27 +71,20 @@ def check_queries(spark, sf_dir, names):
     tables, else against the golden row-hash pinned for this sf, else
     not at all.  Yields ``(name, verdict, note, n_rows, seconds)``;
     ``note`` says why a query failed, or "golden row-hash" for a golden
-    pass.  Releases every cache a query attaches to its result
-    (cachectl protocol: a long sweep must not accumulate them)."""
+    pass; ``seconds`` is the Spark run's (-1 when it failed)."""
     con = duckdb.connect()
     register_views(con, sf_dir)
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     for name in names:
-        t0 = time.time()
-        sdf, srows = None, []
-        try:
-            sdf = qs[name](spark, sf_dir)
-            scols, srows = sdf.columns, sdf.collect()
-        except Exception as e:
-            verdict, note = "FAIL", f"spark error: {e}"
+        r = run(spark, sf_dir, qs[name], "collect", name=name)
+        if r.error is not None:
+            verdict, note, srows = "FAIL", f"spark error: {r.error}", []
         else:
+            srows = r.result
             verdict, note = _verdict(
-                con, oracles.get(name), name, sf_dir, scols, srows
+                con, oracles.get(name), name, sf_dir, r.df.columns, srows
             )
-        finally:
-            if sdf is not None:
-                release_caches(sdf)
-        yield name, verdict, note, len(srows), time.time() - t0
+        yield name, verdict, note, len(srows), r.seconds
 
 
 if __name__ == "__main__":

@@ -23,8 +23,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
 from qurio_spark.session import get_spark
+from tools.runloop import run, select
 
 DEFAULT_QUERIES = [
     "tpch_q1", "tpch_q3", "tpch_q6", "tpch_q18", "bm25_topk", "bm25_prebuilt",
@@ -110,10 +110,11 @@ def count_exchanges(lines) -> int:
     )
 
 
-def audit(df):
+def audit(df, executed: bool = False):
     # execute first: under AQE the final plan (stage re-plans, codegen
     # markers) only exists after the action ran
-    df.collect()
+    if not executed:
+        df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     # audit only what actually ran
     plan = strip_initial_plans(plan)
@@ -177,20 +178,16 @@ def main() -> None:
     args = [a for a in sys.argv[1:] if a != "-v"]
     verbose = "-v" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    names = args[1:] or DEFAULT_QUERIES
+    queries = select(args[1:] or DEFAULT_QUERIES)
 
     spark = get_spark(app_name="qurio-plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
-    for name in names:
-        if name not in qs:
-            print(f"{name:24s} UNKNOWN QUERY")
+    for name, fn in queries.items():
+        r = run(spark, sf_dir, fn, "collect", name=name)
+        if r.error is not None:
+            print(f"{name:24s} ERROR {r.error}")
             continue
-        try:
-            a = audit(qs[name](spark, sf_dir))
-        except Exception as e:  # noqa: BLE001 — audit must not die mid-list
-            print(f"{name:24s} ERROR {e}")
-            continue
+        a = audit(r.df, executed=True)
         print(
             f"{name:24s} shuffles={a['shuffles']:2d} bcast={a['broadcasts']:2d} "
             f"smj={a['smj']} bhj={a['bhj']} bnlj={a['bnlj']} "
