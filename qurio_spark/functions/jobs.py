@@ -43,13 +43,26 @@ def run_concurrent(
     results in input order.  The pool always drains fully (shutdown
     waits) so a failing thunk cannot leak still-running jobs into
     whatever the caller does next; the first exception then
-    propagates.  Job descriptions/groups are thread-local in Spark, so
-    each thunk may label its own jobs without clobbering the others.
+    propagates.  Each thunk starts with a copy of the caller's Spark
+    local properties (job description, job group), taken here in the
+    caller's thread; the copies are per thunk, so a thunk may relabel
+    its own jobs without clobbering the others.
     """
     thunks = list(thunks)
     if len(thunks) <= 1:
         return [t() for t in thunks]
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import SparkContext
+
+    if SparkContext._active_spark_context is not None:
+        from pyspark.sql import SparkSession
+        from pyspark.util import inheritable_thread_target
+
+        # one wrapper per thunk: a wrapper clones the properties once,
+        # and thunks sharing one clone would overwrite each other's labels
+        session = SparkSession.active()
+        thunks = [inheritable_thread_target(session)(t) for t in thunks]
 
     with ThreadPoolExecutor(
         max_workers=max_workers or min(len(thunks), 4)

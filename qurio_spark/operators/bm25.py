@@ -23,12 +23,13 @@ Scale design (100 TB):
     postings rows (denormalized at build time) precisely so scoring
     needs NO extra join against a stats table.
 
-Every scorer — monolithic, segmented, MaxScore/Block-Max, the per-row
-term-map ``score_expr`` and the batch hybrid's keyword side — builds
-its per-posting expression with the one kernel :func:`impact`, and
+Every scorer — exhaustive, MaxScore/Block-Max, the per-row term-map
+``score_expr`` and the batch hybrid's keyword side — builds its
+per-posting expression with the one kernel :func:`impact`, and
 filters postings and sidecars to the query terms with
 :func:`prune_postings`, which also prunes term-bucket directories
-whenever the frame is a persisted layout.
+whenever the frame is a persisted layout.  Segmented indexes are
+scored by the same two scorers through :func:`segment_index`.
 """
 
 from __future__ import annotations
@@ -54,7 +55,7 @@ N_TERM_BUCKETS = 64
 #: doc-block, so theta can discard WHOLE blocks — pruning inside a long
 #: postings list, where the global per-term bound cannot help.  Blocks
 #: key on the engine-portable ``hash64(doc id)`` so the same block is
-#: computable driver-side and across segments.
+#: computable driver-side.
 N_DOC_BLOCKS = 64
 
 
@@ -369,20 +370,13 @@ def write_index(index: BM25Index, path: str) -> None:
 
 def read_index(spark: SparkSession, path: str, id_col: str = "doc_id") -> BM25Index:
     """Open a persisted index; partition pruning on ``term_bucket``
-    happens in the scorers' query-term filter (:func:`prune_postings`).
-    Indexes persisted before the blockmax sidecar existed open with
-    ``blockmax=None`` (MaxScore then skips the Block-Max refinement)."""
-    import os as _os
-
-    blockmax = None
-    if _os.path.isdir(f"{path}/blockmax"):
-        blockmax = spark.read.parquet(f"{path}/blockmax")
+    happens in the scorers' query-term filter (:func:`prune_postings`)."""
     return BM25Index(
         postings=spark.read.parquet(f"{path}/postings"),
         doclen=spark.read.parquet(f"{path}/doclen"),
         stats=spark.read.parquet(f"{path}/stats"),
         id_col=id_col,
-        blockmax=blockmax,
+        blockmax=spark.read.parquet(f"{path}/blockmax"),
     )
 
 
@@ -559,23 +553,14 @@ def score_query_maxscore(
 @dataclass
 class BM25SegmentedIndex:
     """postings: (id, term, tf, dl) — segment-local df is deliberately
-    NOT carried (it is meaningless after a merge); termdf: (term, df,
-    max_tf, min_dl) additive partials (df sums, max_tf maxes, min_dl
-    mins — the MaxScore bound inputs stay mergeable because a
-    segment-local IMPACT would be meaningless after a merge: idf and
-    avgdl are global); stats: 1-row-per-segment (n, sumdl) additive
-    partials; blockdf: (term, doc_block, max_tf, min_dl) — the SAME
-    additive partials per doc-block, feeding Block-Max pruning (block
-    ids hash on the doc id, so a doc keeps its block across segments
-    and the per-block max/min partials merge exactly like termdf's).
-    None on segments persisted before the sidecar existed (Block-Max
-    then degrades to plain MaxScore)."""
+    NOT carried (it is meaningless after a merge); termdf: (term, df)
+    additive partials; stats: 1-row-per-segment (n, sumdl) additive
+    partials.  Scorers see it through :func:`segment_index`."""
 
     postings: DataFrame
     termdf: DataFrame
     stats: DataFrame
     id_col: str
-    blockdf: DataFrame | None = None
 
 
 def build_segment(
@@ -589,21 +574,12 @@ def build_segment(
         F.col(id_col), F.size(tokenize(F.col(text_col))).alias("dl")
     )
     postings = tf.join(doclen, id_col)
-    termdf = postings.groupBy("term").agg(
-        F.count("*").alias("df"),
-        F.max("tf").alias("max_tf"),
-        F.min("dl").alias("min_dl"),
-    )
+    termdf = postings.groupBy("term").agg(F.count("*").alias("df"))
     stats = doclen.agg(
         F.count("*").cast("double").alias("n"),
         F.sum("dl").cast("double").alias("sumdl"),
     )
-    blockdf = (
-        _with_doc_block(postings, id_col)
-        .groupBy("term", "doc_block")
-        .agg(F.max("tf").alias("max_tf"), F.min("dl").alias("min_dl"))
-    )
-    return BM25SegmentedIndex(postings, termdf, stats, id_col, blockdf)
+    return BM25SegmentedIndex(postings, termdf, stats, id_col)
 
 
 def merge_segments(segments: list[BM25SegmentedIndex]) -> BM25SegmentedIndex:
@@ -615,56 +591,44 @@ def merge_segments(segments: list[BM25SegmentedIndex]) -> BM25SegmentedIndex:
     postings = first.postings
     termdf = first.termdf
     stats = first.stats
-    blockdf = first.blockdf
     for s in segments[1:]:
         postings = postings.unionByName(s.postings)
         termdf = termdf.unionByName(s.termdf)
         stats = stats.unionByName(s.stats)
-        # one legacy segment without the sidecar poisons the merged
-        # bound (a missing block row would UNDER-state the block UB) —
-        # degrade the whole merge to plain MaxScore instead
-        blockdf = (
-            blockdf.unionByName(s.blockdf)
-            if blockdf is not None and s.blockdf is not None
-            else None
-        )
-    return BM25SegmentedIndex(postings, termdf, stats, first.id_col, blockdf)
+    return BM25SegmentedIndex(postings, termdf, stats, first.id_col)
 
 
-def score_query_segmented(
-    index: BM25SegmentedIndex, query: str, k1: float = K1, b: float = B
-) -> DataFrame:
-    """``score_query`` over a segmented index: query-term df partials
-    are summed across segments (a per-term aggregate over <= q terms x
-    n_segments rows, broadcast back), N/avgdl come from summing the
-    1-row-per-segment stats.  Identical scores to a monolithic build
-    over the union'd corpus (pinned in tests/test_bm25_segments.py).
-    Persisted segments prune both the postings and the termdf scans to
-    the query terms' buckets (:func:`prune_postings`)."""
+def segment_index(index: BM25SegmentedIndex, query: str) -> BM25Index:
+    """Open a segmented index as a :class:`BM25Index` for ``query``'s
+    terms, so :func:`score_query` and :func:`score_query_maxscore`
+    serve it unchanged: postings pruned to the terms and joined with
+    their df summed across segments (<= q terms x n_segments rows,
+    broadcast back), one stats row (N = sum n, avgdl = sum dl / N),
+    and doclen.  Built per query so both the postings and the termdf
+    scans of persisted segments keep their term-bucket directory
+    pruning (:func:`prune_postings`).  Scores equal a monolithic build
+    over the union'd corpus (pinned in tests/test_bm25_segments.py)."""
     terms = tokenize_query(query)
-    if not terms:
-        return (
-            index.postings.select(index.id_col)
-            .distinct()
-            .select(index.id_col, F.lit(0.0).alias("bm25"))
-            .limit(0)
-        )
     df_q = (
         prune_postings(index.termdf, terms)
         .groupBy("term")
         .agg(F.sum("df").cast("double").alias("df"))
     )
-    stats = index.stats.agg(
-        F.sum("n").alias("n"), (F.sum("sumdl") / F.sum("n")).alias("avgdl")
+    return BM25Index(
+        postings=prune_postings(index.postings, terms).join(F.broadcast(df_q), "term"),
+        doclen=index.postings.select(index.id_col, "dl").distinct(),
+        stats=index.stats.agg(
+            F.sum("n").alias("n"), (F.sum("sumdl") / F.sum("n")).alias("avgdl")
+        ),
+        id_col=index.id_col,
     )
-    return (
-        prune_postings(index.postings, terms)
-        .join(F.broadcast(df_q), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("s", _impact_expr(k1, b))
-        .groupBy(index.id_col)
-        .agg(F.sum("s").alias("bm25"))
-    )
+
+
+def score_query_segmented(
+    index: BM25SegmentedIndex, query: str, k1: float = K1, b: float = B
+) -> DataFrame:
+    """:func:`score_query` over a segmented index."""
+    return score_query(segment_index(index, query), query, k1, b)
 
 
 def write_segment(seg: BM25SegmentedIndex, path: str, name: str) -> None:
@@ -676,138 +640,22 @@ def write_segment(seg: BM25SegmentedIndex, path: str, name: str) -> None:
     _write_by_term_bucket(seg.postings, f"{base}/postings")
     _write_by_term_bucket(seg.termdf, f"{base}/termdf")
     seg.stats.write.mode("overwrite").parquet(f"{base}/stats")
-    if seg.blockdf is not None:
-        _write_by_term_bucket(seg.blockdf, f"{base}/blockdf")
 
 
 def read_segments(
     spark: SparkSession, path: str, names: list[str], id_col: str = "doc_id"
 ) -> BM25SegmentedIndex:
     """Open persisted segments as one logical index."""
-    import os as _os
-
     segs = [
         BM25SegmentedIndex(
             postings=spark.read.parquet(f"{path}/{n}/postings"),
             termdf=spark.read.parquet(f"{path}/{n}/termdf"),
             stats=spark.read.parquet(f"{path}/{n}/stats"),
             id_col=id_col,
-            blockdf=(
-                spark.read.parquet(f"{path}/{n}/blockdf")
-                if _os.path.isdir(f"{path}/{n}/blockdf")
-                else None
-            ),
         )
         for n in names
     ]
     return merge_segments(segs)
-
-
-def score_query_segmented_maxscore(
-    index: BM25SegmentedIndex,
-    query: str,
-    topk: int,
-    k1: float = K1,
-    b: float = B,
-    prune_stats: dict | None = None,
-) -> DataFrame:
-    """MaxScore pruning over the SEGMENT model — same lossless top-k
-    contract as :func:`score_query_maxscore`.  Per-term upper bounds
-    derive from the ADDITIVE sidecar partials: UB(t) = idf(global df,
-    global N) * tfnorm(max over segments max_tf, min over segments
-    min_dl, global avgdl) — tfnorm is increasing in tf and decreasing
-    in dl, so the cross-segment (max_tf, min_dl) pair dominates every
-    real posting.  Bounds therefore stay correct across any merge
-    without touching old segments."""
-    import math
-
-    terms = list(dict.fromkeys(tokenize_query(query)))
-    if not terms:
-        return score_query_segmented(index, query, k1, b)
-    meta = (
-        prune_postings(index.termdf, terms)
-        .groupBy("term")
-        .agg(
-            F.sum("df").cast("double").alias("df"),
-            F.max("max_tf").cast("double").alias("max_tf"),
-            F.min("min_dl").cast("double").alias("min_dl"),
-        )
-        .collect()
-    )
-    if not meta:
-        return score_query_segmented(index, query, k1, b)
-    srow = index.stats.agg(
-        F.sum("n").alias("n"), (F.sum("sumdl") / F.sum("n")).alias("avgdl")
-    ).collect()[0]
-    n, avgdl = float(srow["n"]), float(srow["avgdl"])
-
-    def _idf(df: float) -> float:
-        return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-
-    def _tfnorm(tf: float, dl: float) -> float:
-        return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-
-    dfs = {r["term"]: float(r["df"]) for r in meta}
-    ubs = {
-        r["term"]: _idf(float(r["df"]))
-        * _tfnorm(float(r["max_tf"]), float(r["min_dl"]))
-        for r in meta
-    }
-    t_star = max(ubs, key=lambda t: (ubs[t], t))
-    imp_star = impact(F.col("tf"), F.col("dl"), dfs[t_star], n, avgdl, k1, b)
-    star_imps = (
-        prune_postings(index.postings, [t_star])
-        .select(imp_star.alias("imp"))
-        .orderBy(F.desc("imp"))
-        .limit(topk)
-        .collect()
-    )
-    theta = float(star_imps[-1]["imp"]) if len(star_imps) >= topk else float("-inf")
-    essential, non_essential = maxscore_split(ubs, theta)
-    # Block-Max refinement from the additive per-block partials: the
-    # cross-segment (max max_tf, min min_dl) pair dominates every real
-    # posting in the block, so UB(t, B) bounds any block member's
-    # contribution and a block whose summed UBs miss theta holds no
-    # top-k doc.  <= q x N_DOC_BLOCKS rows reach the driver.
-    alive = None
-    if non_essential and index.blockdf is not None:
-        brows = (
-            prune_postings(index.blockdf, terms)
-            .groupBy("term", "doc_block")
-            .agg(
-                F.max("max_tf").cast("double").alias("max_tf"),
-                F.min("min_dl").cast("double").alias("min_dl"),
-            )
-            .collect()
-        )
-        block_ub: dict[int, float] = {}
-        for r in brows:
-            ub = _idf(dfs[r["term"]]) * _tfnorm(r["max_tf"], r["min_dl"])
-            block_ub[int(r["doc_block"])] = (
-                block_ub.get(int(r["doc_block"]), 0.0) + ub
-            )
-        kept = sorted(bk for bk, u in block_ub.items() if u >= theta)
-        alive = None if len(kept) == len(block_ub) else kept
-    hot = prune_postings(index.postings, terms)
-    pruned = index
-    if non_essential:
-        ess = _in_blocks(prune_postings(index.postings, essential), index.id_col, alive)
-        hot = _in_blocks(hot, index.id_col, alive)
-        cand = ess.select(index.id_col).distinct()
-        hot = hot.join(F.broadcast(cand), index.id_col, "left_semi").drop(
-            "doc_block"
-        )
-        pruned = BM25SegmentedIndex(hot, index.termdf, index.stats, index.id_col)
-    if prune_stats is not None:
-        prune_stats.update(
-            theta=theta,
-            essential=essential,
-            non_essential=non_essential,
-            alive_blocks=alive,
-            postings_matched=prune_postings(index.postings, terms).count(),
-            postings_scored=hot.count(),
-        )
-    return score_query_segmented(pruned, query, k1, b)
 
 
 def compact_segments(
@@ -825,29 +673,11 @@ def compact_segments(
         postings=merged.postings.drop("term_bucket"),
         termdf=merged.termdf.drop("term_bucket")
         .groupBy("term")
-        .agg(
-            F.sum("df").alias("df"),
-            F.max("max_tf").alias("max_tf"),
-            F.min("min_dl").alias("min_dl"),
-        ),
+        .agg(F.sum("df").alias("df")),
         stats=merged.stats.agg(
             F.sum("n").alias("n"), F.sum("sumdl").alias("sumdl")
         ),
         id_col=id_col,
-        blockdf=(
-            # a legacy input segment without the sidecar degrades live
-            # queries to plain MaxScore (merge_segments), but compaction
-            # is exactly the maintenance pass that should HEAL it: the
-            # fold already reads every posting, so rebuild the bounds
-            # the same way build_segment derives them
-            _with_doc_block(merged.postings.drop("term_bucket"), id_col)
-            .groupBy("term", "doc_block")
-            .agg(F.max("tf").alias("max_tf"), F.min("dl").alias("min_dl"))
-            if merged.blockdf is None
-            else merged.blockdf.drop("term_bucket")
-            .groupBy("term", "doc_block")
-            .agg(F.max("max_tf").alias("max_tf"), F.min("min_dl").alias("min_dl"))
-        ),
     )
     write_segment(folded, path, out_name)
 

@@ -90,18 +90,13 @@ def q_bm25_incremental(spark, sf_dir):
     a monolithic rebuild, but appending a batch never rewrites old
     postings (the Lucene segment model on parquet; the 100 TB
     incremental-ingest shape)."""
-    from qurio_spark.operators.bm25 import (
-        build_segment,
-        merge_segments,
-        score_query_segmented,
-    )
-
     docs = _t(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 3 != 0)
     delta = docs.filter(F.col("doc_id") % 3 == 0)
-    merged = merge_segments([build_segment(base), build_segment(delta)])
-    scored = score_query_segmented(merged, QUERY_TEXT)
-    return _keyword_top10(scored)
+    merged = bm25_op.merge_segments(
+        [bm25_op.build_segment(base), bm25_op.build_segment(delta)]
+    )
+    return _keyword_top10(bm25_op.score_query_segmented(merged, QUERY_TEXT))
 
 
 def q_bm25_prebuilt(spark, sf_dir):

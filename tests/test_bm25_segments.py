@@ -16,7 +16,9 @@ from qurio_spark.operators.bm25 import (
     merge_segments,
     read_segments,
     score_query,
+    score_query_maxscore,
     score_query_segmented,
+    segment_index,
     write_segment,
 )
 
@@ -32,16 +34,28 @@ def _scores(df):
     return {r["doc_id"]: round(r["bm25"], 9) for r in df.collect()}
 
 
+def _topk(df, k):
+    rows = df.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k).collect()
+    return [(r["doc_id"], round(r["bm25"], 9)) for r in rows]
+
+
+def _assert_split_matches_monolithic(segs, docs):
+    """Both scorers over the merged segments reproduce the monolithic
+    build: every exhaustive score, and MaxScore's top-10 (lossless)."""
+    mono = score_query(build_index(docs), QUERY)
+    idx = segment_index(merge_segments(segs), QUERY)
+    got = _scores(score_query(idx, QUERY))
+    assert got == _scores(mono)
+    assert len(got) > 0
+    assert _topk(score_query_maxscore(idx, QUERY, 10), 10) == _topk(mono, 10)
+
+
 def test_segmented_matches_monolithic(spark, docs):
     """The core incremental-correctness claim: additive df/N/sumdl
     partials reproduce the full-rebuild scores exactly."""
     base = docs.filter(F.col("doc_id") % 3 != 0)
     delta = docs.filter(F.col("doc_id") % 3 == 0)
-    merged = merge_segments([build_segment(base), build_segment(delta)])
-    got = _scores(score_query_segmented(merged, QUERY))
-    want = _scores(score_query(build_index(docs), QUERY))
-    assert got == want
-    assert len(got) > 0
+    _assert_split_matches_monolithic([build_segment(base), build_segment(delta)], docs)
 
 
 def test_three_way_and_skewed_split(spark, docs):
@@ -50,9 +64,7 @@ def test_three_way_and_skewed_split(spark, docs):
     segs = [
         build_segment(docs.filter(F.col("doc_id") % 7 == i)) for i in (0, 3)
     ] + [build_segment(docs.filter((F.col("doc_id") % 7).isin([1, 2, 4, 5, 6])))]
-    got = _scores(score_query_segmented(merge_segments(segs), QUERY))
-    want = _scores(score_query(build_index(docs), QUERY))
-    assert got == want
+    _assert_split_matches_monolithic(segs, docs)
 
 
 def test_persisted_segments_roundtrip_and_append(spark, docs, tmp_path):
@@ -93,35 +105,6 @@ def test_compaction_preserves_scores(spark, docs, tmp_path):
     assert _scores(score_query_segmented(one, QUERY)) == want
 
 
-def test_compaction_heals_missing_blockmax_sidecar(spark, docs, tmp_path):
-    """A legacy (pre-sidecar) input segment degrades LIVE merged
-    queries to plain MaxScore, but compaction reads every posting
-    anyway — it must REBUILD the Block-Max sidecar, not write a
-    permanently unprunable segment."""
-    import shutil
-
-    path = str(tmp_path / "bm25_heal")
-    write_segment(build_segment(docs.filter(F.col("doc_id") % 2 == 0)), path, "a")
-    write_segment(build_segment(docs.filter(F.col("doc_id") % 2 == 1)), path, "b")
-    shutil.rmtree(f"{path}/a/blockdf")  # simulate a pre-sidecar segment
-    assert read_segments(spark, path, ["a", "b"]).blockdf is None
-    compact_segments(spark, path, ["a", "b"], "compacted")
-    healed = read_segments(spark, path, ["compacted"])
-    assert healed.blockdf is not None
-    # rebuilt bounds == a fresh build's bounds over the same corpus
-    want = sorted(
-        map(tuple, build_segment(docs).blockdf.collect())
-    )
-    got = sorted(
-        map(tuple, healed.blockdf.drop("term_bucket").collect())
-    )
-    assert got == want
-    # and the healed segment scores exactly like the monolithic build
-    assert _scores(score_query_segmented(healed, QUERY)) == _scores(
-        score_query(build_index(docs), QUERY)
-    )
-
-
 def test_pruned_scan_has_partition_filters(spark, docs, tmp_path):
     """Both the postings and termdf scans must carry term_bucket
     partition filters (the driver-side hash pruning)."""
@@ -140,28 +123,19 @@ class TestMaxScore:
     dramatically fewer postings into the scoring aggregate when a
     query mixes rare and stopword-class terms."""
 
-    def _topk(self, df, k):
-        rows = df.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k).collect()
-        return [(r["doc_id"], round(r["bm25"], 9)) for r in rows]
-
     def test_monolithic_lossless_on_real_corpus(self, spark, docs):
-        from qurio_spark.operators.bm25 import score_query_maxscore
-
         idx = build_index(docs)
-        want = self._topk(score_query(idx, QUERY), 10)
-        got = self._topk(score_query_maxscore(idx, QUERY, 10), 10)
+        want = _topk(score_query(idx, QUERY), 10)
+        got = _topk(score_query_maxscore(idx, QUERY, 10), 10)
         assert got == want
 
     def test_segmented_lossless_on_real_corpus(self, spark, docs):
-        from qurio_spark.operators.bm25 import score_query_segmented_maxscore
-
         base = docs.filter(F.col("doc_id") % 3 != 0)
         delta = docs.filter(F.col("doc_id") % 3 == 0)
         merged = merge_segments([build_segment(base), build_segment(delta)])
-        want = self._topk(score_query_segmented(merged, QUERY), 10)
-        got = self._topk(
-            score_query_segmented_maxscore(merged, QUERY, 10), 10
-        )
+        idx = segment_index(merged, QUERY)
+        want = _topk(score_query(idx, QUERY), 10)
+        got = _topk(score_query_maxscore(idx, QUERY, 10), 10)
         assert got == want
 
     @pytest.fixture()
@@ -178,13 +152,11 @@ class TestMaxScore:
         return spark.createDataFrame(rows, "doc_id long, text string")
 
     def test_adversarial_high_df_prunes_and_stays_exact(self, spark, adversarial):
-        from qurio_spark.operators.bm25 import score_query_maxscore
-
         idx = build_index(adversarial)
         q = "zyzzyva the"
-        want = self._topk(score_query(idx, q), 5)
+        want = _topk(score_query(idx, q), 5)
         stats: dict = {}
-        got = self._topk(
+        got = _topk(
             score_query_maxscore(idx, q, 5, prune_stats=stats), 5
         )
         assert got == want
@@ -195,19 +167,15 @@ class TestMaxScore:
         assert stats["postings_scored"] < stats["postings_matched"] / 5, stats
 
     def test_adversarial_segmented_prunes_and_stays_exact(self, spark, adversarial):
-        from qurio_spark.operators.bm25 import score_query_segmented_maxscore
-
         segs = [
             build_segment(adversarial.filter(F.col("doc_id") % 2 == i))
             for i in (0, 1)
         ]
-        merged = merge_segments(segs)
         q = "zyzzyva the"
-        want = self._topk(score_query_segmented(merged, q), 5)
+        idx = segment_index(merge_segments(segs), q)
+        want = _topk(score_query(idx, q), 5)
         stats: dict = {}
-        got = self._topk(
-            score_query_segmented_maxscore(merged, q, 5, prune_stats=stats), 5
-        )
+        got = _topk(score_query_maxscore(idx, q, 5, prune_stats=stats), 5)
         assert got == want
         assert "the" in stats["non_essential"]
         assert stats["postings_scored"] < stats["postings_matched"] / 5, stats
@@ -215,11 +183,9 @@ class TestMaxScore:
     def test_fewer_matches_than_topk_disables_pruning(self, spark, adversarial):
         """theta needs topk exact partials; with a rarer-than-k term
         the scorer must fall back to full scoring, not over-prune."""
-        from qurio_spark.operators.bm25 import score_query_maxscore
-
         idx = build_index(adversarial)
-        got = self._topk(score_query_maxscore(idx, "zyzzyva the", 50), 50)
-        want = self._topk(score_query(idx, "zyzzyva the"), 50)
+        got = _topk(score_query_maxscore(idx, "zyzzyva the", 50), 50)
+        want = _topk(score_query(idx, "zyzzyva the"), 50)
         assert got == want
 
     def test_split_math(self):
@@ -240,10 +206,6 @@ class TestBlockMax:
     doc-blocks, pruning INSIDE long postings lists where the global
     per-term bound cannot — strictly fewer postings scored than plain
     MaxScore on a block-skewed corpus, still lossless for top-k."""
-
-    def _topk(self, df, k):
-        rows = df.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k).collect()
-        return [(r["doc_id"], round(r["bm25"], 9)) for r in rows]
 
     @pytest.fixture()
     def block_skewed(self, spark):
@@ -281,10 +243,7 @@ class TestBlockMax:
         self, spark, block_skewed, monkeypatch
     ):
         import qurio_spark.operators.bm25 as bm25_mod
-        from qurio_spark.operators.bm25 import (
-            score_query_maxscore,
-            term_block_max_impacts,
-        )
+        from qurio_spark.operators.bm25 import term_block_max_impacts
 
         corpus, strong_block, strong_ids = block_skewed
         idx = build_index(corpus)
@@ -292,95 +251,28 @@ class TestBlockMax:
         # attached (build_index leaves it None by design)
         idx.blockmax = term_block_max_impacts(idx)
         q = "rare common"
-        want = self._topk(score_query(idx, q), 2)
+        want = _topk(score_query(idx, q), 2)
         assert {d for d, _ in want} == strong_ids
 
         # plain MaxScore baseline: block pruning neutralized
         plain: dict = {}
         monkeypatch.setattr(bm25_mod, "_alive_blocks", lambda *a: None)
-        got_plain = self._topk(
+        got_plain = _topk(
             score_query_maxscore(idx, q, 2, prune_stats=plain), 2
         )
         monkeypatch.undo()
         assert got_plain == want
 
         bmw: dict = {}
-        got = self._topk(score_query_maxscore(idx, q, 2, prune_stats=bmw), 2)
+        got = _topk(score_query_maxscore(idx, q, 2, prune_stats=bmw), 2)
         assert got == want  # lossless
         assert bmw["alive_blocks"] == [strong_block]
         assert bmw["postings_scored"] < plain["postings_scored"], (bmw, plain)
 
-    def test_segmented_blockmax_additive_across_segments(
-        self, spark, block_skewed, monkeypatch
-    ):
-        """The per-block (max_tf, min_dl) partials must merge across a
-        segment split that separates the strong docs — pruning and
-        scores identical to the unsplit run."""
-        import qurio_spark.operators.bm25 as bm25_mod
-        from qurio_spark.operators.bm25 import score_query_segmented_maxscore
-
-        corpus, strong_block, strong_ids = block_skewed
-        merged = merge_segments([
-            build_segment(corpus.filter(F.col("doc_id") % 2 == 0)),
-            build_segment(corpus.filter(F.col("doc_id") % 2 == 1)),
-        ])
-        q = "rare common"
-        want = self._topk(score_query_segmented(merged, q), 2)
-
-        plain: dict = {}
-        monkeypatch.setattr(bm25_mod, "_alive_blocks", lambda *a: None)
-        # segmented path computes blocks inline; neutralize via blockdf
-        stripped = merge_segments([
-            build_segment(corpus.filter(F.col("doc_id") % 2 == 0)),
-            build_segment(corpus.filter(F.col("doc_id") % 2 == 1)),
-        ])
-        stripped.blockdf = None
-        got_plain = self._topk(
-            score_query_segmented_maxscore(stripped, q, 2, prune_stats=plain),
-            2,
-        )
-        monkeypatch.undo()
-        assert got_plain == want
-        assert plain["alive_blocks"] is None
-
-        bmw: dict = {}
-        got = self._topk(
-            score_query_segmented_maxscore(merged, q, 2, prune_stats=bmw), 2
-        )
-        assert got == want
-        assert bmw["alive_blocks"] == [strong_block]
-        assert bmw["postings_scored"] < plain["postings_scored"], (bmw, plain)
-
-    def test_legacy_segment_without_blockdf_degrades_gracefully(
-        self, spark, block_skewed
-    ):
-        """Merging one pre-sidecar segment poisons the additive bound,
-        so the merge must drop to plain MaxScore — never a wrong UB."""
-        from qurio_spark.operators.bm25 import score_query_segmented_maxscore
-
-        corpus, _, _ = block_skewed
-        old = build_segment(corpus.filter(F.col("doc_id") % 2 == 0))
-        old.blockdf = None
-        merged = merge_segments([
-            old, build_segment(corpus.filter(F.col("doc_id") % 2 == 1)),
-        ])
-        assert merged.blockdf is None
-        q = "rare common"
-        stats: dict = {}
-        got = self._topk(
-            score_query_segmented_maxscore(merged, q, 2, prune_stats=stats), 2
-        )
-        assert got == self._topk(score_query_segmented(merged, q), 2)
-        assert stats["alive_blocks"] is None
-
     def test_persisted_index_roundtrips_blockmax(
         self, spark, block_skewed, tmp_path
     ):
-        from qurio_spark.operators.bm25 import (
-            read_index,
-            score_query_maxscore,
-            write_index,
-        )
+        from qurio_spark.operators.bm25 import read_index, write_index
 
         corpus, strong_block, _ = block_skewed
         path = str(tmp_path / "bmw_idx")
@@ -390,8 +282,8 @@ class TestBlockMax:
         assert "doc_block" in idx.postings.columns
         q = "rare common"
         stats: dict = {}
-        got = self._topk(score_query_maxscore(idx, q, 2, prune_stats=stats), 2)
-        assert got == self._topk(score_query(idx, q), 2)
+        got = _topk(score_query_maxscore(idx, q, 2, prune_stats=stats), 2)
+        assert got == _topk(score_query(idx, q), 2)
         assert stats["alive_blocks"] == [strong_block]
 
 

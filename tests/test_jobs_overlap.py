@@ -49,6 +49,23 @@ class TestRunConcurrent:
         )
         assert (a, b) == (1000, 500)
 
+    def test_thunks_see_callers_job_description_and_group(self, spark):
+        """Pool threads run each thunk under the caller's local
+        properties, so its jobs keep the caller's label and group."""
+        sc = spark.sparkContext
+        keys = ("spark.job.description", "spark.jobGroup.id")
+        prev = [sc.getLocalProperty(k) for k in keys]
+        sc.setLocalProperty("spark.job.description", "caller:phase")
+        sc.setLocalProperty("spark.jobGroup.id", "caller-group")
+        try:
+            seen = run_concurrent(
+                [lambda: tuple(sc.getLocalProperty(k) for k in keys)] * 2
+            )
+        finally:
+            for k, v in zip(keys, prev):
+                sc.setLocalProperty(k, v)
+        assert seen == [("caller:phase", "caller-group")] * 2
+
 
 class TestJobTraceTimeline:
     def test_unsubmitted_job_has_no_offset(self):
