@@ -19,7 +19,8 @@ from pyspark.sql.column import Column
 def stable_round(col: Column | str, digits: int) -> Column:
     """Engine-portable round-half-up(ish): floor(x*10^d + 0.5)/10^d.
 
-    Matches the DuckDB fragment produced by :func:`stable_round_sql`.
+    Oracle SQL writes the same fragment,
+    ``floor((x) * 10^d + 0.5) / 10^d``, inline.
     (For negatives this is half-toward-+inf, not half-away — consistent
     across engines, which is what matters for oracle parity.)
     """
@@ -27,12 +28,6 @@ def stable_round(col: Column | str, digits: int) -> Column:
         col = F.col(col)
     scale = F.lit(float(10**digits))
     return F.floor(col.cast("double") * scale + F.lit(0.5)) / scale
-
-
-def stable_round_sql(expr: str, digits: int) -> str:
-    """DuckDB-SQL twin of :func:`stable_round`."""
-    scale = float(10**digits)
-    return f"(floor(({expr}) * {scale} + 0.5) / {scale})"
 
 
 # fdlibm e_log.c constants (the bit patterns are in fdlibm's comments)

@@ -229,8 +229,7 @@ def bloom_semi_join(
     if how not in ("left_semi", "semi", "inner"):
         # A bloom PRE-filter drops probe rows before the join; outer
         # joins must KEEP unmatched probe rows, so pre-filtering
-        # silently corrupts them. Same guard shape as
-        # skew.salted_shuffle_join.
+        # silently corrupts them.
         raise ValueError(
             f"bloom_semi_join supports semi/inner joins only, got {how!r}"
         )

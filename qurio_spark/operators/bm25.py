@@ -172,8 +172,8 @@ def sum_impacts(
 
 def doc_block(col: Column, n_blocks: int = N_DOC_BLOCKS) -> Column:
     """Engine-portable doc -> block map (md5 ``hash64`` mod n, mirrored
-    driver-side by :func:`doc_block_py` — the query planner needs the
-    same block ids as literals)."""
+    driver-side by :func:`doc_block_py`, which tests use to place docs
+    in chosen blocks)."""
     return F.pmod(hash64(col.cast("string")), F.lit(n_blocks)).cast("int")
 
 
@@ -541,13 +541,12 @@ def score_query_maxscore(
 # The monolithic index above freezes df/N/avgdl at write time, so
 # appending documents means a full rebuild — wrong at 100 TB where a
 # daily delta is ~0.1% of the corpus.  The segmented layout is the
-# Lucene segment model on parquet: each ingest batch becomes an
-# immutable SEGMENT (postings WITHOUT denormalized df + a small
-# per-term df sidecar + 1-row additive stats).  Global stats are
-# ADDITIVE: df(t) = sum over segments, N = sum n, avgdl = sum dl / N —
-# so a merge is a union plus two tiny aggregations at query time,
-# never a rewrite of old postings.  Compaction (fold segments into
-# one) is an offline maintenance job, same as plans/maintenance.py.
+# Lucene segment model: each ingest batch becomes an immutable
+# SEGMENT (postings WITHOUT denormalized df + a small per-term df
+# sidecar + 1-row additive stats).  Global stats are ADDITIVE:
+# df(t) = sum over segments, N = sum n, avgdl = sum dl / N — so a
+# merge is a union plus two tiny aggregations at query time, never a
+# rewrite of old postings.
 
 
 @dataclass
@@ -604,10 +603,10 @@ def segment_index(index: BM25SegmentedIndex, query: str) -> BM25Index:
     serve it unchanged: postings pruned to the terms and joined with
     their df summed across segments (<= q terms x n_segments rows,
     broadcast back), one stats row (N = sum n, avgdl = sum dl / N),
-    and doclen.  Built per query so both the postings and the termdf
-    scans of persisted segments keep their term-bucket directory
-    pruning (:func:`prune_postings`).  Scores equal a monolithic build
-    over the union'd corpus (pinned in tests/test_bm25_segments.py)."""
+    and doclen.  Built per query so the postings and termdf frames are
+    filtered to the query's terms (:func:`prune_postings`) before the
+    df sum.  Scores equal a monolithic build over the union'd corpus
+    (pinned in tests/test_bm25_segments.py)."""
     terms = tokenize_query(query)
     df_q = (
         prune_postings(index.termdf, terms)
@@ -629,57 +628,6 @@ def score_query_segmented(
 ) -> DataFrame:
     """:func:`score_query` over a segmented index."""
     return score_query(segment_index(index, query), query, k1, b)
-
-
-def write_segment(seg: BM25SegmentedIndex, path: str, name: str) -> None:
-    """Persist one segment under ``{path}/{name}/`` with the same
-    term-bucket directory layout as ``write_index`` (query pruning
-    composes per segment); appending a batch writes ONLY its own
-    segment directory."""
-    base = f"{path}/{name}"
-    _write_by_term_bucket(seg.postings, f"{base}/postings")
-    _write_by_term_bucket(seg.termdf, f"{base}/termdf")
-    seg.stats.write.mode("overwrite").parquet(f"{base}/stats")
-
-
-def read_segments(
-    spark: SparkSession, path: str, names: list[str], id_col: str = "doc_id"
-) -> BM25SegmentedIndex:
-    """Open persisted segments as one logical index."""
-    segs = [
-        BM25SegmentedIndex(
-            postings=spark.read.parquet(f"{path}/{n}/postings"),
-            termdf=spark.read.parquet(f"{path}/{n}/termdf"),
-            stats=spark.read.parquet(f"{path}/{n}/stats"),
-            id_col=id_col,
-        )
-        for n in names
-    ]
-    return merge_segments(segs)
-
-
-def compact_segments(
-    spark: SparkSession,
-    path: str,
-    names: list[str],
-    out_name: str,
-    id_col: str = "doc_id",
-) -> None:
-    """Offline maintenance: fold segments into one (re-aggregating the
-    termdf partials; postings rows are immutable so the fold is a
-    union + one termdf groupBy, NOT a corpus re-tokenization)."""
-    merged = read_segments(spark, path, names, id_col)
-    folded = BM25SegmentedIndex(
-        postings=merged.postings.drop("term_bucket"),
-        termdf=merged.termdf.drop("term_bucket")
-        .groupBy("term")
-        .agg(F.sum("df").alias("df")),
-        stats=merged.stats.agg(
-            F.sum("n").alias("n"), F.sum("sumdl").alias("sumdl")
-        ),
-        id_col=id_col,
-    )
-    write_segment(folded, path, out_name)
 
 
 def score_query_inline(

@@ -558,68 +558,6 @@ def read_pq_index(spark, path: str):
     return codes, books
 
 
-def append_pq_index(
-    spark,
-    path: str,
-    new_embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_cols: list[str] | None = None,
-) -> None:
-    """Incremental PQ maintenance: encode the new batch with the
-    PERSISTED codebooks (one Arrow-batched map pass) and append to the
-    codes table, in the SAME representation the index already uses
-    (packed-long or array<int>, dtype-detected).  Old files untouched.
-    Like IVF, the codebooks age under distribution drift —
-    :func:`pq_quantization_error` of new batches (vs the fit-time
-    corpus) is the refit signal (consumed by
-    ``plans.maintenance.maybe_refit_pq``); unlike IVF there is no
-    partition layout to preserve, so a refit is a plain re-encode."""
-    existing, books = read_pq_index(spark, path)
-    codes = pq_encode(
-        new_embeddings, books, id_col, vec_col, keep_cols,
-        packed=_codes_packed(existing),
-    )
-    codes.write.mode("append").parquet(f"{path}/codes")
-
-
-def pq_quantization_error(
-    embeddings: DataFrame,
-    codebooks: list,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Refit signal for the incremental path (the PQ twin of
-    ``similarity.ivf_assignment_drift``): 1-row frame of (n,
-    mean_sq_err, max_sq_err) — the squared reconstruction error of
-    each vector against its NEAREST per-subspace centroids.  A new
-    batch whose mean error is far above the fit-time corpus's says the
-    codebooks no longer fit the distribution (ADC scores degrade ->
-    shortlist recall degrades) — time for an offline re-encode.  One
-    Arrow-batched map pass + a 1-row aggregate."""
-    import pandas
-
-    CB = np.asarray(codebooks, dtype=np.float64)  # (m, k, ds)
-    m, k, ds = CB.shape
-    cb_sq = (CB * CB).sum(axis=2)
-
-    def _sqerr(vecs):
-        V = np.stack(vecs.to_numpy()).astype(np.float64)
-        err = np.zeros(V.shape[0])
-        for j in range(m):
-            Vj = V[:, j * ds : (j + 1) * ds]
-            d = (Vj * Vj).sum(axis=1)[:, None] - 2.0 * (Vj @ CB[j].T) + cb_sq[j]
-            err += d.min(axis=1)
-        return pandas.Series(err)
-
-    _sqerr.__annotations__ = {"vecs": pandas.Series, "return": pandas.Series}
-    sqerr = F.pandas_udf("double")(_sqerr)
-    return embeddings.select(sqerr(F.col(vec_col)).alias("_e")).agg(
-        F.count("*").alias("n"),
-        F.avg("_e").alias("mean_sq_err"),
-        F.max("_e").alias("max_sq_err"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF x PQ (IVF-ADC): coarse partition pruning x compressed scan — the
 # two ANN axes composed, which is the actual 100 TB serving plan

@@ -90,29 +90,6 @@ def ivf_topk(
     return brute_force_topk(pruned, query_vec, k, id_col, vec_col)
 
 
-def compute_centroids(
-    embeddings: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Mean vector per label — the IVF codebook build.  Aggregates
-    component-wise via posexplode + groupBy(label, pos): two partial-agg
-    shuffles over (n_labels * dim) keys, independent of row width."""
-    exploded = embeddings.select(
-        F.col(label_col), F.posexplode(F.col(vec_col)).alias("pos", "v")
-    )
-    means = exploded.groupBy(label_col, "pos").agg(F.avg("v").alias("m"))
-    return (
-        means.groupBy(label_col)
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select(
-            label_col,
-            F.transform("pm", lambda s: s["m"].cast("float")).alias("centroid"),
-        )
-    )
-
-
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 11) -> list[list[float]]:
     """Deterministic pseudo-random unit-free hyperplanes from md5 bits —
     reproducible across engines/runs without an RNG."""
@@ -467,9 +444,9 @@ def kmeans_fit(
     Deterministic init: the k vectors with the smallest md5-based
     ``hash64(id)`` (uniform pseudo-random but reproducible across runs
     and engines — no RNG).  Each iteration is one distributed job:
-    pandas-UDF assignment (numpy matmul) + component-wise mean via the
-    posexplode groupBy in ``compute_centroids``; only the (k x dim)
-    codebook ever reaches the driver.  Empty clusters keep their
+    pandas-UDF assignment (numpy matmul) + component-wise mean via a
+    posexplode groupBy over (label, pos); only the (k x dim) codebook
+    ever reaches the driver.  Empty clusters keep their
     previous centroid.  At 100 TB: sample the corpus for the fit, then
     one full assignment pass labels the table for partition-by-label
     writes (the IVF scale path in ``ivf_topk``).
@@ -491,14 +468,11 @@ def kmeans_fit(
     for _ in range(iters):
         assigned = assign_labels(embeddings, centroids, id_col, vec_col)
         # per-iteration reduction: collect the (label, pos, mean) cells
-        # straight off the FIRST groupBy (k x dim rows — the same F.avg
-        # values compute_centroids would re-pack into arrays) and
-        # assemble the codebook driver-side; the second groupBy shuffle
-        # existed only to build array rows this loop immediately
-        # unpacked (r15, guide §2.4: one exchange per Lloyd's
-        # iteration, not two).  The float32 round-trip below reproduces
-        # compute_centroids' `cast("float")` bit-for-bit, so codebooks
-        # (and every downstream label/survivor golden) are unchanged.
+        # of one groupBy (k x dim rows) and assemble the codebook
+        # driver-side — one exchange per Lloyd's iteration.  Each mean
+        # is rounded to float32, the codebook's stored type (the
+        # `array<float>` centroid column), so the driver-side codebook
+        # equals what the persisted index reads back.
         rows = (
             assigned.select(
                 F.col("label"), F.posexplode(F.col(vec_col)).alias("pos", "v")
@@ -656,90 +630,4 @@ def read_ivf_index(spark, path: str):
     return (
         spark.read.parquet(f"{path}/labeled"),
         spark.read.parquet(f"{path}/centroids"),
-    )
-
-
-def append_ivf_index(
-    spark,
-    path: str,
-    new_embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental IVF maintenance (the vector twin of the segmented
-    BM25 append): label the new batch with the PERSISTED codebook (one
-    Arrow-batched assignment pass) and append into the existing label
-    partition directories — no refit, no rewrite of old files (append
-    mode adds files inside ``label=`` dirs; existing files untouched,
-    mtime-asserted in tests).  Probes see old + new vectors in the
-    same pruned directories immediately.
-
-    The codebook ages as the distribution drifts — gate refits with
-    :func:`ivf_assignment_drift` rather than refitting per batch."""
-    _, cdf = read_ivf_index(spark, path)
-    rows = sorted(cdf.collect(), key=lambda r: r["label"])
-    centroids = [[float(x) for x in r["centroid"]] for r in rows]
-    labeled = assign_labels(
-        new_embeddings.select(id_col, vec_col), centroids, id_col, vec_col
-    )
-    labeled.write.mode("append").partitionBy("label").parquet(f"{path}/labeled")
-
-
-def ivf_assignment_drift(
-    embeddings: DataFrame,
-    centroids: list,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Refit signal for the incremental path: per-label count and mean
-    squared distance of ``embeddings`` to their NEAREST persisted
-    centroid.  A new batch whose mean distance is far above the
-    fit-time corpus's says the codebook no longer fits the
-    distribution (time to refit + rewrite — offline, like BM25
-    compaction).  One map pass + a k-row aggregate."""
-    import numpy as np
-    import pandas
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)
-    c_sq = (C * C).sum(axis=1)
-
-    def _mind2(vecs):
-        V = np.stack(vecs.to_numpy()).astype(np.float64)
-        d = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + c_sq
-        return pandas.Series(d.min(axis=1))
-
-    _mind2.__annotations__ = {"vecs": pandas.Series, "return": pandas.Series}
-    mind2 = pandas_udf("double")(_mind2)
-
-    labeled = assign_labels(embeddings, centroids, id_col, vec_col)
-    return (
-        labeled.withColumn("_d2", mind2(F.col(vec_col)))
-        .groupBy("label")
-        .agg(
-            F.count("*").alias("n"),
-            F.avg("_d2").alias("mean_sq_dist"),
-        )
-    )
-
-
-def append_lsh_index(
-    spark,
-    path: str,
-    new_embeddings: DataFrame,
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental LSH maintenance: bucket the new batch with the
-    PERSISTED plane parameters (md5-derived planes are pure functions
-    of (seed, n_planes, dim), so old and new rows hash identically by
-    construction — there is no drift concept here, unlike IVF) and
-    append inside the existing ``bucket=`` partition directories.
-    Old files untouched; probes see old + new immediately."""
-    m = spark.read.parquet(f"{path}/meta").collect()[0]
-    planes = random_hyperplanes(int(m["dim"]), int(m["n_planes"]), int(m["seed"]))
-    bucketed = new_embeddings.withColumn(
-        "bucket", lsh_bucket_expr(F.col(vec_col), planes)
-    )
-    bucketed.write.mode("append").partitionBy("bucket").parquet(
-        f"{path}/bucketed"
     )

@@ -229,16 +229,6 @@ def _conflict_backoff(
     (sleep or _time.sleep)(delay * (0.5 + 0.5 * random.random()))
 
 
-def _commit(path: str, version: int, manifest: dict) -> None:
-    """Single-shot commit for callers that already resolved their
-    version (raises on a concurrent claim instead of retrying)."""
-    if not _try_commit(path, version, manifest):
-        raise RuntimeError(
-            f"concurrent commit: version {version} of {path} was claimed "
-            "by another writer"
-        )
-
-
 def _occ_commit(path: str, attempt):
     """THE optimistic commit loop every commit of this module runs:
     ``attempt(v, m)`` gets the head version and manifest (None before
@@ -1707,56 +1697,6 @@ def snap_diff(
     return ins.unionByName(del_)
 
 
-def snap_diff_keyed(
-    spark: SparkSession,
-    path: str,
-    keys: list[str],
-    v_from: int,
-    v_to: int | None = None,
-) -> DataFrame:
-    """Change-data feed WITH row identity (Delta CDF parity): given
-    the table's key columns, a key present on both sides of the value
-    diff is an UPDATE — its old row tagged ``update_preimage`` and its
-    new row ``update_postimage`` — while one-sided keys stay
-    ``insert``/``delete``.  One partial-agg over the (already
-    O(delta)) feed plus a null-safe key join; NULL-keyed rows classify
-    like any other key (groupBy keeps the NULL group).  With
-    non-unique keys every changed row of the key is tagged as an
-    update image (the feed has no finer identity to pair on)."""
-    from pyspark.sql import functions as F
-
-    feed = snap_diff(spark, path, v_from, v_to)
-    flags = feed.groupBy(*keys).agg(
-        F.max((F.col("_change") == "insert").cast("int")).alias("__ins"),
-        F.max((F.col("_change") == "delete").cast("int")).alias("__del"),
-    )
-    import functools
-    import operator
-
-    fl = flags
-    for k in keys:
-        fl = fl.withColumnRenamed(k, f"__k_{k}")
-    cond = functools.reduce(
-        operator.and_,
-        [feed[k].eqNullSafe(fl[f"__k_{k}"]) for k in keys],
-    )
-    both = (F.col("__ins") == 1) & (F.col("__del") == 1)
-    return (
-        feed.join(fl, cond, "left")
-        .withColumn(
-            "_change_type",
-            F.when(
-                both,
-                F.when(
-                    F.col("_change") == "insert",
-                    F.lit("update_postimage"),
-                ).otherwise(F.lit("update_preimage")),
-            ).otherwise(F.col("_change")),
-        )
-        .drop("_change", "__ins", "__del", *[f"__k_{k}" for k in keys])
-    )
-
-
 def snap_changes_since(
     spark: SparkSession, path: str, last_version: int
 ) -> tuple[DataFrame, int]:
@@ -1860,45 +1800,6 @@ def snap_maintain(
         dry_run=not vacuum,
     )
     return report
-
-
-def snapshot_sink(
-    stream_df: DataFrame,
-    path: str,
-    app_id: str,
-    checkpoint: str,
-    auto_compact: bool = True,
-    small_bytes: int = 8 << 20,
-    target_bytes: int = 128 << 20,
-    max_manifests: int = 16,
-):
-    """Structured Streaming -> snapshot table with exactly-once
-    semantics: foreachBatch is at-least-once (a batch can re-run after
-    a sink crash), and ``snap_append_txn`` makes the duplicate commit
-    a no-op.  Each micro-batch is also one ATOMIC table version —
-    readers never see a torn batch (plain parquet appends give
-    neither property).
-
-    ``auto_compact`` (default on) runs :func:`maybe_compact` after
-    each commit: a long-running sink otherwise accumulates one small
-    file and one manifest per micro-batch, and at 100 TB the per-file
-    open/footer and per-manifest listing cost — not the bytes —
-    dominate scans of such a table.  Compaction is its own OCC commit
-    AFTER the batch's txn commit, so replay markers and exactly-once
-    semantics are untouched (pinned in tests)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        snap_append_txn(batch_df, path, app_id, batch_id)
-        if auto_compact:
-            maybe_compact(
-                batch_df.sparkSession, path,
-                small_bytes, target_bytes, max_manifests,
-            )
-
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-    )
 
 
 def snap_delete_where(
@@ -2166,58 +2067,6 @@ def _stage_dvs(path: str, hits: DataFrame, n_cand: int) -> tuple[list[str], dict
             os.remove(src)
     os.rmdir(staging)
     return moved, dict(new_counts)
-
-
-def snap_clone(src_path: str, dst_path: str, version: int | None = None) -> int:
-    """SHALLOW CLONE (Delta parity): create a NEW table at
-    ``dst_path`` whose first version references the source table's
-    data files, deletion vectors, and bloom sidecars BY ABSOLUTE PATH
-    — zero bytes copy, the clone is writable immediately, and every
-    mutation on either table is invisible to the other (immutable
-    files + per-table manifests).  ``version`` clones a historical
-    version (time-travel fork).  Streaming txn markers do NOT carry —
-    the clone is a new exactly-once domain.
-
-    The Delta caveat applies verbatim: VACUUM ON THE SOURCE can
-    retire files the clone still references (the source does not know
-    its clones).  Vacuum on the clone is safe — absolute references
-    live outside the clone's own directories, so its reachability
-    scan never deletes them.  Clone-local writes create relative
-    entries; the two kinds mix freely in one manifest."""
-    v = _latest_version(src_path) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no snapshot table at {src_path}")
-    m = _read_manifest(src_path, v)
-    entries = []
-    for e in _manifest_entries(src_path, m):
-        if isinstance(e, dict):
-            e2 = dict(e)
-            e2["name"] = os.path.join(src_path, e["name"])
-            if e.get("bloom"):
-                b = dict(e["bloom"])
-                b["sidecar"] = os.path.join(src_path, b["sidecar"])
-                e2["bloom"] = b
-            entries.append(e2)
-        else:
-            entries.append(os.path.join(src_path, e))
-    if _latest_version(dst_path) is not None:
-        raise FileExistsError(f"snapshot table already exists at {dst_path}")
-    name = _write_manifest_file(dst_path, entries)
-    manifest = {
-        "version": 0, "op": "clone", "parent": None,
-        "cloned": {"src": src_path, "version": v},
-        "manifests": [name], "schema": m.get("schema"),
-    }
-    if m.get("dvs"):
-        manifest["dvs"] = [os.path.join(src_path, n) for n in m["dvs"]]
-        manifest["dv_rows"] = m.get("dv_rows", 0)
-        if "dv_counts" in m:
-            manifest["dv_counts"] = dict(m["dv_counts"])
-    if not _try_commit(dst_path, 0, manifest):
-        raise FileExistsError(
-            f"lost the table-creation race at {dst_path}"
-        )
-    return 0
 
 
 def snap_delete_where_mor(

@@ -11,11 +11,12 @@ Delta/Iceberg expose as OPTIMIZE ZORDER BY; public algorithm, Morton
 1966).
 
 Shape: one stats aggregation (min/max per column, to normalize values
-into the bit budget), one map-side z-value projection (integer
-shifts/masks — no UDF), one range repartition + in-partition sort,
-one write.  Entirely write-time cost, amortized over every subsequent
-scan — the economics of every other persisted layout in this repo
-(BM25 term buckets, IVF labels, LSH buckets).
+into the bit budget) and one map-side z-value projection (integer
+shifts/masks — no UDF).  The snapshot writer (``zorder_by`` in
+plans/snapshots.py) then range-partitions and sorts on the key.
+Entirely write-time cost, amortized over every subsequent scan — the
+economics of every other persisted layout in this repo (BM25 term
+buckets, IVF labels, LSH buckets).
 """
 
 from __future__ import annotations
@@ -83,33 +84,4 @@ def with_zvalue(
     ]
     return withs.withColumn(out, zvalue_expr(norms, bits)).drop(
         *[f"_mn_{c}" for c in cols], *[f"_mx_{c}" for c in cols]
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 16,
-    bits: int = DEFAULT_BITS,
-) -> None:
-    """Cluster ``df`` by the Morton key of ``cols`` into ``n_files``
-    range-partitioned, internally-sorted parquet files; the key itself
-    is not persisted.  Parquet footer min/max stats on the data columns
-    then let ANY participating column's range predicate skip files."""
-    z = with_zvalue(df, cols, bits)
-    (
-        z.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def files_touched(df: DataFrame) -> int:
-    """Distinct input files feeding ``df`` after filter pushdown — the
-    observable effect of a clustered layout (tests assert on it)."""
-    return (
-        df.select(F.input_file_name().alias("_f")).distinct().count()
     )

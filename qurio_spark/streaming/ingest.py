@@ -3,16 +3,16 @@
 The reference has no event-time streaming — NSQ is an at-least-once
 work queue (SURVEY §1.3, §2.7) — so this module is the *extension*
 surface: the events table treated as a stream, with the batch queries
-in ``__spark_entry__`` (events_hourly etc.) as their exactly-equivalent
+in ``__spark_entry__`` (events_sessions etc.) as their exactly-equivalent
 batch twins (same expressions, so batch output == final streaming
 output — that equivalence is the test oracle, tests/test_streaming.py).
 
 Patterns covered:
-  - windowed aggregation with watermark (late-data bounded state)
-  - streaming dedup by key + watermark (the streaming form of F8)
+  - gap sessionization with event-time timeouts and state eviction
   - foreachBatch ingest: reuse the BATCH chunk pipeline per micro-batch
     — the Spark-native replacement for the reference's queue consumers
-    (50-way NSQ handlers -> micro-batch task parallelism, M7).
+    (50-way NSQ handlers -> micro-batch task parallelism, M7)
+  - streaming near-dup dedup against the already-committed corpus.
 """
 
 from __future__ import annotations
@@ -47,149 +47,6 @@ def streaming_state_partitions(spark, n: int = 8):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def hourly_event_counts(
-    events_stream: DataFrame,
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Tumbling 1-hour windowed counts/sums with a late-data watermark.
-
-    State stays bounded: windows older than the watermark are finalized
-    and evicted — the 100 TB/day concern for a streaming agg.
-    """
-    return (
-        events_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("w.start").alias("hour"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-def enrich_stream(
-    events_stream: DataFrame,
-    dim: DataFrame,
-    on: str,
-    how: str = "left",
-    broadcast: bool = True,
-) -> DataFrame:
-    """Stream-static dimension enrichment: join each micro-batch
-    against a BATCH dimension table.  Spark re-plans the static side
-    per micro-batch (a refreshed dim parquet is picked up without
-    restarting the query) — the standard shape for user/source
-    metadata lookup on an event stream.  Stateless: no state store.
-
-    ``broadcast=True`` (default) pins the broadcast hint for the
-    common small-dim case; pass False for a dim too large to
-    replicate, letting Spark's size-based planner choose (a forced
-    hint on a multi-GB dim would broadcast it every micro-batch)."""
-    if broadcast:
-        dim = F.broadcast(dim)
-    return events_stream.join(dim, on, how)
-
-
-def dedup_stream(
-    events_stream: DataFrame,
-    keys: list[str],
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming exact-dedup: first occurrence per key wins; state
-    bounded by the watermark (dropDuplicatesWithinWatermark)."""
-    return events_stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        keys
-    )
-
-
-def sessionize_stream(
-    events_stream: DataFrame,
-    gap_s: int = 1800,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    order_col: str = "event_id",
-) -> DataFrame:
-    """Custom stateful operator: gap-based sessionization per user via
-    ``applyInPandasWithState`` (the extension point for operators
-    Structured Streaming lacks natively).
-
-    State per user = (last event time, current session seq, current
-    session aggregates); a gap > ``gap_s`` opens the next session.
-    Update-mode output: one row per session TOUCHED in the micro-batch
-    — downstream upserts by (user, session_seq).  The batch twin is the
-    lag+cumsum sessionization in ``__spark_entry__.q_events_sessions``
-    (oracle-checked); equivalence is asserted in tests.
-
-    State scales with |active users|, not |events|; this twin is kept
-    timeout-free so the single-pass batch-equivalence check is exact.
-    The PRODUCTION variant is :func:`sessionize_stream_evicting` —
-    event-time timeouts finalize idle sessions and REMOVE their state,
-    so long-running streams hold state only for currently-active keys.
-
-    All arithmetic is EXACT-INTEGER (r12, after the r11 oracle hash
-    flake): event times are integer microseconds (``Timestamp.value``,
-    never float ``timestamp()`` whose last-ulp can truncate a
-    millisecond), the gap test compares floor-second epochs exactly
-    like the batch twin's ``cast(ts as long)`` lag diff, and values
-    accumulate as integer CENTS (``floor(v*100+0.5)``, the
-    ``stable_round`` half-up) — integer sums are order- and
-    batching-invariant, so no summation order can flip a rounding
-    boundary downstream.
-    """
-    import math
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = (
-        f"{user_col} long, session_seq int, n_events long, session_value double"
-    )
-    state_schema = "last_us long, session_seq int, n_events long, session_cents long"
-
-    def fn(key, pdfs, state):
-        if state.exists:
-            last_us, seq, n, cents = state.get
-        else:
-            last_us, seq, n, cents = None, 0, 0, 0
-        touched: dict[int, tuple[int, int]] = {}
-        # ONE global sort over the whole group: a group larger than
-        # the Arrow batch size arrives as several chunks in
-        # delivery-dependent order, and sorting each chunk separately
-        # would make session assignment nondeterministic run-to-run
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-            pdf = pdf.sort_values([ts_col, order_col])
-            for ts, val in zip(pdf[ts_col], pdf[value_col]):
-                t_us = ts.value // 1000  # exact integer micros
-                if (
-                    last_us is not None
-                    and t_us // 1_000_000 - last_us // 1_000_000 > gap_s
-                ):
-                    seq, n, cents = seq + 1, 0, 0
-                last_us = t_us
-                n += 1
-                cents += int(math.floor(float(val) * 100.0 + 0.5))
-                touched[seq] = (n, cents)
-        state.update((last_us, seq, n, cents))
-        yield pd.DataFrame(
-            {
-                user_col: [key[0]] * len(touched),
-                "session_seq": list(touched.keys()),
-                "n_events": [v[0] for v in touched.values()],
-                "session_value": [v[1] / 100.0 for v in touched.values()],
-            }
-        )
-
-    return events_stream.groupBy(user_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
 def sessionize_stream_evicting(
     events_stream: DataFrame,
     gap_s: int = 1800,
@@ -199,10 +56,12 @@ def sessionize_stream_evicting(
     value_col: str = "value",
     order_col: str = "event_id",
 ) -> DataFrame:
-    """The production twin of :func:`sessionize_stream`: emits each
-    session exactly ONCE when it CLOSES (append semantics) and EVICTS
-    the user's state via an EVENT-TIME TIMEOUT — the piece the
-    update-mode twin documents as its 100 TB caveat.
+    """Gap-based sessionization per user via
+    ``applyInPandasWithState`` (the extension point for operators
+    Structured Streaming lacks natively): emits each session exactly
+    ONCE when it CLOSES (append semantics) and EVICTS the user's state
+    via an EVENT-TIME TIMEOUT.  The batch twin is the lag+cumsum
+    sessionization of ``q_events_sessions``.
 
     A session closes two ways, both emitted here:
       - INLINE: a later event for the same user arrives more than
@@ -258,8 +117,11 @@ def sessionize_stream_evicting(
                 last_us, seq, n, cents = state.get
             else:
                 last_us, seq, n, cents = None, 0, 0, 0
-            # one global sort over the whole group (see
-            # sessionize_stream: per-chunk sorting is order-unstable)
+            # ONE global sort over the whole group: a group larger
+            # than the Arrow batch size arrives as several chunks in
+            # delivery-dependent order, and sorting each chunk
+            # separately would make session assignment
+            # nondeterministic run-to-run
             chunks = [p for p in pdfs if len(p)]
             if chunks:
                 pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)

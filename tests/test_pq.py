@@ -15,7 +15,6 @@ from qurio_spark.operators.pq import (
     pq_encode,
     pq_fit,
     pq_pack_expr,
-    pq_quantization_error,
     pq_topk,
     pq_topk_refined,
     pq_unpack_expr,
@@ -417,20 +416,6 @@ def test_ivfpq_persisted_probe_plan(spark, emb, fitted, tmp_path):
     assert a["bhj"] == 1 and a["smj"] == a["bnlj"] == 0, a["plan"]
 
 
-def test_pq_quantization_error_signal(emb, fitted):
-    """The refit signal: near-zero for vectors AT the codebook
-    centroids, strictly larger for a shifted batch (the drift case
-    maybe_refit_pq gates on)."""
-    books, _ = fitted
-    base = pq_quantization_error(emb, books).first()
-    assert base["n"] == emb.count() and base["mean_sq_err"] >= 0
-    shifted = emb.withColumn(
-        "embedding", F.transform("embedding", lambda x: x + F.lit(5.0))
-    )
-    drifted = pq_quantization_error(shifted, books).first()
-    assert drifted["mean_sq_err"] > base["mean_sq_err"] * 2
-
-
 def test_index_roundtrip(spark, emb, fitted, tmp_path):
     books, codes = fitted
     path = str(tmp_path / "pq_index")
@@ -458,39 +443,6 @@ def test_adc_scan_stays_jvm_side(spark, emb, fitted, tmp_path):
     assert a["python_stages"] == 0, a["plan"]
     assert a["shuffles"] == 0, a["plan"]
     assert a["smj"] == a["bhj"] == a["bnlj"] == 0, a["plan"]
-
-
-def test_append_pq_index(spark, emb, fitted, tmp_path):
-    """Incremental encode-append: new batch coded with the persisted
-    codebooks; merged codes == single-shot encode of the union."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from qurio_spark.operators.pq import append_pq_index
-
-    books, _ = fitted
-    base = emb.filter(F.col("vec_id") % 4 != 0)
-    delta = emb.filter(F.col("vec_id") % 4 == 0)
-    path = str(tmp_path / "pq_inc")
-    write_pq_index(pq_encode(base, books), books, path)
-    before = {
-        os.path.join(r, f): os.path.getmtime(os.path.join(r, f))
-        for r, _, fs in os.walk(f"{path}/codes")
-        for f in fs
-        if f.endswith(".parquet")
-    }
-    append_pq_index(spark, path, delta)
-    after = {p: os.path.getmtime(p) for p in before if os.path.exists(p)}
-    assert after == before
-
-    merged, books2 = read_pq_index(spark, path)
-    want = {
-        (r["vec_id"], tuple(r["codes"]))
-        for r in pq_encode(emb, books).collect()
-    }
-    got = {(r["vec_id"], tuple(r["codes"])) for r in merged.collect()}
-    assert got == want
 
 
 class TestBatchPq:

@@ -783,146 +783,6 @@ class TestPersistedLSHIndex:
             lsh_topk_prebuilt(idx, [1.0] * (dim + 1), k=5)
 
 
-class TestIncrementalIvf:
-    """append_ivf_index: one labeling pass with the persisted codebook,
-    new files appended INSIDE existing label partitions, old files
-    untouched — the vector twin of the segmented BM25 append."""
-
-    def test_append_matches_single_shot_and_preserves_files(
-        self, spark, sf_dir, tmp_path
-    ):
-        import os
-
-        from pyspark.sql import functions as F
-
-        from qurio_spark.operators.similarity import (
-            append_ivf_index,
-            assign_labels,
-            ivf_build,
-            ivf_topk,
-            read_ivf_index,
-            write_ivf_index,
-        )
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id", "embedding"
-        )
-        base = emb.filter(F.col("vec_id") % 5 != 0)
-        delta = emb.filter(F.col("vec_id") % 5 == 0)
-
-        path = str(tmp_path / "ivf_inc")
-        labeled, cdf = ivf_build(base, k=4, iters=2)
-        write_ivf_index(labeled, cdf, path)
-        before = {
-            os.path.join(root, f): os.path.getmtime(os.path.join(root, f))
-            for root, _, files in os.walk(f"{path}/labeled")
-            for f in files
-            if f.endswith(".parquet")
-        }
-        assert before
-
-        append_ivf_index(spark, path, delta)
-        after = {
-            p: os.path.getmtime(p)
-            for p in before
-            if os.path.exists(p)
-        }
-        assert after == before  # no pre-existing file rewritten/removed
-
-        # merged index == labeling the union corpus with the SAME
-        # frozen codebook (order-insensitive)
-        merged, cdf2 = read_ivf_index(spark, path)
-        centroids = [
-            [float(x) for x in r["centroid"]]
-            for r in sorted(cdf2.collect(), key=lambda r: r["label"])
-        ]
-        want = assign_labels(emb, centroids)
-        got_rows = {(r["vec_id"], r["label"]) for r in merged.collect()}
-        want_rows = {(r["vec_id"], r["label"]) for r in want.collect()}
-        assert got_rows == want_rows
-
-        # probes see base AND delta vectors through the same pruning
-        q = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-        top = ivf_topk(merged, q, centroids=cdf2, nprobe=4, k=10)
-        ids = [r["vec_id"] for r in top.collect()]
-        assert 0 in ids  # vec 0 is in the delta batch
-
-    def test_drift_signal_shapes(self, spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from qurio_spark.operators.similarity import (
-            ivf_assignment_drift,
-            kmeans_fit,
-        )
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id", "embedding"
-        )
-        cents = kmeans_fit(emb, k=4, iters=2)
-        fit_stats = ivf_assignment_drift(emb, cents).collect()
-        assert {r["label"] for r in fit_stats} <= set(range(4))
-        base_mean = sum(r["mean_sq_dist"] * r["n"] for r in fit_stats) / sum(
-            r["n"] for r in fit_stats
-        )
-        # a shifted batch must read as drifted vs the fit-time corpus
-        shifted = emb.withColumn(
-            "embedding",
-            F.transform("embedding", lambda x: x + F.lit(3.0)).cast(
-                "array<float>"
-            ),
-        )
-        drift_stats = ivf_assignment_drift(shifted, cents).collect()
-        drift_mean = sum(
-            r["mean_sq_dist"] * r["n"] for r in drift_stats
-        ) / sum(r["n"] for r in drift_stats)
-        assert drift_mean > 2 * base_mean
-
-
-def test_append_lsh_index(spark, sf_dir, tmp_path):
-    """Incremental LSH append: frozen-plane bucketing means old and new
-    rows hash identically; merged index == single-shot build."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from qurio_spark.operators.similarity import (
-        append_lsh_index,
-        read_lsh_index,
-        write_lsh_index,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    dim = len(emb.first()["embedding"])
-    base = emb.filter(F.col("vec_id") % 3 != 0)
-    delta = emb.filter(F.col("vec_id") % 3 == 0)
-
-    inc_path = str(tmp_path / "lsh_inc")
-    write_lsh_index(base, inc_path, dim=dim, n_planes=3)
-    before = {
-        os.path.join(r, f): os.path.getmtime(os.path.join(r, f))
-        for r, _, fs in os.walk(f"{inc_path}/bucketed")
-        for f in fs
-        if f.endswith(".parquet")
-    }
-    append_lsh_index(spark, inc_path, delta)
-    after = {p: os.path.getmtime(p) for p in before if os.path.exists(p)}
-    assert after == before
-
-    full_path = str(tmp_path / "lsh_full")
-    write_lsh_index(emb, full_path, dim=dim, n_planes=3)
-    got = {
-        (r["vec_id"], r["bucket"])
-        for r in read_lsh_index(spark, inc_path).bucketed.collect()
-    }
-    want = {
-        (r["vec_id"], r["bucket"])
-        for r in read_lsh_index(spark, full_path).bucketed.collect()
-    }
-    assert got == want
-
-
 class TestHybridRRF:
     """Reciprocal-rank fusion (operators/hybrid.hybrid_search_rrf):
     rank arithmetic against a driver-side reference, branch membership,

@@ -315,64 +315,18 @@ class TestSnapUpdateWhere:
         assert snap_count(table) == 19 == snap_read(spark, table).count()
 
 
-class TestKeyedDiff:
-    """snap_diff_keyed: Delta-CDF update pre/post images — a key on
-    both sides of the value diff is an update; one-sided keys stay
-    insert/delete; NULL keys classify like any other key."""
-
-    def test_merge_produces_update_images(self, spark, table):
-        src = _kv(spark, [(3, "U3"), (50, "N50")])
-        v = snap_merge(spark, table, src, ["k"])
-        from qurio_spark.plans.snapshots import snap_diff_keyed
-
-        feed = snap_diff_keyed(spark, table, ["k"], v - 1, v)
-        got = {
-            (r["k"], r["_change_type"]): r["val"] for r in feed.collect()
-        }
-        assert got == {
-            (3, "update_preimage"): "a3",
-            (3, "update_postimage"): "U3",
-            (50, "insert"): "N50",
-        }
-
+class TestDiffNullRows:
     def test_delete_with_null_rows_no_phantom_changes(self, spark, table):
         """The NULL-keyed row lives in a stats-less file that every
         CoW delete rewrites: the value cancel must be NULL-SAFE or the
         untouched NULL row emits a phantom insert+delete pair."""
-        from qurio_spark.plans.snapshots import (
-            snap_delete_where,
-            snap_diff_keyed,
-        )
+        from qurio_spark.plans.snapshots import snap_delete_where, snap_diff
 
         snap_append(_kv(spark, [(None, "tnull")]), table)
         v = snap_delete_where(spark, table, "k", lo=7, hi=8)
-        feed = snap_diff_keyed(spark, table, ["k"], v - 1, v)
-        got = sorted(
-            (r["k"], r["_change_type"], r["val"]) for r in feed.collect()
-        )
+        feed = snap_diff(spark, table, v - 1, v)
+        got = sorted((r["k"], r["_change"], r["val"]) for r in feed.collect())
         assert got == [(7, "delete", "a7"), (8, "delete", "a8")]
-
-    def test_null_key_pairs_as_update(self, spark, table):
-        """A one-commit delete+insert of the NULL key (replace_values
-        with None) must pair as update pre/post images — the keyed
-        diff's join is null-safe."""
-        from qurio_spark.plans.snapshots import (
-            snap_diff_keyed,
-            snap_replace_values,
-        )
-
-        snap_append(_kv(spark, [(None, "tnull")]), table)
-        v = snap_replace_values(
-            spark, table, "k", [None], _kv(spark, [(None, "snull")])
-        )
-        feed = snap_diff_keyed(spark, table, ["k"], v - 1, v)
-        got = {
-            r["_change_type"]: (r["k"], r["val"]) for r in feed.collect()
-        }
-        assert got == {
-            "update_preimage": (None, "tnull"),
-            "update_postimage": (None, "snull"),
-        }
 
 
 class TestSnapMergeMor:

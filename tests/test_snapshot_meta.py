@@ -184,87 +184,6 @@ class TestHistoryAndDryRun:
             assert not os.path.exists(os.path.join(table, rel))
 
 
-class TestShallowClone:
-    def test_clone_reads_source_with_zero_copy(self, spark, table, tmp_path):
-        import os
-
-        from qurio_spark.plans.snapshots import snap_clone
-
-        clone = str(tmp_path / "clone")
-        snap_clone(table, clone)
-        assert _vals(spark, clone) == list(range(20))
-        assert snap_count(clone) == 20
-        # zero bytes copied: the clone has no data directory at all
-        assert not os.path.isdir(os.path.join(clone, "data"))
-
-    def test_divergence_is_invisible_both_ways(self, spark, table, tmp_path):
-        from qurio_spark.plans.snapshots import snap_clone, snap_delete_where
-
-        clone = str(tmp_path / "clone")
-        snap_clone(table, clone)
-        snap_delete_where(spark, clone, "v", lo=0, hi=9)   # clone-only
-        snap_append(
-            spark.range(50, 52).select(F.col("id").alias("v")), table
-        )  # source-only
-        assert _vals(spark, clone) == list(range(10, 20))
-        assert _vals(spark, table) == list(range(20)) + [50, 51]
-
-    def test_clone_carries_vectors_and_historic_version(
-        self, spark, table, tmp_path
-    ):
-        from qurio_spark.plans.snapshots import snap_clone
-
-        snap_delete_where_mor(spark, table, "v", lo=0, hi=4)
-        # clone v0 (before the delete) AND latest (with the vectors)
-        old = str(tmp_path / "old")
-        snap_clone(table, old, version=0)
-        assert _vals(spark, old) == list(range(10))
-        cur = str(tmp_path / "cur")
-        snap_clone(table, cur)
-        assert _vals(spark, cur) == list(range(5, 20))
-        assert snap_count(cur) == 15
-
-    def test_clone_vacuum_never_touches_source(self, spark, table, tmp_path):
-        import os
-
-        from qurio_spark.plans.snapshots import (
-            snap_clone,
-            snap_delete_where,
-        )
-
-        clone = str(tmp_path / "clone")
-        snap_clone(table, clone)
-        # a clone-local rewrite strands nothing of the source's
-        snap_delete_where(spark, clone, "v", lo=0, hi=9)
-        snap_vacuum(clone, keep_last=1, grace_seconds=0.0)
-        assert _vals(spark, table) == list(range(20))  # source intact
-        assert _vals(spark, clone) == list(range(10, 20))
-
-    def test_clone_txn_domain_is_fresh(self, spark, table, tmp_path):
-        from qurio_spark.plans.snapshots import snap_clone
-
-        snap_append_txn(
-            spark.range(30, 31).select(F.col("id").alias("v")), table,
-            "app", 3,
-        )
-        clone = str(tmp_path / "clone")
-        snap_clone(table, clone)
-        # the same (app, batch) applies on the clone: new domain
-        v = snap_append_txn(
-            spark.range(40, 41).select(F.col("id").alias("v")), clone,
-            "app", 3,
-        )
-        assert v is not None
-
-    def test_clone_refuses_existing_target(self, spark, table, tmp_path):
-        from qurio_spark.plans.snapshots import snap_clone
-
-        clone = str(tmp_path / "clone")
-        snap_clone(table, clone)
-        with pytest.raises(FileExistsError):
-            snap_clone(table, clone)
-
-
 class TestReviewRegressions:
     """Round-10 review findings, each pinned."""
 

@@ -3,7 +3,6 @@ correctness, literal parsing, and end-to-end parity of the SQL route
 with the Python-API route for hybrid search."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from qurio_spark.sqlfront import (
     SqlFunctionError,
@@ -244,8 +243,6 @@ class TestHybridSqlParity:
     def test_sql_route_matches_python_api(self, spark, sf_dir):
         """The driver-window entry q_hybrid_topk now runs through the
         SQL surface; pin it against the direct operator call."""
-        from pyspark.sql import functions as F
-
         from qurio_spark.functions.numeric import stable_round
         from qurio_spark.operators.hybrid import hybrid_search
         from qurio_spark.queries.common import (
@@ -274,128 +271,6 @@ class TestHybridSqlParity:
             "SELECT doc_id FROM bm25_search('hash join spark', k => 5)"
         )
         assert df.count() == 5
-
-
-class TestEngineSqlCatalog:
-    """register_engine_sql (queries/sqlcatalog.py): each SQL route must
-    return the SAME rows as the direct Python-API call it wraps."""
-
-    @pytest.fixture()
-    def fns(self, spark, sf_dir):
-        from qurio_spark.queries.sqlcatalog import register_engine_sql
-
-        return register_engine_sql(spark, sf_dir)
-
-    def test_ann_search_matches_brute_force(self, spark, sf_dir, fns):
-        from pyspark.sql import functions as F
-
-        from qurio_spark.operators.similarity import brute_force_topk
-        from qurio_spark.queries.common import _t
-
-        emb = _t(spark, sf_dir, "embeddings")
-        vid = emb.select(F.min("vec_id")).first()[0]
-        via_sql = {
-            (r["vec_id"], r["score"])
-            for r in fns.sql(
-                f"SELECT * FROM ann_search({vid}, k => 5)"
-            ).collect()
-        }
-        from qurio_spark.functions.numeric import stable_round
-
-        q = [
-            float(x)
-            for x in emb.filter(F.col("vec_id") == vid).first()["embedding"]
-        ]
-        direct = brute_force_topk(emb, q, k=5).select(
-            "vec_id", stable_round("score", 4).alias("score")
-        )
-        assert via_sql == {(r["vec_id"], r["score"]) for r in direct.collect()}
-        assert len(via_sql) == 5
-
-    def test_ann_search_unknown_vec_id(self, fns):
-        with pytest.raises(SqlFunctionError):
-            fns.sql("SELECT * FROM ann_search(-999)")
-
-    def test_near_dup_pairs_matches_minhash(self, spark, sf_dir, fns):
-        from qurio_spark.operators.dedup import minhash_lsh_pairs
-        from qurio_spark.queries.common import _t
-
-        got = fns.sql(
-            "SELECT id_a, id_b FROM near_dup_pairs(method => 'minhash') "
-            "ORDER BY id_a, id_b"
-        ).collect()
-        want = (
-            minhash_lsh_pairs(
-                _t(spark, sf_dir, "documents"), num_perm=4, bands=2,
-                threshold=0.5,
-            )
-            .select("id_a", "id_b")
-            .orderBy("id_a", "id_b")
-            .collect()
-        )
-        assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-    def test_near_dup_pairs_unknown_method(self, fns):
-        with pytest.raises(SqlFunctionError):
-            fns.sql("SELECT * FROM near_dup_pairs(method => 'nope')")
-
-    def test_curate_composes_in_sql(self, spark, sf_dir, fns):
-        """The curation pipeline as a relation inside a GROUP BY."""
-        from qurio_spark.operators.cachectl import release_caches
-        from qurio_spark.operators.curate import curate_corpus
-        from qurio_spark.queries.common import _t
-
-        got = {
-            (r["source"], r["kept"])
-            for r in fns.sql(
-                "SELECT source, count(*) AS kept "
-                "FROM curate(budget => 800) GROUP BY source"
-            ).collect()
-        }
-        direct = curate_corpus(
-            _t(spark, sf_dir, "documents"), per_source_token_budget=800
-        )
-        want = {
-            (r["source"], r["kept"])
-            for r in direct.groupBy("source")
-            .agg(F.count("*").alias("kept"))
-            .collect()
-        }
-        release_caches(direct)
-        assert got == want and got
-
-    def test_pack_shards_sql(self, spark, sf_dir, fns):
-        from qurio_spark.operators.sharding import pack_shards
-        from qurio_spark.queries.common import _t
-
-        got = fns.sql(
-            "SELECT count(DISTINCT shard_id) AS n FROM pack_shards(budget => 2000)"
-        ).first()["n"]
-        want = (
-            pack_shards(_t(spark, sf_dir, "documents"), token_budget=2000)
-            .select("shard_id")
-            .distinct()
-            .count()
-        )
-        assert got == want and got > 0
-
-    def test_dq_profile_sql(self, spark, sf_dir, fns):
-        got = {
-            (r["metric"], r["column"]): r["value"]
-            for r in fns.sql("SELECT * FROM dq_profile('orders')").collect()
-        }
-        assert got[("completeness", "o_orderkey")] == 1.0
-        assert got[("min", "o_totalprice")] > 0
-        # row_count matches the table
-        from qurio_spark.queries.common import _t
-
-        assert got[("row_count", "*")] == float(
-            _t(spark, sf_dir, "orders").count()
-        )
-
-    def test_dq_profile_unknown_table(self, fns):
-        with pytest.raises(SqlFunctionError):
-            fns.sql("SELECT * FROM dq_profile('../etc/passwd')")
 
 
 class TestParserProperties:

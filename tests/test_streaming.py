@@ -1,164 +1,12 @@
-"""Structured Streaming: windowed agg with watermark, streaming dedup,
-foreachBatch ingest — each checked against its batch twin (streaming
+"""Structured Streaming: foreachBatch ingest, cross-batch dedup and the
+evicting sessionizer — each checked against its batch twin (streaming
 final output must equal the batch computation on the same data)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from qurio_spark.schemas import DOCUMENTS_RAW
-from qurio_spark.streaming.ingest import (
-    dedup_stream,
-    hourly_event_counts,
-    sessionize_stream,
-    streaming_ingest,
-)
-
-
-@pytest.fixture(scope="module")
-def events_dir(spark, tmp_path_factory):
-    """Small deterministic event set written as parquet (the stream
-    source; file sources make availableNow triggers replayable)."""
-    path = str(tmp_path_factory.mktemp("events") / "ev")
-    rows = [
-        (i, f"2024-01-01 {i % 3:02d}:15:00", i % 4, "click" if i % 2 else "view", float(i))
-        for i in range(60)
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts string, user_id long, event_type string, value double"
-    ).withColumn("ts", F.to_timestamp("ts"))
-    df.coalesce(1).write.mode("overwrite").parquet(path)
-    return path
-
-
-def _run_stream(spark, stream_df, tmp_path, mode="append"):
-    out = str(tmp_path / "out")
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.read.parquet(out)
-
-
-class TestWindowedAgg:
-    def test_matches_batch_twin(self, spark, events_dir, tmp_path):
-        batch = spark.read.parquet(events_dir)
-        stream = spark.readStream.schema(batch.schema).parquet(events_dir)
-        # complete mode: append would hold back windows the final
-        # watermark hasn't closed (correct streaming semantics; the
-        # twin-equivalence check wants the full state)
-        q = (
-            hourly_event_counts(stream)
-            .writeStream.format("memory")
-            .queryName("hourly_counts")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = spark.sql("SELECT * FROM hourly_counts").collect()
-        want = (
-            batch.groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type")
-            .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-            .collect()
-        )
-        key = lambda r: (r["hour"], r["event_type"])
-        assert {key(r): (r["n"], r["total_value"]) for r in got} == {
-            key(r): (r["n"], r["total_value"]) for r in want
-        }
-
-
-class TestStreamingDedup:
-    def test_first_occurrence_wins(self, spark, events_dir, tmp_path):
-        batch = spark.read.parquet(events_dir)
-        stream = spark.readStream.schema(batch.schema).parquet(events_dir)
-        got = _run_stream(spark, dedup_stream(stream, ["user_id", "event_type"]), tmp_path)
-        assert got.count() == batch.select("user_id", "event_type").distinct().count()
-
-
-class TestStreamStaticJoin:
-    def test_enrichment_matches_batch_join(self, spark, events_dir, tmp_path):
-        """Stream-static dim enrichment == the identical batch join
-        (stateless, dim broadcast per micro-batch)."""
-        from qurio_spark.streaming.ingest import enrich_stream
-
-        batch = spark.read.parquet(events_dir)
-        dim = spark.createDataFrame(
-            [(0, "free"), (1, "pro"), (2, "free"), (3, "team")],
-            "user_id long, plan string",
-        )
-        stream = spark.readStream.schema(batch.schema).parquet(events_dir)
-        got = _run_stream(
-            spark, enrich_stream(stream, dim, "user_id"), tmp_path
-        )
-        want = batch.join(dim, "user_id", "left")
-        assert got.count() == batch.count()  # left join keeps every event
-        a = sorted(map(tuple, got.select("event_id", "plan").collect()))
-        b = sorted(map(tuple, want.select("event_id", "plan").collect()))
-        assert a == b
-
-    def test_unmatched_keys_survive_left_join(self, spark, events_dir, tmp_path):
-        from qurio_spark.streaming.ingest import enrich_stream
-
-        batch = spark.read.parquet(events_dir)
-        dim = spark.createDataFrame([(0, "free")], "user_id long, plan string")
-        stream = spark.readStream.schema(batch.schema).parquet(events_dir)
-        got = _run_stream(spark, enrich_stream(stream, dim, "user_id"), tmp_path)
-        assert got.filter("plan IS NULL").count() == batch.filter(
-            "user_id <> 0"
-        ).count()
-
-
-class TestStatefulSessionize:
-    def test_matches_batch_sessionization(self, spark, events_dir, tmp_path):
-        """applyInPandasWithState sessionizer == batch lag+cumsum twin
-        (the final update per (user, session_seq) wins)."""
-        from pyspark.sql.window import Window
-
-        batch = spark.read.parquet(events_dir)
-        stream = spark.readStream.schema(batch.schema).parquet(events_dir)
-        q = (
-            sessionize_stream(stream, gap_s=1800)
-            .writeStream.format("memory")
-            .queryName("sessions")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got_rows = spark.sql("SELECT * FROM sessions").collect()
-        # update mode may emit a (user, seq) several times across
-        # batches; the last emit carries the final aggregates — with a
-        # single availableNow batch each appears once, asserted here
-        got = {(r["user_id"], r["session_seq"]): (r["n_events"], r["session_value"])
-               for r in got_rows}
-        assert len(got) == len(got_rows)
-
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        flagged = batch.withColumn(
-            "new_session",
-            F.when(
-                F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
-                > 1800, 1,
-            ).otherwise(0),
-        ).withColumn(
-            "session_seq",
-            F.sum("new_session").over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ).cast("int"),
-        )
-        want = {
-            (r["user_id"], r["session_seq"]): (r["n_events"], r["session_value"])
-            for r in flagged.groupBy("user_id", "session_seq")
-            .agg(F.count("*").alias("n_events"), F.sum("value").alias("session_value"))
-            .collect()
-        }
-        assert got == want
-        assert len(want) > 4  # fixture really exercises multiple sessions
+from qurio_spark.streaming.ingest import streaming_ingest
 
 
 class TestForeachBatchIngest:
@@ -183,68 +31,6 @@ class TestForeachBatchIngest:
         want = build_chunks(spark.createDataFrame(docs, DOCUMENTS_RAW))
         assert got.count() == want.count()
         assert {r["type"] for r in got.collect()} == {r["type"] for r in want.collect()}
-
-
-class TestLateDataWatermark:
-    def test_late_event_beyond_watermark_dropped(self, spark, tmp_path):
-        """Append-mode watermark semantics: a closed window emits once,
-        and an event arriving after the watermark passed its window is
-        DROPPED — the bounded-state guarantee that makes the streaming
-        agg safe at 100 TB/day."""
-        import os
-        import time as time_mod
-        from datetime import datetime
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        schema = (
-            "event_id long, ts string, user_id long, event_type string, value double"
-        )
-
-        def write(rows):
-            (
-                spark.createDataFrame(rows, schema)
-                .withColumn("ts", F.to_timestamp("ts"))
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(src)
-            )
-
-        # micro-batch 0: one event in the 00:00 window, one at 09:15
-        # that advances the watermark to 08:15 (far past 01:00)
-        write([
-            (1, "2024-01-01 00:15:00", 1, "click", 1.0),
-            (2, "2024-01-01 09:15:00", 1, "click", 1.0),
-        ])
-        time_mod.sleep(1.2)  # distinct mod-times -> separate micro-batches
-        # micro-batch 1: benign on-time event; the 08:15 watermark
-        # (computed from batch 0) takes effect and evicts+emits the
-        # closed 00:00 window.  (Spark applies a newly computed
-        # watermark starting with the NEXT batch, so the late-drop
-        # needs the late row to arrive two batches after the
-        # watermark-advancing data.)
-        write([(3, "2024-01-01 09:30:00", 1, "view", 1.0)])
-        time_mod.sleep(1.2)
-        # micro-batch 2: a late event for the long-closed 00:00 window
-        write([(4, "2024-01-01 00:30:00", 1, "click", 1.0)])
-
-        batch_schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(batch_schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = _run_stream(
-            spark, hourly_event_counts(stream, watermark="1 hour"), tmp_path
-        ).collect()
-        rows = [(r["hour"], r["event_type"], r["n"]) for r in out]
-        # the 00:00 window emitted EXACTLY ONCE with only the on-time
-        # event; the late row was dropped (a non-dropped late row would
-        # re-open the evicted window and emit a duplicate key)
-        assert rows.count((datetime(2024, 1, 1, 0, 0), "click", 1)) == 1
-        assert all(h != datetime(2024, 1, 1, 0, 0) or n == 1 for h, _, n in rows)
-        # the 09:00 windows are still open (watermark 08:30) -> unemitted
-        assert all(h != datetime(2024, 1, 1, 9, 0) for h, _, _ in rows)
 
 
 class TestIncrementalStreamIngest:

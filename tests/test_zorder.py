@@ -1,20 +1,15 @@
 """Z-order clustering layout (plans/zorder).
 
 Pins the interleave math and the observable effect: after a z-ordered
-write, a tight predicate on EITHER (or both) participating columns
-yields rows from a small fraction of files, where a single-column
+snapshot write, a tight predicate on EITHER (or both) participating
+columns prunes to a small fraction of files, where a single-column
 layout localizes only its own column.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from qurio_spark.plans.zorder import (
-    files_touched,
-    with_zvalue,
-    write_zordered,
-    zvalue_expr,
-)
+from qurio_spark.plans.zorder import with_zvalue, zvalue_expr
 
 N_FILES = 16
 
@@ -84,50 +79,6 @@ class TestZValue:
             with_zvalue(grid, [])
         with pytest.raises(ValueError):
             with_zvalue(grid, ["x", "y", "payload", "x"])
-
-
-class TestZOrderedLayout:
-    @pytest.fixture(scope="class")
-    def paths(self, spark, grid, tmp_path_factory):
-        d = tmp_path_factory.mktemp("zorder")
-        zp, xp = str(d / "zordered"), str(d / "by_x")
-        write_zordered(grid, zp, ["x", "y"], n_files=N_FILES)
-        # baseline: clustered on x only
-        (
-            grid.repartitionByRange(N_FILES, "x")
-            .sortWithinPartitions("x")
-            .write.mode("overwrite")
-            .parquet(xp)
-        )
-        return zp, xp
-
-    def test_round_trip_exact(self, spark, grid, paths):
-        zp, _ = paths
-        back = spark.read.parquet(zp)
-        assert back.count() == 10_000
-        assert (
-            back.agg(F.sum("payload")).first()[0]
-            == grid.agg(F.sum("payload")).first()[0]
-        )
-
-    def test_both_dimensions_localize(self, spark, paths):
-        zp, xp = paths
-        z = spark.read.parquet(zp)
-        bx = spark.read.parquet(xp)
-
-        tight_x = F.col("x").between(10, 19)
-        tight_y = F.col("y").between(40, 49)
-
-        # single-column layout: x localizes, y touches ~every file
-        assert files_touched(bx.filter(tight_x)) <= 4
-        assert files_touched(bx.filter(tight_y)) >= N_FILES - 2
-
-        # z-ordered: BOTH dimensions yield rows from a minority of files
-        zx, zy = files_touched(z.filter(tight_x)), files_touched(z.filter(tight_y))
-        assert zx <= N_FILES // 2, zx
-        assert zy <= N_FILES // 2, zy
-        # the conjunctive box touches very few
-        assert files_touched(z.filter(tight_x & tight_y)) <= 4
 
 
 class TestSnapshotZOrder:
