@@ -33,6 +33,12 @@ The snapshot lives in one of two tiers, chosen once per frame by
   labelled ``qurio_search:stats``, ``qurio_search:bm25_range`` and
   ``qurio_search:topk``; a page read is one job over ``chunks``.
 
+``Engine.on_driver()`` says which tier the current ``chunks`` is on
+(False before its snapshot is prepared).  The HTTP transport reads it
+to choose how to run a connection: a resident search holds the GIL
+from start to end, a Spark-tier search spends most of its time waiting
+on the JVM with the GIL released.
+
 Preparing logs the chosen tier, the row count and the snapshot bytes
 (logger ``qurio_spark.api``, level INFO).
 """
@@ -157,6 +163,16 @@ class Engine:
             if self._prepared is None:
                 self._prepared = (self.chunks, prepare_chunks(self.chunks))
             return self._prepared[1]
+
+    def on_driver(self) -> bool:
+        """Whether searches of ``chunks`` run on the driver: its prepared
+        snapshot exists and is resident."""
+        prepared = self._prepared
+        return (
+            prepared is not None
+            and prepared[0] is self.chunks
+            and isinstance(prepared[1], ResidentSnapshot)
+        )
 
     def _release(self) -> None:
         if self._prepared is not None and isinstance(self._prepared[1], DataFrame):

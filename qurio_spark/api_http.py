@@ -10,18 +10,39 @@ all tool semantics stay in ``api.py``.
 
 Serving is still a test/demo surface, not a deployment story
 (BASELINE.json scopes online serving out): the server binds loopback
-by default and is driven by the e2e test.  On a real deployment the
-Engine's Spark session is shared across handler threads, which Spark
-supports (one driver, many scheduler threads).
+by default and is driven by the e2e test.
+
+Each connection carries one request (HTTP/1.0).  Where it runs follows
+the engine's tier (``Engine.on_driver()``):
+
+* resident: on the serving thread itself.  A resident search holds the
+  GIL from start to end, so a thread per connection would add no
+  parallelism, only thread start-up and GIL hand-offs between the
+  handler threads.  The other tools (``qurio_list_sources``,
+  ``qurio_list_pages``) then run their Spark jobs there too.
+* Spark, or before the snapshot is prepared: on a thread of its own.
+  A Spark-tier request spends most of its time waiting on the JVM with
+  the GIL released, and the Engine's Spark session is shared across
+  handler threads, which Spark supports (one driver, many scheduler
+  threads).
+
+The handler's socket times out after ``HANDLER_TIMEOUT_S`` seconds
+without progress, so a client that connects and stalls holds the
+serving thread no longer than that.  Each reply — status line, headers
+and body — leaves in one ``sendall``.
 """
 
 from __future__ import annotations
 
+import io
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from qurio_spark.api import ERR_PARSE, Engine, _err
+
+#: Seconds a connection may go without sending (or taking) a byte.
+HANDLER_TIMEOUT_S = 2.0
 
 
 class McpHttpServer:
@@ -33,6 +54,20 @@ class McpHttpServer:
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
+            timeout = HANDLER_TIMEOUT_S
+
+            def setup(self) -> None:
+                super().setup()
+                self.wfile = io.BytesIO()  # the reply, sent whole by finish()
+
+            def finish(self) -> None:
+                try:
+                    reply = self.wfile.getvalue()
+                    if reply:
+                        self.connection.sendall(reply)
+                finally:
+                    super().finish()
+
             def do_POST(self) -> None:  # noqa: N802 (http.server API)
                 length = int(self.headers.get("Content-Length") or 0)
                 raw = self.rfile.read(length)
@@ -54,14 +89,23 @@ class McpHttpServer:
                 self.send_header("Content-Type", "application/json")
                 self.send_header("Content-Length", str(len(body)))
                 self.end_headers()
-                if body:
-                    self.wfile.write(body)
+                self.wfile.write(body)
 
             def log_message(self, fmt: str, *args) -> None:
                 pass  # keep test output quiet; transport has no state to log
 
+        class Server(ThreadingHTTPServer):
+            # connections wait here while the serving thread runs one
+            request_queue_size = 64
+
+            def process_request(self, request, client_address) -> None:
+                if outer.engine.on_driver():
+                    self.process_request_thread(request, client_address)
+                else:
+                    super().process_request(request, client_address)
+
         self.engine = engine
-        self._httpd = ThreadingHTTPServer((host, port), Handler)
+        self._httpd = Server((host, port), Handler)
         self._thread: threading.Thread | None = None
 
     @property

@@ -23,6 +23,20 @@ touches a score, as either would reassociate the sums.  A search the
 snapshot cannot answer exactly — a filter on a column that is not a
 string column here, or a query vector of another dimension than the
 stored embeddings — runs on the Spark path over ``frame``.
+
+What does not depend on the query is computed once, when the snapshot
+is built: the unfiltered ``avgdl``, each term's unfiltered idf (one
+vectorised ``strict_log`` over the vocabulary), each posting's ``dl``,
+each row's embedding norm, and whether every stored embedding value is
+finite.  A string filter compares integer codes, built per column on
+its first use, with one ``==``.  The kernel then keeps each element's
+operations and their order, and only drops work whose result is
+known: an unfiltered search indexes no candidate copy of any array;
+when every stored value is finite, the dot product skips the query's
+zero dimensions (the sum starts at +0.0 and never becomes -0.0, so
+adding ``x * 0.0`` cannot change it); and the top-k sorts only the
+rows whose key reaches the k-th largest (ties included), found with
+``np.partition``.
 """
 
 from __future__ import annotations
@@ -94,6 +108,11 @@ def _minmax(x: np.ndarray, lo: float, hi: float) -> np.ndarray:
     return (x - lo) / (hi - lo) if hi > lo else np.zeros_like(x)
 
 
+def _avgdl(dl: np.ndarray, valid: np.ndarray) -> float:
+    """Spark's ``avg(dl)`` over rows: the integer sum over the count."""
+    return int(dl[valid].sum()) / int(valid.sum())
+
+
 class ResidentSnapshot:
     """The prepared chunk frame as driver arrays (module doc).
 
@@ -112,11 +131,11 @@ class ResidentSnapshot:
             name: table.column(name).to_pylist() for name in table.column_names
             if name not in skip
         }
-        self.strings = {
-            name: np.array(self.values[name], dtype=object)
-            for name in self.values
-            if pa.types.is_string(table.schema.field(name).type)
+        self.string_cols = {
+            name for name in self.values if pa.types.is_string(table.schema.field(name).type)
         }
+        # column -> (value -> code, each row's code), built on first use
+        self._codes: dict[str, tuple[dict, np.ndarray]] = {}
         ids = self.values[id_col]
         order = sorted(range(n), key=lambda i: (ids[i] is not None, ids[i] or ""))
         self.id_rank = np.empty(n, dtype=np.int64)
@@ -125,13 +144,15 @@ class ResidentSnapshot:
         dl = table.column("dl").combine_chunks()
         self.dl_valid = ~dl.is_null().to_numpy(zero_copy_only=False)
         self.dl = pc.fill_null(dl, 0).to_numpy().astype(np.int64)
+        self.avgdl = _avgdl(self.dl, self.dl_valid) if self.dl_valid.any() else None
         self._postings(table.column("tf").combine_chunks())
         self._embeddings(table.column(vec_col).combine_chunks())
         self._pages()
 
     def _postings(self, tf: pa.MapArray) -> None:
-        """term -> (rows, tf) as one CSR: ``term_ids[t]`` indexes
-        ``post_off``, whose span selects ``post_rows`` / ``post_tf``."""
+        """term -> (rows, tf, dl) as one CSR: ``term_ids[t]`` indexes
+        ``post_off``, whose span selects ``post_rows`` / ``post_tf`` /
+        ``post_dl``; ``idf[t]`` is the term's idf over all rows."""
         off = tf.offsets.to_numpy()
         parent = np.repeat(np.arange(self.n), np.diff(off))
         keep = ~tf.is_null().to_numpy(zero_copy_only=False)[parent]
@@ -146,27 +167,33 @@ class ResidentSnapshot:
         )
         self.post_rows = parent[keep][by_term]
         self.post_tf = tfs[by_term].astype(np.float64)
+        self.post_dl = self.dl[self.post_rows].astype(np.float64)
+        df = np.diff(self.post_off).astype(np.float64)
+        self.idf = strict_log(1.0 + (float(self.n) - df + 0.5) / (df + 0.5))
 
     def _embeddings(self, emb: pa.ListArray) -> None:
         """``emb_t`` (dim x n float64) and each row's ``emb_norm``, summed
-        one dimension at a time as ``vector.norm`` does; ``dim`` is None
-        when the rows' lengths differ or an element is NULL (then no
-        search is served here)."""
+        one dimension at a time as ``vector.norm`` does; ``emb_live``:
+        a valid row of nonzero norm; ``finite``: every stored value is
+        finite.  ``dim`` is None when the rows' lengths differ or an
+        element is NULL (then no search is served here)."""
         lens = pc.fill_null(pc.list_value_length(emb), -1).to_numpy()
         self.emb_valid = lens >= 0
         flat = pc.list_flatten(emb)
         dims = set(lens[self.emb_valid].tolist())
-        self.dim = None
+        self.dim, self.finite = None, False
         if len(dims) > 1 or flat.null_count:
             return
         self.dim = dims.pop() if dims else 0
         mat = np.zeros((self.n, self.dim), dtype=np.float64)
         mat[self.emb_valid] = flat.to_numpy().reshape(int(self.emb_valid.sum()), self.dim)
         self.emb_t = np.ascontiguousarray(mat.T)
+        self.finite = bool(np.isfinite(self.emb_t).all())
         acc = np.zeros(self.n)
         for x in self.emb_t:
             acc = acc + x * x
         self.emb_norm = np.sqrt(acc)
+        self.emb_live = self.emb_valid & (self.emb_norm > 0)
 
     def _pages(self) -> None:
         """url -> row indices by ``chunk_index`` (the first
@@ -195,23 +222,37 @@ class ResidentSnapshot:
             and (id_col, vec_col) == (self.id_col, self.vec_col)
             and all(c in self.values for c in cols)
             and all(
-                k in self.strings for k, v in (filters or {}).items() if isinstance(v, str)
+                k in self.string_cols for k, v in (filters or {}).items() if isinstance(v, str)
             )
         )
+
+    def _equals(self, col: str, value: str) -> np.ndarray:
+        """The rows whose string ``col`` equals ``value``."""
+        if col not in self._codes:
+            index: dict = {}
+            codes = [index.setdefault(v, len(index)) for v in self.values[col]]
+            self._codes[col] = (index, np.array(codes, dtype=np.int64))
+        index, codes = self._codes[col]
+        return codes == index.get(value, -1)
 
     def top_k(self, query_text: str, query_vec, a: float, k: int,
               filters: dict | None, cols: list[str]) -> TopK:
         """``hybrid_search``'s top-k on the driver: rows of (``id_col``,
-        bm25_norm, vec_norm, score, ``cols``...)."""
+        bm25_norm, vec_norm, score, ``cols``...).  Unfiltered, the
+        candidates are all rows and every array is read in place."""
         mask = None
         for c, v in (filters or {}).items():
             if isinstance(v, str):
-                hit = self.strings[c] == v
+                hit = self._equals(c, v)
                 mask = hit if mask is None else mask & hit
-        cand = np.arange(self.n) if mask is None else np.flatnonzero(mask)
-        if not len(cand):
+        cand = None if mask is None else np.flatnonzero(mask)
+        size = self.n if cand is None else len(cand)
+        if not size:
             return TopK([])
-        n = float(len(cand))
+
+        def at(x: np.ndarray) -> np.ndarray:
+            """``x`` over the candidates."""
+            return x if cand is None else x[cand]
 
         matched = []
         for t in sorted(set(tokenize_query(query_text))):
@@ -219,48 +260,58 @@ class ResidentSnapshot:
             if tid is None:
                 continue
             span = slice(self.post_off[tid], self.post_off[tid + 1])
-            rows, tf = self.post_rows[span], self.post_tf[span]
+            rows, tf, dl = self.post_rows[span], self.post_tf[span], self.post_dl[span]
             if mask is not None:
-                rows, tf = rows[mask[rows]], tf[mask[rows]]
+                hit = mask[rows]
+                rows, tf, dl = rows[hit], tf[hit], dl[hit]
             if len(rows):
-                matched.append((rows, tf))
+                matched.append((tid, rows, tf, dl))
         bm25 = np.zeros(self.n)
         if matched:
-            valid = self.dl_valid[cand]
-            avgdl = int(self.dl[cand][valid].sum()) / int(valid.sum())
-            df = np.array([float(len(rows)) for rows, _ in matched])
-            idf = strict_log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for (rows, tf), w in zip(matched, idf):
-                dl = self.dl[rows].astype(np.float64)
-                imp = w * (tf * (K1 + 1.0)) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-                bm25[rows] = bm25[rows] + imp
-        bm25 = bm25[cand]
+            if mask is None:
+                avgdl = self.avgdl
+                idf = self.idf[[tid for tid, *_ in matched]]
+            else:
+                avgdl = _avgdl(self.dl[cand], self.dl_valid[cand])
+                df = np.array([float(len(rows)) for _, rows, *_ in matched])
+                idf = strict_log(1.0 + (float(size) - df + 0.5) / (df + 0.5))
+            for (_, rows, tf, dl), w in zip(matched, idf):
+                bm25[rows] += w * (tf * (K1 + 1.0)) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+        bm25 = at(bm25)
 
         q = [float(v) for v in query_vec]
         qq = 0.0
         for v in q:
             qq = qq + v * v
         qn = math.sqrt(qq)
-        emb = self.emb_t if mask is None else self.emb_t[:, cand]
-        dot = np.zeros(len(cand))
-        for x, v in zip(emb, q):
-            dot = dot + x * v
-        en = self.emb_norm[cand]
-        live = self.emb_valid[cand] & (en > 0) & (qn > 0)
+        # x * 0.0 is +-0.0 for a finite x, which leaves the sum as it is
+        dims = [d for d, v in enumerate(q) if v != 0.0] if self.finite else range(len(q))
+        en = at(self.emb_norm)
+        live = at(self.emb_live) & (qn > 0)
+        dot = np.zeros(size)
         with np.errstate(divide="ignore", invalid="ignore"):
+            for d in dims:
+                dot += at(self.emb_t[d]) * q[d]
             cos = np.where(live, dot / (en * qn), 0.0)
 
         bn = _minmax(bm25, bm25.min(), bm25.max())
         vn = _minmax(cos, cos.min(), cos.max())
         score = a * vn + (1.0 - a) * bn
-        key = np.floor(score * 1e6 + 0.5)  # stable_round(score, 6), unscaled
-        top = np.lexsort((self.id_rank[cand], -key))[:k]
+        key = -np.floor(score * 1e6 + 0.5)  # -stable_round(score, 6), unscaled
+        rank = at(self.id_rank)
+        if k < size and not np.isnan(key).any():
+            # every row whose key reaches the k-th, ties with it included
+            near = np.flatnonzero(key <= np.partition(key, k - 1)[k - 1])
+            top = near[np.lexsort((rank[near], key[near]))[:k]]
+        else:
+            top = np.lexsort((rank, key))[:k]
         make = Row(self.id_col, "bm25_norm", "vec_norm", "score", *cols)
+        ids = self.values[self.id_col]
         out = []
         for j in top:
-            i = cand[j]
+            i = j if cand is None else cand[j]
             out.append(make(
-                self.values[self.id_col][i], float(bn[j]), float(vn[j]), float(score[j]),
+                ids[i], float(bn[j]), float(vn[j]), float(score[j]),
                 *(self.values[c][i] for c in cols),
             ))
         return TopK(out)

@@ -6,16 +6,21 @@ invalid alpha -> JSON-RPC error object, not an HTTP failure) and the
 transport behavior of features/mcp/handler.go:568-597 (Content-Type
 application/json on every reply, status 200 even for JSON-RPC errors,
 empty 200 for notifications, Parse error for undecodable bodies) —
-all four tools exercised end-to-end through the socket."""
+all four tools exercised end-to-end through the socket, and where the
+server runs each connection: on its serving thread while the snapshot
+is resident, on a thread of its own otherwise."""
 
 import json
+import socket
+import threading
+import time
 import urllib.request
 
 import pytest
 from pyspark.sql import functions as F
 
 from qurio_spark.api import Engine
-from qurio_spark.api_http import McpHttpServer
+from qurio_spark.api_http import HANDLER_TIMEOUT_S, McpHttpServer
 from qurio_spark.plans.pipeline import ingest
 from qurio_spark.schemas import DOCUMENTS_RAW
 
@@ -123,3 +128,68 @@ class TestMcpHttp:
         assert body["error"]["code"] == -32601
         _, _, body2 = rpc(server, 9, "bogus/method")
         assert body2["error"]["code"] == -32601
+
+
+SEARCH = {"query": "configure healthcheck", "limit": 3}
+
+
+class _BarrierEngine:
+    """A Spark-tier stand-in: each request waits until a second one
+    arrives, which it can only do on a thread of its own."""
+
+    def __init__(self):
+        self.barrier = threading.Barrier(2, timeout=10)
+
+    def on_driver(self) -> bool:
+        return False
+
+    def process_request(self, req: dict) -> dict:
+        self.barrier.wait()
+        return {"jsonrpc": "2.0", "id": req["id"], "result": {}}
+
+
+class TestConnectionThreads:
+    def _resident(self, srv):
+        status, _, body = tool(srv, 20, "qurio_search", SEARCH)
+        assert status == 200 and "error" not in body
+        assert srv.engine.on_driver()
+
+    def test_resident_search_runs_on_serving_thread(self, server, monkeypatch):
+        self._resident(server)
+        seen = []
+        base = server.engine.process_request
+
+        def record(req):
+            seen.append(threading.current_thread())
+            return base(req)
+
+        monkeypatch.setattr(server.engine, "process_request", record)
+        status, _, body = tool(server, 21, "qurio_search", SEARCH)
+        assert status == 200 and "Result 1 (Score:" in body["result"]["content"][0]["text"]
+        assert seen == [server._thread]
+
+    def test_spark_tier_requests_run_concurrently(self):
+        replies = []
+        with McpHttpServer(_BarrierEngine()) as srv:
+            clients = [
+                threading.Thread(target=lambda i=i: replies.append(rpc(srv, i, "tools/list")))
+                for i in range(2)
+            ]
+            for c in clients:
+                c.start()
+            for c in clients:
+                c.join(timeout=30)
+        assert sorted(body["id"] for _, _, body in replies) == [0, 1]
+        assert all(status == 200 and body["result"] == {} for status, _, body in replies)
+
+    def test_stalled_connection_delays_resident_request_at_most_the_timeout(self, server):
+        self._resident(server)
+        with socket.create_connection(("127.0.0.1", server.port)) as idle:
+            time.sleep(0.2)  # accepted first: the serving thread now waits on it
+            t0 = time.perf_counter()
+            status, _, body = tool(server, 22, "qurio_search", SEARCH)
+            waited = time.perf_counter() - t0
+            idle.settimeout(5)
+            assert idle.recv(1) == b""  # the server gave up on it
+        assert status == 200 and "error" not in body
+        assert waited < HANDLER_TIMEOUT_S + 1.0

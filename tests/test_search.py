@@ -384,6 +384,89 @@ class TestResidentTier:
                 hybrid_search(docs, "spark", [1.0] * PARITY_DIM, filters={"no_such_col": "x"},
                               id_col="chunk_id", text_col="content")
 
+    def _same(self, snap, text, vec, **kw):
+        got, want = self._both(snap, text, vec, **kw)
+        assert self._bits(got) == self._bits(want), (text, vec, kw)
+        return want
+
+    def test_edge_inputs_return_identical_rows(self, parity_snapshots):
+        """The inputs where the kernel's shortcuts could part from the
+        Spark path: a tie across the k-th key, fewer candidates than
+        ``limit``, zero query dimensions, and filters and terms that
+        match no row or every row."""
+        straddled = 0
+        for seed, snap in parity_snapshots:
+            assert snap.finite  # the dot product skips zero dimensions here
+            queries = self._queries(seed, snap)
+            # the k-th and the (k+1)-th rows share their 6-digit key
+            for text, vec in queries:
+                full = hybrid_search(snap, text, vec, limit=50, id_col="chunk_id",
+                                     text_col="content").collect()
+                keys = [math.floor(r["score"] * 1e6 + 0.5) for r in full]
+                ties = [p for p in range(1, len(keys)) if keys[p - 1] == keys[p]]
+                if ties:
+                    self._same(snap, text, vec, alpha=0.5, limit=ties[0])
+                    straddled += 1
+            text, vec = queries[0]
+            two = {"source_id": "src0", "language": "de"}
+            few = self._same(snap, text, vec, limit=50, filters=two)
+            assert 0 < len(few) < 50
+            assert self._same(snap, text, vec, filters={"language": "xx"}) == []
+            assert self._same(snap, text, vec, filters={**two, "language": "xx"}) == []
+            assert (snap.emb_t < 0).any()
+            zeros = [0.0 if d % 3 == 0 else -0.0 if d % 3 == 1 else v for d, v in enumerate(vec)]
+            for alpha in (0.3, 1.0):
+                assert self._same(snap, text, zeros, alpha=alpha, limit=10)
+            every = " ".join(PARITY_VOCAB)
+            for filters in (None, two):
+                assert self._same(snap, every, vec, limit=50, filters=filters)
+        assert straddled >= 4
+
+    def test_non_finite_stored_value_takes_every_dimension(self, spark):
+        """With a NaN or an infinity stored, ``x * 0.0`` is NaN, so the
+        dot product must not skip the query's zero dimensions: the
+        result equals a full-dimension loop over the stored matrix.  (The
+        NaN row's norm is NaN, which already makes its cosine 0; the
+        infinity is the value a skipped dimension would hide.)"""
+        import struct
+
+        import numpy as np
+
+        from qurio_spark.api import prepare_chunks
+        from qurio_spark.operators.resident import _minmax
+
+        rows = _parity_rows(3, n=40)
+        stored = [r for r in rows if r[8] and any(r[8])]
+        stored[0][8] = [*stored[0][8][:2], float("nan"), *stored[0][8][3:]]
+        stored[1][8] = [*stored[1][8][:5], float("inf"), *stored[1][8][6:]]
+        snap = prepare_chunks(spark.createDataFrame(rows, CHUNK_SCHEMA))
+        assert not snap.finite
+        vec = [0.0 if d in (2, 5) else 1.0 + d for d in range(PARITY_DIM)]
+        got = hybrid_search(snap, "spark join", vec, alpha=1.0, limit=10,
+                            id_col="chunk_id", text_col="content").collect()
+
+        dot = np.zeros(snap.n)
+        qn = math.sqrt(sum(v * v for v in vec))
+        live = snap.emb_valid & (snap.emb_norm > 0)
+        with np.errstate(invalid="ignore"):
+            for x, v in zip(snap.emb_t, vec):
+                dot = dot + x * v
+            cos = np.where(live, dot / (snap.emb_norm * qn), 0.0)
+        assert np.isnan(cos).any()
+        vn = _minmax(cos, cos.min(), cos.max())
+        # a NaN range normalizes to 0 (``hi > lo`` is False): every key
+        # ties at 0 and the rows come in id order; a dot product that
+        # skipped dimensions 2 and 5 would leave ``cos`` finite
+        ids = snap.values["chunk_id"]
+        want = sorted(range(snap.n), key=lambda i: ids[i])[:10]
+
+        def bits(x):
+            return "nan" if math.isnan(x) else struct.pack(">d", x)
+
+        assert [(r["chunk_id"], bits(r["vec_norm"])) for r in got] == [
+            (ids[i], bits(vn[i])) for i in want
+        ]
+
 
 class TestStrictLog:
     """``numeric.strict_log`` is Spark's ``log``: Java's StrictMath.log
