@@ -69,7 +69,15 @@ class McpHttpServer:
                     super().finish()
 
             def do_POST(self) -> None:  # noqa: N802 (http.server API)
-                length = int(self.headers.get("Content-Length") or 0)
+                try:
+                    length = int(self.headers.get("Content-Length") or 0)
+                except ValueError:
+                    length = -1
+                if length < 0:
+                    # unreadable body length: a bare 400, as Go's
+                    # net/http answers before any handler runs
+                    self.send_error(400, "bad Content-Length")
+                    return
                 raw = self.rfile.read(length)
                 if not raw.strip():
                     # EOF/empty body: the reference replies nothing but

@@ -100,7 +100,7 @@ def _positions(key_col: Column, m_bits: int, k_hashes: int) -> Column:
 
 
 def bloom_might_contain(
-    key_col: Column | str,
+    key_col: str,
     bitmap: list[int],
     m_bits: int = 1 << 13,
     k_hashes: int = 5,
@@ -112,48 +112,34 @@ def bloom_might_contain(
     ``bloom_semi_join``, which route large filters through the Arrow
     membership stage instead of codegen literals).
 
-    For a string column NAME the whole predicate is assembled as ONE
-    SQL string and parsed JVM-side in a single call (r16, guide §5 —
-    the driver does no data work, and it shouldn't do thousands of
-    py4j round-trips either: the per-word ``F.lit`` array plus the k
-    hash terms cost ~0.4 s of pure driver time per filter at 128
-    words).  The SQL reproduces the Column form's arithmetic exactly
-    (same xxhash64 double-hashing, same `/64` truncation), so build
-    and probe stay hash-identical; a Column argument keeps the
-    composed form."""
+    The whole predicate over the column NAME is assembled as ONE SQL
+    string and parsed JVM-side in a single call (r16, guide §5 — the
+    driver does no data work, and it shouldn't do thousands of py4j
+    round-trips either: a per-word ``F.lit`` array plus the k hash
+    terms cost ~0.4 s of pure driver time per filter at 128 words).
+    The SQL reproduces ``_h1h2``'s arithmetic exactly (same xxhash64
+    double-hashing, same `/64` truncation), so build and probe stay
+    hash-identical."""
     if k_hashes < 1:
-        # zero hash terms would test nothing: an empty SQL conjunction,
-        # or a Column form that matches every row
+        # zero hash terms would test nothing: an empty SQL conjunction
         raise ValueError(f"k_hashes must be >= 1, got {k_hashes}")
     if len(bitmap) > BLOOM_LITERAL_MAX_WORDS:
         raise ValueError(
             f"bitmap of {len(bitmap)} words exceeds the literal ceiling "
             f"({BLOOM_LITERAL_MAX_WORDS}); use bloom_filter_rows"
         )
-    if isinstance(key_col, str):
-        name = key_col.replace("`", "``")
-        arr = "array(" + ",".join(f"{int(w)}L" for w in bitmap) + ")"
-        h = f"xxhash64(`{name}`)"
-        h1 = f"({h} & {_MASK31})"
-        h2 = f"((shiftrightunsigned({h}, 31) & {_MASK31}) + 1)"
-        terms = []
-        for i in range(k_hashes):
-            p = f"(({h1} + {i} * {h2}) % {m_bits})"
-            word = f"element_at({arr}, cast({p} / 64 as int) + 1)"
-            bit = f"shiftleft(1L, cast({p} % 64 as int))"
-            terms.append(f"(({word} & {bit}) != 0)")
-        return F.expr("(" + " AND ".join(terms) + ")")
-    lit = F.array(*[F.lit(int(w)).cast("long") for w in bitmap])
-    h1, h2 = _h1h2(key_col)
-    cond = F.lit(True)
+    name = key_col.replace("`", "``")
+    arr = "array(" + ",".join(f"{int(w)}L" for w in bitmap) + ")"
+    h = f"xxhash64(`{name}`)"
+    h1 = f"({h} & {_MASK31})"
+    h2 = f"((shiftrightunsigned({h}, 31) & {_MASK31}) + 1)"
+    terms = []
     for i in range(k_hashes):
-        p = (h1 + F.lit(i) * h2) % F.lit(m_bits)
-        word = F.element_at(lit, (p / 64).cast("int") + 1)
-        bit = F.call_function(
-            "shiftleft", F.lit(1).cast("long"), (p % 64).cast("int")
-        )
-        cond = cond & (word.bitwiseAND(bit) != 0)
-    return cond
+        p = f"(({h1} + {i} * {h2}) % {m_bits})"
+        word = f"element_at({arr}, cast({p} / 64 as int) + 1)"
+        bit = f"shiftleft(1L, cast({p} % 64 as int))"
+        terms.append(f"(({word} & {bit}) != 0)")
+    return F.expr("(" + " AND ".join(terms) + ")")
 
 
 def bloom_filter_rows(

@@ -28,9 +28,6 @@ file entries + their skipping stats) and the version file
 version comprises.  Commit cost is therefore O(delta files + number
 of prior commits), not O(total table files): a parent's manifests are
 carried forward BY NAME, byte-untouched (mtime-pinned in tests).
-Versions written by older single-level code (inline ``files``) stay
-readable and are upgraded to a manifest file on their first child
-commit.
 
 Concurrency: every commit runs ONE optimistic loop, ``_occ_commit``:
 compute the commit against the head version, claim the next version
@@ -136,11 +133,8 @@ def _write_manifest_file(path: str, entries: list[dict]) -> str:
 
 
 def _manifest_entries(path: str, m: dict) -> list[dict]:
-    """Resolve a version's full file-entry list: two-level versions
-    concatenate their per-commit manifest files; legacy single-level
-    versions carry the entries inline."""
-    if "manifests" not in m:
-        return m["files"]
+    """Resolve a version's full file-entry list: the concatenation of
+    its per-commit manifest files."""
     out: list[dict] = []
     for name in m["manifests"]:
         out.extend(_read_manifest_file(path, name))
@@ -149,14 +143,8 @@ def _manifest_entries(path: str, m: dict) -> list[dict]:
 
 def _carried_manifests(path: str, m: dict | None) -> list[str]:
     """Manifest names a child commit carries forward, BY NAME (bytes
-    untouched).  A legacy inline-files parent is upgraded once: its
-    list becomes a manifest file, and every later descendant carries
-    that file."""
-    if m is None:
-        return []
-    if "manifests" in m:
-        return list(m["manifests"])
-    return [_write_manifest_file(path, m["files"])]
+    untouched); none before the table exists."""
+    return [] if m is None else list(m["manifests"])
 
 
 def _try_commit(path: str, version: int, manifest: dict) -> bool:
@@ -174,25 +162,6 @@ def _try_commit(path: str, version: int, manifest: dict) -> bool:
     import time as _time
 
     manifest = {**manifest, "ts": _time.time()}
-    # Propagate TABLE-level properties from the parent unless the
-    # commit sets them: the value-clustered marker (compaction must
-    # not merge value-exact files, ADVICE r10) and the bloom-column
-    # list (appends and DML rewrites bloom the files they write).
-    # Only an overwrite, a fresh write of the whole content, resets
-    # them.
-    if manifest.get("op") != "overwrite":
-        missing = [
-            k for k in ("clustered", "bloom_cols") if k not in manifest
-        ]
-        parent = manifest.get("parent")
-        if missing and parent is not None:
-            try:
-                pm = _read_manifest(path, parent)
-            except FileNotFoundError:
-                pm = {}
-            for k in missing:
-                if pm.get(k):
-                    manifest = {**manifest, k: pm[k]}
     data = json.dumps(manifest, indent=1, sort_keys=True).encode()
     if not store_for(path).put_if_absent(path, f"v{version}.json", data):
         return False
@@ -235,7 +204,8 @@ def _occ_commit(path: str, attempt):
     the table exists) and returns the manifest fields to claim at
     ``v + 1``, or a non-dict result (None for a no-op) returned as is.
     The loop fills in ``version`` and ``parent`` and carries the head's
-    ``txn`` and ``schema`` unless the fields set them.  A lost claim
+    ``txn``, ``schema`` and, for every op but ``overwrite``, its
+    table-level properties unless the fields set them.  A lost claim
     re-runs the attempt against the new head after a backoff, first
     removing the deletion-vector sidecars it listed under
     ``staged_dvs`` (positions against a stale head; never recorded)."""
@@ -248,7 +218,18 @@ def _occ_commit(path: str, attempt):
             return fields
         staged = fields.pop("staged_dvs", [])
         version = 0 if v is None else v + 1
-        head = {"txn": dict(m.get("txn", {})), "schema": m.get("schema")} if m else {}
+        head = {}
+        if m:
+            head = {"txn": dict(m.get("txn", {})), "schema": m["schema"]}
+            # table-level properties: the value-clustered marker
+            # (compaction must not merge value-exact files, ADVICE r10)
+            # and the bloom-column list (appends and DML rewrites bloom
+            # the files they write); only an overwrite, a fresh write of
+            # the whole content, resets them
+            if fields.get("op") != "overwrite":
+                head.update(
+                    {k: m[k] for k in ("clustered", "bloom_cols") if m.get(k)}
+                )
         fields.update(version=version, parent=v)
         if _try_commit(path, version, {**head, **fields}):
             return version
@@ -336,8 +317,7 @@ def _attach_blooms(
     type-widening append (int->long) would leave pre- and
     post-widening files bloomed at incompatible hashes and a probe
     would silently exclude files that hold matching rows (ADVICE
-    r11).  Legacy entries without the flag are probed with the
-    literal's natural type, preserving their recorded bits."""
+    r11)."""
     import math
 
     from pyspark.sql import functions as F
@@ -779,9 +759,8 @@ def snap_versions(path: str) -> list[dict]:
     """[{version, op, parent, n_files, n_rows, dv_rows, ts}]
     oldest-first for every retained manifest (the DESCRIBE HISTORY
     shape): ``n_rows`` is the metadata-only live-row count (file row
-    counts minus the deleted-row ledger — None when any entry
-    predates row-count stats), ``dv_rows`` the live deletion-vector
-    rows, ``ts`` the commit wall time (None for legacy commits)."""
+    counts minus the deleted-row ledger), ``dv_rows`` the live
+    deletion-vector rows, ``ts`` the commit wall time."""
     out = []
     for f in store_for(path).list(path):
         if f.startswith("v") and f.endswith(".json"):
@@ -794,14 +773,10 @@ def snap_versions(path: str) -> list[dict]:
                     "n_files": len(entries),
                     "n_rows": _live_rows(m, entries),
                     "dv_rows": m.get("dv_rows", 0),
-                    "ts": m.get("ts"),
+                    "ts": m["ts"],
                 }
             )
     return sorted(out, key=lambda m: m["version"])
-
-
-def _entry_name(e) -> str:
-    return e["name"] if isinstance(e, dict) else e
 
 
 def _pinned_reader(spark: SparkSession, m: dict):
@@ -815,20 +790,17 @@ def _pinned_reader(spark: SparkSession, m: dict):
     the field's CURRENT (widest) type — each file fills exactly the
     name it was written with, parquet-missing names read as NULL, and
     the caller folds them back via :func:`_coalesce_renamed`."""
-    reader = spark.read
-    if m.get("schema") is not None:
-        from pyspark.sql import types as T
+    from pyspark.sql import types as T
 
-        schema = m["schema"]
-        extra = [
-            {"name": s, "type": f["type"], "nullable": True, "metadata": {}}
-            for f in schema.get("fields", [])
-            for s in _field_sources(f)
-        ]
-        if extra:
-            schema = {**schema, "fields": list(schema["fields"]) + extra}
-        reader = reader.schema(T.StructType.fromJson(schema))
-    return reader
+    schema = m["schema"]
+    extra = [
+        {"name": s, "type": f["type"], "nullable": True, "metadata": {}}
+        for f in schema["fields"]
+        for s in _field_sources(f)
+    ]
+    if extra:
+        schema = {**schema, "fields": list(schema["fields"]) + extra}
+    return spark.read.schema(T.StructType.fromJson(schema))
 
 
 #: DV row count up to which the anti-join build side is broadcast —
@@ -896,15 +868,13 @@ def _read_files(
     )
     if file_col is not None:
         base = base.withColumn(file_col, F.col("_metadata.file_name"))
-    return _coalesce_renamed(
-        _apply_dvs(spark, path, m, base), m.get("schema")
-    )
+    return _coalesce_renamed(_apply_dvs(spark, path, m, base), m["schema"])
 
 
 def _range_disjoint(e, col: str, lo, hi) -> bool:
     """TRUE iff the entry's manifest stats PROVE no row of the file
     has ``col`` in [lo, hi] (absent stats = not skippable)."""
-    st = e.get("stats", {}).get(col) if isinstance(e, dict) else None
+    st = e.get("stats", {}).get(col)
     if st is None:
         return False
     mn, mx = st
@@ -923,7 +893,7 @@ def _stat_names(m: dict, col: str) -> list[str]:
     """``col`` plus its rename sources: the names under which a file
     of this table may carry stats/blooms for the logical column (each
     file has exactly ONE of them — the name at its write time)."""
-    for f in (m.get("schema") or {}).get("fields", []):
+    for f in m["schema"]["fields"]:
         if f["name"] == col:
             srcs = _field_sources(f)
             return [col] + srcs if srcs else [col]
@@ -940,7 +910,7 @@ def _range_disjoint_any(e, names: list[str], lo, hi) -> bool:
     return any(_range_disjoint(e, n, lo, hi) for n in names)
 
 
-def _coalesce_renamed(df: DataFrame, schema: dict | None) -> DataFrame:
+def _coalesce_renamed(df: DataFrame, schema: dict) -> DataFrame:
     """Fold a pinned read's rename-source sibling columns into their
     logical column: per renamed field, exactly one of
     [name, *sources] is non-NULL per row (a file physically contains
@@ -950,7 +920,7 @@ def _coalesce_renamed(df: DataFrame, schema: dict | None) -> DataFrame:
 
     renamed = [
         (f["name"], _field_sources(f))
-        for f in (schema or {}).get("fields", [])
+        for f in schema["fields"]
         if _field_sources(f)
     ]
     if not renamed:
@@ -972,13 +942,10 @@ def _dv_carry(m: dict, drop_files: set | None = None) -> dict:
     (what the metadata-only ``snap_count`` subtracts and the
     broadcast bound consults).  A ledger that empties proves every
     vector stale, and the dvs list drops entirely — readers skip the
-    anti-join.  A legacy manifest (dvs without a per-file ledger)
-    carries unchanged — without counts nothing is provably stale."""
+    anti-join."""
     if not m.get("dvs"):
         return {}
-    if "dv_counts" not in m:
-        return {"dvs": list(m["dvs"]), "dv_rows": m.get("dv_rows", 0)}
-    counts = dict(m.get("dv_counts", {}))
+    counts = dict(m["dv_counts"])
     for f in drop_files or ():
         counts.pop(f, None)
     if not counts:
@@ -1025,13 +992,13 @@ def _cow_fields(
     files: list[dict] = []
     if affected:
         rows = transform(
-            _read_files(spark, path, m, [_entry_name(e) for e in affected])
+            _read_files(spark, path, m, [e["name"] for e in affected])
         )
         files = _write_data_files(
             rows, path, v + 1, zorder_by=zorder_by,
             bloom_cols=_inherit_bloom_cols(m, rows),
         )
-    gone = {os.path.basename(_entry_name(e)) for e in [*affected, *dropped]}
+    gone = {os.path.basename(e["name"]) for e in [*affected, *dropped]}
     return {
         "manifests": carried + [
             _write_manifest_file(path, [*loose, *files, *added])
@@ -1071,17 +1038,7 @@ def _mor_fields(
             )
         moved, new_counts = _stage_dvs(path, hits_of(scan), len(cand))
     dv = _dv_carry(m)
-    if moved and dv and "dv_counts" not in dv:
-        # legacy parent ledger (dvs without per-file counts): a fresh
-        # dv_counts would OMIT the legacy vectors' rows — snap_count
-        # overcounts and a later rewrite could drop the legacy vectors
-        # via an emptied ledger, resurrecting deleted rows.  Stay
-        # additive without per-file counts.
-        dv = {
-            "dvs": dv["dvs"] + moved,
-            "dv_rows": dv["dv_rows"] + sum(new_counts.values()),
-        }
-    elif moved:
+    if moved:
         counts = dict(dv.get("dv_counts", {}))
         for f, n in new_counts.items():
             counts[f] = counts.get(f, 0) + n
@@ -1123,11 +1080,10 @@ def _range_rewrite(
     def attempt(v, m):
         if m is None:
             raise FileNotFoundError(f"no snapshot table at {path}")
-        if m.get("schema"):
-            table_cols = [f["name"] for f in m["schema"]["fields"]]
-            unknown = [c for c in set_cols if c not in table_cols]
-            if unknown:
-                raise ValueError(f"UPDATE SET on unknown columns {unknown}")
+        table_cols = [f["name"] for f in m["schema"]["fields"]]
+        unknown = [c for c in set_cols if c not in table_cols]
+        if unknown:
+            raise ValueError(f"UPDATE SET on unknown columns {unknown}")
         names = _stat_names(m, col)  # hoisted once per attempt
         split = _split_manifests(
             path, m, lambda e: not _range_disjoint_any(e, names, lo, hi)
@@ -1150,8 +1106,7 @@ def snap_version_at(path: str, as_of: float) -> int:
     is <= ``as_of`` (unix seconds) — the Delta/Iceberg timestamp
     time-travel contract.  Raises if every retained version is newer
     (the as-of point predates retained history; vacuumed versions
-    cannot be resurrected).  Versions written before commit
-    timestamps existed sort as time 0 (always eligible)."""
+    cannot be resurrected)."""
     names = store_for(path).list(path)
     if not names:
         raise FileNotFoundError(f"no snapshot table at {path}")
@@ -1159,7 +1114,7 @@ def snap_version_at(path: str, as_of: float) -> int:
     for f in names:
         if f.startswith("v") and f.endswith(".json"):
             v = int(f[1:-5])
-            ts = _read_manifest(path, v).get("ts", 0.0)
+            ts = _read_manifest(path, v)["ts"]
             if ts <= as_of and (best is None or v > best):
                 best = v
     if best is None:
@@ -1192,20 +1147,15 @@ def snap_read(
     if not entries:
         # a zero-file version is a legitimate table state (a mutation
         # can empty a control table); with the manifest-owned schema
-        # the empty frame is fully determined.  Legacy schema-less
-        # manifests have no schema source and must still raise.
-        if m.get("schema") is not None:
-            from pyspark.sql import types as T
+        # the empty frame is fully determined
+        from pyspark.sql import types as T
 
-            return spark.createDataFrame(
-                [], T.StructType.fromJson(m["schema"])
-            )
-        raise ValueError(f"version {v} of {path} is empty")
+        return spark.createDataFrame([], T.StructType.fromJson(m["schema"]))
     # pinned schema from the manifest (the log owns the schema): no
     # footer sampling at read time, and files written before a column
     # was added read it back as NULL — schema evolution; deletion
     # vectors (if any) filter inside _read_files
-    return _read_files(spark, path, m, [_entry_name(e) for e in entries])
+    return _read_files(spark, path, m, [e["name"] for e in entries])
 
 
 def _bloom_canon_cast(col, dtype: str):
@@ -1223,15 +1173,14 @@ def _bloom_canon_cast(col, dtype: str):
     return col
 
 
-def _bloom_lit(v, canon: bool):
-    """The probe-side literal for value ``v``: canonical entries hash
-    ints at long and floats at double (mirroring ``_bloom_canon_cast``
-    on the build side); legacy entries keep the literal's naturally
-    inferred type so their recorded bits stay probeable."""
+def _bloom_lit(v):
+    """The probe-side literal for value ``v``: ints hash at long and
+    floats at double, mirroring ``_bloom_canon_cast`` on the build
+    side."""
     from pyspark.sql import functions as F
 
     lit = F.lit(v)
-    if not canon or isinstance(v, bool):
+    if isinstance(v, bool):
         return lit
     if isinstance(v, int):
         return lit.cast("long")
@@ -1240,34 +1189,22 @@ def _bloom_lit(v, canon: bool):
     return lit
 
 
-def _bloom_hashes(
-    spark: SparkSession, values: list, k: int, canons: set[bool]
-) -> dict[bool, list[list[int]]]:
-    """The k xxhash64 probe values for EVERY value in ``values``, per
-    hashing variant in ``canons`` (True = canonical-type literals,
-    False = legacy natural-type literals) — computed through Spark
-    itself (ONE local 1-row job, |canons|·|values|·k columns) so the
-    build pass and the probe share one hash definition by
-    construction, and an IN-list probe costs one driver round-trip,
+def _bloom_hashes(spark: SparkSession, values: list, k: int) -> list[list[int]]:
+    """The k xxhash64 probe values for EVERY value in ``values`` —
+    computed through Spark itself (ONE local 1-row job, |values|·k
+    columns) so the build pass and the probe share one hash definition
+    by construction, and an IN-list probe costs one driver round-trip,
     not one per value."""
     from pyspark.sql import functions as F
 
-    variants = sorted(canons)
     row = spark.range(1).select(
         *[
-            F.xxhash64(_bloom_lit(v, c), F.lit(s)).alias(f"h{c}_{i}_{s}")
-            for c in variants
+            F.xxhash64(_bloom_lit(v), F.lit(s)).alias(f"h{i}_{s}")
             for i, v in enumerate(values)
             for s in range(k)
         ]
     ).first()
-    return {
-        c: [
-            [row[f"h{c}_{i}_{s}"] for s in range(k)]
-            for i in range(len(values))
-        ]
-        for c in variants
-    }
+    return [[row[f"h{i}_{s}"] for s in range(k)] for i in range(len(values))]
 
 
 def _bloom_excluded(
@@ -1290,31 +1227,28 @@ def _bloom_excluded(
     import pyarrow.parquet as papq
 
     names = [col] if isinstance(col, str) else list(col)
-    probes: dict[str, list[tuple[str, str, int, int, bool]]] = {}
+    probes: dict[str, list[tuple[str, str, int, int]]] = {}
     kmax = 0
-    canons: set[bool] = set()
     for e in entries:
-        info = e.get("bloom") if isinstance(e, dict) else None
+        info = e.get("bloom")
         for n in names:
             geom = (info or {}).get("cols", {}).get(n)
             if geom:
-                canon = bool(geom.get("canon"))
                 probes.setdefault(info["sidecar"], []).append(
-                    (e["name"], n, geom["m"], geom["k"], canon)
+                    (e["name"], n, geom["m"], geom["k"])
                 )
                 kmax = max(kmax, geom["k"])
-                canons.add(canon)
                 break
     if not probes:
         return set()
-    hashes_by_canon = _bloom_hashes(spark, values, kmax, canons)
+    all_hashes = _bloom_hashes(spark, values, kmax)
     excluded = set()
     for sidecar, files in probes.items():
         needed = sorted(
             {
                 (h % m) // 64
-                for _, _, m, k, canon in files
-                for hashes in hashes_by_canon[canon]
+                for _, _, m, k in files
+                for hashes in all_hashes
                 for h in hashes[:k]
             }
         )
@@ -1332,7 +1266,7 @@ def _bloom_excluded(
                 tbl.column("word").to_pylist(),
             )
         }
-        for name, n, m, k, canon in files:
+        for name, n, m, k in files:
             base = os.path.basename(name)
             any_hit = any(
                 all(
@@ -1340,7 +1274,7 @@ def _bloom_excluded(
                     >> ((h % m) % 64) & 1
                     for h in hashes[:k]
                 )
-                for hashes in hashes_by_canon[canon]
+                for hashes in all_hashes
             )
             if not any_hit:
                 excluded.add(name)
@@ -1401,12 +1335,9 @@ def snap_scan_files(
         # this column and spark wasn't supplied
         names = names_of[col]
         has_bloom = any(
-            isinstance(e, dict)
-            and any(
-                (e.get("bloom") or {}).get("cols", {}).get(n)
-                for n in names
-            )
+            (e.get("bloom") or {}).get("cols", {}).get(n)
             for e in entries
+            for n in names
         )
         if not has_bloom:
             continue
@@ -1414,8 +1345,8 @@ def snap_scan_files(
             raise ValueError("eq pruning needs the SparkSession for probe hashes")
         dropped = _bloom_excluded(spark, path, entries, names, vals)
         if dropped:
-            entries = [e for e in entries if _entry_name(e) not in dropped]
-    return [_entry_name(e) for e in entries]
+            entries = [e for e in entries if e["name"] not in dropped]
+    return [e["name"] for e in entries]
 
 
 def snap_scan_multi(
@@ -1562,10 +1493,10 @@ def _vacuum_at(
     for v in keep_versions + above:
         m = _read_manifest(path, v)
         for e in _manifest_entries(path, m):
-            reachable.add(_entry_name(e))
-            if isinstance(e, dict) and e.get("bloom"):
+            reachable.add(e["name"])
+            if e.get("bloom"):
                 live_blooms.add(e["bloom"]["sidecar"])
-        live_manifests.update(m.get("manifests", []))
+        live_manifests.update(m["manifests"])
         live_dvs.update(m.get("dvs", []))
     deleted = []
     data_dir = os.path.join(path, "data")
@@ -1635,8 +1566,8 @@ def snap_diff(
     v_to = _latest_version(path) if v_to is None else v_to
     mf_from = _read_manifest(path, v_from)
     mf_to = _read_manifest(path, v_to)
-    m_from = {_entry_name(e) for e in _manifest_entries(path, mf_from)}
-    m_to = {_entry_name(e) for e in _manifest_entries(path, mf_to)}
+    m_from = {e["name"] for e in _manifest_entries(path, mf_from)}
+    m_to = {e["name"] for e in _manifest_entries(path, mf_to)}
     if mf_from.get("dvs", []) != mf_to.get("dvs", []):
         # a MOR delete between the versions changed row visibility
         # INSIDE files both manifests share — file-level cancellation
@@ -1648,19 +1579,17 @@ def snap_diff(
         only_from = sorted(m_from - m_to)
         only_to = sorted(m_to - m_from)
 
-    # pin BOTH sides to the NEWER version's manifest schema (falling
-    # back to the older's for legacy manifests): after schema
-    # evolution, a bare multi-file read would drop or narrow an added
-    # column depending on which file supplied the inferred schema
-    newer, older = (mf_to, mf_from) if v_to >= v_from else (mf_from, mf_to)
-    pin = {"schema": newer.get("schema") or older.get("schema")}
+    # pin BOTH sides to the NEWER version's manifest schema: after
+    # schema evolution, a bare multi-file read would drop or narrow an
+    # added column depending on which file supplied the inferred schema
+    pin = {"schema": (mf_to if v_to >= v_from else mf_from)["schema"]}
 
     def read(files, side_m):
         base = _pinned_reader(spark, pin).parquet(
             *[os.path.join(path, f) for f in files]
         )
         return _coalesce_renamed(
-            _apply_dvs(spark, path, side_m, base), pin.get("schema")
+            _apply_dvs(spark, path, side_m, base), pin["schema"]
         )
 
     if not (m_to | m_from):
@@ -1668,9 +1597,8 @@ def snap_diff(
             f"snap_diff({path}, v{v_from}..v{v_to}): both versions are "
             "empty — no schema source for the change feed"
         )
-    # deterministic schema source for the empty frame (min, not
-    # set-iteration order) — only reached for legacy manifests with
-    # no pinned schema; otherwise the pin fully determines the schema
+    # the empty side reads zero rows of one file under the pin (min,
+    # not set-iteration order, so the plan is deterministic)
     schema_src = min(m_to | m_from)
     empty = read([schema_src], mf_to).limit(0)
     added = read(only_to, mf_to) if only_to else empty
@@ -1760,7 +1688,7 @@ def maybe_compact(
     # later refresh would rewrite mixed files (ADVICE r10)
     if m.get("clustered"):
         return None
-    if len(m.get("manifests", [])) < max_manifests:
+    if len(m["manifests"]) < max_manifests:
         return None
     return snap_compact(spark, path, small_bytes, target_bytes)
 
@@ -1821,15 +1749,14 @@ def snap_delete_where(
     )
 
 
-def snap_count(path: str, version: int | None = None) -> int | None:
+def snap_count(path: str, version: int | None = None) -> int:
     """Metadata-only COUNT(*) — the Iceberg/Delta manifest-count
     shape: per-file row counts recorded at commit time sum straight
     from the manifest, minus the exact deleted-row ledger the MOR
     deletes maintain (``dv_counts`` prunes file-by-file on every
     rewrite, so the subtraction never drifts).  No data file is
     opened; at 100 TB this is the difference between a catalog call
-    and a cluster job.  Returns None when any entry predates
-    row-count stats (caller falls back to a real count)."""
+    and a cluster job."""
     v = _latest_version(path) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no snapshot table at {path}")
@@ -1837,16 +1764,8 @@ def snap_count(path: str, version: int | None = None) -> int | None:
     return _live_rows(m, _manifest_entries(path, m))
 
 
-def _live_rows(m: dict, entries: list) -> int | None:
-    """A version's file row counts minus its deleted-row ledger; None
-    when any entry predates row-count stats, or for a legacy ledger
-    (dvs without per-file counts: ``dv_rows`` cannot prune on
-    rewrites, so after any rewrite it may double-subtract — the caller
-    falls back to a real count rather than drift)."""
-    if m.get("dvs") and "dv_counts" not in m:
-        return None
-    if any(not isinstance(e, dict) or "rows" not in e for e in entries):
-        return None
+def _live_rows(m: dict, entries: list) -> int:
+    """A version's file row counts minus its deleted-row ledger."""
     return sum(e["rows"] for e in entries) - m.get("dv_rows", 0)
 
 
@@ -1863,13 +1782,9 @@ def snap_restore(path: str, version: int) -> int:
     target = _read_manifest(path, version)  # raises if retired
     entries = _manifest_entries(path, target)
     refs = (
-        [_entry_name(e) for e in entries]
+        [e["name"] for e in entries]
         + list(target.get("dvs", []))
-        + [
-            e["bloom"]["sidecar"]
-            for e in entries
-            if isinstance(e, dict) and e.get("bloom")
-        ]
+        + [e["bloom"]["sidecar"] for e in entries if e.get("bloom")]
     )
     missing = []
     for n in refs:
@@ -1904,7 +1819,7 @@ def snap_restore(path: str, version: int) -> int:
             raise FileNotFoundError(f"no snapshot table at {path}")
         return {
             "op": "restore", "restored": version, "manifests": manifests,
-            "schema": target.get("schema"), **_dv_carry(target),
+            "schema": target["schema"], **_dv_carry(target),
         }
 
     return _occ_commit(path, attempt)
@@ -1947,12 +1862,7 @@ def _alter_column(path: str, op: str, col: str, new, change, extra: dict) -> int
     def attempt(v, m):
         if m is None:
             raise FileNotFoundError(f"no snapshot table at {path}")
-        schema = m.get("schema")
-        if schema is None:
-            raise ValueError(
-                f"{op.replace('_', ' ')} needs a schema-carrying manifest "
-                "(legacy schema-less table)"
-            )
+        schema = m["schema"]
         fields = change(schema)
         if m.get("clustered") == col:
             raise ValueError(
@@ -2096,7 +2006,7 @@ def snap_delete_where_mor(
             raise FileNotFoundError(f"no snapshot table at {path}")
         names = _stat_names(m, col)  # hoisted once per attempt
         cand = [
-            _entry_name(e)
+            e["name"]
             for e in _manifest_entries(path, m)
             if not _range_disjoint_any(e, names, lo, hi)
         ]
@@ -2137,7 +2047,7 @@ def snap_materialize_dvs(spark: SparkSession, path: str) -> int | None:
             ).select("file").distinct().collect()
         }  # distinct FILE names: bounded by the manifest's file count
         split = _split_manifests(
-            path, m, lambda e: os.path.basename(_entry_name(e)) in dead
+            path, m, lambda e: os.path.basename(e["name"]) in dead
         )
         # the commit drops the whole ledger: only the manifests carry
         manifests = split[0]
@@ -2292,8 +2202,6 @@ def snap_replace_values(
     vs = sorted(v for v in values if v is not None)
 
     def _disjoint_under(e, nm: str) -> bool:
-        if not isinstance(e, dict):
-            return False
         if has_null:
             nc = e.get("nulls", {}).get(nm)
             if nc is None or nc > 0:
@@ -2312,7 +2220,7 @@ def snap_replace_values(
     # value-clustered layout makes this the common case: a refresh
     # then only ever writes the delta)
     def _wholly_replaced(e, nm: str) -> bool:
-        st = e.get("stats", {}).get(nm) if isinstance(e, dict) else None
+        st = e.get("stats", {}).get(nm)
         return (
             st is not None and st[0] == st[1] and st[0] in vs
             and e.get("nulls", {}).get(nm) == 0
@@ -2417,7 +2325,7 @@ def snap_merge(
             hit = (
                 _read_files(
                     spark, path, m,
-                    [_entry_name(e) for e in cand], file_col="__file",
+                    [e["name"] for e in cand], file_col="__file",
                 )
                 .select("__file", *keys)
                 .join(src.key_counts, keys, "inner")
@@ -2430,7 +2338,7 @@ def snap_merge(
             src.check_unique(hit["max_cnt"])
             hit_files = set(hit["files"])
         carried, loose, affected = _split_manifests(
-            path, m, lambda e: os.path.basename(_entry_name(e)) in hit_files
+            path, m, lambda e: os.path.basename(e["name"]) in hit_files
         )
         return {
             **fields,
@@ -2481,11 +2389,10 @@ class _MergeSource:
         """Entries of version ``m`` that may hold a matching key: a
         file range-disjoint from the source's key bounds on ANY key
         column cannot (rename-aware; names hoisted once per call)."""
-        if m.get("schema"):
-            table_cols = [f["name"] for f in m["schema"]["fields"]]
-            absent = [k for k in self.keys if k not in table_cols]
-            if absent:
-                raise ValueError(f"table is missing key columns {absent}")
+        table_cols = [f["name"] for f in m["schema"]["fields"]]
+        absent = [k for k in self.keys if k not in table_cols]
+        if absent:
+            raise ValueError(f"table is missing key columns {absent}")
         b = self.bounds
         names = {k: _stat_names(m, k) for k in self.keys}
         return [
@@ -2581,7 +2488,7 @@ def snap_merge_mor(
     def attempt(v, m):
         dv = {}
         if m is not None:  # else the first call: the source IS the table
-            cand = [_entry_name(e) for e in src.candidates(m)]
+            cand = [e["name"] for e in src.candidates(m)]
             dv = _mor_fields(spark, path, m, cand, {k: k for k in keys}, matched)
         # nothing rewritten: the parent's manifests carry verbatim
         return {
@@ -2668,7 +2575,7 @@ def snap_compact(
         small, kept = [], []
         total_small = 0
         for e in _manifest_entries(path, m):
-            size = os.path.getsize(os.path.join(path, _entry_name(e)))
+            size = os.path.getsize(os.path.join(path, e["name"]))
             if size < small_bytes:
                 small.append(e)
                 total_small += size

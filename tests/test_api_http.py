@@ -10,6 +10,7 @@ all four tools exercised end-to-end through the socket, and where the
 server runs each connection: on its serving thread while the snapshot
 is resident, on a thread of its own otherwise."""
 
+import http.client
 import json
 import socket
 import threading
@@ -122,6 +123,20 @@ class TestMcpHttp:
         status, ctype, body = post(server, None, raw=b"{not json")
         assert status == 200 and ctype == "application/json"
         assert body["error"]["code"] == -32700
+
+    @pytest.mark.parametrize("length", ["abc", "-5"])
+    def test_bad_content_length_is_400(self, server, length):
+        conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=30)
+        try:
+            conn.putrequest("POST", "/")
+            conn.putheader("Content-Length", length)
+            conn.endheaders()
+            resp = conn.getresponse()
+            body = resp.read()
+        finally:
+            conn.close()
+        assert resp.status == 400
+        assert b"jsonrpc" not in body
 
     def test_unknown_tool_and_method(self, server):
         _, _, body = tool(server, 8, "nope_tool")

@@ -130,9 +130,10 @@ def test_bloom_sized_from_file_rows(spark, tmp_path):
     m = _read_manifest(path, 1)
     from qurio_spark.plans.snapshots import _manifest_entries
 
-    geoms = sorted(
-        e["bloom"]["cols"]["doc_id"]["m"] for e in _manifest_entries(path, m)
-    )
+    entries = _manifest_entries(path, m)
+    # every geometry hashes at the canonical type (the probe assumes it)
+    assert all(e["bloom"]["cols"]["doc_id"]["canon"] is True for e in entries)
+    geoms = sorted(e["bloom"]["cols"]["doc_id"]["m"] for e in entries)
     assert geoms[0] >= 64 and geoms[1] >= 400 * geoms[0] // 10
 
 
@@ -381,37 +382,6 @@ class TestBloomSurvivesDml:
         snap_append(df.repartition(3), path, bloom_cols=["k"])
         rows = snap_scan_multi(spark, path, {}, eq={"k": 777}).collect()
         assert [r["payload"] for r in rows] == [777]
-
-    def test_legacy_entries_probe_at_natural_type(self, spark, tmp_path):
-        """Entries written before the canon flag (string blooms — the
-        only shape older tables used) keep pruning: the probe hashes
-        the literal at its natural type for flagless geometries."""
-        import json
-
-        path = str(tmp_path / "legacy")
-        snap_append(_docs(spark, 0, 500).coalesce(1), path,
-                    bloom_cols=["doc_id"])
-        mdir = os.path.join(path, "_manifests")
-        stripped = 0
-        for f in os.listdir(mdir):
-            if not (f.startswith("m-") and f.endswith(".json")):
-                continue
-            fp = os.path.join(mdir, f)
-            m = json.loads(open(fp).read())
-            for e in m.get("files", []):
-                if isinstance(e, dict) and e.get("bloom"):
-                    for g in e["bloom"]["cols"].values():
-                        stripped += g.pop("canon", None) is not None
-            open(fp, "w").write(json.dumps(m))
-        assert stripped >= 1
-        target = _id_of(spark, 123)
-        rows = snap_scan_multi(
-            spark, path, {}, eq={"doc_id": target}
-        ).collect()
-        assert [r["payload"] for r in rows] == [123]
-        assert snap_scan_files(
-            path, {}, spark=spark, eq={"doc_id": "doc-absent"}
-        ) == []
 
     def test_overwrite_resets_bloom_property(self, spark, tmp_path):
         from qurio_spark.plans.snapshots import snap_overwrite

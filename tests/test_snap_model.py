@@ -4,6 +4,8 @@ Every mutation the table format offers, interleaved in seeded-random
 order, checked after EVERY step against a plain Python dict model:
   - table contents == model (k -> val)
   - snap_count == len(model)  (the metadata-only count never drifts)
+  - every retained version and per-commit manifest has the one shape
+    the writers produce, the only shape the readers handle
   - maintenance ops (compact / materialize / restore / vacuum) are
     content-preserving exactly where the model says they are.
 
@@ -20,7 +22,10 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from qurio_spark.plans.commitstore import store_for
 from qurio_spark.plans.snapshots import (
+    _read_manifest,
+    _read_manifest_file,
     snap_append,
     snap_compact,
     snap_count,
@@ -48,6 +53,24 @@ def _table_state(spark, path, key_col="k", val_col="val"):
         r[key_col]: r[val_col]
         for r in snap_read(spark, path).select(key_col, val_col).collect()
     }
+
+
+def _assert_manifest_shape(path):
+    """Each retained ``v{N}.json`` lists its per-commit manifests and
+    carries ``schema`` and ``ts``, with a ``dv_counts`` ledger exactly
+    when it has ``dvs``; each listed ``m-*.json`` entry is a dict with
+    ``name``/``stats``/``nulls``/``rows``."""
+    for f in store_for(path).list(path):
+        if not (f.startswith("v") and f.endswith(".json")):
+            continue
+        m = _read_manifest(path, int(f[1:-5]))
+        assert "manifests" in m and "files" not in m, (f, m)
+        assert m.get("schema") and "ts" in m, (f, m)
+        assert ("dvs" in m) == ("dv_counts" in m), (f, m)
+        for name in m["manifests"]:
+            for e in _read_manifest_file(path, name):
+                assert isinstance(e, dict), (f, name, e)
+                assert {"name", "stats", "nulls", "rows"} <= e.keys(), (f, name, e)
 
 
 @pytest.mark.parametrize("seed", [7, 23, 91])
@@ -85,6 +108,7 @@ def test_random_dml_interleaving_matches_model(spark, tmp_path, seed):
         got = _table_state(spark, path, key_col, val_col)
         assert got == model, f"after {ops[-6:]}: {got} != {model}"
         assert snap_count(path) == len(model), f"count drift after {ops[-6:]}"
+        _assert_manifest_shape(path)
 
     for step in range(24):
         op = rng.choice(

@@ -83,18 +83,6 @@ class TestSnapCount:
         snap_materialize_dvs(spark, table)
         assert snap_count(table) == 15 == snap_read(spark, table).count()
 
-    def test_legacy_manifest_without_ledger_carries_unchanged(self):
-        """A manifest written before the per-file ledger existed (dvs
-        + dv_rows, no dv_counts) must carry its vectors verbatim —
-        without counts nothing is provably stale, and dropping them
-        would resurrect deleted rows."""
-        from qurio_spark.plans.snapshots import _dv_carry
-
-        legacy = {"dvs": ["dv/a.parquet"], "dv_rows": 7}
-        assert _dv_carry(legacy, {"f1.parquet"}) == {
-            "dvs": ["dv/a.parquet"], "dv_rows": 7,
-        }
-
 
 class TestSnapRestore:
     def test_restore_rewinds_data_as_new_version(self, spark, table):
@@ -186,34 +174,6 @@ class TestHistoryAndDryRun:
 
 class TestReviewRegressions:
     """Round-10 review findings, each pinned."""
-
-    def test_legacy_delete_mor_stays_additive(self, spark, table):
-        """A MOR delete onto a LEGACY parent (dvs + dv_rows, no
-        dv_counts) must not start a fresh ledger that omits the legacy
-        vectors — snap_count would overcount and a later rewrite could
-        drop the legacy vectors, resurrecting deleted rows."""
-        import json
-        import os
-
-        v1 = snap_delete_where_mor(spark, table, "v", lo=0, hi=4)
-        # simulate a pre-ledger manifest: strip dv_counts in place
-        mf = os.path.join(table, "_manifests", f"v{v1}.json")
-        m = json.load(open(mf))
-        del m["dv_counts"]
-        json.dump(m, open(mf, "w"))
-        v2 = snap_delete_where_mor(spark, table, "v", lo=15, hi=16)
-        m2 = _read_manifest(table, v2)
-        assert "dv_counts" not in m2  # stayed additive, no partial ledger
-        assert m2["dv_rows"] == 7
-        # a legacy ledger cannot prove its dv_rows is still live after
-        # rewrites — the metadata count honestly declines
-        assert snap_count(table) is None
-        assert snap_read(spark, table).count() == 13
-        # a CoW rewrite must carry the vectors (nothing provably stale)
-        snap_delete_where(spark, table, "v", lo=9, hi=9)
-        assert sorted(
-            r["v"] for r in snap_read(spark, table).collect()
-        ) == [5, 6, 7, 8] + [10, 11, 12, 13, 14, 17, 18, 19]
 
     def test_unbounded_update_and_mor_delete_skip_nulls(self, spark, tmp_path):
         from qurio_spark.plans.snapshots import snap_update_where

@@ -201,44 +201,6 @@ class TestTwoLevelManifests:
             r["v"] for r in snap_read(spark, path).collect()
         ) == list(range(400))
 
-    def test_legacy_inline_version_readable_and_upgraded(self, spark, tmp_path):
-        """A version written by the old single-level code (inline
-        `files`) must stay readable, and its first child commit
-        upgrades the list into a per-commit manifest file."""
-        import json as _json
-
-        from qurio_spark.plans.snapshots import (
-            _manifest_entries,
-            _read_manifest,
-        )
-
-        path = str(tmp_path / "legacy")
-        snap_append(
-            spark.range(5).select(F.col("id").alias("v")).coalesce(1), path
-        )
-        # rewrite v0 into the legacy inline shape
-        mdir = os.path.join(path, "_manifests")
-        m0 = _read_manifest(path, 0)
-        inline = {
-            "version": 0, "op": "append", "parent": None,
-            "files": _manifest_entries(path, m0),
-        }
-        _json.dump(inline, open(os.path.join(mdir, "v0.json"), "w"))
-        for f in list(os.listdir(mdir)):
-            if f.startswith("m-"):
-                os.remove(os.path.join(mdir, f))
-        assert sorted(r["v"] for r in snap_read(spark, path).collect()) == [
-            0, 1, 2, 3, 4,
-        ]
-        snap_append(
-            spark.range(5, 8).select(F.col("id").alias("v")).coalesce(1), path
-        )
-        m1 = _read_manifest(path, 1)
-        assert len(m1["manifests"]) == 2  # upgraded legacy + delta
-        assert sorted(r["v"] for r in snap_read(spark, path).collect()) == list(
-            range(8)
-        )
-
     def test_interleaved_writers_never_clobber(self, spark, tmp_path):
         """Two writers appending concurrently must serialize into a
         linear version chain with NO lost batches — the optimistic
@@ -557,17 +519,21 @@ class TestSnapDiff:
             (10, "insert")
         ]
 
-
     def test_both_versions_empty_raises_cleanly(self, spark, tmp_path):
         """Manifests with no file entries (e.g. written by an external
         producer) must raise a descriptive error, not StopIteration."""
         from qurio_spark.plans.snapshots import _try_commit, snap_diff
 
         path = str(tmp_path / "emptydiff")
+        schema = {"type": "struct", "fields": [
+            {"name": "v", "type": "long", "nullable": True, "metadata": {}},
+        ]}
         assert _try_commit(path, 0, {"version": 0, "op": "append",
-                                     "parent": None, "files": []})
+                                     "parent": None, "manifests": [],
+                                     "schema": schema})
         assert _try_commit(path, 1, {"version": 1, "op": "append",
-                                     "parent": 0, "files": []})
+                                     "parent": 0, "manifests": [],
+                                     "schema": schema})
         with pytest.raises(ValueError, match="both versions are empty"):
             snap_diff(spark, path, 0, 1)
 
@@ -813,19 +779,6 @@ class TestTimestampAsOf:
             snap_read(spark, path, as_of=1.0)
         with pytest.raises(ValueError, match="not both"):
             snap_read(spark, path, version=0, as_of=1.0)
-
-    def test_legacy_versions_without_ts_always_eligible(self, spark, tmp_path):
-        import json as _json
-
-        from qurio_spark.plans.snapshots import snap_version_at
-
-        path = str(tmp_path / "asof3")
-        snap_append(spark.range(2).select(F.col("id").alias("v")), path)
-        mpath = os.path.join(path, "_manifests", "v0.json")
-        m = _json.load(open(mpath))
-        del m["ts"]
-        _json.dump(m, open(mpath, "w"))
-        assert snap_version_at(path, 1.0) == 0
 
 
 class TestVacuumConcurrency:
