@@ -11,7 +11,7 @@ tools onto the engine (features/mcp/handler.go:100-597):
 plus ``initialize`` / ``notifications/initialized`` / ``tools/list``
 and the JSON-RPC error codes (handler.go:90-96).  The HTTP transport
 (handler.go:568-597) lives in :mod:`qurio_spark.api_http` — a stdlib
-``http.server`` layer over this dispatch, exercised by a live-socket
+``socketserver`` layer over this dispatch, exercised by a live-socket
 e2e test; online serving remains a test/demo surface per BASELINE.json.
 
 The engine serves a prepared snapshot of the chunk frame it was given:
@@ -218,9 +218,11 @@ class Engine:
                         "chunk_index", "type", "language"],
             job_label="qurio_search",
         )
-        label = "qurio_search:topk" if isinstance(res, DataFrame) else None
-        with job_description(self.chunks.sparkSession, label):
-            rows = [r.asDict() for r in res.collect()]
+        if isinstance(res, DataFrame):
+            with job_description(self.chunks.sparkSession, "qurio_search:topk"):
+                rows = [r.asDict() for r in res.collect()]
+        else:  # a resident TopK: its rows are dicts already
+            rows = res.rows
         for r in rows:
             r["score"] = float(r["score"])
         rows = apply_rerank(rows, query, self.reranker)

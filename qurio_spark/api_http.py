@@ -5,15 +5,36 @@ The reference serves its four MCP tools as JSON-RPC 2.0 over HTTP
 ``Content-Type: application/json`` on every reply, status 200 even for
 JSON-RPC-level errors, an empty 200 for notifications, and a Parse
 error response for undecodable bodies).  This is the same thin layer
-over :class:`qurio_spark.api.Engine` — stdlib ``http.server`` only,
+over :class:`qurio_spark.api.Engine` — stdlib ``socketserver`` only,
 all tool semantics stay in ``api.py``.
 
 Serving is still a test/demo surface, not a deployment story
 (BASELINE.json scopes online serving out): the server binds loopback
 by default and is driven by the e2e test.
 
-Each connection carries one request (HTTP/1.0).  Where it runs follows
-the engine's tier (``Engine.on_driver()``):
+Each connection carries one request (HTTP/1.0).  The handler parses it
+itself, as the transport needs only the method and ``Content-Length``:
+``http.server`` spends most of a resident request's transport time
+parsing headers with ``email.feedparser`` and formatting a ``Date``.
+It reads the request line and each header line with a bounded
+``readline`` and keeps the stdlib parser's limits:
+
+* a request line over 65,536 bytes: 414;
+* a header line over 65,536 bytes, or 100 header lines or more: 431;
+* a request line that is not ``METHOD TARGET HTTP/x``: 400;
+* a method other than POST: 501;
+* a ``Content-Length`` (its name in any case) that is not a
+  non-negative integer: a bare 400, as Go's net/http answers before
+  any handler runs.
+
+Every reply carries the status line, ``Content-Type: application/json``
+and ``Content-Length`` only (no ``Server`` or ``Date`` header) and
+leaves in one ``sendall``; an error status has an empty body.  A
+connection that times out or that the peer drops mid-request ends
+quietly, with no reply and no traceback.
+
+Where a connection runs follows the engine's tier
+(``Engine.on_driver()``):
 
 * resident: on the serving thread itself.  A resident search holds the
   GIL from start to end, so a thread per connection would add no
@@ -28,21 +49,32 @@ the engine's tier (``Engine.on_driver()``):
 
 The handler's socket times out after ``HANDLER_TIMEOUT_S`` seconds
 without progress, so a client that connects and stalls holds the
-serving thread no longer than that.  Each reply — status line, headers
-and body — leaves in one ``sendall``.
+serving thread no longer than that.
 """
 
 from __future__ import annotations
 
-import io
 import json
+import socketserver
 import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http import HTTPStatus
 
 from qurio_spark.api import ERR_PARSE, Engine, _err
 
 #: Seconds a connection may go without sending (or taking) a byte.
 HANDLER_TIMEOUT_S = 2.0
+
+_MAX_LINE = 65536  # http.server / http.client: _MAXLINE
+_MAX_HEADERS = 100  # http.client: _MAXHEADERS, counting the blank line
+_END = (b"\r\n", b"\n", b"")
+
+
+def _reply(status: int, body: bytes = b"") -> bytes:
+    """A whole reply: status line, the two headers, ``body``."""
+    return (
+        b"HTTP/1.0 %d %s\r\nContent-Type: application/json\r\nContent-Length: %d\r\n\r\n%s"
+        % (status, HTTPStatus(status).phrase.encode(), len(body), body)
+    )
 
 
 class McpHttpServer:
@@ -53,56 +85,70 @@ class McpHttpServer:
     def __init__(self, engine: Engine, host: str = "127.0.0.1", port: int = 0):
         outer = self
 
-        class Handler(BaseHTTPRequestHandler):
+        class Handler(socketserver.StreamRequestHandler):
             timeout = HANDLER_TIMEOUT_S
 
-            def setup(self) -> None:
-                super().setup()
-                self.wfile = io.BytesIO()  # the reply, sent whole by finish()
-
-            def finish(self) -> None:
+            def handle(self) -> None:
                 try:
-                    reply = self.wfile.getvalue()
-                    if reply:
-                        self.connection.sendall(reply)
-                finally:
-                    super().finish()
-
-            def do_POST(self) -> None:  # noqa: N802 (http.server API)
+                    status, raw = self._read()
+                except OSError:
+                    return  # timed out, or the peer went away mid-request
+                if status is None:
+                    return  # connected and closed without a request
                 try:
-                    length = int(self.headers.get("Content-Length") or 0)
+                    self.connection.sendall(self._answer(raw) if status == 200 else _reply(status))
+                except OSError:
+                    pass  # the peer went away before the reply
+
+            def _read(self) -> tuple[int | None, bytes]:
+                """The request's body, or the error status that answers
+                it (status None: no request came)."""
+                line = self.rfile.readline(_MAX_LINE + 1)
+                if not line:
+                    return None, b""
+                if len(line) > _MAX_LINE:
+                    return 414, b""
+                words = line.split()
+                if len(words) != 3 or not words[2].startswith(b"HTTP/"):
+                    return 400, b""
+                length = None
+                for _ in range(_MAX_HEADERS):
+                    header = self.rfile.readline(_MAX_LINE + 1)
+                    if len(header) > _MAX_LINE:
+                        return 431, b""
+                    if header in _END:
+                        break
+                    name, _, value = header.partition(b":")
+                    if length is None and name.strip().lower() == b"content-length":
+                        length = value.strip()
+                else:
+                    return 431, b""
+                if words[0] != b"POST":
+                    return 501, b""
+                try:
+                    n = int(length or 0)
                 except ValueError:
-                    length = -1
-                if length < 0:
-                    # unreadable body length: a bare 400, as Go's
-                    # net/http answers before any handler runs
-                    self.send_error(400, "bad Content-Length")
-                    return
-                raw = self.rfile.read(length)
+                    n = -1
+                if n < 0:
+                    return 400, b""
+                return 200, self.rfile.read(n)
+
+            def _answer(self, raw: bytes) -> bytes:
                 if not raw.strip():
                     # EOF/empty body: the reference replies nothing but
                     # headers (handler.go: io.EOF -> bare return)
-                    self._reply(None)
-                    return
+                    return _reply(200)
                 try:
                     req = json.loads(raw)
                 except json.JSONDecodeError:
-                    self._reply(_err(None, ERR_PARSE, "Parse error"))
-                    return
-                self._reply(outer.engine.process_request(req))
+                    resp = _err(None, ERR_PARSE, "Parse error")
+                else:
+                    resp = outer.engine.process_request(req)
+                return _reply(200, b"" if resp is None else json.dumps(resp).encode())
 
-            def _reply(self, resp: dict | None) -> None:
-                body = b"" if resp is None else json.dumps(resp).encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-            def log_message(self, fmt: str, *args) -> None:
-                pass  # keep test output quiet; transport has no state to log
-
-        class Server(ThreadingHTTPServer):
+        class Server(socketserver.ThreadingTCPServer):
+            allow_reuse_address = True
+            daemon_threads = True
             # connections wait here while the serving thread runs one
             request_queue_size = 64
 

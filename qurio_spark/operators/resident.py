@@ -25,22 +25,33 @@ string column here, or a query vector of another dimension than the
 stored embeddings — runs on the Spark path over ``frame``.
 
 What does not depend on the query is computed once, when the snapshot
-is built: the unfiltered ``avgdl``, each term's unfiltered idf (one
-vectorised ``strict_log`` over the vocabulary), each posting's ``dl``,
-each row's embedding norm, and whether every stored embedding value is
-finite.  A string filter compares integer codes, built per column on
-its first use, with one ``==``.  The kernel then keeps each element's
-operations and their order, and only drops work whose result is
-known: an unfiltered search indexes no candidate copy of any array;
-when every stored value is finite, the dot product skips the query's
-zero dimensions (the sum starts at +0.0 and never becomes -0.0, so
-adding ``x * 0.0`` cannot change it); and the top-k sorts only the
-rows whose key reaches the k-th largest (ties included), found with
-``np.partition``.
+is built: the unfiltered ``avgdl``, each posting's ``dl`` and its
+unfiltered BM25 impact (its term's idf over all rows — one vectorised
+``strict_log`` over the vocabulary — times the ``bm25.impact`` factor,
+the same operations in the same order), each row's embedding norm, and
+whether every stored embedding value is finite.  An unfiltered search
+then only adds each matched term's span of impacts into the BM25
+column, in sorted term order.  A filtered search has its own N, avgdl
+and dfs, so it scores its candidates' postings itself; each idf is
+``strict_log`` of one scalar, cached (``functools.lru_cache``, bounded)
+as the same few (N, df) pairs recur from search to search.  A string
+filter compares integer codes, built per column on its first use, with
+one ``==``.  The kernel then keeps each element's operations and their
+order, and only drops work whose result is known: an unfiltered search
+indexes no candidate copy of any array; when every stored value is
+finite, the dot product skips the query's zero dimensions (the sum
+starts at +0.0 and never becomes -0.0, so adding ``x * 0.0`` cannot
+change it); and the top-k sorts only the rows whose key reaches the
+k-th largest (ties included), found with ``np.partition``.
+
+The top-k comes back as a :class:`TopK` of plain dicts (``rows``), the
+shape the serving engine formats; its ``collect()`` builds ``Row``s
+from them, as a DataFrame's would be.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
@@ -93,19 +104,35 @@ def snapshot_bytes(schema: T.StructType) -> Column:
 
 
 class TopK:
-    """A top-k computed on the driver, with the one DataFrame method the
-    search callers use: ``collect()`` gives its rows."""
+    """A top-k computed on the driver: ``rows`` holds each row as a
+    dict, and ``collect()``, the one DataFrame method the search callers
+    use, gives them as ``Row``s."""
 
-    def __init__(self, rows: list[Row]):
+    def __init__(self, rows: list[dict]):
         self.rows = rows
 
     def collect(self) -> list[Row]:
-        return list(self.rows)
+        return [Row(**r) for r in self.rows]
+
+
+@functools.lru_cache(maxsize=4096)
+def _idf(n: int, df: int) -> float:
+    """The idf of a term in ``df`` of ``n`` rows, as ``bm25.impact``
+    computes it.  A filtered search's N and dfs recur from search to
+    search, so the values are cached rather than each search making a
+    vectorised ``strict_log`` call."""
+    return float(strict_log(1.0 + (float(n) - float(df) + 0.5) / (float(df) + 0.5)))
 
 
 def _minmax(x: np.ndarray, lo: float, hi: float) -> np.ndarray:
     """``hybrid._minmax`` over an array: constant -> 0."""
     return (x - lo) / (hi - lo) if hi > lo else np.zeros_like(x)
+
+
+def _impacts(idf, tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
+    """Each posting's ``bm25.impact``: the operations of
+    ``bm25.score_expr``, in its order."""
+    return idf * (tf * (K1 + 1.0)) / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
 
 def _avgdl(dl: np.ndarray, valid: np.ndarray) -> float:
@@ -152,7 +179,8 @@ class ResidentSnapshot:
     def _postings(self, tf: pa.MapArray) -> None:
         """term -> (rows, tf, dl) as one CSR: ``term_ids[t]`` indexes
         ``post_off``, whose span selects ``post_rows`` / ``post_tf`` /
-        ``post_dl``; ``idf[t]`` is the term's idf over all rows."""
+        ``post_dl`` / ``post_impact``, each posting's BM25 over all rows
+        (its term's idf over all rows and the unfiltered ``avgdl``)."""
         off = tf.offsets.to_numpy()
         parent = np.repeat(np.arange(self.n), np.diff(off))
         keep = ~tf.is_null().to_numpy(zero_copy_only=False)[parent]
@@ -168,8 +196,15 @@ class ResidentSnapshot:
         self.post_rows = parent[keep][by_term]
         self.post_tf = tfs[by_term].astype(np.float64)
         self.post_dl = self.dl[self.post_rows].astype(np.float64)
-        df = np.diff(self.post_off).astype(np.float64)
-        self.idf = strict_log(1.0 + (float(self.n) - df + 0.5) / (df + 0.5))
+        counts = np.diff(self.post_off)
+        df = counts.astype(np.float64)
+        idf = strict_log(1.0 + (float(self.n) - df + 0.5) / (df + 0.5))
+        if self.avgdl is None:  # no row has a dl, so no row has a term
+            self.post_impact = np.zeros(len(self.post_rows))
+        else:
+            self.post_impact = _impacts(
+                np.repeat(idf, counts), self.post_tf, self.post_dl, self.avgdl
+            )
 
     def _embeddings(self, emb: pa.ListArray) -> None:
         """``emb_t`` (dim x n float64) and each row's ``emb_norm``, summed
@@ -254,29 +289,27 @@ class ResidentSnapshot:
             """``x`` over the candidates."""
             return x if cand is None else x[cand]
 
-        matched = []
-        for t in sorted(set(tokenize_query(query_text))):
-            tid = self.term_ids.get(t)
-            if tid is None:
-                continue
-            span = slice(self.post_off[tid], self.post_off[tid + 1])
-            rows, tf, dl = self.post_rows[span], self.post_tf[span], self.post_dl[span]
-            if mask is not None:
-                hit = mask[rows]
-                rows, tf, dl = rows[hit], tf[hit], dl[hit]
-            if len(rows):
-                matched.append((tid, rows, tf, dl))
+        terms = [
+            tid for tid in map(self.term_ids.get, sorted(set(tokenize_query(query_text))))
+            if tid is not None
+        ]
         bm25 = np.zeros(self.n)
-        if matched:
-            if mask is None:
-                avgdl = self.avgdl
-                idf = self.idf[[tid for tid, *_ in matched]]
-            else:
+        if mask is None:
+            for tid in terms:
+                span = slice(self.post_off[tid], self.post_off[tid + 1])
+                bm25[self.post_rows[span]] += self.post_impact[span]
+        else:
+            matched = []
+            for tid in terms:
+                span = slice(self.post_off[tid], self.post_off[tid + 1])
+                rows = self.post_rows[span]
+                hit = mask[rows]
+                if hit.any():
+                    matched.append((rows[hit], self.post_tf[span][hit], self.post_dl[span][hit]))
+            if matched:
                 avgdl = _avgdl(self.dl[cand], self.dl_valid[cand])
-                df = np.array([float(len(rows)) for _, rows, *_ in matched])
-                idf = strict_log(1.0 + (float(size) - df + 0.5) / (df + 0.5))
-            for (_, rows, tf, dl), w in zip(matched, idf):
-                bm25[rows] += w * (tf * (K1 + 1.0)) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+                for rows, tf, dl in matched:
+                    bm25[rows] += _impacts(_idf(size, len(rows)), tf, dl, avgdl)
         bm25 = at(bm25)
 
         q = [float(v) for v in query_vec]
@@ -305,13 +338,14 @@ class ResidentSnapshot:
             top = near[np.lexsort((rank[near], key[near]))[:k]]
         else:
             top = np.lexsort((rank, key))[:k]
-        make = Row(self.id_col, "bm25_norm", "vec_norm", "score", *cols)
+        picked = top if cand is None else cand[top]
         ids = self.values[self.id_col]
+        extra = [(c, self.values[c]) for c in cols]
         out = []
-        for j in top:
-            i = j if cand is None else cand[j]
-            out.append(make(
-                ids[i], float(bn[j]), float(vn[j]), float(score[j]),
-                *(self.values[c][i] for c in cols),
-            ))
+        for i, b, v, sc in zip(picked.tolist(), bn[top].tolist(), vn[top].tolist(),
+                               score[top].tolist()):
+            row = {self.id_col: ids[i], "bm25_norm": b, "vec_norm": v, "score": sc}
+            for c, vals in extra:
+                row[c] = vals[i]
+            out.append(row)
         return TopK(out)

@@ -1562,6 +1562,7 @@ def snap_diff(
     reads; FILE-level reuse makes it cheap for append-only history:
     files present in both manifests cancel out and are never read."""
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     v_to = _latest_version(path) if v_to is None else v_to
     mf_from = _read_manifest(path, v_from)
@@ -1585,6 +1586,8 @@ def snap_diff(
     pin = {"schema": (mf_to if v_to >= v_from else mf_from)["schema"]}
 
     def read(files, side_m):
+        if not files:  # nothing on this side: no rows, the pinned schema
+            return spark.createDataFrame([], T.StructType.fromJson(pin["schema"]))
         base = _pinned_reader(spark, pin).parquet(
             *[os.path.join(path, f) for f in files]
         )
@@ -1592,17 +1595,8 @@ def snap_diff(
             _apply_dvs(spark, path, side_m, base), pin["schema"]
         )
 
-    if not (m_to | m_from):
-        raise ValueError(
-            f"snap_diff({path}, v{v_from}..v{v_to}): both versions are "
-            "empty — no schema source for the change feed"
-        )
-    # the empty side reads zero rows of one file under the pin (min,
-    # not set-iteration order, so the plan is deterministic)
-    schema_src = min(m_to | m_from)
-    empty = read([schema_src], mf_to).limit(0)
-    added = read(only_to, mf_to) if only_to else empty
-    removed = read(only_from, mf_from) if only_from else empty
+    added = read(only_to, mf_to)
+    removed = read(only_from, mf_from)
     import functools
     import operator
 

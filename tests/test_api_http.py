@@ -8,7 +8,8 @@ application/json on every reply, status 200 even for JSON-RPC errors,
 empty 200 for notifications, Parse error for undecodable bodies) —
 all four tools exercised end-to-end through the socket, and where the
 server runs each connection: on its serving thread while the snapshot
-is resident, on a thread of its own otherwise."""
+is resident, on a thread of its own otherwise.  The request parser's
+limits, and clients that stall or leave mid-request, are pinned too."""
 
 import http.client
 import json
@@ -208,3 +209,55 @@ class TestConnectionThreads:
             assert idle.recv(1) == b""  # the server gave up on it
         assert status == 200 and "error" not in body
         assert waited < HANDLER_TIMEOUT_S + 1.0
+
+    def test_silent_and_truncated_clients_end_quietly(self, server, capfd):
+        """A client that connects and sends nothing (the handler times
+        out) and one that closes mid-body end their connections with no
+        traceback, and the next request is served."""
+        self._resident(server)  # one connection at a time, in accept order
+        with socket.create_connection(("127.0.0.1", server.port)) as idle:
+            idle.settimeout(HANDLER_TIMEOUT_S + 5)
+            assert idle.recv(1) == b""
+        with socket.create_connection(("127.0.0.1", server.port)) as cut:
+            cut.sendall(b'POST / HTTP/1.0\r\nContent-Length: 100\r\n\r\n{"jsonrpc"')
+        status, _, body = tool(server, 23, "qurio_search", SEARCH)
+        assert status == 200 and "error" not in body
+        assert "Traceback" not in capfd.readouterr().err
+
+
+def exchange(srv, data: bytes) -> bytes:
+    """Send ``data`` on a fresh connection, close the sending side, and
+    read the whole reply."""
+    with socket.create_connection(("127.0.0.1", srv.port), timeout=30) as s:
+        s.sendall(data)
+        s.shutdown(socket.SHUT_WR)
+        return b"".join(iter(lambda: s.recv(65536), b""))
+
+
+def status_of(reply: bytes) -> int:
+    return int(reply.split(b" ", 2)[1])
+
+
+class TestRequestLimits:
+    """The request parser's limits: those of the stdlib's
+    ``http.server`` (65,536-byte lines, fewer than 100 header lines)."""
+
+    def test_get_is_501(self, server):
+        assert status_of(exchange(server, b"GET / HTTP/1.0\r\n\r\n")) == 501
+
+    def test_too_many_headers_is_431(self, server):
+        headers = b"".join(b"X-H%d: v\r\n" % i for i in range(101))
+        reply = exchange(server, b"POST / HTTP/1.0\r\n" + headers + b"\r\n")
+        assert status_of(reply) == 431
+
+    def test_long_request_line_is_414(self, server):
+        line = b"POST /" + b"a" * (65_537 - 6)
+        assert status_of(exchange(server, line)) == 414
+
+    def test_lower_case_content_length_is_honoured(self, server):
+        body = json.dumps({"jsonrpc": "2.0", "id": 30, "method": "tools/list"}).encode()
+        reply = exchange(
+            server, b"POST / HTTP/1.0\r\ncontent-length: %d\r\n\r\n" % len(body) + body
+        )
+        assert status_of(reply) == 200
+        assert json.loads(reply.split(b"\r\n\r\n", 1)[1])["id"] == 30

@@ -422,6 +422,32 @@ class TestResidentTier:
                 assert self._same(snap, every, vec, limit=50, filters=filters)
         assert straddled >= 4
 
+    def test_filter_every_row_passes_equals_unfiltered(self, spark):
+        """A filter that every row passes returns the unfiltered search's
+        ids and score bits.  The two take different kernels: a filtered
+        search scores its candidates' postings from tf, dl and a cached
+        idf, an unfiltered one adds the impacts computed when the
+        snapshot was built."""
+        from qurio_spark.api import prepare_chunks
+
+        rows = _parity_rows(4)
+        for r in rows:
+            r[0] = "only"
+        snap = prepare_chunks(spark.createDataFrame(rows, CHUNK_SCHEMA))
+        kw = dict(id_col="chunk_id", text_col="content", vec_col="embedding",
+                  extra_cols=self.COLS)
+        keyword = 0
+        for text, vec in self._queries(4, snap):
+            for alpha in (0.0, 0.3, 0.7, 1.0):
+                for limit in (1, 10, 50):
+                    every = hybrid_search(snap, text, vec, alpha=alpha, limit=limit,
+                                          filters={"source_id": "only"}, **kw).collect()
+                    plain = hybrid_search(snap, text, vec, alpha=alpha, limit=limit,
+                                          **kw).collect()
+                    assert plain and self._bits(every) == self._bits(plain), (text, alpha, limit)
+                    keyword += any(r["bm25_norm"] > 0 for r in plain)
+        assert keyword >= 48  # every query but the term-less one scores BM25
+
     def test_non_finite_stored_value_takes_every_dimension(self, spark):
         """With a NaN or an infinity stored, ``x * 0.0`` is NaN, so the
         dot product must not skip the query's zero dimensions: the

@@ -519,10 +519,10 @@ class TestSnapDiff:
             (10, "insert")
         ]
 
-    def test_both_versions_empty_raises_cleanly(self, spark, tmp_path):
-        """Manifests with no file entries (e.g. written by an external
-        producer) must raise a descriptive error, not StopIteration."""
-        from qurio_spark.plans.snapshots import _try_commit, snap_diff
+    def test_both_versions_empty_gives_empty_feed(self, spark, tmp_path):
+        """Two versions with no file entries (an emptied table) diff to
+        an empty change feed under their schema."""
+        from qurio_spark.plans.snapshots import _try_commit, snap_changes_since, snap_diff
 
         path = str(tmp_path / "emptydiff")
         schema = {"type": "struct", "fields": [
@@ -534,8 +534,9 @@ class TestSnapDiff:
         assert _try_commit(path, 1, {"version": 1, "op": "append",
                                      "parent": 0, "manifests": [],
                                      "schema": schema})
-        with pytest.raises(ValueError, match="both versions are empty"):
-            snap_diff(spark, path, 0, 1)
+        for feed in (snap_diff(spark, path, 0, 1), snap_changes_since(spark, path, 0)[0]):
+            assert feed.columns == ["v", "_change"]
+            assert feed.collect() == []
 
 
 class TestExactlyOnceSink:
