@@ -21,7 +21,10 @@ It reads the request line and each header line with a bounded
 
 * a request line over 65,536 bytes: 414;
 * a header line over 65,536 bytes, or 100 header lines or more: 431;
-* a request line that is not ``METHOD TARGET HTTP/x``: 400;
+* a version word that is not ``HTTP/`` and two dot-separated runs of
+  at most ten digits: 400; a major version of 2 or more: 505;
+* a request line of other than three words (or of two, HTTP/0.9, with
+  a method other than GET): 400;
 * a method other than POST: 501;
 * a ``Content-Length`` (its name in any case) that is not a
   non-negative integer: a bare 400, as Go's net/http answers before
@@ -30,6 +33,7 @@ It reads the request line and each header line with a bounded
 Every reply carries the status line, ``Content-Type: application/json``
 and ``Content-Length`` only (no ``Server`` or ``Date`` header) and
 leaves in one ``sendall``; an error status has an empty body.  A
+blank request line gets no reply, as from ``http.server``.  A
 connection that times out or that the peer drops mid-request ends
 quietly, with no reply and no traceback.
 
@@ -67,6 +71,19 @@ HANDLER_TIMEOUT_S = 2.0
 _MAX_LINE = 65536  # http.server / http.client: _MAXLINE
 _MAX_HEADERS = 100  # http.client: _MAXHEADERS, counting the blank line
 _END = (b"\r\n", b"\n", b"")
+
+
+def _version_status(version: str) -> int:
+    """``http.server``'s check of a request line's version word: 400
+    unless it is ``HTTP/`` and two dot-separated runs of at most ten
+    digits, 505 for a major version of 2 or more, else 0."""
+    name, _, number = version.partition("/")
+    parts = number.split(".")
+    if name != "HTTP" or len(parts) != 2 or not all(
+        p.isascii() and p.isdigit() and len(p) <= 10 for p in parts
+    ):
+        return 400
+    return 505 if int(parts[0]) >= 2 else 0
 
 
 def _reply(status: int, body: bytes = b"") -> bytes:
@@ -108,9 +125,13 @@ class McpHttpServer:
                     return None, b""
                 if len(line) > _MAX_LINE:
                     return 414, b""
-                words = line.split()
-                if len(words) != 3 or not words[2].startswith(b"HTTP/"):
-                    return 400, b""
+                words = str(line, "iso-8859-1").split()  # as http.server splits it
+                if not words:
+                    return None, b""  # a blank request line gets no reply
+                if len(words) >= 3 and (status := _version_status(words[-1])):
+                    return status, b""
+                if not 2 <= len(words) <= 3 or (len(words) == 2 and words[0] != "GET"):
+                    return 400, b""  # a two-word line is HTTP/0.9, GET only
                 length = None
                 for _ in range(_MAX_HEADERS):
                     header = self.rfile.readline(_MAX_LINE + 1)
@@ -123,7 +144,7 @@ class McpHttpServer:
                         length = value.strip()
                 else:
                     return 431, b""
-                if words[0] != b"POST":
+                if words[0] != "POST":
                     return 501, b""
                 try:
                     n = int(length or 0)

@@ -32,9 +32,8 @@ the same operations in the same order), each row's embedding norm, and
 whether every stored embedding value is finite.  An unfiltered search
 then only adds each matched term's span of impacts into the BM25
 column, in sorted term order.  A filtered search has its own N, avgdl
-and dfs, so it scores its candidates' postings itself; each idf is
-``strict_log`` of one scalar, cached (``functools.lru_cache``, bounded)
-as the same few (N, df) pairs recur from search to search.  A string
+and dfs, so it scores its candidates' postings itself, with one
+vectorised ``strict_log`` over its matched terms' dfs.  A string
 filter compares integer codes, built per column on its first use, with
 one ``==``.  The kernel then keeps each element's operations and their
 order, and only drops work whose result is known: an unfiltered search
@@ -51,7 +50,6 @@ from them, as a DataFrame's would be.
 
 from __future__ import annotations
 
-import functools
 import math
 
 import numpy as np
@@ -113,15 +111,6 @@ class TopK:
 
     def collect(self) -> list[Row]:
         return [Row(**r) for r in self.rows]
-
-
-@functools.lru_cache(maxsize=4096)
-def _idf(n: int, df: int) -> float:
-    """The idf of a term in ``df`` of ``n`` rows, as ``bm25.impact``
-    computes it.  A filtered search's N and dfs recur from search to
-    search, so the values are cached rather than each search making a
-    vectorised ``strict_log`` call."""
-    return float(strict_log(1.0 + (float(n) - float(df) + 0.5) / (float(df) + 0.5)))
 
 
 def _minmax(x: np.ndarray, lo: float, hi: float) -> np.ndarray:
@@ -308,8 +297,10 @@ class ResidentSnapshot:
                     matched.append((rows[hit], self.post_tf[span][hit], self.post_dl[span][hit]))
             if matched:
                 avgdl = _avgdl(self.dl[cand], self.dl_valid[cand])
-                for rows, tf, dl in matched:
-                    bm25[rows] += _impacts(_idf(size, len(rows)), tf, dl, avgdl)
+                df = np.array([float(len(rows)) for rows, *_ in matched])
+                idf = strict_log(1.0 + (float(size) - df + 0.5) / (df + 0.5))
+                for (rows, tf, dl), w in zip(matched, idf):
+                    bm25[rows] += _impacts(w, tf, dl, avgdl)
         bm25 = at(bm25)
 
         q = [float(v) for v in query_vec]

@@ -1586,8 +1586,15 @@ def snap_diff(
     pin = {"schema": (mf_to if v_to >= v_from else mf_from)["schema"]}
 
     def read(files, side_m):
-        if not files:  # nothing on this side: no rows, the pinned schema
-            return spark.createDataFrame([], T.StructType.fromJson(pin["schema"]))
+        if not files:
+            # nothing on this side: no rows under the pinned schema,
+            # built on the JVM (createDataFrame([]) scans its empty RDD
+            # in a Python worker); limit(0) makes the optimizer see it
+            # empty and drop the anti-join against it
+            return spark.range(1).select(*[
+                F.lit(None).cast(f.dataType).alias(f.name, metadata=f.metadata)
+                for f in T.StructType.fromJson(pin["schema"]).fields
+            ]).limit(0)
         base = _pinned_reader(spark, pin).parquet(
             *[os.path.join(path, f) for f in files]
         )

@@ -238,9 +238,19 @@ def status_of(reply: bytes) -> int:
     return int(reply.split(b" ", 2)[1])
 
 
+def error_code(reply: bytes) -> int:
+    """The status of a refused request.  ``http.server`` answers a bad
+    or HTTP/0.9 request line with its error page alone, no status line,
+    so the code is read from the page there."""
+    if reply.startswith(b"HTTP/"):
+        return status_of(reply)
+    return int(reply.split(b"Error code: ", 1)[1].split(b"<", 1)[0])
+
+
 class TestRequestLimits:
-    """The request parser's limits: those of the stdlib's
-    ``http.server`` (65,536-byte lines, fewer than 100 header lines)."""
+    """The request parser's limits and request-line checks: those of
+    the stdlib's ``http.server`` (65,536-byte lines, fewer than 100
+    header lines, ``HTTP/major.minor`` below 2.0)."""
 
     def test_get_is_501(self, server):
         assert status_of(exchange(server, b"GET / HTTP/1.0\r\n\r\n")) == 501
@@ -261,3 +271,20 @@ class TestRequestLimits:
         )
         assert status_of(reply) == 200
         assert json.loads(reply.split(b"\r\n\r\n", 1)[1])["id"] == 30
+
+    @pytest.mark.parametrize("line, status", [
+        (b"POST / HTTP/abc", 400),
+        (b"POST / HTTP/1", 400),
+        (b"POST / HTTP/1.1.1", 400),
+        (b"POST / HTTP/1.\xb2", 400),
+        (b"POST /", 400),
+        (b"POST / x HTTP/1.0", 400),
+        (b"POST / HTTP/2.0", 505),
+    ])
+    def test_malformed_request_line(self, server, line, status):
+        body = b'{"jsonrpc": "2.0", "id": 31, "method": "tools/list"}'
+        reply = exchange(server, line + b"\r\nContent-Length: %d\r\n\r\n" % len(body) + body)
+        assert error_code(reply) == status
+
+    def test_blank_request_line_gets_no_reply(self, server):
+        assert exchange(server, b"\r\n") == b""
